@@ -12,8 +12,7 @@ ships no image/audio libraries, so:
 - **audio/video** — fully real against our own containers: ``AUD1``
   (16-bit PCM, zlib-framed) and ``VID1`` (raw RGB frame stack), both
   implemented from scratch in `functions/codec.py` like the image
-  codecs. ``fake=True`` keeps the legacy headerless byte-fake for
-  plumbing tests; swapping in soundfile/pyav on a real cluster is a
+  codecs. Swapping in soundfile/pyav on a real cluster is a
   one-function change (`_decode_audio` / `_decode_video_frames`).
 """
 
@@ -137,7 +136,7 @@ def image_quality_udf(payload: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# audio / video plumbing (decode stubbed per brief)
+# audio / video (real decode of our own AUD1 / VID1 containers)
 # ---------------------------------------------------------------------------
 
 AUDIO_FEATURES_SCHEMA = (
@@ -150,26 +149,19 @@ VIDEO_FRAMES_SCHEMA = (
 )
 
 
-def _decode_audio(payload: bytes, fake: bool):
-    if not fake:
-        # real decode of our AUD1 container (functions/codec.py) — swap
-        # in soundfile/librosa here for WAV/FLAC/MP3 on a real cluster
-        from .codec import decode_audio
+def _decode_audio(payload: bytes):
+    # real decode of our AUD1 container (functions/codec.py) — swap in
+    # soundfile/librosa here for WAV/FLAC/MP3 on a real cluster
+    from .codec import decode_audio
 
-        return decode_audio(payload)
-    # legacy fake: payload bytes ARE the waveform (uint8 → [-1, 1])
-    wave = (np.frombuffer(payload, dtype=np.uint8).astype(np.float32) - 127.5) / 127.5
-    return wave, 16000
+    return decode_audio(payload)
 
 
 def audio_features(df: DataFrame, *, id_col: str = "media_id",
-                   payload_col: str = "bytes", fake: bool = False) -> DataFrame:
+                   payload_col: str = "bytes") -> DataFrame:
     """Distributed audio feature extraction via ``mapInPandas``.
 
     Returns (media_id, n_samples, sample_rate, rms, zero_crossings).
-    The decode step is a stub unless ``fake=True`` (see module docstring);
-    everything Spark-side (Arrow batching, schema, partition preservation)
-    is real.
     """
 
     def gen(batches):
@@ -178,7 +170,7 @@ def audio_features(df: DataFrame, *, id_col: str = "media_id",
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 if payload is None:
                     continue
-                wave, sr = _decode_audio(bytes(payload), fake)
+                wave, sr = _decode_audio(bytes(payload))
                 zc = int(np.sum(np.abs(np.diff(np.signbit(wave)))))
                 rows.append(
                     (mid, int(wave.size), sr, float(np.sqrt(np.mean(wave**2))), zc)
@@ -193,27 +185,18 @@ def audio_features(df: DataFrame, *, id_col: str = "media_id",
     )
 
 
-def _decode_video_frames(payload: bytes, every_nth: int, fake: bool):
-    if not fake:
-        # real decode of our VID1 container (functions/codec.py) — swap
-        # in pyav/ffmpeg here for MP4/WebM on a real cluster
-        from .codec import decode_video
+def _decode_video_frames(payload: bytes, every_nth: int):
+    # real decode of our VID1 container (functions/codec.py) — swap in
+    # pyav/ffmpeg here for MP4/WebM on a real cluster
+    from .codec import decode_video
 
-        frames, _fps = decode_video(payload)
-        for i in range(0, frames.shape[0], every_nth):
-            yield i, frames[i]
-        return
-    # legacy fake: payload = concatenated 8x8 RGB frames
-    frame_bytes = 8 * 8 * 3
-    n = len(payload) // frame_bytes
-    for i in range(0, n, every_nth):
-        chunk = payload[i * frame_bytes : (i + 1) * frame_bytes]
-        yield i, np.frombuffer(chunk, dtype=np.uint8).reshape(8, 8, 3)
+    frames, _fps = decode_video(payload)
+    for i in range(0, frames.shape[0], every_nth):
+        yield i, frames[i]
 
 
 def video_frame_sample(df: DataFrame, *, id_col: str = "media_id",
-                       payload_col: str = "bytes", every_nth: int = 2,
-                       fake: bool = False) -> DataFrame:
+                       payload_col: str = "bytes", every_nth: int = 2) -> DataFrame:
     """Sample every-nth frame of each video into PNG-encoded rows.
 
     Returns (media_id, frame_idx, frame_png, w, h) — one row per sampled
@@ -228,7 +211,7 @@ def video_frame_sample(df: DataFrame, *, id_col: str = "media_id",
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 if payload is None:
                     continue
-                for idx, frame in _decode_video_frames(bytes(payload), every_nth, fake):
+                for idx, frame in _decode_video_frames(bytes(payload), every_nth):
                     rows.append(
                         (mid, idx, encode_png(frame), frame.shape[1], frame.shape[0])
                     )

@@ -80,64 +80,14 @@ def main() -> None:
     from aws_medallion_datalake_spark.pipeline.medallion import bronze_ingest
     from aws_medallion_datalake_spark.session import get_session
     from aws_medallion_datalake_spark.sources.generator import generate_updates
-
-    def alloc_probe_ms() -> int:
-        # First-touch of 64 MB of fresh pages. This sandbox host
-        # intermittently degrades page-fault servicing to ~1 ms/page
-        # (healthy ≈ 20-50 ms, degraded 10-30 s), which inflates every
-        # allocation-heavy Spark stage 10-30x; reporting the probe makes
-        # a degraded-window run self-identifying (see BENCH/NOTES_r2.md).
-        import numpy as np
-
-        t0 = time.time()
-        a = np.empty(1 << 26, dtype=np.uint8)
-        a[::4096] = 1
-        return int((time.time() - t0) * 1000)
-
-    def cpu_probe_s() -> float:
-        # 32-way sha256 throughput probe in fresh subprocesses (same
-        # shape as tools/maint_runner cpu_fresh): each worker hashes
-        # 600 MB. Calibration: the round-4 box ran this at ~0.49 s;
-        # round-5's box does 0.75 s on a quiet window and 1.5-1.7 s
-        # under its bursty CPU-steal episodes — the probe value in the
-        # artifact lets round-over-round totals be normalized for the
-        # box instead of misread as engine drift (BENCH/NOTES_r5.md).
-        import subprocess
-
-        script = (
-            "import hashlib,time,multiprocessing as mp\n"
-            "def w(_):\n"
-            "    b = bytes(1 << 20)\n"
-            "    h = hashlib.sha256()\n"
-            "    for _ in range(600):\n"
-            "        h.update(b)\n"
-            "    return 0\n"
-            "if __name__ == '__main__':\n"
-            "    t0 = time.time()\n"
-            f"    with mp.Pool({cpus}) as p:\n"
-            f"        p.map(w, range({cpus}))\n"
-            "    print(round(time.time() - t0, 3))\n"
-        )
-        out = subprocess.run(
-            [sys.executable, "-c", script], capture_output=True, text=True
-        )
-        try:
-            return float(out.stdout.strip())
-        except ValueError:
-            return -1.0
+    from tools import benchkit
 
     # bounded wait for a healthy window (SPARK_GRAFT_HEALTH_WAIT_SEC=0
     # disables): a run started while the host is degraded measures the
     # host, not the engine
-    wait_budget = float(os.environ.get("SPARK_GRAFT_HEALTH_WAIT_SEC", "600"))
-    deadline = time.time() + wait_budget
-    probe_pre = alloc_probe_ms()
-    # healthy is < 100 ms; a 600 ms start still inflates allocation-heavy
-    # stages ~2x, so wait for a genuinely quiet window within the budget
-    while probe_pre > 250 and time.time() < deadline:
-        time.sleep(30)
-        probe_pre = alloc_probe_ms()
-    cpu_probe_pre = cpu_probe_s()
+    wait_s = float(os.environ.get("SPARK_GRAFT_HEALTH_WAIT_SEC", "600"))
+    probe_pre = int(benchkit.wait_healthy(wait_s) * 1000)
+    cpu_probe_pre = benchkit.cpu_probe_s(cpus)
     spark = get_session(f"local[{cpus}]", shuffle_partitions=max(8, cpus))
     spark.sparkContext.setLogLevel("ERROR")
     times: dict[str, float] = {}
@@ -321,14 +271,12 @@ def main() -> None:
                 "table_bytes": total_bytes,
                 "scan_gbps": round(scan_gbps, 3),
                 "merge_rows_per_sec": round(merge_rows_per_sec, 1),
-                # host-health gate (healthy < 100; >1000 = degraded
-                # window, timings inflated 10-30x — see BENCH/NOTES_r2.md)
+                # host health around the run (tools/benchkit.py gate);
+                # a failed CPU probe is null
                 "alloc_probe_ms_pre": probe_pre,
-                "alloc_probe_ms_post": alloc_probe_ms(),
-                # box parallel-CPU health (32-way sha256; r4 box ≈ 0.49 s,
-                # r5 box 0.75 s quiet / 1.5+ s under CPU steal)
+                "alloc_probe_ms_post": int(benchkit.alloc_probe_s() * 1000),
                 "cpu_probe_s_pre": cpu_probe_pre,
-                "cpu_probe_s_post": cpu_probe_s(),
+                "cpu_probe_s_post": benchkit.cpu_probe_s(cpus),
             }
         )
     )

@@ -1,18 +1,13 @@
-"""Health-gated rep collector for the WHOLE driver bench (bench.py).
+"""Gated reps of the whole headline bench (bench.py).
 
-Round-4 VERDICT task: the per-round BENCH_r{N}.json is a single
-ungated bench.py run, so round-over-round deltas are dominated by box
-noise (r3->r4 drifted +8.4% with no hot-path code change). This tool
-runs the exact driver artifact — ``python bench.py`` in a fresh
-subprocess/JVM per rep — N times, gates each rep on bench.py's own
-64 MB first-touch alloc probes (``alloc_probe_ms_pre/post``), and
-reports PER-QUERY MINIMA over clean reps plus the derived
-scan GB/s / merge rows/s at those minima. Same minima-over-gated-reps
-discipline as tools/query_bench_reps.py, applied to the full suite
-including the maintenance section.
+A single ungated bench.py run is dominated by box noise (r3->r4 drifted
++8.4% with no hot-path change). This tool runs ``python bench.py`` in a
+fresh subprocess/JVM per rep until N reps pass the benchkit gate (on
+bench.py's own alloc and CPU probes), and reports PER-QUERY MINIMA over
+the clean reps plus scan GB/s / merge rows/s at their best clean rep.
 
 Usage:
-  python tools/bench_reps.py <log.jsonl> [--reps N] [--alloc-gate-ms M]
+  python tools/bench_reps.py <log.jsonl> [--reps N]
   python tools/bench_reps.py <log.jsonl> --aggregate [--baseline BENCH_rK.json]
 """
 
@@ -20,74 +15,18 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import benchkit
 
 
-def run_rep(env: dict) -> dict:
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "bench.py")],
-        capture_output=True, text=True, cwd=REPO, timeout=1800, env=env,
-    )
-    line = next(
-        (ln for ln in out.stdout.splitlines() if ln.startswith('{"metric"')),
-        None,
-    )
-    if line is None:
-        sys.stderr.write(out.stderr[-2000:] + "\n")
-        raise SystemExit("rep produced no result line")
-    return json.loads(line)
-
-
-def is_clean(rep: dict, alloc_gate: int) -> bool:
-    # alloc gate (page-fault degradation) + cpu gate (bursty CPU steal:
-    # the r5 box probes 0.75 s quiet, 1.5+ s during steal episodes).
-    cpu_worst = max(
-        rep.get("cpu_probe_s_pre", 0.0), rep.get("cpu_probe_s_post", 0.0)
-    )
+def describe(rep: dict) -> str:
     return (
-        max(rep.get("alloc_probe_ms_pre", 0), rep.get("alloc_probe_ms_post", 0))
-        <= alloc_gate
-        and cpu_worst <= 1.0
+        f"total={rep['value']}s "
+        f"alloc={rep.get('alloc_probe_ms_pre')}/{rep.get('alloc_probe_ms_post')}ms "
+        f"cpu={rep.get('cpu_probe_s_pre')}/{rep.get('cpu_probe_s_post')}s "
+        f"scan={rep.get('scan_gbps')}GB/s merge={rep.get('merge_rows_per_sec')}r/s"
     )
-
-
-def aggregate(log_path: str, alloc_gate: int, baseline: str | None) -> None:
-    reps = [json.loads(ln) for ln in open(log_path) if ln.strip()]
-    clean = [r for r in reps if is_clean(r, alloc_gate)]
-    if not clean:
-        raise SystemExit(f"0 clean reps of {len(reps)} (gate {alloc_gate} ms)")
-    minima = {}
-    for r in clean:
-        for q, v in r["queries"].items():
-            minima[q] = min(minima.get(q, 1e18), v)
-    total = round(sum(minima.values()), 3)
-    # scan/merge throughput at the per-rep best (bytes fixed per run)
-    best_scan = max(r["scan_gbps"] for r in clean)
-    best_merge = max(r["merge_rows_per_sec"] for r in clean)
-    report = {
-        "clean_reps": len(clean),
-        "total_reps": len(reps),
-        "alloc_gate_ms": alloc_gate,
-        "total_of_minima_sec": total,
-        "scan_gbps_best": best_scan,
-        "merge_rows_per_sec_best": best_merge,
-        "minima": {k: minima[k] for k in sorted(minima)},
-    }
-    if baseline:
-        base = json.load(open(baseline))
-        bq = base.get("parsed", base).get("queries", {})
-        deltas = {
-            q: round(minima[q] / bq[q], 3)
-            for q in minima if q in bq and bq[q] > 0
-        }
-        report["vs_baseline_ratio"] = {k: deltas[k] for k in sorted(deltas)}
-        report["vs_baseline_total"] = round(
-            sum(minima[q] for q in deltas) / sum(bq[q] for q in deltas), 3
-        )
-    print(json.dumps(report, indent=1))
 
 
 def main() -> None:
@@ -97,31 +36,20 @@ def main() -> None:
     def opt(name, default, cast=str):
         return cast(args[args.index(name) + 1]) if name in args else default
 
-    alloc_gate = opt("--alloc-gate-ms", 500, int)
     if "--aggregate" in args:
-        aggregate(log_path, alloc_gate, opt("--baseline", None))
+        with open(log_path) as f:
+            reps = [json.loads(ln) for ln in f if ln.strip()]
+        report = benchkit.aggregate(reps, opt("--baseline", None))
+        print(json.dumps(report, indent=1))
         return
-    reps = opt("--reps", 4, int)
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     env.setdefault("SPARK_GRAFT_CPUS", "32")
-    done_clean = 0
-    for i in range(reps * 3):
-        if done_clean >= reps:
-            break
-        rep = run_rep(env)
-        with open(log_path, "a") as f:
-            f.write(json.dumps(rep) + "\n")
-        clean = is_clean(rep, alloc_gate)
-        done_clean += int(clean)
-        print(
-            f"rep {i}: clean={clean} total={rep['value']}s "
-            f"alloc={rep.get('alloc_probe_ms_pre')}/"
-            f"{rep.get('alloc_probe_ms_post')} "
-            f"scan={rep.get('scan_gbps')}GB/s "
-            f"merge={rep.get('merge_rows_per_sec')}r/s",
-            flush=True,
-        )
+    cmd = [sys.executable, os.path.join(benchkit.REPO, "bench.py")]
+    benchkit.collect(
+        {int(env["SPARK_GRAFT_CPUS"]): cmd}, opt("--reps", 4, int), describe,
+        env=env, log_path=log_path, timeout=1800,
+    )
 
 
 if __name__ == "__main__":

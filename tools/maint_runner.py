@@ -31,6 +31,7 @@ def main() -> None:
     from aws_medallion_datalake_spark.operators.merge import merge_into
     from aws_medallion_datalake_spark.session import get_session
     from aws_medallion_datalake_spark.sources.tableformat import Table
+    from benchkit import alloc_probe_s, cpu_probe_s, jvm_cpu_probe_s
 
     # Optional: put shuffle + scratch on tmpfs. On a real cluster, 4N
     # executors bring 4N local disks; this box has ONE shared disk, so
@@ -59,7 +60,7 @@ def main() -> None:
     # high-water mark is already resident), while each bench rep starts a
     # fresh JVM whose first GB of page faults would otherwise be charged
     # to whichever stage touches it first — and this host's fault
-    # servicing is intermittently ~1 ms/page (see alloc_baseline).
+    # servicing is intermittently ~1 ms/page (see benchkit.alloc_probe_s).
     try:
         spark.range(0, cpus * 24, 1, cpus * 4).select(
             F.sum(F.length(F.repeat(F.lit("warmxxxx"), 4 << 20)))
@@ -79,15 +80,6 @@ def main() -> None:
         ).collect()
     except Exception as e:  # noqa: BLE001 — warmup is best-effort
         sys.stderr.write(f"warmup skipped: {e}\n")
-
-    def cpu_baseline() -> float:
-        # perfectly-parallel CPU-only job (sha256 over range, zero IO,
-        # zero engine code) — the shared box's throughput ceiling probe
-        t0 = time.time()
-        spark.range(0, 60_000_000, 1, cpus * 8).select(
-            F.sum(F.crc32(F.sha2(F.col("id").cast("string"), 256)))
-        ).collect()
-        return round(time.time() - t0, 3)
 
     def io_baseline(table_root: str) -> float:
         # null-ENGINE parquet rewrite ceiling: read ~1.4 GB of the copied
@@ -112,51 +104,6 @@ def main() -> None:
         shutil.rmtree(out, ignore_errors=True)
         return sec
 
-    def alloc_baseline() -> float:
-        # fresh-page-fault probe: this sandbox host intermittently
-        # degrades guest memory faults to ~1ms/page (a fresh 64 MB touch
-        # then costs 20+ s instead of ~20 ms), which poisons every
-        # allocation-heavy stage while pure-CPU probes stay fast. Time
-        # first-touch of 64 MB of NEW pages; reps taken while this is
-        # pathological must be discarded.
-        import numpy as np
-
-        t0 = time.time()
-        arr = np.empty(1 << 26, dtype=np.uint8)
-        arr[::4096] = 1  # one touch per page
-        return round(time.time() - t0, 3)
-
-    def cpu_fresh() -> float:
-        # box-noise probe in a FRESH python subprocess — no JVM state:
-        # the in-JVM cpu_baseline post-probe runs after the stages pushed
-        # tens of GB through the heap/page cache, so at large table sizes
-        # it measures the worked JVM's aftermath (GC, fragmentation) as
-        # much as the box. `cpus` parallel workers each sha256 a fixed
-        # 600 MB stream; only external load can slow this one down.
-        import subprocess
-
-        script = (
-            "import hashlib,time,multiprocessing as mp\n"
-            "def w(_):\n"
-            "    b = bytes(1 << 20)\n"
-            "    h = hashlib.sha256()\n"
-            "    for _ in range(600):\n"
-            "        h.update(b)\n"
-            "    return h.hexdigest()\n"
-            "if __name__ == '__main__':\n"
-            "    t0 = time.time()\n"
-            f"    with mp.Pool({cpus}) as p:\n"
-            f"        p.map(w, range({cpus}))\n"
-            "    print(round(time.time() - t0, 3))\n"
-        )
-        out = subprocess.run(
-            [sys.executable, "-c", script], capture_output=True, text=True
-        )
-        try:
-            return float(out.stdout.strip())
-        except ValueError:
-            return -1.0
-
     root = tempfile.mkdtemp(
         prefix=f"scale{cpus}_",
         dir=os.path.dirname(local_dir) if local_dir else None,
@@ -174,9 +121,9 @@ def main() -> None:
         else:
             shutil.copytree(table_src, os.path.join(root, "t"))
             t = Table.load(os.path.join(root, "t"))
-        baseline_pre = cpu_baseline()  # contention probe BEFORE stages
-        fresh_pre = cpu_fresh()
-        alloc_pre = alloc_baseline()
+        baseline_pre = jvm_cpu_probe_s(spark, cpus)  # BEFORE the stages
+        fresh_pre = cpu_probe_s(cpus)
+        alloc_pre = alloc_probe_s()
         io_pre = io_baseline(t.root)
         n_rows = int(t.manifest_pdf()["record_count"].sum())
         src = spark.read.parquet(source_parquet)
@@ -270,22 +217,21 @@ def main() -> None:
         assert bad == 0, f"{bad} rows failed decode-hash verification"
 
         # box ceiling: probed BEFORE and AFTER the stages; the ratio uses
-        # the min (least-contended estimate of the ceiling), the noise
-        # gate in scaling_bench uses the max (a rep is clean only if the
-        # box was quiet around the whole measurement window)
-        baseline_post = cpu_baseline()
+        # the min (least-contended estimate of the ceiling), the benchkit
+        # gate the max (a rep is clean only if the box was quiet around
+        # the whole measurement window)
+        baseline_post = jvm_cpu_probe_s(spark, cpus)
         times["cpu_baseline"] = min(baseline_pre, baseline_post)
         times["cpu_gate"] = max(baseline_pre, baseline_post)
-        # JVM-independent box-noise pair (see cpu_fresh): the post-hoc
-        # analysis can gate on THIS ratio when the in-JVM post-probe is
-        # contaminated by the stages' own heap/page-cache aftermath
-        fresh_post = cpu_fresh()
-        times["cpu_fresh"] = min(fresh_pre, fresh_post)
-        times["cpu_fresh_gate"] = max(fresh_pre, fresh_post)
+        # the fresh-subprocess pair sees only external load: at multi-GB
+        # sizes the in-JVM post-probe also measures the worked JVM's
+        # heap/page-cache aftermath. A failed probe leaves the pair null.
+        fresh = [fresh_pre, cpu_probe_s(cpus)]
+        ok = None not in fresh
+        times["cpu_fresh"] = min(fresh) if ok else None
+        times["cpu_fresh_gate"] = max(fresh) if ok else None
         times["io_baseline"] = io_pre
-        # healthy first-touch of 64 MB is ~20-50 ms; >1 s means the host
-        # was servicing guest page faults pathologically during this rep
-        times["alloc_gate"] = max(alloc_pre, alloc_baseline())
+        times["alloc_gate"] = round(max(alloc_pre, alloc_probe_s()), 3)
 
         total = times["compact"] + times["cluster"] + times["merge"] + times["verify"]
         print(

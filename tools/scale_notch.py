@@ -19,7 +19,8 @@ phases the notch probes are unaffected.
 
 Per rep: deterministic rebuild (untimed) -> maint_runner in-place at
 local[32] with between-stage GC (untimed) -> one JSON line appended to
-the log. Gates are maint_runner's own (alloc_gate, cpu_fresh pair).
+the log, until N reps pass the benchkit gate. Minima are taken over the
+clean reps only.
 
 Usage: python tools/scale_notch.py <log.jsonl> [img_rows] [--reps N]
        python tools/scale_notch.py <log.jsonl> [img_rows] --aggregate
@@ -30,51 +31,24 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from scaling_bench import REPO, build_inputs  # noqa: E402
+import benchkit
+from scaling_bench import REPO, aggregate as level_minima, build_inputs, describe
 
 ROOT = "/dev/shm/scale_notch"
 DISK_SCRATCH = "/root/notch-scratch"
 
 
 def aggregate(log_path: str) -> None:
-    reps = [json.loads(ln) for ln in open(log_path) if ln.strip()]
-    if not reps:
-        raise SystemExit("no reps in log")
-    best_fresh = min(r["times"]["cpu_fresh"] for r in reps)
-
-    def clean(r):
-        return (
-            r["times"].get("alloc_gate", 0.0) <= 1.0
-            and r["times"]["cpu_fresh_gate"] <= best_fresh * 1.25
-        )
-
-    n_clean = sum(1 for r in reps if clean(r))
-    keys = {k for r in reps for k in r["times"]}
-    minima = {k: min(r["times"][k] for r in reps if k in r["times"]) for k in sorted(keys)}
-    phases = {}
-    for stage in ("compact", "cluster", "merge"):
-        pk = {k for r in reps for k in r.get("phases", {}).get(stage, {})}
-        phases[stage] = {
-            k: min(r["phases"][stage][k] for r in reps if k in r.get("phases", {}).get(stage, {}))
-            for k in sorted(pk)
-        }
-    r0 = reps[0]
-    total = sum(minima[s] for s in ("compact", "cluster", "merge", "verify"))
-    print(json.dumps({
-        "rows": r0["rows"],
-        "n_reps": len(reps),
-        "n_clean": n_clean,
-        "times": minima,
-        "phases": phases,
-        "maint_sec": round(total, 3),
-        "rows_per_sec": round(r0["rows"] / total, 1),
-        "scan_gbps": max(r["scan_gbps"] for r in reps),
-        "merge_rows_per_sec": max(r["merge_rows_per_sec"] for r in reps),
-    }, indent=1))
+    with open(log_path) as f:
+        reps = [json.loads(ln) for ln in f if ln.strip()]
+    ok = benchkit.clean(reps)
+    if not ok:
+        raise SystemExit(f"0 clean reps of {len(reps)}")
+    best = level_minima({32: ok}, [32])[32]
+    best.update(n_reps=len(reps), n_clean=len(ok))
+    print(json.dumps(best, indent=1))
 
 
 def main() -> None:
@@ -91,28 +65,22 @@ def main() -> None:
     env["SPARK_GRAFT_LOCAL_DIR"] = DISK_SCRATCH  # shuffle on disk (see doc)
     env["SPARK_GRAFT_INPLACE"] = "1"
     env["SPARK_GRAFT_BENCH_GC"] = "1"
+    inputs = os.path.join(ROOT, "t"), os.path.join(ROOT, "src")
 
-    for rep in range(reps):
+    def rebuild() -> None:
+        # maintenance mutates the table in place: every rep gets a fresh one
         shutil.rmtree(ROOT, ignore_errors=True)
         os.makedirs(ROOT, exist_ok=True)
-        print(f"rep{rep}: building {img_rows}-row table (untimed)...", flush=True)
-        table_dir, src_dir = build_inputs(ROOT, img_rows)
-        print(f"rep{rep}: running maint_runner local[32] in-place...", flush=True)
-        out = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "maint_runner.py"),
-             "32", table_dir, src_dir],
-            env=env, capture_output=True, text=True, cwd=REPO,
-        )
-        line = next(
-            (ln for ln in out.stdout.splitlines() if ln.startswith("{")), None
-        )
-        if line is None:
-            sys.stderr.write(out.stderr[-4000:] + "\n")
-            raise SystemExit(f"rep {rep} failed")
-        with open(log_path, "a") as f:
-            f.write(line + "\n")
-        r = json.loads(line)
-        print(f"rep{rep}: {r['times']} -> {r['rows_per_sec']} rows/s", flush=True)
+        print(f"building {img_rows}-row table (untimed)...", flush=True)
+        build_inputs(ROOT, img_rows)
+
+    benchkit.collect(
+        {32: [sys.executable, os.path.join(REPO, "tools", "maint_runner.py"),
+              "32", *inputs]},
+        reps,
+        describe,
+        env=env, log_path=log_path, prepare=rebuild,
+    )
     shutil.rmtree(ROOT, ignore_errors=True)
     shutil.rmtree(DISK_SCRATCH, ignore_errors=True)
     aggregate(log_path)

@@ -10,9 +10,10 @@ parallelism levels on identical input. Method:
 2. For each level, copy the table directory and run
    ``tools/maint_runner.py`` in a fresh subprocess (own JVM):
    compact → Morton-cluster → MERGE, each timed.
-3. Repeat the level pair ``--reps`` times interleaved (N,4N,N,4N…) and
-   take the per-level MINIMUM — the box has noisy-neighbor load
-   (idle loadavg 4–7), so min is the least-contended estimate.
+3. Repeat the levels interleaved (N,4N,N,4N…) until each has ``--reps``
+   reps that pass the benchkit gate, and take the per-level MINIMUM —
+   the box has noisy-neighbor load (idle loadavg 4–7), so min is the
+   least-contended estimate.
 
 Level choice: the primary pair is local[2] → local[8]. A raw-CPU
 microbenchmark (32 spin processes vs 8) shows the box delivers only
@@ -29,19 +30,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _run(cmd, env=None):
-    out = subprocess.run(cmd, env=env, capture_output=True, text=True, cwd=REPO)
-    if out.returncode != 0:
-        sys.stderr.write(out.stderr[-4000:])
-        raise SystemExit(f"subprocess failed: {cmd}")
-    return out.stdout.strip().splitlines()[-1]
+import benchkit
+from benchkit import REPO
 
 
 def build_inputs(root: str, img_rows: int) -> tuple[str, str]:
@@ -59,36 +52,35 @@ src.write.mode("overwrite").parquet({root!r} + "/src")
 spark.stop()
 print("built")
 """
-    _run([sys.executable, "-c", script])
+    if benchkit.run([sys.executable, "-c", script]) is None:
+        raise SystemExit("building the bench inputs failed")
     return os.path.join(root, "t"), os.path.join(root, "src")
 
 
+def describe(rep: dict) -> str:
+    """A maint_runner rep as the console line ``parse_log`` reads back."""
+    return f"{rep['times']} -> {rep['rows_per_sec']} rows/s"
+
 
 def aggregate(all_runs: dict, levels: list) -> dict:
-    """Per-STAGE minimum across ALL reps per level: each stage's least-
-    contended estimate. Noisy neighbors pollute different stages in
-    different reps, so the min over many interleaved reps is the robust
-    estimator on this shared box; the cleanliness gate above only
-    decides when to STOP collecting reps (it never filters the minima —
-    an early noisy rep must not dominate a level, which a clean-reps-only
-    rule allowed when no later rep ever passed the gate)."""
+    """Per-stage and per-phase minima over the reps given per level.
+
+    The N -> 4N report passes every rep of a level: noisy neighbours
+    pollute different stages in different reps, so each stage's minimum
+    over many interleaved reps is its least-contended estimate, and the
+    benchkit gate is disclosed as ``clean_reps`` beside it. The committed
+    ratios (BENCH/BASELINE.md, NOTES_r5.md) were measured this way.
+    ``tools/scale_notch.py`` passes only the clean reps."""
     best = {}
     for lv in levels:
         runs = all_runs[lv]
-        keys = {k for r in runs for k in r["times"]}
-        times = {
-            s: min(r["times"][s] for r in runs if s in r["times"]) for s in keys
+        times = benchkit.minima([r["times"] for r in runs])
+        # per-phase minima attribute each stage's scaling to executor
+        # compute vs parallelism-independent driver work
+        phases = {
+            stage: benchkit.minima([r.get("phases", {}).get(stage, {}) for r in runs])
+            for stage in ("compact", "cluster", "merge")
         }
-        # per-phase minima (plan/rewrite/stats/... within each stage):
-        # attributes the scaling of each stage to executor compute vs
-        # parallelism-independent driver work
-        phases: dict = {}
-        for stage in ("compact", "cluster", "merge"):
-            per_rep = [r.get("phases", {}).get(stage, {}) for r in runs]
-            keys = {k for p in per_rep for k in p}
-            phases[stage] = {
-                k: min(p[k] for p in per_rep if k in p) for k in sorted(keys)
-            }
         total = times["compact"] + times["cluster"] + times["merge"] + times["verify"]
         r0 = runs[0]
         best[lv] = {
@@ -106,44 +98,10 @@ def aggregate(all_runs: dict, levels: list) -> dict:
 
 
 def count_clean(all_runs: dict, levels: list) -> dict:
-    """Per-level count of reps passing the cleanliness gate (cpu probe
-    within 25% of the level's best, alloc probe <= 1 s). Disclosed in
+    """Per-level count of reps passing the benchkit gate. Disclosed in
     the report so a result derived entirely from gate-failing windows
-    (as in the round-3 4x log) is visibly flagged, never silent.
-
-    Reps carrying the JVM-independent ``cpu_fresh``/``cpu_fresh_gate``
-    pair (maint_runner's fresh-subprocess probe) are gated on THAT
-    ratio: at multi-GB table sizes the in-JVM post-probe measures the
-    worked JVM's heap/page-cache aftermath as much as the box, which
-    fails quiet-box reps spuriously (every r4 pinned rep at 1.536M rows
-    had clean alloc gates and reproducible stage times yet 1.3-1.6x
-    in-JVM post-probes). The fresh pair only sees external load."""
-    out = {}
-    for lv in levels:
-        runs = all_runs.get(lv, [])
-        if not runs:
-            out[lv] = 0
-            continue
-        fresh = [
-            r for r in runs if float(r["times"].get("cpu_fresh", -1)) > 0
-        ]
-        best_fresh = (
-            min(r["times"]["cpu_fresh"] for r in fresh) if fresh else None
-        )
-        best = min(r["times"]["cpu_baseline"] for r in runs)
-
-        def is_clean(r):
-            if r["times"].get("alloc_gate", 0.0) > 1.0:
-                return False
-            if float(r["times"].get("cpu_fresh", -1)) > 0:
-                return r["times"]["cpu_fresh_gate"] <= best_fresh * 1.25
-            return (
-                r["times"].get("cpu_gate", r["times"]["cpu_baseline"])
-                <= best * 1.25
-            )
-
-        out[lv] = sum(1 for r in runs if is_clean(r))
-    return out
+    (as in the round-3 4x log) is visibly flagged, never silent."""
+    return {lv: len(benchkit.clean(all_runs.get(lv, []))) for lv in levels}
 
 
 def parse_log(path: str, img_rows: int, levels: list) -> dict:
@@ -151,8 +109,8 @@ def parse_log(path: str, img_rows: int, levels: list) -> dict:
     every rep line carries the full per-stage times dict. Derived
     throughputs use the per-level minimum stage times; table bytes are
     the generator's deterministic ~14.8 KB/row. If a ``<path>.jsonl``
-    sidecar exists (tools/health_gated_reps.py writes one), its full rep
-    records — including per-phase timings — are merged in as well."""
+    sidecar exists (older collectors wrote one), its full rep records —
+    including per-phase timings — are merged in as well."""
     import ast
     import re
 
@@ -179,6 +137,7 @@ def parse_log(path: str, img_rows: int, levels: list) -> dict:
         total = times["compact"] + times["cluster"] + times["merge"] + times["verify"]
         all_runs[lv].append(
             {
+                "cpus": lv,
                 "times": times,
                 "rows": img_rows,
                 "rows_per_sec": round(img_rows / total, 1),
@@ -249,62 +208,18 @@ def main() -> None:
             print(f"reusing prebuilt inputs under {root}")
         else:
             table_dir, src_dir = build_inputs(root, img_rows)
-        runs: dict[int, list[dict]] = {lv: [] for lv in levels}
-        all_runs: dict[int, list[dict]] = {lv: [] for lv in levels}
-        clean: dict[int, int] = {lv: 0 for lv in levels}
-        best_cpu: dict[int, float] = {}
-        best_fresh: dict[int, float] = {}
-
-        def _rep_clean(r) -> bool:
-            """Same rule as count_clean: gate on the JVM-independent
-            cpu_fresh pair when the rep carries one (the in-JVM post-probe
-            measures the worked JVM's heap/page-cache aftermath at multi-GB
-            table sizes — it failed every quiet-box rep at 1.536M rows);
-            legacy in-JVM rule only for older rep records without it.
-            alloc_gate (host page-fault health) applies either way."""
-            if r["times"].get("alloc_gate", 0.0) > 1.0:
-                return False
-            if float(r["times"].get("cpu_fresh", -1)) > 0:
-                lv = r["cpus"]
-                return r["times"]["cpu_fresh_gate"] <= best_fresh[lv] * 1.25
-            lv = r["cpus"]
-            gate = r["times"].get("cpu_gate", r["times"]["cpu_baseline"])
-            return gate <= best_cpu[lv] * 1.25
-
-        # Cleanliness gate: a fixed pure-CPU probe brackets every rep; a
-        # rep whose probe is >25% above the best seen for that level ran
-        # while noisy neighbors held the box — its stage times are
-        # pollution, not measurements. Loop (≤ max_reps) until every
-        # level has `reps` clean reps; stage minima use clean reps only.
-        max_reps = max(reps * 4, 6)
-        for rep in range(max_reps):
-            if all(clean[lv] >= reps for lv in levels):
-                break
-            for lv in levels:
-                if clean[lv] >= reps:
-                    continue
-                r = json.loads(
-                    _run([sys.executable, os.path.join(REPO, "tools", "maint_runner.py"),
-                          str(lv), table_dir, src_dir], env=env)
-                )
-                r.setdefault("cpus", lv)
-                all_runs[lv].append(r)
-                cpu = r["times"]["cpu_baseline"]
-                best_cpu[lv] = min(best_cpu.get(lv, cpu), cpu)
-                fresh = float(r["times"].get("cpu_fresh", -1))
-                if fresh > 0:
-                    best_fresh[lv] = min(best_fresh.get(lv, fresh), fresh)
-                is_clean = _rep_clean(r)
-                if is_clean:
-                    # retro-invalidate earlier "clean" reps if this one
-                    # reveals a much lower baseline
-                    runs[lv] = [x for x in runs[lv] if _rep_clean(x)]
-                    runs[lv].append(r)
-                    clean[lv] = len(runs[lv])
-                print(
-                    f"rep{rep} local[{lv}]{'' if is_clean else ' [NOISY, discarded]'}: "
-                    f"{r['times']} -> {r['rows_per_sec']} rows/s"
-                )
+        # interleaved fresh-JVM reps until every level has `reps` reps
+        # that pass the benchkit gate
+        all_runs = benchkit.collect(
+            {
+                lv: [sys.executable, os.path.join(REPO, "tools", "maint_runner.py"),
+                     str(lv), table_dir, src_dir]
+                for lv in levels
+            },
+            reps,
+            describe,
+            env=env,
+        )
         for lv in levels:
             if not all_runs[lv]:
                 raise SystemExit(f"no reps at level {lv}")
