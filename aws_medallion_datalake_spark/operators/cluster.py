@@ -17,12 +17,21 @@ Spark-first execution plan (ONE full pass over the payload per tile):
    10^12 rows / 10^8 files no single job ever plans more than
    ``max_files_per_job`` ranges — the driver never materializes an
    O(total_files) structure in any query plan.
-2. **Boundary planning on a column-pruned scan** — the curve key needs
-   only (partition cols, phash, w, h), a few bytes/row, so range
-   boundaries come from ``approxQuantile`` over a scan that never touches
-   the image payload. (A plain ``repartitionByRange`` instead runs its
-   boundary-sampling job over the FULL child plan — every payload byte
-   read and every key computed twice, or a cluster-wide persist.)
+2. **Boundary planning: one grouped bounds job for every tile** — the
+   curve key needs only (partition cols, phash, w, h), a few bytes/row,
+   so range boundaries come from a scan that never touches the image
+   payload. Before any multi-file tile is submitted, ONE aggregate over
+   that key scan (the cached one when the partition-tuple pass already
+   read it) tags each row with its tile through a broadcast path→tile
+   frame and runs ``groupBy(tile).agg(percentile_approx(key, <union of
+   the tiles' i/n_out fractions>, 4 × max n_out))``. So the bounds cost
+   one job per ``cluster()`` call whatever the tile count, and the
+   cheap key scan never queues behind other tiles' payload rewrites.
+   Single-file tiles need no bounds and start while it runs; tiles a
+   checkpoint already holds get none. (A plain ``repartitionByRange``
+   instead runs its boundary-sampling job over the FULL child plan —
+   every payload byte read and every key computed twice, or a
+   cluster-wide persist.)
 3. **Exact-route shuffle, zero plan literals** — rows get their target
    partition from one vectorized Arrow UDF: ``np.searchsorted`` against
    the tile's boundary array, then a *routing salt* per bucket such that
@@ -67,11 +76,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from ..functions.udfs import hilbert64_udf, morton64_expr
+from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
     Snapshot,
     Table,
     read_split_size,
+    rel_path_expr,
     statable_cols,
 )
 from .checkpoint import RunCheckpoint
@@ -253,6 +264,66 @@ def _plan_tiles(man: pd.DataFrame, target_bytes: int, max_files_per_job: int) ->
     return tiles
 
 
+_PATH = "__cluster_path"
+
+
+def _key_scan(table: Table, spark: SparkSession, rel_paths, need: list):
+    """Column-pruned scan of ``need`` (partition, curve and salt columns:
+    a few bytes a row, no payload) plus each row's table-relative file
+    path in ``_PATH``."""
+    import os
+
+    paths = [os.path.join(table.root, p) for p in rel_paths]
+    return table.read_data(spark, paths).select(
+        *need, rel_path_expr(table.root).alias(_PATH)
+    )
+
+
+def _tile_frame(spark: SparkSession, tile_paths: dict):
+    """(``_PATH`` → ``__tile``) table over every file of the given tiles,
+    as a ``LocalRelation`` (Arrow-built: no job, no Python worker)."""
+    return local_frame(
+        spark,
+        {
+            _PATH: [p for paths in tile_paths.values() for p in paths],
+            "__tile": [t for t, paths in tile_paths.items() for _ in paths],
+        },
+        f"{_PATH} string, __tile int",
+    )
+
+
+def _tile_bounds(spark: SparkSession, keys, tile_paths: dict, n_outs: dict) -> dict:
+    """Range bounds of every tile from ONE grouped aggregate.
+
+    ``keys`` holds the composite key ``ck`` and the file path ``_PATH``
+    of each row; a broadcast path→tile frame tags each row with its
+    tile, then one ``percentile_approx`` per tile evaluates the union of
+    the tiles' ``i / n_out`` fractions. Accuracy ``4 × max n_out`` holds
+    every tile's rank error to at most 1/(4 n_out) of its rows. Returns
+    {tile: sorted int64 bounds, n_out - 1 of them}; a tile with no rows
+    gets none (its rows, if any, all route to file 0)."""
+    fracs = sorted({i / n for n in n_outs.values() for i in range(1, n)})
+    at = {f: j for j, f in enumerate(fracs)}
+    rows = (
+        keys.join(F.broadcast(_tile_frame(spark, tile_paths)), _PATH)
+        .groupBy("__tile")
+        .agg(
+            F.percentile_approx("ck", fracs, 4 * max(n_outs.values())).alias("q")
+        )
+        .collect()
+    )
+    q = {r["__tile"]: r["q"] for r in rows}
+    return {
+        t: np.sort(
+            np.array(
+                [q[t][at[i / n]] for i in range(1, n)] if t in q else [],
+                dtype=np.int64,
+            )
+        )
+        for t, n in n_outs.items()
+    }
+
+
 _SORTED_PREFIX_PROP = "cluster.sorted_prefixes"
 _SORT_SPEC_PROP = "cluster.sort_spec"
 SORT_ORDER_PROP = "sort.order"
@@ -405,21 +476,17 @@ def cluster(
             transforms.source_cols(meta.partition_cols) + list(cols) + ["image_id"]
         )
     )
-    schema = table._schema(spark)
 
     pruned_cache = None
-    if meta.partition_cols and not part_values and len(work):
+    if meta.partition_cols and not part_values:
         # mixed input files (raw bronze): learn the partition tuples from
         # a column-pruned distinct — reads only key/partition columns of
         # the FILES BEING REWRITTEN, no payloads — so clustering is
         # partition-major even on a table whose current layout ignores
-        # partitions. The pruned frame is CACHED: the per-tile boundary
-        # quantiles re-aggregate it instead of re-reading the files (one
-        # planning pass, not two).
-        import os as _os
-
-        work_paths = [_os.path.join(table.root, p) for p in work["path"]]
-        pruned_cache = table.read_data(spark, work_paths).select(*need).persist()
+        # partitions. The pruned frame is CACHED: the bounds job
+        # re-aggregates it instead of re-reading the files (one planning
+        # pass, not two).
+        pruned_cache = _key_scan(table, spark, work["path"], need).persist()
         part_values = sorted(
             r[0]
             for r in pruned_cache.select(
@@ -435,6 +502,19 @@ def cluster(
         return table.commit(
             "replace", man, {"stage": "cluster", "noop": True, "tiles": 0}
         )
+    tile_rows = [work.loc[idxs] for idxs in tiles]
+    n_outs = [
+        max(1, round(int(r["file_size_bytes"].sum()) / target_file_size_bytes))
+        for r in tile_rows
+    ]
+
+    def ck_of(k):
+        """The routed composite key; a NULL key sorts first."""
+        return F.coalesce(
+            _composite(k, meta.partition_cols, part_values),
+            F.lit(np.iinfo(np.int64).min + 1),
+        )
+
     prefixes: dict = {}
     broadcasts: list = []
     stats_frames: dict = {}
@@ -449,48 +529,31 @@ def cluster(
                 spark, prefix
             )
 
-    def run_tile(tile_no: int, idxs: list) -> None:
+    def tile_done(tile_no: int) -> bool:
+        return checkpoint is not None and checkpoint.is_unit_done(
+            "cluster", f"tile-{tile_no}"
+        )
+
+    def run_tile(tile_no: int, bounds: Optional[np.ndarray] = None) -> None:
         import os
 
         unit = f"tile-{tile_no}"
-        if checkpoint is not None and checkpoint.is_unit_done("cluster", unit):
+        if tile_done(tile_no):
             prefixes[tile_no] = checkpoint.unit_payload("cluster", unit)["output_prefix"]
             stats_for(tile_no, prefixes[tile_no])
             return
-        rows = work.loc[idxs]
+        rows = tile_rows[tile_no]
         paths = [os.path.join(table.root, p) for p in rows["path"]]
-        tile_bytes = int(rows["file_size_bytes"].sum())
-        n_out = max(1, round(tile_bytes / target_file_size_bytes))
+        n_out = n_outs[tile_no]
         full = table.read_data(spark, paths).withColumn(_KEY, key)
         if n_out == 1:
             out = full.coalesce(1).sortWithinPartitions(*sort_cols).drop(_KEY)
         else:
-            # 1. boundaries from the PRUNED scan (no payload IO); reuse
-            #    the cached planning frame when it covers exactly this
-            #    tile (single-tile tables: one planning pass total)
-            if pruned_cache is not None and len(tiles) == 1:
-                pruned = pruned_cache
-            else:
-                pruned = table.read_data(spark, paths).select(*need)
-            ck = F.coalesce(
-                _composite(key, meta.partition_cols, part_values),
-                F.lit(np.iinfo(np.int64).min + 1),
-            )
-            probs = [i / n_out for i in range(1, n_out)]
-            with pt.phase("quantile"):
-                bounds = pruned.select(ck.alias("ck")).approxQuantile(
-                    "ck", probs, 1.0 / (4 * n_out)
-                )
-            bounds = np.sort(np.array(bounds, dtype=np.int64))
-            # 2. one full pass: route → exact shuffle → sort → write.
-            #    The composite key is materialized as a column FIRST so
-            #    it is evaluated once per row on either route path.
+            # one full pass: route → exact shuffle → sort → write. The
+            # composite key is materialized as a column FIRST so it is
+            # evaluated once per row on either route path.
             salts = exact_route_salts(n_out)
-            ckf = F.coalesce(
-                _composite(F.col(_KEY), meta.partition_cols, part_values),
-                F.lit(np.iinfo(np.int64).min + 1),
-            )
-            keyed = full.withColumn("__ck", ckf)
+            keyed = full.withColumn("__ck", ck_of(F.col(_KEY)))
             if n_out <= _JVM_ROUTE_MAX:
                 routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), bounds, salts))
             else:
@@ -513,26 +576,41 @@ def cluster(
                 {
                     "source_snapshot_id": src_snapshot,
                     "input_files": list(rows["path"]),
-                    "input_bytes": tile_bytes,
+                    "input_bytes": int(rows["file_size_bytes"].sum()),
                     "input_records": int(rows["record_count"].sum()),
                     "output_prefix": prefix,
                 },
             )
         stats_for(tile_no, prefix)
 
+    # tiles that still have to write more than one file need range bounds
+    ranged = [i for i in range(len(tiles)) if n_outs[i] > 1 and not tile_done(i)]
+    unranged = sorted(set(range(len(tiles))) - set(ranged))
     # Read splits aligned with the target file size for the whole stage:
     # the default 128 MB split caps the read/route stage at
     # total_bytes/128MB tasks no matter how many executors exist; one
     # split ≈ one input file keeps scan parallelism proportional to the
     # table, matching the shuffle side's n_out partitions.
-    with read_split_size(spark, target_file_size_bytes):
-        if len(tiles) == 1:
-            run_tile(0, tiles[0])
-        else:
-            with ThreadPoolExecutor(max_workers=max(1, tile_parallelism)) as pool:
-                futures = [pool.submit(run_tile, i, t) for i, t in enumerate(tiles)]
-                for f in futures:
-                    f.result()  # surface the first failure
+    with read_split_size(spark, target_file_size_bytes), ThreadPoolExecutor(
+        max_workers=max(1, tile_parallelism)
+    ) as pool:
+        # single-file (and resumed) tiles need no bounds: they start now
+        # and overlap the bounds job, which runs once for all the others
+        futures = [pool.submit(run_tile, i) for i in unranged]
+        if ranged:
+            keys = pruned_cache if pruned_cache is not None else _key_scan(
+                table, spark, [p for i in ranged for p in tile_rows[i]["path"]], need
+            )
+            with pt.phase("quantile"):
+                bounds = _tile_bounds(
+                    spark,
+                    keys.select(ck_of(key).alias("ck"), _PATH),
+                    {i: list(tile_rows[i]["path"]) for i in ranged},
+                    {i: n_outs[i] for i in ranged},
+                )
+            futures += [pool.submit(run_tile, i, bounds[i]) for i in ranged]
+        for f in futures:
+            f.result()  # surface the first failure
 
     entries = pd.concat(
         [stats_frames[i] for i in range(len(tiles))], ignore_index=True

@@ -37,6 +37,7 @@ from ..plans.binpack import (
     plan_compaction,
     plan_compaction_spark,
 )
+from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import Snapshot, Table, statable_cols
 from .checkpoint import RunCheckpoint
@@ -94,6 +95,24 @@ def _group_plan(table: Table, spark: SparkSession, group: CompactionGroup):
     return df
 
 
+def _route_frame(spark: SparkSession, groups: list):
+    """(``__route_path`` → ``__rt``) table: every input file of group i
+    carries the exact-route salt that lands it in shuffle partition i.
+    Built from Arrow, so it is a ``LocalRelation`` (no job, no Python
+    worker)."""
+    from .cluster import exact_route_salts
+
+    salts = exact_route_salts(len(groups))
+    return local_frame(
+        spark,
+        {
+            "__route_path": [p for g in groups for p in g.paths],
+            "__rt": [int(salts[i]) for i, g in enumerate(groups) for _ in g.paths],
+        },
+        "__route_path string, __rt int",
+    )
+
+
 def _rewrite_batch(
     table: Table, spark: SparkSession, groups: list
 ) -> str:
@@ -129,19 +148,12 @@ def _rewrite_batch(
         table.data_writer(df).parquet(prefix)
         return prefix
 
-    from .cluster import exact_route_salts
-
     n = len(groups)
-    salts = exact_route_salts(n)
-    route_rows = [
-        (p, int(salts[i])) for i, g in enumerate(groups) for p in g.paths
-    ]
-    route_df = spark.createDataFrame(route_rows, "__route_path string, __rt int")
     paths = [os.path.join(table.root, p) for g in groups for p in g.paths]
     df = (
         table.read_data(spark, paths)
         .withColumn("__route_path", rel_path_expr(table.root))
-        .join(F.broadcast(route_df), "__route_path", "inner")
+        .join(F.broadcast(_route_frame(spark, groups)), "__route_path", "inner")
         .drop("__route_path")
     )
     df = df.repartition(n, F.col("__rt")).drop("__rt")

@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
     DEFAULTS_PROP,
@@ -307,9 +308,7 @@ def equality_delete(
     if not isinstance(values, DataFrame):  # list of scalars
         if len(cols) != 1:
             raise ValueError("pass a DataFrame for multi-column equality deletes")
-        values = spark.createDataFrame([(v,) for v in values], schema=None).toDF(
-            cols[0]
-        )
+        values = local_frame(spark, {cols[0]: list(values)})
         # cast to the table's column type so the scan-side join matches
         tgt_type = {f.name: f.dataType for f in table._schema(spark).fields}[cols[0]]
         values = values.select(F.col(cols[0]).cast(tgt_type).alias(cols[0]))

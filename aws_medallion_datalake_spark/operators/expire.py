@@ -38,6 +38,7 @@ from typing import Optional
 
 import pyarrow.parquet as pq
 
+from ..session import local_frame
 from ..sources.tableformat import SPARK_MANIFEST_THRESHOLD, Table
 
 
@@ -91,7 +92,7 @@ def _spark_gc(table: Table, spark, retained, dry_run: bool) -> tuple:
         )
         if delete_paths:  # retained MoR delete files live under data/ too
             reach = reach.unionByName(
-                spark.createDataFrame([(p,) for p in delete_paths], "abs_path string")
+                local_frame(spark, {"abs_path": delete_paths}, "abs_path string")
             )
         orphans = listing.join(reach, "abs_path", "left_anti")
     else:

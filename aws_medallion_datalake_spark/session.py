@@ -1,4 +1,5 @@
-"""SparkSession factory + self-shipping of the package to executors.
+"""SparkSession factory, self-shipping of the package to executors, and
+the one constructor for small driver-built frames.
 
 The engine is driven by ``spark-submit --py-files engine.zip`` on a real
 cluster (BASELINE.json north_rule). ``build_pyfiles_zip()`` produces that
@@ -9,7 +10,10 @@ every worker's path either way.
 
 Config mirrors the reference's job bootstrap (AQE + coalescePartitions,
 /root/reference/scripts/bronze_digit.py:14-20) plus the Arrow/image-payload
-tuning from SURVEY.md §4.
+tuning from SURVEY.md §4. File listing follows the engine's one
+metadata fan-out rule: explicit paths are listed on the driver up to
+``FOOTER_SPARK_THRESHOLD`` files, the same bound above which footer-stats
+harvests fan out over executors.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
@@ -53,6 +57,29 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     return dest
 
 
+def local_frame(
+    spark: SparkSession, columns: dict, ddl: str | None = None
+) -> DataFrame:
+    """A small driver-built frame (routing tables, path lists, key lists)
+    as a ``LocalRelation``.
+
+    ``createDataFrame(list)`` pickles its rows through a Python RDD, so
+    the first job over it forks Python workers just to ship a few dozen
+    values. A ``pyarrow.Table`` reaches the JVM as Arrow batches and
+    lands as a ``LocalRelation``: no RDD, no job, no worker. ``columns``
+    maps column name to values; ``ddl`` fixes the types (Arrow-cast),
+    else they are inferred from the values."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    if ddl is None:
+        return spark.createDataFrame(pa.table(columns))
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(
+        pa.table({f.name: columns[f.name] for f in schema.fields}), schema
+    )
+
+
 def get_session(
     master: str = "local[*]",
     app_name: str = "aws_medallion_datalake_spark",
@@ -60,6 +87,8 @@ def get_session(
     extra_conf: dict | None = None,
     ship_package: bool = True,
 ) -> SparkSession:
+    from .sources.tableformat import FOOTER_SPARK_THRESHOLD
+
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -81,6 +110,14 @@ def get_session(
         # the format("medallion") connector implements pushFilters; Spark
         # refuses such readers unless pushdown is explicitly enabled
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # more than 32 explicit paths (Spark's default) are listed by a
+        # distributed job: one task per path, e.g. 64 tasks to list a
+        # compaction batch whose sizes the manifest already holds. List
+        # on the driver up to the footer-stats fan-out bound instead.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(FOOTER_SPARK_THRESHOLD),
+        )
         .config("spark.ui.enabled", "false")
         # local-mode driver == all executors; the 1g default heap OOMs on
         # binary image shuffles (irrelevant on a real cluster where

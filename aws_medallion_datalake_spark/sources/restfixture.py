@@ -4,8 +4,9 @@ Emulates the reference API shape (token grant → unit catalog →
 per-unit paged data; /root/reference/scripts/bronze_digit.py:33-76)
 with payloads that are pure functions of (unit index, row index) — so
 both pytest and a DuckDB oracle can recompute the expected bronze
-result exactly. Fault injection (leading 503s / hard 404s per
-(unit, page)) exercises the retry/backoff and error-skip paths.
+result exactly. Fault injection (leading 503s / hard 404s / garbled
+200 bodies per (unit, page)) exercises the retry/backoff and
+error-skip paths.
 """
 
 from __future__ import annotations
@@ -42,7 +43,8 @@ def record(k: int, j: int) -> dict:
 class FakeRestServer:
     """threading HTTP server; ``faults`` maps (unit_id, page) ->
     (status, n_failures) — the first n_failures requests for that key
-    get ``status``, later ones succeed (n_failures < 0 ⇒ always)."""
+    get ``status``, later ones succeed (n_failures < 0 ⇒ always). A
+    status of 200 sends a truncated, non-JSON body."""
 
     def __init__(self, n_units: int = 8, faults: dict | None = None):
         self.n_units = n_units
@@ -56,7 +58,9 @@ class FakeRestServer:
                 pass
 
             def _json(self, status, payload):
-                body = json.dumps(payload).encode()
+                self._send(status, json.dumps(payload).encode())
+
+            def _send(self, status, body):
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
                 self.send_header("Content-Length", str(len(body)))
@@ -97,6 +101,8 @@ class FakeRestServer:
                 if fault is not None:
                     status, n_fail = fault
                     if n_fail < 0 or hit <= n_fail:
+                        if status == 200:
+                            return self._send(200, b'{"rows": [{"grp": ')
                         return self._json(status, {})
                 k = int(unit.split("-")[1])
                 total = unit_rows(k)

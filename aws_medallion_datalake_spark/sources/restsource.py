@@ -28,7 +28,7 @@ downstream audit can see which rows needed retries.
 
 No external data: the engine never ships a real endpoint URL. Tests and
 the driver entry run the source against a deterministic in-process
-localhost HTTP server (tests/resthelp.py) whose payloads are pure
+localhost HTTP server (sources/restfixture.py) whose payloads are pure
 functions of (unit, page) — so the bronze result is oracle-checkable in
 pure SQL. Stdlib ``urllib`` only (``requests`` is not in the
 container); one connection-per-request keeps the executor side free of
@@ -87,13 +87,20 @@ class RestEndpoint:
 
 def _http_json(url: str, timeout: float, data: bytes | None = None,
                headers: dict | None = None):
-    """One stdlib HTTP round-trip → (status, parsed-JSON-or-None)."""
+    """One stdlib HTTP round-trip → (status, parsed-JSON-or-None).
+
+    A body that is not JSON (truncated, garbled) returns status None,
+    so it is retried like a dropped connection rather than raising."""
     req = urllib.request.Request(url, data=data, headers=headers or {})
     try:
         with urllib.request.urlopen(req, timeout=timeout) as resp:
-            return resp.status, json.loads(resp.read().decode("utf-8"))
+            status, body = resp.status, resp.read()
     except urllib.error.HTTPError as e:  # non-2xx still has a status
         return e.code, None
+    try:
+        return status, json.loads(body.decode("utf-8"))
+    except ValueError:  # JSONDecodeError, UnicodeDecodeError
+        return None, None
 
 
 def _get_with_retry(url: str, headers: dict, ep: RestEndpoint) -> tuple:
@@ -149,8 +156,10 @@ def _fetch_units_batches(ep: RestEndpoint, token: str):
     the incoming batch (columns ``unit_id``, ``data_referencia``).
 
     Pagination follows the server's ``has_more`` flag; each page's rows
-    are emitted as one raw_json value per record, enriched with the
-    reference's metadata columns. Runs on executors — one unit's
+    become one raw_json value per record, enriched with the reference's
+    metadata columns. A unit's pages are buffered and emitted only once
+    its last page succeeds: a unit that fails on any page is absent
+    from bronze, never half-fetched. Runs on executors — one unit's
     latency never blocks another partition.
     """
 
@@ -161,7 +170,7 @@ def _fetch_units_batches(ep: RestEndpoint, token: str):
             for unit, ref_date in zip(
                 pdf["unit_id"].astype(str), pdf["data_referencia"].astype(str)
             ):
-                page = 0
+                page, unit_out = 0, []
                 while True:
                     q = urllib.parse.urlencode(
                         {"unit": unit, "page": page,
@@ -173,13 +182,14 @@ def _fetch_units_batches(ep: RestEndpoint, token: str):
                     if payload is None:
                         break  # error-skip this unit (see _get_with_retry)
                     for seq, rec in enumerate(payload.get("rows", [])):
-                        out.append(
+                        unit_out.append(
                             (unit, page, seq,
                              json.dumps(rec, sort_keys=True),
                              ep.data_type, ep.api_source,
                              ref_date, ep.extraction_date, attempts)
                         )
                     if not payload.get("has_more"):
+                        out += unit_out  # the whole unit landed
                         break
                     page += 1
             yield pd.DataFrame(

@@ -62,6 +62,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import transforms
 
 
@@ -2049,10 +2050,8 @@ class Table:
             exempt = sorted(cur_paths - covered)
             out = out.join(F.broadcast(vals), list(cols), "left")
             if exempt:
-                ex = (
-                    spark.createDataFrame(
-                        [(p,) for p in exempt], f"{pc} string"
-                    ).withColumn("__eq_ex", F.lit(True))
+                ex = local_frame(spark, {pc: exempt}, f"{pc} string").withColumn(
+                    "__eq_ex", F.lit(True)
                 )
                 out = (
                     out.join(F.broadcast(ex), pc, "left")

@@ -760,6 +760,142 @@ def test_cluster_udf_route_path(tmp_path, spark, monkeypatch):
     assert clustering_quality(t, "phash") < q_before
 
 
+def _tiling(t, max_files_per_job, want):
+    """A target size whose tiling gives exactly the tile ``n_out`` values
+    in ``want`` (a sorted list), plus those per-tile values."""
+    import importlib
+
+    cm = importlib.import_module("aws_medallion_datalake_spark.operators.cluster")
+    man = t.manifest_pdf()
+    total = int(man["file_size_bytes"].sum())
+    for k in range(40, 200):
+        target = int(total * 10 / k)
+        tiles = cm._plan_tiles(man, target, max_files_per_job)
+        n_outs = [
+            max(1, round(int(man.loc[i, "file_size_bytes"].sum()) / target))
+            for i in tiles
+        ]
+        if sorted(n_outs) == want:
+            return target, n_outs
+    raise AssertionError(f"no target tiles this table into {want}")
+
+
+def _bounds_spy(monkeypatch):
+    """Wrap cluster's bounds job: record each call's tile ids and the
+    Spark jobs it ran."""
+    import importlib
+    import uuid
+
+    cm = importlib.import_module("aws_medallion_datalake_spark.operators.cluster")
+    real = cm._tile_bounds
+    calls = []
+
+    def spy(spark, keys, tile_paths, n_outs):
+        sc = spark.sparkContext
+        group = f"cluster-bounds-spy-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bounds")
+        try:
+            out = real(spark, keys, tile_paths, n_outs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        calls.append({"tiles": sorted(tile_paths), "jobs": len(jobs)})
+        return out
+
+    monkeypatch.setattr(cm, "_tile_bounds", spy)
+    return cm, calls
+
+
+def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypatch):
+    """Tiles that write 2 and 3 files get their range bounds from ONE
+    grouped aggregate (no per-tile approxQuantile): content is unchanged,
+    every tile writes its n_out files, and within each tile the files
+    hold disjoint, near-equal ranges of the routed composite key."""
+    from pyspark.sql import DataFrame
+
+    def no_quantile(*a, **k):
+        raise AssertionError("per-tile approxQuantile called")
+
+    monkeypatch.setattr(DataFrame, "approxQuantile", no_quantile)
+    t = make_table(tmp_path, spark, n=800, n_files=16)
+    before = table_fingerprint(t, spark)
+    target, n_outs = _tiling(t, 3, [2, 3])
+    cm, calls = _bounds_spy(monkeypatch)
+    snap = cluster(t, spark, curve="morton", target_file_size_bytes=target,
+                   max_files_per_job=3, tile_parallelism=2)
+    assert table_fingerprint(t, spark) == before
+    assert snap.summary["tiles"] == 2
+    assert snap.summary["files_out"] == 5
+    assert calls == [{"tiles": [0, 1], "jobs": calls[0]["jobs"]}]
+    assert 1 <= calls[0]["jobs"] <= 3  # one aggregate: its stages only
+
+    # disjoint composite-key ranges across the files of each tile
+    cols = ["phash", "w", "h"]
+    df = t.scan(spark)
+    part_values = sorted(
+        r[0]
+        for r in df.select(cm._part_key_col(["ingest_date"])).distinct().collect()
+    )
+    ck = cm._composite(cm._curve_key("morton", cols), ["ingest_date"], part_values)
+    per_file = (
+        df.withColumn("ck", ck)
+        .groupBy(F.col("_metadata.file_path").alias("f"))
+        .agg(F.min("ck").alias("lo"), F.max("ck").alias("hi"),
+             F.count("*").alias("n"))
+        .toPandas()
+    )
+    per_file["tile"] = per_file["f"].map(os.path.dirname)
+    widths = []
+    for _, g in per_file.groupby("tile"):
+        g = g.sort_values("lo")
+        widths.append(len(g))
+        assert (g["hi"].to_numpy()[:-1] < g["lo"].to_numpy()[1:]).all()
+        # each file holds near 1/n_out of its tile's rows
+        assert g["n"].min() >= 0.6 * g["n"].mean()
+    assert sorted(widths) == sorted(n_outs) == [2, 3]
+
+
+def test_cluster_resume_bounds_only_unfinished_tiles(tmp_path, spark, monkeypatch):
+    """A resumed run computes bounds only for tiles the checkpoint does
+    not hold, and commits the same content."""
+    from aws_medallion_datalake_spark.sources.generator import generate_images
+
+    t = Table.create(str(tmp_path / "flat"), schema_ddl=SCHEMA, stats_cols=STATS)
+    t.commit("append", t.write_files(generate_images(spark, 800, n_files=16)))
+    before = table_fingerprint(t, spark)
+    target, n_outs = _tiling(t, 2, [2, 2, 2, 2])
+    cp_path = str(tmp_path / "cluster-run.jsonl")
+    kwargs = dict(curve="morton", target_file_size_bytes=target,
+                  max_files_per_job=2, tile_parallelism=1)
+
+    cm, calls = _bounds_spy(monkeypatch)
+    real = cm.Table.new_data_prefix
+    n = {"calls": 0}
+
+    def flaky(self):
+        n["calls"] += 1
+        if n["calls"] == 2:
+            raise RuntimeError("simulated executor loss")
+        return real(self)
+
+    monkeypatch.setattr(cm.Table, "new_data_prefix", flaky)
+    with pytest.raises(RuntimeError):
+        cluster(t, spark, checkpoint=RunCheckpoint(cp_path), **kwargs)
+    monkeypatch.setattr(cm.Table, "new_data_prefix", real)
+    done = {
+        int(u["key"].rsplit("-", 1)[1])
+        for u in RunCheckpoint(cp_path).units_done("cluster")
+    }
+    assert calls[0]["tiles"] == [0, 1, 2, 3]
+    assert 1 <= calls[0]["jobs"] <= 3  # four tiles, still one aggregate
+    assert 1 <= len(done) < 4
+
+    snap = cluster(t, spark, checkpoint=RunCheckpoint(cp_path), **kwargs)
+    assert calls[1]["tiles"] == sorted({0, 1, 2, 3} - done)
+    assert table_fingerprint(t, spark) == before
+    assert snap.summary["files_out"] == sum(n_outs) == 8
+
+
 # ---------------- DELETE + rollback ----------------
 
 

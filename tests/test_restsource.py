@@ -101,6 +101,28 @@ def test_retry_budget_exhausted_drops_unit_tail(spark):
         assert srv.hits[("u-002", 0)] == 2  # budget respected
 
 
+def test_unit_failing_after_page_zero_is_absent(spark):
+    # page 0 of u-001 succeeds, page 1 never does: the unit's buffered
+    # page-0 rows are dropped with it, so bronze holds no partial unit.
+    with FakeRestServer(n_units=3, faults={("u-001", 1): (503, -1)}) as srv:
+        df = read_bronze(spark, _ep(srv, max_attempts=2))
+        rows = df.select("unit_id", "page").collect()
+        assert {r.unit_id for r in rows} == {"u-000", "u-002"}
+        assert len(rows) == unit_rows(0) + unit_rows(2)
+        assert srv.hits[("u-001", 0)] == 1 and srv.hits[("u-001", 1)] == 2
+
+
+def test_garbled_200_body_is_retried(spark):
+    # one truncated, non-JSON 200 body on (u-001, 1): retried, and the
+    # unit lands whole with attempts == 2 on that page.
+    with FakeRestServer(n_units=3, faults={("u-001", 1): (200, 1)}) as srv:
+        df = read_bronze(spark, _ep(srv))
+        rows = df.collect()
+        assert len(rows) == sum(unit_rows(k) for k in range(3))
+        assert {r.attempts for r in rows if (r.unit_id, r.page) == ("u-001", 1)} == {2}
+        assert srv.hits[("u-001", 1)] == 2
+
+
 def test_non_retriable_status_fails_fast(spark):
     # 404 is not retriable: exactly ONE request, unit skipped.
     with FakeRestServer(n_units=3, faults={("u-000", 0): (404, -1)}) as srv:
