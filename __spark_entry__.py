@@ -30,6 +30,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _isum(expr: str) -> str:
+    """DuckDB oracle ``sum()`` of an integer expression, as BIGINT.
+
+    DuckDB sums integers into HUGEINT (int128), a type no Spark column
+    has: Spark's sum of an integer column is a bigint. Every integer
+    aggregate sum in the oracle SQL goes through here."""
+    return f"CAST(sum({expr}) AS BIGINT)"
+
+
+def _fp_sum(text_sql: str) -> str:
+    """Oracle side of ``sum(_hex15_to_long(md5(text)) % 1000003)``."""
+    return _isum(
+        f"CAST('0x' || substr(md5({text_sql}), 1, 15) AS BIGINT) % 1000003"
+    )
+
+
 def _hex15_to_long(c):
     """Low-60-bit integer of an md5 hex digest — matches DuckDB's
     CAST('0x' || substr(md5(x),1,15) AS BIGINT)."""
@@ -1235,7 +1251,7 @@ def _sql_simhash():
     def src(b):
         return f"((h_lo >> {b}) & 1)" if b < 60 else f"((h_hi >> {b - 60}) & 1)"
 
-    bit_sums = ", ".join(f"sum({src(b)} * 2 - 1) AS b{b}" for b in range(64))
+    bit_sums = ", ".join(f"{_isum(f'{src(b)} * 2 - 1')} AS b{b}" for b in range(64))
     sim = " + ".join(
         f"(CASE WHEN b{b} > 0 THEN CAST({_MIN_LONG if b == 63 else (1 << b)} AS BIGINT) ELSE 0 END)"
         for b in range(64)
@@ -1735,10 +1751,9 @@ def _sql_final_state_over(rows_sql, caption_col="caption"):
     return f"""
         SELECT ingest_date, fmt, count(*) AS n,
                count(DISTINCT image_id) AS n_ids,
-               sum(w) AS sum_w, sum(h) AS sum_h,
-               sum(CAST('0x' || substr(md5(image_id || '|' ||
-                     coalesce({caption_col}, '<null>')), 1, 15) AS BIGINT)
-                   % 1000003) AS content_fp
+               {_isum("w")} AS sum_w, {_isum("h")} AS sum_h,
+               {_fp_sum(f"image_id || '|' || coalesce({caption_col}, '<null>')")}
+                 AS content_fp
         FROM ({rows_sql})
         GROUP BY ingest_date, fmt
         ORDER BY ingest_date, fmt
@@ -1770,7 +1785,7 @@ def q_oracle_canary(spark, sf_dir):
 
 def _sql_oracle_canary():
     return f"""
-        SELECT count(*) AS n, sum(v) AS sum_v,
+        SELECT count(*) AS n, {_isum("v")} AS sum_v,
                min(k) AS min_k, max(k) AS max_k
         FROM read_parquet('{_ORACLE_STATE_ROOT}/canary/t/*.parquet')
     """
@@ -1953,7 +1968,7 @@ def _sql_image_gold_star():
                dayofweek(d) IN (0, 6) AS eh_fim_semana,
                fmt AS fmt_key, fmt <> 'png' AS is_lossy,
                count(*) AS n_images,
-               sum(w) AS sum_w,
+               {_isum("w")} AS sum_w,
                count(DISTINCT image_id) AS n_ids
         FROM (
             SELECT *, CAST(ingest_date AS DATE) AS d
@@ -1994,7 +2009,7 @@ def _sql_image_matview():
         ]
     )
     return f"""
-        SELECT fmt, count(*) AS n, sum(w) AS total_w,
+        SELECT fmt, count(*) AS n, {_isum("w")} AS total_w,
                max(image_id) AS max_id
         FROM ({rows})
         GROUP BY fmt
@@ -3254,11 +3269,10 @@ def _sql_image_schema_ops():
           FROM ({_sql_img_rows(42000, 42005)})
     """
     return f"""
-        SELECT fmt, count(*) AS n, sum(w) AS sum_w,
-               sum(CASE WHEN w >= 1099511627776 THEN 1 ELSE 0 END) AS n_wide,
-               sum(CASE WHEN license IS NULL THEN 1 ELSE 0 END) AS n_null_lic,
-               sum(CAST('0x' || substr(md5(image_id), 1, 15) AS BIGINT)
-                   % 1000003) AS id_fp
+        SELECT fmt, count(*) AS n, {_isum("w")} AS sum_w,
+               {_isum("CASE WHEN w >= 1099511627776 THEN 1 ELSE 0 END")} AS n_wide,
+               {_isum("CASE WHEN license IS NULL THEN 1 ELSE 0 END")} AS n_null_lic,
+               {_fp_sum("image_id")} AS id_fp
         FROM ({rows})
         GROUP BY fmt
         ORDER BY fmt
@@ -3405,9 +3419,8 @@ def _sql_image_bucketed_join():
     # with identical per-id attributes), so the SPJ match set is
     # exactly the id overlap 100..299 — recomputable in pure SQL.
     return f"""
-        SELECT fmt, count(*) AS n, sum(w) AS sum_w, sum(h) AS sum_h,
-               sum(CAST('0x' || substr(md5(image_id), 1, 15) AS BIGINT)
-                   % 1000003) AS id_fp
+        SELECT fmt, count(*) AS n, {_isum("w")} AS sum_w, {_isum("h")} AS sum_h,
+               {_fp_sum("image_id")} AS id_fp
         FROM ({_sql_img_rows(100, 299)})
         GROUP BY fmt
         ORDER BY fmt
@@ -3655,8 +3668,8 @@ def _sql_image_evolution():
     """
     return f"""
         SELECT fmt, count(*) AS n,
-               sum(CASE WHEN quality_score IS NULL THEN 1 ELSE 0 END) AS n_null_qs,
-               sum(w) AS sum_w,
+               {_isum("CASE WHEN quality_score IS NULL THEN 1 ELSE 0 END")} AS n_null_qs,
+               {_isum("w")} AS sum_w,
                round(sum(coalesce(quality_score, 0.0)), 3) AS sum_qs
         FROM ({rows})
         GROUP BY fmt
@@ -3757,10 +3770,9 @@ def _sql_image_rename():
     return f"""
         SELECT ingest_date, count(*) AS n,
                count(DISTINCT image_id) AS n_ids,
-               sum(w) AS sum_w,
-               sum(CAST('0x' || substr(md5(image_id || '|' ||
-                     coalesce(caption_text, '<null>')), 1, 15) AS BIGINT)
-                   % 1000003) AS content_fp
+               {_isum("w")} AS sum_w,
+               {_fp_sum("image_id || '|' || coalesce(caption_text, '<null>')")}
+                 AS content_fp
         FROM ({rows})
         GROUP BY ingest_date
         ORDER BY ingest_date
@@ -5967,7 +5979,7 @@ def _sql_rest_bronze():
     # (k % 7) + 12 rows; row j has grp ['alpha','beta','gamma'][j % 3]
     # and metric (k*31 + j*7) % 101; page 1 (j in 5..9) of u-003 needed
     # 3 attempts (two injected 503s), everything else 1.
-    return """
+    return f"""
         WITH recs AS (
             SELECT k, j,
                    ['alpha','beta','gamma'][(j % 3) + 1] AS grp,
@@ -5979,7 +5991,7 @@ def _sql_rest_bronze():
             WHERE j <= (k % 7) + 11
         )
         SELECT 'u-' || lpad(CAST(k AS VARCHAR), 3, '0') AS unit_id, grp,
-               count(*) AS n, sum(metric) AS sum_metric,
+               count(*) AS n, {_isum("metric")} AS sum_metric,
                max(attempts) AS max_attempts
         FROM recs GROUP BY k, grp ORDER BY unit_id, grp
     """

@@ -54,9 +54,9 @@ from ..sources.tableformat import (
     Table,
     _pred_to_column,
     prune_manifest,
-    read_split_size,
     rel_path_expr,
     resolve_write_mode,
+    rewrite_split_size,
     statable_cols,
 )
 from .metascan import _fully_covered_mask
@@ -161,8 +161,11 @@ def delete_where(
     new_entries = man.iloc[0:0]
     if touched_rel:
         prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), read_split_size(
-            spark, target_file_size_bytes
+        with pt.phase("rewrite"), rewrite_split_size(
+            spark,
+            target_file_size_bytes,
+            table.root,
+            boundary[boundary["path"].isin(touched_rel)],
         ):
             tgt = table.read_data(
                 spark, [os.path.join(table.root, p) for p in touched_rel]
@@ -505,7 +508,12 @@ def apply_deletes(
     touched_rel = sorted(touched)
     schema = table._schema(spark)
     prefix = table.new_data_prefix()
-    with pt.phase("rewrite"), read_split_size(spark, target_file_size_bytes):
+    with pt.phase("rewrite"), rewrite_split_size(
+        spark,
+        target_file_size_bytes,
+        table.root,
+        man[man["path"].isin(touched)],
+    ):
         tgt = table.read_data(
             spark, [os.path.join(table.root, p) for p in touched_rel]
         )

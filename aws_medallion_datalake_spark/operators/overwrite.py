@@ -18,9 +18,10 @@ half-done. These operators are the snapshot-isolated versions:
   that the incoming rows all satisfy the predicate.
 
 100 TB shape: both plan entirely from manifest statistics. Dynamic
-overwrite resolves the touched tuples with ONE distinct over the
-incoming frame's partition-transform values (the incoming refresh is
-the small side — a day of a 10^12-row table), drops exactly-matching
+overwrite writes the incoming frame first and reads the touched tuples
+off the written files' partition stats (one column-pruned distinct over
+those files when a file straddles tuples; the incoming refresh is the
+small side — a day of a 10^12-row table), drops exactly-matching
 files WHOLESALE (zero IO; provable from min==max==value + zero nulls
 per partition field), and row-rewrites only range-partitioned boundary
 files whose stats straddle a touched value. REPLACE WHERE splits the
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from functools import reduce
 from typing import Iterable, Optional
@@ -50,8 +52,8 @@ from ..sources.tableformat import (
     Table,
     _pred_to_column,
     prune_manifest,
-    read_split_size,
     rel_path_expr,
+    rewrite_split_size,
     statable_cols,
 )
 from .metascan import _fully_covered_mask
@@ -85,6 +87,39 @@ def _conform(df: DataFrame, table: Table) -> DataFrame:
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
+
+
+def _written_tuples(table: Table, spark: SparkSession, specs, entries) -> list:
+    """Distinct partition tuples of the freshly written files ``entries``.
+
+    Read from their partition stats when every file is homogeneous on
+    every partition field (min == max with no nulls, or all null); else
+    one column-pruned distinct over the written files."""
+    found: set = set()
+    for r in entries.to_dict("records"):
+        vals = []
+        for t in specs:
+            nulls = r[f"nulls_{t.name}"]
+            if pd.isna(nulls):
+                break
+            if nulls == r["record_count"]:
+                vals.append(None)
+            elif nulls == 0 and r[f"min_{t.name}"] == r[f"max_{t.name}"]:
+                vals.append(r[f"min_{t.name}"])
+            else:
+                break
+        else:
+            found.add(tuple(vals))
+            continue
+        paths = [os.path.join(table.root, p) for p in entries["path"]]
+        return [
+            tuple(row)
+            for row in table.read_data(spark, paths)
+            .select(*[t.expr().alias(t.name) for t in specs])
+            .distinct()
+            .collect()
+        ]
+    return list(found)
 
 
 def overwrite_partitions(
@@ -133,28 +168,42 @@ def overwrite_partitions(
             )
         return table.commit("overwrite", entries, summ)
 
-    # persist the conformed frame: the tuple plan and the file write must
-    # observe the SAME rows (a non-deterministic source re-executed per
-    # action could write a partition the plan never saw)
-    out = out.persist()
-    with pt.phase("plan"):
-        tuples = [
-            tuple(r)
-            for r in out.select(
-                *[t.expr().alias(t.name) for t in specs]
-            ).distinct().collect()
-        ]
-        if len(tuples) > _MAX_TOUCHED_TUPLES:
-            out.unpersist()
-            raise ValueError(
-                f"incoming frame touches {len(tuples)} partition tuples "
-                f"(> {_MAX_TOUCHED_TUPLES}); use a full INSERT OVERWRITE "
-                f"for table-scale refreshes"
-            )
+    # plan from the files just written, not from a second evaluation of
+    # ``df``: the touched tuples and the written rows then agree by
+    # construction, even for a non-deterministic source. Until the commit
+    # lands, a failure (the tuple cap included) deletes what was written.
     with pt.phase("write"):
         entries = table.write_files(out)
-    out.unpersist()
+    try:
+        return _replace_written(
+            table, spark, meta, specs, entries, pt, t0, target_file_size_bytes
+        )
+    except BaseException:
+        if len(entries):
+            shutil.rmtree(
+                os.path.join(
+                    table.root, os.path.dirname(entries.iloc[0]["path"])
+                ),
+                ignore_errors=True,
+            )
+        raise
+
+
+def _replace_written(
+    table, spark, meta, specs, entries, pt, t0, target_file_size_bytes
+) -> Snapshot:
+    """``overwrite_partitions`` after the incoming files are written:
+    plan the touched tuples from ``entries``, drop or boundary-rewrite
+    the files holding them, and commit."""
     n_new = int(entries["record_count"].sum()) if len(entries) else 0
+    with pt.phase("plan"):
+        tuples = _written_tuples(table, spark, specs, entries)
+    if len(tuples) > _MAX_TOUCHED_TUPLES:
+        raise ValueError(
+            f"incoming frame touches {len(tuples)} partition tuples "
+            f"(> {_MAX_TOUCHED_TUPLES}); use a full INSERT OVERWRITE "
+            f"for table-scale refreshes"
+        )
 
     with pt.phase("plan"):
         man = table.manifest_pdf()
@@ -198,8 +247,8 @@ def overwrite_partitions(
             os.path.join(table.root, p) for p in man.loc[boundary, "path"]
         ]
         prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), read_split_size(
-            spark, target_file_size_bytes
+        with pt.phase("rewrite"), rewrite_split_size(
+            spark, target_file_size_bytes, table.root, man.loc[boundary]
         ):
             keep = table.read_data(spark, paths).filter(
                 ~F.coalesce(cond, F.lit(False))
@@ -330,8 +379,11 @@ def replace_where(
     rewritten = man.iloc[0:0]
     if touched_rel:
         prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), read_split_size(
-            spark, target_file_size_bytes
+        with pt.phase("rewrite"), rewrite_split_size(
+            spark,
+            target_file_size_bytes,
+            table.root,
+            man[man["path"].isin(touched_rel)],
         ):
             keep = table.read_data(
                 spark, [os.path.join(table.root, p) for p in touched_rel]

@@ -60,9 +60,9 @@ from ..sources.tableformat import (
     Table,
     _pred_to_column,
     prune_manifest,
-    read_split_size,
     rel_path_expr,
     resolve_write_mode,
+    rewrite_split_size,
     statable_cols,
 )
 from .timing import PhaseTimer
@@ -171,7 +171,12 @@ def update_where(
     rows_updated = int(touched_pdf["n_matched_rows"].sum())
 
     prefix = table.new_data_prefix()
-    with pt.phase("rewrite"), read_split_size(spark, target_file_size_bytes):
+    with pt.phase("rewrite"), rewrite_split_size(
+        spark,
+        target_file_size_bytes,
+        table.root,
+        cand[cand["path"].isin(touched_rel)],
+    ):
         tgt = table.read_data(
             spark, [os.path.join(table.root, p) for p in touched_rel]
         )

@@ -2518,6 +2518,34 @@ def read_split_size(spark: SparkSession, nbytes: int):
         spark.conf.set(key, old)
 
 
+def rewrite_split_size(
+    spark: SparkSession, target_bytes: int, root: str, files: pd.DataFrame
+):
+    """``read_split_size`` for a copy-on-write keep rewrite of the
+    manifest rows ``files`` (paths relative to ``root``).
+
+    A parquet split owns the row groups whose midpoints fall inside it,
+    so a split that cuts a single-row-group file yields one real task
+    and one empty one (a 4.8 MB file at a 4 MB split: two write tasks,
+    one of which reads nothing). The split therefore rises to the
+    largest file of the set that is under twice the target and whose
+    footer shows ONE row group. Spark packs small files into a split up
+    to its size, so outputs stay under twice the target; files with
+    several row groups, and files at twice the target or more, still
+    split at the target. Footers are read largest first and only for
+    files between one and two targets, stopping at the first single
+    row group."""
+    target = int(target_bytes)
+    size = files["file_size_bytes"].astype("int64")
+    over = files[(size > target) & (size < 2 * target)]
+    split = target
+    for r in over.sort_values("file_size_bytes", ascending=False).itertuples():
+        if pq.ParquetFile(os.path.join(root, r.path)).metadata.num_row_groups == 1:
+            split = int(r.file_size_bytes)
+            break
+    return read_split_size(spark, split)
+
+
 def rel_path_expr(root: str):
     """``_metadata.file_path`` (a file:-scheme URI) → path relative to the
     table root, computed JVM-side so joins/maps against manifest-stored

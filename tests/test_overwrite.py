@@ -1,9 +1,12 @@
 """Dynamic partition overwrite + REPLACE WHERE: atomicity, wholesale
 file drops vs boundary rewrites, validation, CDC visibility."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from aws_medallion_datalake_spark.operators import overwrite as overwrite_mod
 from aws_medallion_datalake_spark.operators.delete import delete_where
 from aws_medallion_datalake_spark.operators.overwrite import (
     overwrite_partitions,
@@ -101,6 +104,147 @@ def test_overwrite_partitions_rewrites_mixed_boundary_files(tmp_path, spark):
     assert got["2024-01-02"] == 10
     # other dates keep all their rows despite living in rewritten files
     assert sum(n for d, n in got.items() if d != "2024-01-02") == N - N // DATES
+
+
+def _ids_by_date(df) -> dict:
+    out: dict = {}
+    for r in df.select("ingest_date", "image_id").collect():
+        out.setdefault(r["ingest_date"], set()).add(r["image_id"])
+    return out
+
+
+def _read_spy(monkeypatch) -> list:
+    """Path lists of every ``Table.read_data`` call."""
+    calls = []
+    orig = Table.read_data
+
+    def spy(self, spark_, paths, meta=None):
+        calls.append(list(paths))
+        return orig(self, spark_, paths, meta=meta)
+
+    monkeypatch.setattr(Table, "read_data", spy)
+    return calls
+
+
+def _reads_written(calls, t, snap) -> bool:
+    prefix = os.path.join(t.root, snap.summary["insert_prefix"])
+    return any(c and all(p.startswith(prefix) for p in c) for c in calls)
+
+
+def _assert_replaced(t, spark, before: dict, want: dict) -> None:
+    """Dates in ``want`` hold exactly its ids; every other date is as
+    ``before``."""
+    got = _ids_by_date(t.scan(spark))
+    for d in set(before) | set(want):
+        assert got.get(d) == want.get(d, before.get(d)), d
+
+
+def test_overwrite_partitions_plans_homogeneous_files_from_stats(
+    table, spark, monkeypatch
+):
+    calls = _read_spy(monkeypatch)
+    snap = overwrite_partitions(table, spark, _fresh_day(spark, 12))
+    assert snap.summary["partitions_replaced"] == 1
+    assert not _reads_written(calls, table, snap)
+
+
+def test_overwrite_partitions_straddling_written_files(table, spark, monkeypatch):
+    """One written file holds two dates: its stats cannot name the
+    tuples, so the plan takes a distinct over the written files."""
+    before = _ids_by_date(table.scan(spark))
+    incoming = (
+        generate_images(spark, 24, n_files=1, start=9000)
+        .filter(F.col("ingest_date").isin("2024-01-02", "2024-01-03"))
+        .coalesce(1)
+    )
+    want = _ids_by_date(incoming)
+    assert len(want) == 2
+    calls = _read_spy(monkeypatch)
+    snap = overwrite_partitions(table, spark, incoming)
+    assert snap.summary["partitions_replaced"] == 2
+    assert _reads_written(calls, table, snap)
+    _assert_replaced(table, spark, before, want)
+
+
+def test_overwrite_partitions_null_and_value_in_one_file(tmp_path, spark):
+    t = Table.create(
+        str(tmp_path / "nl"), SCHEMA, partition_cols=["ingest_date"],
+        stats_cols=STATS,
+    )
+    t.commit("append", t.write_files(_routed(generate_images(spark, N, n_files=8))))
+    t.commit(
+        "append",
+        t.write_files(
+            generate_images(spark, 6, n_files=1, start=8000).withColumn(
+                "ingest_date", F.lit(None).cast("string")
+            )
+        ),
+    )
+    before = _ids_by_date(t.scan(spark))
+    assert len(before[None]) == 6
+    incoming = (
+        generate_images(spark, 5, n_files=1, start=9100)
+        .withColumn("ingest_date", F.lit(None).cast("string"))
+        .unionByName(
+            generate_images(spark, 5, n_files=1, start=9200).withColumn(
+                "ingest_date", F.lit("2024-01-02")
+            )
+        )
+        .coalesce(1)
+    )
+    snap = overwrite_partitions(t, spark, incoming)
+    assert snap.summary["partitions_replaced"] == 2
+    _assert_replaced(t, spark, before, _ids_by_date(incoming))
+
+
+def test_overwrite_partitions_non_deterministic_partition_values(table, spark):
+    """The plan reads the tuples the write produced, so a ``rand()``
+    partition value cannot make plan and write disagree."""
+    before = _ids_by_date(table.scan(spark))
+    incoming = generate_images(spark, 40, n_files=2, start=9300).withColumn(
+        "ingest_date",
+        F.when(F.rand() < 0.5, "2024-01-02").otherwise("2024-01-03"),
+    )
+    snap = overwrite_partitions(table, spark, incoming)
+    written = _ids_by_date(
+        spark.read.parquet(os.path.join(table.root, snap.summary["insert_prefix"]))
+    )
+    assert sum(len(v) for v in written.values()) == 40
+    assert snap.summary["partitions_replaced"] == len(written)
+    _assert_replaced(table, spark, before, written)
+
+
+def test_overwrite_partitions_tuple_cap_leaves_no_data_prefix(
+    table, spark, monkeypatch
+):
+    monkeypatch.setattr(overwrite_mod, "_MAX_TOUCHED_TUPLES", 1)
+    prefixes = set(os.listdir(table.data_dir))
+    head = table.snapshot().snapshot_id
+    with pytest.raises(ValueError, match="partition tuples"):
+        overwrite_partitions(
+            table, spark, generate_images(spark, 8, n_files=1, start=9400)
+        )
+    assert set(os.listdir(table.data_dir)) == prefixes
+    assert table.snapshot().snapshot_id == head
+
+
+@pytest.mark.parametrize("where", ["plan", "commit"])
+def test_overwrite_partitions_failure_before_commit_leaves_no_data_prefix(
+    table, spark, monkeypatch, where
+):
+    def boom(*args, **kwargs):
+        raise RuntimeError(where)
+
+    if where == "plan":
+        monkeypatch.setattr(overwrite_mod, "_written_tuples", boom)
+    else:
+        monkeypatch.setattr(table, "commit", boom)
+    prefixes = set(os.listdir(table.data_dir))
+    head = table.snapshot().snapshot_id
+    with pytest.raises(RuntimeError, match=where):
+        overwrite_partitions(table, spark, _fresh_day(spark, 8))
+    assert set(os.listdir(table.data_dir)) == prefixes
+    assert table.snapshot().snapshot_id == head
 
 
 def test_overwrite_partitions_unpartitioned_is_full_replace(tmp_path, spark):

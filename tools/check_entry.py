@@ -1,7 +1,10 @@
 """Emulates the driver's correctness gate: runs every __spark_entry__
 query on Spark AND its oracle SQL on DuckDB at a given sf dir, then
 compares row count, column-name set, and order-insensitive values
-(columns sorted by name, rows sorted).
+(columns sorted by name, rows sorted). ``norm_cell`` stringifies values,
+which hides their types, so an oracle column typed HUGEINT or DECIMAL
+fails on its own: DuckDB's integer ``sum()`` returns int128, which no
+Spark integer type matches (cast it, e.g. with ``_isum``).
 
 Usage: python tools/check_entry.py [sf_dir] [query ...]
 """
@@ -24,6 +27,11 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+# oracle result types the Spark queries here never produce: DuckDB sums
+# integers into HUGEINT (int128), and decimal literals make DECIMALs
+WIDE_TYPES = ("HUGEINT", "DECIMAL")
 
 
 def norm_cell(v):
@@ -76,11 +84,19 @@ def main():
             n_pass += 1
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
+            res = con.sql(oracles[name])
+            ocols, otypes = res.columns, res.types
             orows = res.fetchall()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {e}")
+            n_fail += 1
+            continue
+        wide = [
+            f"{c} {t}" for c, t in zip(ocols, map(str, otypes))
+            if t.startswith(WIDE_TYPES)
+        ]
+        if wide:
+            print(f"FAIL {name}: oracle column types {wide}")
             n_fail += 1
             continue
         sc, sr = norm_rows(scols, srows)
