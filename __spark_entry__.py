@@ -1672,9 +1672,7 @@ def _sql_embedding_neardup_pairs():
 # ≥ 40 dB, caption byte-equality, phash known-vectors — the north-rule
 # per-row invariants, tests/test_kernels.py tests/test_pipeline.py) and
 # by the driver-green landed-projection entries (image_phash_neardup,
-# image_features_ann). ``oracle_canary`` keeps ONE deliberate
-# side-channel entry so the next CORRECTNESS artifact still
-# discriminates harness-namespace failures from content failures.
+# image_features_ann).
 # ---------------------------------------------------------------------------
 
 _IMG_ROWS = 400
@@ -1757,37 +1755,6 @@ def _sql_final_state_over(rows_sql, caption_col="caption"):
         FROM ({rows_sql})
         GROUP BY ingest_date, fmt
         ORDER BY ingest_date, fmt
-    """
-
-
-def q_oracle_canary(spark, sf_dir):
-    """Driver-harness canary (round-4 VERDICT task 1): writes a tiny
-    CONSTANT parquet under the same /tmp root the round-4 flow oracles
-    used as a side-channel, returns a frame reading it back; its oracle
-    reads the same file. Green ⟺ the driver executes the Spark entry
-    before its oracle in a shared filesystem namespace. Together with
-    the pure-SQL flow oracles this discriminates failure classes: canary
-    red ⇒ the /tmp side-channel is unusable in the driver harness
-    (explains CORRECTNESS_r04's 19 hash-red flow rows); canary green +
-    a pure-replay flow red ⇒ genuine content bug in that flow."""
-    root = _oracle_root("canary")
-    spark.range(0, 10, 1, 1).select(
-        F.col("id").alias("k"), (F.col("id") * 7 + 3).alias("v")
-    ).write.parquet(os.path.join(root, "t"))
-    df = spark.read.parquet(os.path.join(root, "t"))
-    return df.agg(
-        F.count("*").alias("n"),
-        F.sum("v").alias("sum_v"),
-        F.min("k").alias("min_k"),
-        F.max("k").alias("max_k"),
-    )
-
-
-def _sql_oracle_canary():
-    return f"""
-        SELECT count(*) AS n, {_isum("v")} AS sum_v,
-               min(k) AS min_k, max(k) AS max_k
-        FROM read_parquet('{_ORACLE_STATE_ROOT}/canary/t/*.parquet')
     """
 
 
@@ -6004,27 +5971,22 @@ def _sql_rest_bronze():
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver's correctness gate checks the FIRST 50
-    # entries. Round-5 window, in priority order:
-    #   1     oracle_canary — brand-new side-channel diagnostic (see the
-    #         oracle section comment),
-    #   2     event_funnel — added after the r4 window filled, never
-    #         driver-checked,
-    #   3-21  the 19 maintenance flows whose oracles were rebuilt this
-    #         round as pure-SQL replays (all were hash-red in
-    #         CORRECTNESS_r04 under the old /tmp live-file design),
+    # entries. Window, in priority order:
+    #   1-2   rest_bronze and neardup_retention — never gate-checked,
+    #   3-21  the 19 maintenance flows with pure-SQL replay oracles; 18
+    #         were hash-red in CORRECTNESS_r05 for one root cause, the
+    #         HUGEINT oracle sums now cast to BIGINT (``_isum``),
     #   22-24 the three formerly rows-only decode-bound flows, now
     #         returning decode-independent frames with hard oracles,
     #   25-47 the 23 oracle entries whose newest green record is r02
-    #         (oldest-record-first rotation; includes
-    #         minhash_candidate_pairs, which also gained the max_bucket
-    #         hot-band guard this round),
+    #         (oldest-record-first rotation),
     #   48-50 the three oldest r03 records.
-    # Past 50: the r04-green entries (newest records), then the
-    # remaining r03 records.
+    # Past 50: event_funnel (green in r05), the r04-green entries
+    # (newest records), then the remaining r03 records.
     return {
-        # -- brand-new / never driver-checked --
-        "oracle_canary": q_oracle_canary,
-        "event_funnel": q_event_funnel,
+        # -- never gate-checked --
+        "rest_bronze": q_rest_bronze,
+        "neardup_retention": q_neardup_retention,
         # -- 19 maintenance flows: oracles rebuilt as pure-SQL replays --
         "image_maintenance": q_image_maintenance,
         "image_update": q_image_update,
@@ -6077,11 +6039,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardup_components": q_neardup_components,
         "orders_rollup": q_orders_rollup,
         "rank_topn_per_group": q_rank_topn_per_group,
-        # ---- position 51+ (not in the r5 window) ----
-        # brand-new this round (pytest-covered; rotate into the next
-        # window if one exists):
-        "rest_bronze": q_rest_bronze,
-        "neardup_retention": q_neardup_retention,
+        # ---- position 51+ (outside the window) ----
+        # r05-green record:
+        "event_funnel": q_event_funnel,
         # r04-green records (newest, rotate last):
         "embedding_topk": q_embedding_topk,
         "image_features_ann": q_image_features_ann,
@@ -6194,7 +6154,6 @@ def oracle_sql() -> dict[str, str]:
         # pure-SQL replay oracles for the maintenance flows (round-5
         # redesign — each replays the flow's final logical state from
         # the generator row function; see the oracle section comment)
-        "oracle_canary": _sql_oracle_canary(),
         "image_maintenance": _sql_image_maintenance(),
         "image_update": _sql_image_update(),
         "image_dyn_overwrite": _sql_image_dyn_overwrite(),

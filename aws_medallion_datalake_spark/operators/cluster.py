@@ -405,13 +405,7 @@ def cluster(
         raise ValueError(f"unknown curve {curve!r}")
     if mode not in ("auto", "full", "incremental"):
         raise ValueError(f"unknown mode {mode!r}")
-    if table.pending_delete_paths() or table.pending_eq_deletes():
-        # tile rewrites copy whole files, resurrecting rows a pending
-        # positional/equality delete suppresses — materialize them first
-        raise ValueError(
-            "table has merge-on-read deletes pending; run apply_deletes() "
-            "before clustering"
-        )
+    table.refuse_pending_deletes("clustering")
     t0 = time.time()
     pt = PhaseTimer()
     meta = table.metadata()

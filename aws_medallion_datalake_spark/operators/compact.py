@@ -189,15 +189,9 @@ def compact(
     day's ingest, not the whole table. Hidden-partition transforms apply
     (a plain ``ingest_date`` predicate scopes a ``days(ingest_date)``
     table)."""
-    if table.pending_delete_paths() or table.pending_eq_deletes():
-        # a pack-group rewrite copies whole files, resurrecting rows a
-        # pending positional/equality delete suppresses (and re-stamping a
-        # file's path would break the equality sequence rule) —
-        # materialize them first
-        raise ValueError(
-            "table has merge-on-read deletes pending; run apply_deletes() "
-            "before compaction"
-        )
+    # a pack-group rewrite copies whole files (and re-stamping a file's
+    # path would break the equality sequence rule)
+    table.refuse_pending_deletes("compaction")
     t0 = time.time()
     pt = PhaseTimer()
     with pt.phase("plan"):

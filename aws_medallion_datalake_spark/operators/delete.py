@@ -56,7 +56,7 @@ from ..sources.tableformat import (
     prune_manifest,
     rel_path_expr,
     resolve_write_mode,
-    rewrite_split_size,
+    rewrite_files,
     statable_cols,
 )
 from .metascan import _fully_covered_mask
@@ -85,23 +85,14 @@ def delete_where(
     ``apply_deletes`` run materializes them back to copy-on-write form.
     """
     mode = resolve_write_mode(table.metadata(), "delete", mode)
-    if mode not in ("copy-on-write", "merge-on-read"):
-        raise ValueError(f"unknown delete mode {mode!r}")
     t0 = time.time()
     pt = PhaseTimer()
     preds = list(predicates)
     if not preds:
         raise ValueError("delete_where with no predicate would truncate the "
                          "table; pass an explicit predicate list")
-    if mode == "copy-on-write" and (
-        table.pending_delete_paths() or table.pending_eq_deletes()
-    ):
-        # the CoW keep-path copies whole files: pending positional/equality
-        # deletes on a touched file would be silently resurrected
-        raise ValueError(
-            "table has merge-on-read deletes pending; run apply_deletes() "
-            "before a copy-on-write delete"
-        )
+    if mode == "copy-on-write":
+        table.refuse_pending_deletes("a copy-on-write delete")
     meta = table.metadata()
     man = table.manifest_pdf()
 
@@ -118,65 +109,18 @@ def delete_where(
     cond = reduce(
         lambda a, b: a & b, (_pred_to_column(c, op, v) for c, op, v in preds)
     )
-    schema = table._schema(spark)
-    cand_paths = [os.path.join(table.root, p) for p in cand["path"]]
-    rel = rel_path_expr(table.root)
 
     if mode == "merge-on-read":
+        cand_paths = [os.path.join(table.root, p) for p in cand["path"]]
         return _mor_delete(
-            table, spark, preds, cond, schema, cand_paths, len(cand), t0, pt
+            table, spark, preds, cond, cand_paths, len(cand), t0, pt
         )
 
-    # containment split (same proof as metascan.fast_count): files whose
-    # EVERY row provably matches the predicate drop WHOLESALE — a
-    # partition-scoped DELETE over partition-homogeneous files is then a
-    # metadata-only commit (zero payload IO), not a read-and-rewrite-
-    # nothing job. Only boundary files take the probe + keep-rewrite.
-    with pt.phase("plan"):
-        dfl = set(
-            json.loads(str(meta.properties.get(DEFAULTS_PROP, "{}")))
-        )
-        full_mask = _fully_covered_mask(cand, preds, unsound_cols=dfl)
-        dropped = cand.loc[full_mask]
-        boundary = cand.loc[~full_mask]
-
-    touched_rel: set = set()
-    if len(boundary):
-        with pt.phase("probe"):
-            touched_pdf = (
-                table.read_data(
-                    spark,
-                    [os.path.join(table.root, p) for p in boundary["path"]],
-                )
-                .filter(cond)
-                .select(rel.alias("path"))
-                .groupBy("path")
-                .agg(F.count(F.lit(1)).alias("n_matched_rows"))
-                .toPandas()
-            )
-        touched_rel = set(touched_pdf["path"])
+    dropped, touched_rel, new_entries = delete_matching(
+        table, spark, cand, preds, cond, target_file_size_bytes, pt
+    )
     if not touched_rel and not len(dropped):
         return None
-
-    new_entries = man.iloc[0:0]
-    if touched_rel:
-        prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), rewrite_split_size(
-            spark,
-            target_file_size_bytes,
-            table.root,
-            boundary[boundary["path"].isin(touched_rel)],
-        ):
-            tgt = table.read_data(
-                spark, [os.path.join(table.root, p) for p in touched_rel]
-            )
-            # keep rows where the predicate is NOT TRUE (false OR null) —
-            # plain ~cond drops predicate-NULL rows, which DELETE must keep
-            keep = tgt.filter(~F.coalesce(cond, F.lit(False)))
-            table.data_writer(keep).parquet(prefix)
-        with pt.phase("stats"):
-            if any(f.endswith(".parquet") for f in os.listdir(prefix)):
-                new_entries = table.collect_stats_for_prefix(spark, prefix)
 
     removed_rel = touched_rel | set(dropped["path"])
     touched_man = man[man["path"].isin(removed_rel)]
@@ -201,12 +145,66 @@ def delete_where(
     )
 
 
+def delete_matching(
+    table: Table,
+    spark: SparkSession,
+    cand: pd.DataFrame,
+    preds: list,
+    cond,
+    target_file_size_bytes: int,
+    pt: PhaseTimer,
+) -> tuple:
+    """Remove the rows matching ``cond`` (the conjunction of ``preds``)
+    from the stats-pruned candidate files ``cand``: steps 2-4 of the
+    module docstring, shared by ``delete_where`` and ``replace_where``.
+
+    Returns ``(dropped, touched_rel, new_entries)``: the candidate rows
+    dropped wholesale, the paths of the files rewritten, and the
+    manifest entries of their rewrites."""
+    # containment split (same proof as metascan.fast_count): files whose
+    # EVERY row provably matches the predicate drop WHOLESALE — a
+    # partition-scoped DELETE over partition-homogeneous files is then a
+    # metadata-only commit (zero payload IO), not a read-and-rewrite-
+    # nothing job. Only boundary files take the probe + keep-rewrite.
+    with pt.phase("plan"):
+        dfl = set(
+            json.loads(str(table.metadata().properties.get(DEFAULTS_PROP, "{}")))
+        )
+        full_mask = _fully_covered_mask(cand, preds, unsound_cols=dfl)
+        dropped = cand.loc[full_mask]
+        boundary = cand.loc[~full_mask]
+
+    touched_rel: set = set()
+    if len(boundary):
+        with pt.phase("probe"):
+            touched_rel = set(
+                table.read_data(
+                    spark,
+                    [os.path.join(table.root, p) for p in boundary["path"]],
+                )
+                .filter(cond)
+                .select(rel_path_expr(table.root).alias("path"))
+                .distinct()
+                .toPandas()["path"]
+            )
+    # keep rows where the predicate is NOT TRUE (false OR null) — plain
+    # ~cond drops predicate-NULL rows, which DELETE must keep
+    new_entries = rewrite_files(
+        table,
+        spark,
+        boundary[boundary["path"].isin(touched_rel)],
+        lambda rows: rows.filter(~F.coalesce(cond, F.lit(False))),
+        target_file_size_bytes,
+        pt,
+    )
+    return dropped, touched_rel, new_entries
+
+
 def _mor_delete(
     table: Table,
     spark: SparkSession,
     preds: list,
     cond,
-    schema,
     cand_paths: list,
     n_candidates: int,
     t0: float,
@@ -505,31 +503,19 @@ def apply_deletes(
             delete_paths=[],
             eq_deletes=[],
         )
-    touched_rel = sorted(touched)
-    schema = table._schema(spark)
-    prefix = table.new_data_prefix()
-    with pt.phase("rewrite"), rewrite_split_size(
-        spark,
-        target_file_size_bytes,
-        table.root,
-        man[man["path"].isin(touched)],
-    ):
-        tgt = table.read_data(
-            spark, [os.path.join(table.root, p) for p in touched_rel]
-        )
-        kept = table._apply_mor_deletes(spark, tgt, snap, keep_pos_cols=True)
+
+    def keep(rows):
+        kept = table._apply_mor_deletes(spark, rows, snap, keep_pos_cols=True)
         kept = table._apply_eq_deletes(spark, kept, snap, path_col="__mor_path")
-        kept = kept.drop("__mor_path", "__mor_pos")
-        table.data_writer(kept).parquet(prefix)
-    with pt.phase("stats"):
-        new_entries = (
-            table.collect_stats_for_prefix(spark, prefix)
-            if any(f.endswith(".parquet") for f in os.listdir(prefix))
-            else man.iloc[0:0]
-        )
-    keep_man = man[~man["path"].isin(set(touched_rel))]
+        return kept.drop("__mor_path", "__mor_pos")
+
+    touched_man = man[man["path"].isin(touched)]
+    new_entries = rewrite_files(
+        table, spark, touched_man, keep, target_file_size_bytes, pt
+    )
+    keep_man = man[~man["path"].isin(touched)]
     new_man = pd.concat([keep_man, new_entries], ignore_index=True)
-    touched_records = int(man[man["path"].isin(set(touched_rel))]["record_count"].sum())
+    touched_records = int(touched_man["record_count"].sum())
     kept_records = int(new_entries["record_count"].sum()) if len(new_entries) else 0
     return table.commit(
         "replace",
@@ -537,7 +523,7 @@ def apply_deletes(
         {
             "stage": "apply_deletes",
             "rows_removed": touched_records - kept_records,
-            "files_rewritten": len(touched_rel),
+            "files_rewritten": len(touched),
             "delete_files_applied": len(pend) + len(pend_eq),
             "duration_sec": round(time.time() - t0, 3),
             "phase_sec": pt.summary(),

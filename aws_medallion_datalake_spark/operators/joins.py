@@ -228,11 +228,7 @@ def bucketed_join(
             "join requires identical bucketing"
         )
     for t in (table_a, table_b):
-        if t.pending_delete_paths() or t.pending_eq_deletes():
-            raise ValueError(
-                f"table {t.root} has merge-on-read deletes pending; run "
-                "apply_deletes() before a whole-file bucketed join"
-            )
+        t.refuse_pending_deletes(f"a whole-file bucketed join of {t.root}")
 
     def _groups(t, tf):
         g: dict = {}

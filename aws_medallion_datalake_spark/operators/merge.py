@@ -48,11 +48,14 @@ SET * WHEN NOT MATCHED THEN INSERT *``):
    the shuffled anti-join (AQE skew handling applies) — at that size the
    source rivals the table and a shuffle is the honest cost.
 
-   Touched files are rewritten in **bounded groups** (≤
-   ``max_files_per_job``) running concurrently from a driver thread pool
-   — the Iceberg RewriteDataFiles architecture: a broad merge over 10^7
-   files becomes many independent medium jobs instead of one monster
-   job, and group parallelism keeps a 1000-executor cluster busy.
+   Touched files are rewritten by ``tableformat.rewrite_files``, the
+   copy-on-write rewrite every row-level write shares, in **bounded
+   groups** of at most ``REWRITE_GROUP_FILES`` (4096, a constant) files
+   running concurrently from a driver thread pool beside the delta
+   write — the Iceberg RewriteDataFiles architecture: a broad merge over
+   10^7 files becomes many independent medium jobs instead of one
+   monster job, and group parallelism keeps a 1000-executor cluster
+   busy.
 3. **Counts** — rows_updated counts matched DISTINCT target keys (the
    row count of the per-key probe; on the persisted path, a distinct
    count over the persisted probe rows run beside the rewrites — no
@@ -94,7 +97,6 @@ from __future__ import annotations
 import os
 import re
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Optional
 
@@ -113,9 +115,10 @@ from ..sources.tableformat import (
     Table,
     _strip_scheme,
     resolve_write_mode,
+    rewrite_files,
     statable_cols,
+    written_entries,
 )
-from ..sources.tableformat import rewrite_split_size as _rewrite_split_size
 from ..sources.tableformat import rel_path_expr as _rel_path_expr
 from .timing import PhaseTimer
 
@@ -218,9 +221,6 @@ def merge_into(
     *,
     key: str = "image_id",
     target_file_size_bytes: int = 128 * 1024 * 1024,
-    max_files_per_job: int = 4096,
-    rewrite_parallelism: int = 4,
-    check_duplicate_keys: bool = True,
     broadcast_key_limit: int = 4_000_000,
     when_matched: str = "update",
     matched_condition: Optional[str] = None,
@@ -269,19 +269,12 @@ def merge_into(
     )
     cl.validate(source.columns, [f.name for f in table._schema(spark).fields])
     mode = resolve_write_mode(table.metadata(), "merge", mode)
-    if mode not in ("copy-on-write", "merge-on-read"):
-        raise ValueError(f"mode must be 'copy-on-write' or 'merge-on-read', got {mode!r}")
-    if mode == "copy-on-write" and (
-        table.pending_delete_paths() or table.pending_eq_deletes()
-    ):
+    if mode == "copy-on-write":
         # the keep-path rewrite copies whole files, resurrecting rows a
-        # pending positional/equality delete suppresses — materialize
-        # them first (the merge-on-read path instead probes THROUGH the
-        # pending sets, so it composes with them)
-        raise ValueError(
-            "table has merge-on-read deletes pending; run apply_deletes() "
-            "before MERGE"
-        )
+        # pending positional/equality delete suppresses (the
+        # merge-on-read path instead probes THROUGH the pending sets, so
+        # it composes with them)
+        table.refuse_pending_deletes("MERGE")
     t0 = time.time()
     pt = PhaseTimer()
     man = table.manifest_pdf()
@@ -304,7 +297,7 @@ def merge_into(
     held_limit = min(_HELD_KEYS, broadcast_key_limit)
     src_lo = src_hi = None
     with pt.phase("source_check"):
-        if check_duplicate_keys and _footer_rows_fit(src, held_limit):
+        if _footer_rows_fit(src, held_limit):
             # ONE column-pruned fetch of at most limit+1 keys gives the
             # duplicate check, the key count AND the source key range for
             # probe-scan pruning, with no aggregate and nothing persisted.
@@ -319,26 +312,23 @@ def merge_into(
                 src_lo, src_hi = bounds["min"].as_py(), bounds["max"].as_py()
         if held is None:
             src_key_counts = src.groupBy(key).count().persist()
-        if held is None and check_duplicate_keys:
             # ONE job gives the duplicate check, the key count AND the
             # source key range for probe-scan pruning (its fixed driver
             # cost is the parallelism-independent term that caps merge's
             # measured scaling at small stage durations — a separate
-            # min/max job would re-scan the source key column)
+            # min/max job would re-scan the source key column). Read as
+            # Arrow, like the held keys, so a timestamp range is
+            # tz-aware, as the manifest stats it is compared with are.
             r = src_key_counts.agg(
                 F.count(F.lit(1)).alias("n_keys"),
                 F.max("count").alias("max_dup"),
                 F.min(key).alias("lo"),
                 F.max(key).alias("hi"),
-            ).first()
+            ).toArrow().to_pylist()[0]
             if (r["max_dup"] or 0) > 1:
                 raise ValueError(f"MERGE source has duplicate keys on {key!r}")
             n_src_keys = int(r["n_keys"] or 0)
             src_lo, src_hi = r["lo"], r["hi"]
-        elif held is None:
-            # rows, not distinct keys — a conservative upper bound for the
-            # broadcast-size decision below
-            n_src_keys = src.count()
     # a driver-held key set re-enters Spark as a LocalRelation: nothing
     # persisted, no aggregate
     key_frame = (
@@ -395,17 +385,11 @@ def merge_into(
     #    nothing, which is the honest cost.
     meta = table.metadata()
     probe_preds = None
-    if n_src_keys and key in (
+    if src_lo is not None and key in (
         [c for c in transforms.identity_names(meta.partition_cols)
         + list(meta.stats_cols) if c in statable_cols(meta)]
     ):
-        if src_lo is None and src_hi is None:
-            # check_duplicate_keys=False skipped the fused job above
-            with pt.phase("source_key_range"):
-                b = src.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
-            src_lo, src_hi = b["lo"], b["hi"]
-        if src_lo is not None:
-            probe_preds = [(key, "between", (src_lo, src_hi))]
+        probe_preds = [(key, "between", (src_lo, src_hi))]
     if mode == "merge-on-read":
         try:
             return _mor_merge(
@@ -423,8 +407,6 @@ def merge_into(
                 probe_preds=probe_preds, cl=cl, properties=properties,
                 pt=pt, t0=t0,
                 target_file_size_bytes=target_file_size_bytes,
-                max_files_per_job=max_files_per_job,
-                rewrite_parallelism=rewrite_parallelism,
             )
         finally:
             _unpersist(src_key_counts)
@@ -466,42 +448,8 @@ def merge_into(
         matched_keys = probe.select(key).distinct()
     touched_man = man[man["path"].isin(touched_rel)]
 
-    prefixes: list = []
     cols = [f.name for f in table._schema(spark).fields]
-    groups = (
-        _plan_rewrite_groups(touched_man, max_files_per_job)
-        if len(touched_man)
-        else []
-    )
-    results: dict = {}
-    delta_box: dict = {}
-    stats_frames: dict = {}
-
-    def stats_for(tag, prefix: str) -> None:
-        # per-prefix stats collected INSIDE the writer's own thread, the
-        # moment its write lands: group A's stats job overlaps group B's
-        # (and the delta's) write instead of forming a serial tail after
-        # the pool barrier — the batched-at-the-end variant was a
-        # measured 1-2 s parallelism-independent term on the bench.
-        if _has_parquet(prefix):
-            with pt.phase("stats"):
-                stats_frames[tag] = table.collect_stats_for_prefix(
-                    spark, prefix
-                )
-
-    def rewrite(gno: int, paths: list) -> None:
-        tgt = table.read_data(
-            spark, [os.path.join(table.root, p) for p in paths]
-        )
-        # MATCHED THEN UPDATE SET * == replace whole row → key-only
-        # anti-join; broadcast filter preserves input splits, so each
-        # read task writes its (already clustered, already
-        # ≈target-sized) partition straight back out.
-        keep = _key_join(tgt, "left_anti")
-        prefix = table.new_data_prefix()
-        table.data_writer(keep).parquet(prefix)
-        results[gno] = prefix
-        stats_for(gno, prefix)
+    delta: dict = {}
 
     def write_delta() -> None:
         # Every source row survives an UPDATE-mode MERGE: matched keys
@@ -515,8 +463,8 @@ def merge_into(
         delta_src = src.select(cols)
         if when_matched == "delete":
             delta_src = delta_src.join(matched_keys, key, "left_anti")
-        delta_box["prefix"] = _modest_write(table, delta_src, key)
-        stats_for("delta", delta_box["prefix"])
+        delta["prefix"] = _modest_write(table, delta_src, key)
+        delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
 
     def count_matched() -> None:
         # rows_updated = matched DISTINCT keys (duplicate target copies
@@ -526,53 +474,26 @@ def merge_into(
         with pt.phase("count_matched"):
             count_box["n"] = matched_keys.count()
 
-    # The delta write depends only on the source, so it runs
-    # CONCURRENTLY with the keep-rewrites — its cost hides inside the
-    # rewrite wall time instead of adding a serial tail. Read splits are
-    # aligned with the target file size for the whole stage: the keep
-    # path writes one file per read split, so split size IS output size,
-    # and read parallelism scales with file count instead of being
-    # capped at total_bytes / 128MB.
-    with pt.phase("rewrite"), _rewrite_split_size(
-        spark, target_file_size_bytes, table.root, touched_man
-    ):
-        if not groups:
-            write_delta()
-        else:
-            with ThreadPoolExecutor(
-                max_workers=max(2, rewrite_parallelism)
-            ) as pool:
-                futures = [pool.submit(rewrite, i, g) for i, g in enumerate(groups)]
-                futures.append(pool.submit(write_delta))
-                if probe is not None:
-                    futures.append(pool.submit(count_matched))
-                for f in futures:
-                    f.result()
+    # MATCHED THEN UPDATE SET * == replace whole row → key-only anti-join;
+    # the broadcast filter preserves input splits, so each read task
+    # writes its (already clustered, already ≈target-sized) partition
+    # straight back out. The delta write depends only on the source, so
+    # it runs CONCURRENTLY with the keep-rewrites — its cost hides inside
+    # the rewrite wall time instead of adding a serial tail.
+    keep_entries = rewrite_files(
+        table,
+        spark,
+        touched_man,
+        lambda rows: _key_join(rows, "left_anti"),
+        target_file_size_bytes,
+        pt,
+        alongside=[write_delta] + ([count_matched] if probe is not None else []),
+    )
 
     n_matched = count_box["n"]
-    prefixes += [results[i] for i in range(len(groups))]
-    delta_prefix = delta_box["prefix"]
-    prefixes.append(delta_prefix)
-
-    new_entries_frames = [
-        stats_frames[k]
-        for k in [*range(len(groups)), "delta"]
-        if k in stats_frames
-    ]
-    if new_entries_frames:
-        entries = pd.concat(new_entries_frames, ignore_index=True)
-        n_src = int(
-            entries[entries["path"].str.startswith(_rel(table, delta_prefix))][
-                "record_count"
-            ].sum()
-        ) if "delta" in stats_frames else 0
-        keep_records = int(
-            entries[~entries["path"].str.startswith(_rel(table, delta_prefix))][
-                "record_count"
-            ].sum()
-        )
-    else:
-        n_src = keep_records = 0
+    delta_entries = delta["entries"]
+    n_src = int(delta_entries["record_count"].sum()) if delta_entries is not None else 0
+    keep_records = int(keep_entries["record_count"].sum())
     # delete mode: the delta holds only unmatched rows, so its record
     # count IS the insert count; matched keys were dropped, not updated
     n_inserts = n_src if when_matched == "delete" else n_src - n_matched
@@ -580,11 +501,7 @@ def merge_into(
     n_dupes = max(0, touched_records - keep_records - n_matched)
 
     keep_man = man[~man["path"].isin(touched_rel)]
-    new_man = (
-        pd.concat([keep_man] + new_entries_frames, ignore_index=True)
-        if new_entries_frames
-        else keep_man
-    )
+    new_man = pd.concat([keep_man, keep_entries, delta_entries], ignore_index=True)
     snap = table.commit(
         "merge",
         new_man,
@@ -592,7 +509,7 @@ def merge_into(
             "stage": "merge",
             # delta files = the upserted source rows; Table.changes()
             # uses this prefix for snapshot-diff incremental reads (T5)
-            "delta_prefix": _rel(table, delta_prefix) + "/",
+            "delta_prefix": _rel(table, delta["prefix"]) + "/",
             "when_matched": when_matched,
             "rows_updated": int(n_matched) if when_matched == "update" else 0,
             "rows_deleted": int(n_matched) if when_matched == "delete" else 0,
@@ -606,9 +523,6 @@ def merge_into(
     )
     _unpersist(probe, src_key_counts)
     return snap
-
-
-
 
 
 def _cow_merge_clauses(
@@ -625,8 +539,6 @@ def _cow_merge_clauses(
     pt: PhaseTimer,
     t0: float,
     target_file_size_bytes: int,
-    max_files_per_job: int,
-    rewrite_parallelism: int,
 ) -> Snapshot:
     """Generalized copy-on-write MERGE for any non-default clause config
     (conditional WHEN MATCHED, insert suppression/filtering, WHEN NOT
@@ -711,49 +623,27 @@ def _cow_merge_clauses(
         nmbs_rows = int(nm_pdf["n"].sum()) if len(nm_pdf) else 0
 
     touched_rel = touched_matched | touched_nmbs
-    touched_man = man[man["path"].isin(touched_rel)]
-    groups = (
-        _plan_rewrite_groups(touched_man, max_files_per_job)
-        if len(touched_man)
-        else []
-    )
+    delta: dict = {}
 
-    results: dict = {}
-    delta_box: dict = {}
-    stats_frames: dict = {}
-
-    def stats_for(tag, prefix: str) -> None:
-        if _has_parquet(prefix):
-            with pt.phase("stats"):
-                stats_frames[tag] = table.collect_stats_for_prefix(spark, prefix)
-
-    def rewrite(gno: int, paths: list) -> None:
-        tgt_rows = table.read_data(
-            spark, [os.path.join(table.root, p) for p in paths]
+    def keep(rows: DataFrame) -> DataFrame:
+        kept = rows.join(_bc(replaced_keys), key, "left_anti")
+        if cl.nmbs != "delete":
+            return kept
+        # drop rows where the nmbs condition holds AND the key has no
+        # source coverage — broadcast membership marker, tri-state
+        # condition folded to drop-only-when-TRUE
+        cond = (
+            F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
+            if cl.nmbs_condition
+            else F.lit(True)
         )
-        keep = tgt_rows.join(_bc(replaced_keys), key, "left_anti")
-        if cl.nmbs == "delete":
-            # drop rows where the nmbs condition holds AND the key has no
-            # source coverage — broadcast membership marker, tri-state
-            # condition folded to drop-only-when-TRUE
-            cond = (
-                F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
-                if cl.nmbs_condition
-                else F.lit(True)
+        return (
+            kept.join(
+                _bc(src_keys.withColumn("__in_src", F.lit(1))), key, "left"
             )
-            keep = (
-                keep.join(
-                    _bc(src_keys.withColumn("__in_src", F.lit(1))),
-                    key,
-                    "left",
-                )
-                .filter(~(cond & F.col("__in_src").isNull()))
-                .drop("__in_src")
-            )
-        prefix = table.new_data_prefix()
-        table.data_writer(keep).parquet(prefix)
-        results[gno] = prefix
-        stats_for(gno, prefix)
+            .filter(~(cond & F.col("__in_src").isNull()))
+            .drop("__in_src")
+        )
 
     def write_delta() -> None:
         parts = []
@@ -769,34 +659,26 @@ def _cow_merge_clauses(
         delta_src = parts[0].select(schema_cols)
         for p in parts[1:]:
             delta_src = delta_src.unionByName(p.select(schema_cols))
-        delta_box["prefix"] = _modest_write(table, delta_src, key)
-        stats_for("delta", delta_box["prefix"])
+        delta["prefix"] = _modest_write(table, delta_src, key)
+        delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
 
-    with pt.phase("rewrite"), _rewrite_split_size(
-        spark, target_file_size_bytes, table.root, touched_man
-    ):
-        with ThreadPoolExecutor(max_workers=max(2, rewrite_parallelism)) as pool:
-            futures = [pool.submit(rewrite, i, g) for i, g in enumerate(groups)]
-            futures.append(pool.submit(write_delta))
-            for f in futures:
-                f.result()
-
-    new_entries_frames = [
-        stats_frames[k]
-        for k in [*range(len(groups)), "delta"]
-        if k in stats_frames
-    ]
-    delta_records = 0
-    if "delta" in stats_frames:
-        delta_records = int(stats_frames["delta"]["record_count"].sum())
+    keep_entries = rewrite_files(
+        table,
+        spark,
+        man[man["path"].isin(touched_rel)],
+        keep,
+        target_file_size_bytes,
+        pt,
+        alongside=[write_delta],
+    )
+    delta_entries = delta.get("entries")
+    delta_records = (
+        int(delta_entries["record_count"].sum()) if delta_entries is not None else 0
+    )
     n_inserts = delta_records - (n_replaced if cl.matched == "update" else 0)
 
     keep_man = man[~man["path"].isin(touched_rel)]
-    new_man = (
-        pd.concat([keep_man] + new_entries_frames, ignore_index=True)
-        if new_entries_frames
-        else keep_man
-    )
+    new_man = pd.concat([keep_man, keep_entries, delta_entries], ignore_index=True)
     summary = {
         "stage": "merge",
         "when_matched": cl.matched,
@@ -816,8 +698,8 @@ def _cow_merge_clauses(
         "duration_sec": round(time.time() - t0, 3),
         "phase_sec": pt.summary(),
     }
-    if "prefix" in delta_box and _has_parquet(delta_box["prefix"]):
-        summary["delta_prefix"] = _rel(table, delta_box["prefix"]) + "/"
+    if delta_entries is not None:
+        summary["delta_prefix"] = _rel(table, delta["prefix"]) + "/"
     snap = table.commit("merge", new_man, summary, properties=properties)
     probe.unpersist()
     aff.unpersist()
@@ -1020,12 +902,12 @@ def _mor_merge(
             else:
                 delta_src = src.select(cols).limit(0)
         delta_prefix = _modest_write(table, delta_src, key)
-    with pt.phase("stats"):
-        entries = (
-            table.collect_stats_for_prefix(spark, delta_prefix)
-            if _has_parquet(delta_prefix)
-            else (man.iloc[0:0] if man is not None else pd.DataFrame())
-        )
+    written = written_entries(table, spark, delta_prefix, pt)
+    entries = (
+        written
+        if written is not None
+        else (man.iloc[0:0] if man is not None else pd.DataFrame())
+    )
     n_delta = int(entries["record_count"].sum()) if len(entries) else 0
     n_inserts = n_delta - (n_matched if cl.matched == "update" else 0)
 
@@ -1052,7 +934,7 @@ def _mor_merge(
             "when_not_matched_by_source": cl.nmbs,
             "not_matched_by_source_condition": cl.nmbs_condition,
         }
-    if _has_parquet(delta_prefix):
+    if written is not None:
         summary["delta_prefix"] = _rel(table, delta_prefix) + "/"
     out = table.commit(
         "merge",
@@ -1067,17 +949,6 @@ def _mor_merge(
     if aff_keys is not None:
         aff_keys.unpersist()
     return out
-
-
-def _plan_rewrite_groups(touched_man: pd.DataFrame, max_files_per_job: int) -> list:
-    """Chunk the touched manifest rows into bounded rewrite groups
-    (path-ordered, so a group's files tend to be key-adjacent after a
-    cluster run)."""
-    paths = sorted(touched_man["path"])
-    return [
-        paths[i : i + max_files_per_job]
-        for i in range(0, len(paths), max_files_per_job)
-    ]
 
 
 def _modest_write(table, df, key: str) -> str:
@@ -1132,10 +1003,6 @@ def _unpersist(*dfs) -> None:
     for df in dfs:
         if df is not None:
             df.unpersist()
-
-
-def _has_parquet(prefix: str) -> bool:
-    return any(f.endswith(".parquet") for f in os.listdir(prefix))
 
 
 def _rel(table, prefix: str) -> str:

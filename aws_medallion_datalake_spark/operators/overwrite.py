@@ -39,7 +39,7 @@ import os
 import shutil
 import time
 from functools import reduce
-from typing import Iterable, Optional
+from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -52,10 +52,10 @@ from ..sources.tableformat import (
     Table,
     _pred_to_column,
     prune_manifest,
-    rel_path_expr,
-    rewrite_split_size,
+    rewrite_files,
     statable_cols,
 )
+from .delete import delete_matching
 from .metascan import _fully_covered_mask
 from .timing import PhaseTimer
 
@@ -64,15 +64,6 @@ __all__ = ["overwrite_partitions", "replace_where"]
 # Dynamic overwrite plans per touched tuple; a refresh that touches this
 # many partitions is a rewrite of the table, not a partition refresh.
 _MAX_TOUCHED_TUPLES = 10_000
-
-
-def _guard_pending(table: Table, what: str) -> None:
-    if table.pending_delete_paths() or table.pending_eq_deletes():
-        raise ValueError(
-            f"table has merge-on-read deletes pending; run apply_deletes() "
-            f"before {what} (whole-file replacement would resurrect "
-            f"suppressed rows)"
-        )
 
 
 def _conform(df: DataFrame, table: Table) -> DataFrame:
@@ -143,7 +134,7 @@ def overwrite_partitions(
     partition expressions, or declare ``write.distribution-mode=hash``
     on the table, for partition-homogeneous output files).
     """
-    _guard_pending(table, "overwrite_partitions")
+    table.refuse_pending_deletes("overwrite_partitions")
     t0 = time.time()
     pt = PhaseTimer()
     meta = table.metadata()
@@ -227,36 +218,26 @@ def _replace_written(
             boundary.loc[cand.index[~full]] = True
         boundary &= ~drop
 
-    rewritten = man.iloc[0:0]
     n_rewritten_files = int(boundary.sum())
-    if n_rewritten_files:
-        cond = reduce(
-            lambda a, b: a | b,
-            (
-                reduce(
-                    lambda a, b: a & b,
-                    (
-                        t.expr().eqNullSafe(F.lit(v))
-                        for t, v in zip(specs, vals)
-                    ),
-                )
-                for vals in tuples
-            ),
-        )
-        paths = [
-            os.path.join(table.root, p) for p in man.loc[boundary, "path"]
-        ]
-        prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), rewrite_split_size(
-            spark, target_file_size_bytes, table.root, man.loc[boundary]
-        ):
-            keep = table.read_data(spark, paths).filter(
-                ~F.coalesce(cond, F.lit(False))
+    cond = reduce(
+        lambda a, b: a | b,
+        (
+            reduce(
+                lambda a, b: a & b,
+                (t.expr().eqNullSafe(F.lit(v)) for t, v in zip(specs, vals)),
             )
-            table.data_writer(keep).parquet(prefix)
-        with pt.phase("stats"):
-            if any(f.endswith(".parquet") for f in os.listdir(prefix)):
-                rewritten = table.collect_stats_for_prefix(spark, prefix)
+            for vals in tuples
+        ),
+        F.lit(False),
+    )
+    rewritten = rewrite_files(
+        table,
+        spark,
+        man.loc[boundary],
+        lambda rows: rows.filter(~F.coalesce(cond, F.lit(False))),
+        target_file_size_bytes,
+        pt,
+    )
 
     removed = man.loc[drop | boundary]
     kept = man.loc[~(drop | boundary)]
@@ -303,7 +284,7 @@ def replace_where(
     is identical to ``scan``/``delete_where``; fully-covered files drop
     with zero IO.
     """
-    _guard_pending(table, "replace_where")
+    table.refuse_pending_deletes("replace_where")
     preds = list(predicates)
     if not preds:
         raise ValueError(
@@ -346,52 +327,14 @@ def replace_where(
 
     with pt.phase("plan"):
         man = table.manifest_pdf()
-        statable = statable_cols(meta)
-        dfl = set(json.loads(str(meta.properties.get(DEFAULTS_PROP, "{}"))))
         cand = prune_manifest(
             man,
             transforms.extend_predicates(meta.partition_cols, preds),
-            statable,
+            statable_cols(meta),
         )
-        full_mask = (
-            _fully_covered_mask(cand, preds, unsound_cols=dfl)
-            if len(cand)
-            else pd.Series(dtype=bool)
-        )
-        dropped = cand.loc[full_mask] if len(cand) else cand
-        probe_set = cand.loc[~full_mask] if len(cand) else cand
-
-    touched_rel: set = set()
-    if len(probe_set):
-        with pt.phase("probe"):
-            rel = rel_path_expr(table.root)
-            touched_rel = set(
-                table.read_data(
-                    spark,
-                    [os.path.join(table.root, p) for p in probe_set["path"]],
-                )
-                .filter(cond)
-                .select(rel.alias("path"))
-                .distinct()
-                .toPandas()["path"]
-            )
-
-    rewritten = man.iloc[0:0]
-    if touched_rel:
-        prefix = table.new_data_prefix()
-        with pt.phase("rewrite"), rewrite_split_size(
-            spark,
-            target_file_size_bytes,
-            table.root,
-            man[man["path"].isin(touched_rel)],
-        ):
-            keep = table.read_data(
-                spark, [os.path.join(table.root, p) for p in touched_rel]
-            ).filter(~F.coalesce(cond, F.lit(False)))
-            table.data_writer(keep).parquet(prefix)
-        with pt.phase("stats"):
-            if any(f.endswith(".parquet") for f in os.listdir(prefix)):
-                rewritten = table.collect_stats_for_prefix(spark, prefix)
+    dropped, touched_rel, rewritten = delete_matching(
+        table, spark, cand, preds, cond, target_file_size_bytes, pt
+    )
 
     removed_paths = set(dropped["path"]) | touched_rel
     kept = man[~man["path"].isin(removed_paths)]

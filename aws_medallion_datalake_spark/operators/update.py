@@ -51,7 +51,7 @@ from functools import reduce
 from typing import Iterable, Mapping, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import transforms
@@ -62,7 +62,7 @@ from ..sources.tableformat import (
     prune_manifest,
     rel_path_expr,
     resolve_write_mode,
-    rewrite_split_size,
+    rewrite_files,
     statable_cols,
 )
 from .timing import PhaseTimer
@@ -110,8 +110,6 @@ def update_where(
     expression string evaluated against the old row).
     """
     mode = resolve_write_mode(table.metadata(), "update", mode)
-    if mode not in ("copy-on-write", "merge-on-read"):
-        raise ValueError(f"unknown update mode {mode!r}")
     t0 = time.time()
     pt = PhaseTimer()
     preds = list(predicates)
@@ -122,15 +120,8 @@ def update_where(
         )
     if not assignments:
         raise ValueError("update_where with no assignments is a no-op")
-    if mode == "copy-on-write" and (
-        table.pending_delete_paths() or table.pending_eq_deletes()
-    ):
-        # the CoW path copies whole files: pending merge-on-read deletes
-        # on a touched file would be silently resurrected
-        raise ValueError(
-            "table has merge-on-read deletes pending; run apply_deletes() "
-            "before a copy-on-write update"
-        )
+    if mode == "copy-on-write":
+        table.refuse_pending_deletes("a copy-on-write update")
     meta = table.metadata()
     man = table.manifest_pdf()
     schema = table._schema(spark)
@@ -170,32 +161,25 @@ def update_where(
         return None
     rows_updated = int(touched_pdf["n_matched_rows"].sum())
 
-    prefix = table.new_data_prefix()
-    with pt.phase("rewrite"), rewrite_split_size(
+    # predicate-TRUE rows take the assignment; FALSE and NULL rows pass
+    # through untouched (SQL tri-state). All RHS see OLD values: one
+    # select evaluates every expression against the input row.
+    hit = F.coalesce(cond, F.lit(False))
+    new_entries = rewrite_files(
+        table,
         spark,
-        target_file_size_bytes,
-        table.root,
         cand[cand["path"].isin(touched_rel)],
-    ):
-        tgt = table.read_data(
-            spark, [os.path.join(table.root, p) for p in touched_rel]
-        )
-        # predicate-TRUE rows take the assignment; FALSE and NULL rows
-        # pass through untouched (SQL tri-state). All RHS see OLD values:
-        # one select evaluates every expression against the input row.
-        hit = F.coalesce(cond, F.lit(False))
-        out = tgt.select(
+        lambda rows: rows.select(
             *[
                 F.when(hit, set_exprs[f.name]).otherwise(F.col(f.name)).alias(f.name)
                 if f.name in set_exprs
                 else F.col(f.name)
                 for f in schema.fields
             ]
-        )
-        table.data_writer(out).parquet(prefix)
-
-    with pt.phase("stats"):
-        new_entries = table.collect_stats_for_prefix(spark, prefix)
+        ),
+        target_file_size_bytes,
+        pt,
+    )
     keep_man = man[~man["path"].isin(touched_rel)]
     new_man = pd.concat([keep_man, new_entries], ignore_index=True)
 

@@ -53,6 +53,7 @@ import os
 import re
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Iterable, Optional, Sequence
 
@@ -340,14 +341,8 @@ class Table:
                 f"column {col!r} is a partition source; evolve the "
                 "partition spec off it first (set_partition_spec)"
             )
-        if meta.current_snapshot_id is not None:
-            s = self.snapshot()
-            if s.delete_paths or s.eq_deletes:
-                raise ValueError(
-                    "merge-on-read deletes are pending; run "
-                    "apply_deletes() before schema changes (delete files "
-                    "reference columns by physical name)"
-                )
+        # delete files reference columns by physical name
+        self.refuse_pending_deletes("schema changes")
 
     def rename_column(self, old: str, new: str) -> None:
         """Metadata-only column rename (Iceberg ALTER TABLE ... RENAME).
@@ -1821,8 +1816,6 @@ class Table:
                 .collect()
             )
         else:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(
                 max_workers=min(32, max(4, len(paths)))
             ) as ex:
@@ -2007,6 +2000,16 @@ class Table:
         if self.metadata().current_snapshot_id is None and snapshot_id is None:
             return []
         return [dict(e) for e in self.snapshot(snapshot_id).eq_deletes]
+
+    def refuse_pending_deletes(self, op: str) -> None:
+        """Raise before ``op`` when merge-on-read deletes are pending: an
+        operation that copies or reuses whole files would resurrect the
+        rows they suppress."""
+        if self.pending_delete_paths() or self.pending_eq_deletes():
+            raise ValueError(
+                "table has merge-on-read deletes pending; run "
+                f"apply_deletes() before {op}"
+            )
 
     def _apply_eq_deletes(
         self, spark, df: DataFrame, s: Snapshot, path_col: Optional[str] = None
@@ -2546,6 +2549,70 @@ def rewrite_split_size(
     return read_split_size(spark, split)
 
 
+# Copy-on-write rewrites run in groups of at most this many files, at
+# most _REWRITE_THREADS jobs at once (the Iceberg RewriteDataFiles
+# shape): a broad rewrite over 10^7 files becomes many medium jobs
+# instead of one monster job.
+REWRITE_GROUP_FILES = 4096
+_REWRITE_THREADS = 4
+
+
+def written_entries(table: "Table", spark: SparkSession, prefix: str, pt):
+    """Manifest entries of the files just written under ``prefix``, their
+    stats timed as the ``stats`` phase of ``pt``; None when the write
+    produced no file."""
+    if not any(f.endswith(".parquet") for f in os.listdir(prefix)):
+        return None
+    with pt.phase("stats"):
+        return table.collect_stats_for_prefix(spark, prefix)
+
+
+def rewrite_files(
+    table: "Table",
+    spark: SparkSession,
+    files: pd.DataFrame,
+    keep,
+    target_bytes: int,
+    pt,
+    alongside=(),
+) -> pd.DataFrame:
+    """The copy-on-write rewrite every row-level write shares: read the
+    manifest rows ``files``, write ``keep(rows)`` back out and return the
+    new manifest entries (an empty frame when nothing survives).
+
+    Files are rewritten in path-ordered groups of at most
+    ``REWRITE_GROUP_FILES``, each into a fresh prefix, concurrently from a
+    driver thread pool; each group's stats are collected in its own
+    writer thread the moment its write lands, so one group's stats job
+    overlaps another's write. The zero-argument callables ``alongside``
+    (MERGE's delta write) run in the same pool. The whole pass is the
+    ``rewrite`` phase of ``pt``, under ``rewrite_split_size``."""
+    if not len(files) and not alongside:
+        return files.iloc[0:0]
+    paths = sorted(files["path"])
+    groups = [
+        paths[i : i + REWRITE_GROUP_FILES]
+        for i in range(0, len(paths), REWRITE_GROUP_FILES)
+    ]
+    out: dict = {}
+
+    def rewrite(gno: int, group: list) -> None:
+        rows = table.read_data(spark, [os.path.join(table.root, p) for p in group])
+        prefix = table.new_data_prefix()
+        table.data_writer(keep(rows)).parquet(prefix)
+        out[gno] = written_entries(table, spark, prefix, pt)
+
+    with pt.phase("rewrite"), rewrite_split_size(
+        spark, target_bytes, table.root, files
+    ), ThreadPoolExecutor(max_workers=_REWRITE_THREADS) as pool:
+        futures = [pool.submit(rewrite, i, g) for i, g in enumerate(groups)]
+        futures += [pool.submit(fn) for fn in alongside]
+        for f in futures:
+            f.result()
+    frames = [out[i] for i in range(len(groups)) if out[i] is not None]
+    return pd.concat(frames, ignore_index=True) if frames else files.iloc[0:0]
+
+
 def rel_path_expr(root: str):
     """``_metadata.file_path`` (a file:-scheme URI) → path relative to the
     table root, computed JVM-side so joins/maps against manifest-stored
@@ -2816,9 +2883,14 @@ WRITE_MERGE_MODE_PROP = "write.merge.mode"
 
 def resolve_write_mode(meta: "TableMetadata", op: str, mode) -> str:
     """``mode`` if given, else the table's ``write.<op>.mode`` property,
-    else copy-on-write (Iceberg's default)."""
-    if mode is not None:
-        return mode
-    return str(
-        meta.properties.get(f"write.{op}.mode", "copy-on-write")
-    ).strip().lower()
+    else copy-on-write (Iceberg's default). Anything but copy-on-write
+    or merge-on-read raises, before the operation writes anything."""
+    if mode is None:
+        mode = str(
+            meta.properties.get(f"write.{op}.mode", "copy-on-write")
+        ).strip().lower()
+    if mode not in ("copy-on-write", "merge-on-read"):
+        raise ValueError(
+            f"{op} mode must be 'copy-on-write' or 'merge-on-read', got {mode!r}"
+        )
+    return mode

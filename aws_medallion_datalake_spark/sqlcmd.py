@@ -635,11 +635,8 @@ class EngineSQL:
                 "INSERT OVERWRITE replaces by partition or table"
             )
         t = self._table(name)
-        if overwrite and (t.pending_delete_paths() or t.pending_eq_deletes()):
-            raise SQLCommandError(
-                "table has merge-on-read deletes pending; run apply_deletes() "
-                "before INSERT OVERWRITE"
-            )
+        if overwrite:
+            t.refuse_pending_deletes("INSERT OVERWRITE")
         self._register_all()
         df = self.spark.sql(self._rewrite_time_travel(query.strip()))
         from pyspark.sql.types import StructType
@@ -706,11 +703,7 @@ class EngineSQL:
             raise SQLCommandError("expected: TRUNCATE TABLE <table>")
         name = m.group(1)
         t = self._table(name)
-        if t.pending_delete_paths() or t.pending_eq_deletes():
-            raise SQLCommandError(
-                "table has merge-on-read deletes pending; run apply_deletes() "
-                "before TRUNCATE"
-            )
+        t.refuse_pending_deletes("TRUNCATE")
         man = t.manifest_pdf() if t.metadata().current_snapshot_id is not None else None
         n = int(man["record_count"].sum()) if man is not None and len(man) else 0
         snap = t.commit(

@@ -10,11 +10,16 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from aws_medallion_datalake_spark.operators import apply_deletes, delete_where
 from aws_medallion_datalake_spark.operators import merge as merge_mod
 from aws_medallion_datalake_spark.operators.cluster import _tile_frame
 from aws_medallion_datalake_spark.operators.compact import _route_frame
 from aws_medallion_datalake_spark.operators.merge import merge_into
-from aws_medallion_datalake_spark.operators.overwrite import overwrite_partitions
+from aws_medallion_datalake_spark.operators.overwrite import (
+    overwrite_partitions,
+    replace_where,
+)
+from aws_medallion_datalake_spark.operators.update import update_where
 from aws_medallion_datalake_spark.session import get_session, local_frame
 from aws_medallion_datalake_spark.sources.generator import (
     SCHEMA,
@@ -221,6 +226,35 @@ def test_duplicate_source_key_raises_on_both_branches(tmp_path, spark, limit):
     assert t.snapshot().snapshot_id == head
 
 
+def test_timestamp_key_merge_persisted_path_matches_held(tmp_path, spark):
+    """A computed source takes the persisted path: its key range must be
+    tz-aware, like the manifest's timestamp stats it prunes against."""
+    def rows(ids, v):
+        return spark.range(0, 60, 1, 4).filter(F.col("id").isin(ids)).select(
+            F.timestamp_seconds(F.col("id") * 3600 + 1704067200).alias("ts"),
+            (F.lit(v) if v else F.concat(F.lit("v"), F.col("id").cast("string")))
+            .alias("v"),
+        )
+
+    persisted = Table.create(
+        str(tmp_path / "p"), "ts timestamp, v string", stats_cols=["ts"]
+    )
+    persisted.commit("append", persisted.write_files(rows(list(range(40)), None)))
+    held = persisted.clone(str(tmp_path / "h"))
+    source = rows([3, 10, 20, 39, 50], "new")
+    s_persisted = merge_into(persisted, spark, source, key="ts")
+    s_held = merge_into(
+        held, spark, _file_source(spark, tmp_path, source), key="ts"
+    )
+    assert "count_matched" in s_persisted.summary["phase_sec"]
+    assert "count_matched" not in s_held.summary["phase_sec"]
+    for s in (s_persisted, s_held):
+        assert (s.summary["rows_updated"], s.summary["rows_inserted"]) == (4, 1)
+    got = [sorted(tuple(r) for r in t.scan(spark).collect()) for t in (persisted, held)]
+    assert got[0] == got[1]
+    assert len(got[0]) == 41 and sum(v == "new" for _, v in got[0]) == 5
+
+
 # ---------------- keep rewrites: no split cuts a single-row-group file ----
 
 
@@ -262,43 +296,107 @@ def one_group_files(tmp_path, spark):
     return t, int(sizes.min() * 0.9)
 
 
-def _keep_files(t, before: set, fresh_prefix: str) -> list:
+def _keep_files(t, before: set, fresh_prefix) -> list:
     return [
         p for p in t.manifest_pdf()["path"]
-        if p not in before and not p.startswith(fresh_prefix)
+        if p not in before and not (fresh_prefix and p.startswith(fresh_prefix))
     ]
 
 
-def test_merge_keep_rewrite_one_task_per_file(one_group_files, spark, tmp_path):
-    t, target = one_group_files
+_DAY = ("ingest_date", "=", "2024-01-02")
+
+
+def _one_file_source(t, spark, tmp_path):
+    """Every 12th key of ``t`` (ten per file), caption revised, as one
+    parquet file: its delta write is one task."""
     ids = [r[0] for r in t.scan(spark).select("image_id").collect()][::12]
-    # a one-file source: its delta write is one task
     (t.scan(spark).filter(F.col("image_id").isin(ids))
      .withColumn("caption", F.lit("rev")).coalesce(1)
      .write.parquet(str(tmp_path / "src")))
-    source = spark.read.parquet(str(tmp_path / "src"))
-    before = set(t.manifest_pdf()["path"])
-    job = _last_job(spark)
-    snap = merge_into(t, spark, source, target_file_size_bytes=target)
-    stages = _write_stages(spark, job)
-    assert snap.summary["files_rewritten"] == 4
-    assert len(_keep_files(t, before, snap.summary["delta_prefix"])) == 4
-    assert sorted(len(rows) for rows in stages) == [1, 4]  # delta, keep
-    assert all(min(rows) > 0 for rows in stages), stages
+    return spark.read.parquet(str(tmp_path / "src"))
 
 
-def test_overwrite_boundary_rewrite_one_task_per_file(one_group_files, spark):
-    t, target = one_group_files
-    day = generate_images(spark, 10, n_files=1, start=9000).withColumn(
-        "ingest_date", F.lit("2024-01-02")
+def _day_frame(spark):
+    """Ten fresh rows of one date, written as one task."""
+    return generate_images(spark, 10, n_files=1, start=9000).withColumn(
+        "ingest_date", F.lit(_DAY[2])
     )
+
+
+# every caller of tableformat.rewrite_files: (prepare, run, key of the
+# summary's fresh insert/delta prefix); ``prepare`` runs before the
+# counted jobs
+_REWRITERS = {
+    "merge": (
+        _one_file_source,
+        lambda t, spark, src, target: merge_into(
+            t, spark, src, target_file_size_bytes=target
+        ),
+        "delta_prefix",
+    ),
+    "merge-clauses": (
+        _one_file_source,
+        lambda t, spark, src, target: merge_into(
+            t, spark, src, when_not_matched="ignore",
+            target_file_size_bytes=target,
+        ),
+        "delta_prefix",
+    ),
+    "overwrite_partitions": (
+        None,
+        lambda t, spark, _, target: overwrite_partitions(
+            t, spark, _day_frame(spark), target_file_size_bytes=target
+        ),
+        "insert_prefix",
+    ),
+    "replace_where": (
+        None,
+        lambda t, spark, _, target: replace_where(
+            t, spark, _day_frame(spark), [_DAY], target_file_size_bytes=target
+        ),
+        "insert_prefix",
+    ),
+    "delete_where": (
+        None,
+        lambda t, spark, _, target: delete_where(
+            t, spark, [_DAY], target_file_size_bytes=target
+        ),
+        None,
+    ),
+    "apply_deletes": (
+        lambda t, spark, _: delete_where(t, spark, [_DAY], mode="merge-on-read"),
+        lambda t, spark, _, target: apply_deletes(
+            t, spark, target_file_size_bytes=target
+        ),
+        None,
+    ),
+    "update_where": (
+        None,
+        lambda t, spark, _, target: update_where(
+            t, spark, [_DAY], {"caption": "'upd'"}, target_file_size_bytes=target
+        ),
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_REWRITERS))
+def test_keep_rewrite_one_task_per_file(one_group_files, spark, tmp_path, op):
+    """Each copy-on-write rewrite touching four single-row-group files
+    just above the target writes one keep file per touched file, with one
+    write task each and none empty, beside a one-task insert or delta
+    write where the operation has one."""
+    t, target = one_group_files
+    prepare, run, fresh_key = _REWRITERS[op]
+    prepared = prepare(t, spark, tmp_path) if prepare else None
     before = set(t.manifest_pdf()["path"])
     job = _last_job(spark)
-    snap = overwrite_partitions(t, spark, day, target_file_size_bytes=target)
+    snap = run(t, spark, prepared, target)
     stages = _write_stages(spark, job)
+    fresh = snap.summary[fresh_key] if fresh_key else None
     assert snap.summary["files_rewritten"] == 4
-    assert len(_keep_files(t, before, snap.summary["insert_prefix"])) == 4
-    assert sorted(len(rows) for rows in stages) == [1, 4]  # insert, keep
+    assert len(_keep_files(t, before, fresh)) == 4
+    assert sorted(len(rows) for rows in stages) == ([1, 4] if fresh else [4])
     assert all(min(rows) > 0 for rows in stages), stages
 
 

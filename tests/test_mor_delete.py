@@ -11,6 +11,7 @@ from aws_medallion_datalake_spark.operators import (
     compact,
     delete_where,
     expire_snapshots,
+    update_where,
 )
 from aws_medallion_datalake_spark.operators.merge import merge_into
 from aws_medallion_datalake_spark.sources.generator import (
@@ -99,6 +100,32 @@ def test_rewrites_guarded_while_deletes_pending(table, spark):
     # after materializing, the same ops run
     apply_deletes(table, spark)
     assert compact(table, spark, target_file_size_bytes=64 * 1024 * 1024) is not None
+
+
+@pytest.mark.parametrize("via", ["argument", "property"])
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_unknown_write_mode_raises_before_any_write(table, spark, op, via):
+    """A bad ``mode=`` argument and a bad ``write.<op>.mode`` property
+    both raise before the operation writes or commits anything."""
+    run = {
+        "delete": lambda **kw: delete_where(table, spark, [("w", "=", 32)], **kw),
+        "update": lambda **kw: update_where(
+            table, spark, [("w", "=", 32)], {"caption": "'x'"}, **kw
+        ),
+        "merge": lambda **kw: merge_into(
+            table, spark, generate_updates(spark, N, 10, 5, n_files=1), **kw
+        ),
+    }[op]
+    kw = {"mode": "merge-on-write"}
+    if via == "property":
+        table.set_properties({f"write.{op}.mode": "Merge-On-Write"})
+        kw = {}
+    head = table.snapshot().snapshot_id
+    data = set(os.listdir(table.data_dir))
+    with pytest.raises(ValueError, match="'copy-on-write' or 'merge-on-read'"):
+        run(**kw)
+    assert table.snapshot().snapshot_id == head
+    assert set(os.listdir(table.data_dir)) == data
 
 
 def test_expire_keeps_pending_delete_files(table, spark):
