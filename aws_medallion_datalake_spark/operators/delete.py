@@ -53,11 +53,13 @@ from ..sources.tableformat import (
     Snapshot,
     Table,
     _pred_to_column,
+    prefix_files,
     prune_manifest,
     rel_path_expr,
     resolve_write_mode,
     rewrite_files,
     statable_cols,
+    write_position_deletes,
 )
 from .metascan import _fully_covered_mask
 from .timing import PhaseTimer
@@ -216,42 +218,12 @@ def _mor_delete(
     row already deleted by an earlier merge-on-read commit is not
     re-recorded (duplicate (path, pos) rows are harmless to the anti-join
     but would double-count ``rows_deleted``)."""
-    import pyarrow.parquet as _pq
-
-    prefix = table.new_data_prefix()
     with pt.phase("probe"):
-        snap = table.snapshot()
-        live = table._apply_mor_deletes(
-            spark,
-            table.read_data(spark, cand_paths),
-            snap,
-            keep_pos_cols=True,
+        live = table.live_rows(
+            spark, table.read_data(spark, cand_paths), table.snapshot()
         )
-        # read through pending EQUALITY deletes too: a row they already
-        # suppress must not be re-recorded positionally (double counting)
-        live = table._apply_eq_deletes(spark, live, snap, path_col="__mor_path")
-        matched = (
-            live.filter(cond)
-            .select(
-                F.col("__mor_path").alias("path"), F.col("__mor_pos").alias("pos")
-            )
-            .sortWithinPartitions("path", "pos")
-            .coalesce(4)  # sparse by design: delete files are tiny
-        )
-        matched.write.mode("append").parquet(prefix)
-    new_delete_rel = sorted(
-        os.path.relpath(os.path.join(prefix, f), table.root)
-        for f in os.listdir(prefix)
-        if f.endswith(".parquet")
-    )
-    n_deleted = sum(
-        _pq.ParquetFile(os.path.join(table.root, p)).metadata.num_rows
-        for p in new_delete_rel
-    )
+        new_delete_rel, n_deleted = write_position_deletes(table, live.filter(cond))
     if n_deleted == 0:  # stats-overlap false positives only — no commit
-        import shutil
-
-        shutil.rmtree(prefix, ignore_errors=True)
         return None
     man = table.manifest_pdf()
     return table.commit(
@@ -316,21 +288,8 @@ def equality_delete(
     prefix = table.new_data_prefix()
     vals = values.select(*cols).distinct()
     vals.coalesce(1).write.mode("append").parquet(prefix)
-    new_rel = sorted(
-        os.path.relpath(os.path.join(prefix, f), table.root)
-        for f in os.listdir(prefix)
-        if f.endswith(".parquet")
-    )
-    import pyarrow.parquet as _pq
-
-    n_values = sum(
-        _pq.ParquetFile(os.path.join(table.root, p)).metadata.num_rows
-        for p in new_rel
-    )
+    new_rel, n_values = prefix_files(table, prefix)
     if n_values == 0:
-        import shutil
-
-        shutil.rmtree(prefix, ignore_errors=True)
         return None
     as_of = int(meta.current_snapshot_id)
     man = table.manifest_pdf()
@@ -381,11 +340,7 @@ def rewrite_delete_files(
         .write.mode("append")
         .parquet(prefix)
     )
-    new_rel = sorted(
-        os.path.relpath(os.path.join(prefix, f), table.root)
-        for f in os.listdir(prefix)
-        if f.endswith(".parquet")
-    )
+    new_rel, _ = prefix_files(table, prefix)
     man = table.manifest_pdf()
     return table.commit(
         "replace",
@@ -505,9 +460,7 @@ def apply_deletes(
         )
 
     def keep(rows):
-        kept = table._apply_mor_deletes(spark, rows, snap, keep_pos_cols=True)
-        kept = table._apply_eq_deletes(spark, kept, snap, path_col="__mor_path")
-        return kept.drop("__mor_path", "__mor_pos")
+        return table.live_rows(spark, rows, snap).drop("__mor_path", "__mor_pos")
 
     touched_man = man[man["path"].isin(touched)]
     new_entries = rewrite_files(

@@ -1,95 +1,81 @@
-"""MERGE INTO (upsert) with copy-on-write file rewrite and skew handling.
+"""MERGE INTO: one planner for every clause set, two write modes.
 
 The reference's only write semantic is blind overwrite-refresh
 (/root/reference/scripts/silver_digit_clean.py:127, SURVEY.md §2.9 T6);
-MERGE is the operation the north_rule adds. Semantics (Iceberg
-``MERGE INTO t USING s ON t.image_id = s.image_id WHEN MATCHED THEN UPDATE
-SET * WHEN NOT MATCHED THEN INSERT *``):
+MERGE is the operation the north_rule adds. The clause surface is the
+SQL:2003 / Delta one (``MergeClauses``); its defaults are the classic
+upsert ``MERGE INTO t USING s ON t.image_id = s.image_id WHEN MATCHED
+THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``. Every clause set and
+both Iceberg write modes take the same plan; the write mode picks only
+its last step.
 
-1. **Find touched files** — join the target scan (key + hidden
-   ``_metadata.file_path``) against the source keys; only files
-   containing a matched key are rewritten (column-pruned scan: the probe
-   reads just ``image_id`` from parquet). When the source reads parquet
-   files whose footers hold at most ``_HELD_KEYS`` rows (10^4, below
-   ``broadcast_key_limit``; the measurements behind it sit beside the
-   constant), its key column is fetched to the driver once (one
-   column-pruned ``limit(limit + 1)`` Arrow fetch: duplicate check, key
-   count and key range in pyarrow) and re-enters Spark as a
-   ``LocalRelation``, so neither the check nor the broadcast persists
-   anything or aggregates. The probe is then ONE query grouped by key —
-   ``collect_set(path)`` per matched key, at most one row per source
-   key, fetched as Arrow — which yields the touched files, the matched
-   key count and the matched keys. Every other source (larger, computed,
-   or not parquet) keeps the persisted ``groupBy(key).count()`` check
-   and a persisted (key, path) probe aggregated per file, with no fetch
-   tried first: the footer sum costs no Spark job. Either way the driver
-   never collects row objects.
-2. **Rewrite without a payload join** — because MATCHED THEN UPDATE SET *
-   replaces the whole row, the rewrite is pure set algebra on the KEY:
+1. **Source check** — duplicate source keys make MERGE non-deterministic
+   (Iceberg's cardinality check), so they raise. When the source reads
+   parquet files whose footers hold at most ``_HELD_KEYS`` rows (10^4;
+   the measurements behind it sit beside the constant), its key column
+   is fetched to the driver once (one column-pruned ``limit(limit + 1)``
+   Arrow fetch: duplicate check, key count and key range in pyarrow) and
+   re-enters Spark as a ``LocalRelation``. Every other source (larger,
+   computed, or not parquet) keeps a persisted ``groupBy(key).count()``,
+   with no fetch tried first: the footer sum costs no Spark job. This
+   *held* versus *persisted* choice is the planner's only fork. The
+   source PAYLOAD is never cached: only the delta write reads it.
+2. **Probe** — one live-row probe (``Table.live_rows``, so merge-on-read
+   reads through pending deletes) of the key, the target columns the
+   clause conditions reference, the file path and, for merge-on-read
+   only, the row position. It reads only the files whose key stats meet
+   the source key range, unless WHEN NOT MATCHED BY SOURCE (NMBS) is
+   set: a row NMBS deletes is one the source does not cover, so NMBS
+   reads every file. The probe joins the source key set (plus the
+   ``src_``-prefixed source columns a matched condition references):
+   inner, or left with a membership marker under NMBS.
+3. **Split** — matched rows that pass the matched condition are
+   *affected*; unmatched rows that pass the NMBS condition are *NMBS
+   rows*. Held: ONE query grouped by matched key, at most one row per
+   source key, fetched as Arrow, gives the affected-key count, the files
+   holding affected rows and the key sets the rewrite and delta join,
+   with nothing persisted. Persisted: the matched rows are persisted and
+   the affected keys are counted beside the write (``count_matched``).
+4. **Delta** — for the default clauses the source wholesale,
+   ``src.select(cols)`` with no join: matched keys replace their rows,
+   the rest insert, and since the probe sees EVERY file holding a source
+   key, updates ∪ inserts == source. Otherwise the affected source rows
+   plus the unmatched ones that pass the insert condition. The delta is
+   a modest cluster-key-sorted write.
+5. **Write** — the two modes differ only here:
 
-       keep  = touched-file rows ANTI-JOIN source keys
-       delta = source, wholesale
+   - *copy-on-write*: ``tableformat.rewrite_files`` rewrites the files
+     holding affected or NMBS rows, keeping the rows whose key is not
+     affected and that are not NMBS rows, in bounded groups beside the
+     delta write; one ``merge`` snapshot swaps old files for new.
+   - *merge-on-read*: positional delete files name the affected and NMBS
+     rows (``write_position_deletes``), and the delta lands as a delta
+     manifest with the grown delete set — O(changes) IO, the rewrite
+     deferred to ``apply_deletes``. After a cluster run source keys
+     scatter over the curve and a copy-on-write merge rewrites most
+     files; this mode does not.
 
-   (`touched` holds EVERY file containing a source key, so
-   updates ∪ inserts == source exactly — no insert anti-join needed.)
-   The key set is broadcast EXPLICITLY (``F.broadcast``) whenever the
-   source is small enough (``broadcast_key_limit`` rows, default 4M ≈
-   a few hundred MB of hash map): relying on AQE to convert the
-   anti-join was measured NOT to fire here — the planner keeps a
-   sort-merge join and funnels every payload byte through a
-   ``shuffle.partitions``-wide exchange (1.4 GB through 8 reducers in
-   the 96k-row bench), which is both a full extra copy of the table
-   and a parallelism cap. With the explicit hint the anti-join is a
-   broadcast filter: **no image payload ever shuffles** — the keep-side
-   write preserves its input splits (each read task writes its
-   already-clustered, already-sized partition straight back out,
-   Iceberg-style copy-on-write), and the source lands as modest
-   cluster-key-sorted delta files. Sources above the limit fall back to
-   the shuffled anti-join (AQE skew handling applies) — at that size the
-   source rivals the table and a shuffle is the honest cost.
+The source key set is broadcast EXPLICITLY (``F.broadcast``) up to
+``_BROADCAST_KEYS`` keys: relying on AQE to convert the keep anti-join
+was measured NOT to fire here — the planner kept a sort-merge join and
+funnelled every payload byte through a ``shuffle.partitions``-wide
+exchange (1.4 GB through 8 reducers in the 96k-row bench). With the hint
+no image payload shuffles: each keep-rewrite read task writes its
+already-clustered, already-sized split straight back out. Larger key
+sets take the sort-merge join, where AQE skew-join splitting handles a
+hot key's oversized partitions; at that size the source rivals the table
+and a shuffle is the honest cost.
 
-   Touched files are rewritten by ``tableformat.rewrite_files``, the
-   copy-on-write rewrite every row-level write shares, in **bounded
-   groups** of at most ``REWRITE_GROUP_FILES`` (4096, a constant) files
-   running concurrently from a driver thread pool beside the delta
-   write — the Iceberg RewriteDataFiles architecture: a broad merge over
-   10^7 files becomes many independent medium jobs instead of one
-   monster job, and group parallelism keeps a 1000-executor cluster
-   busy.
-3. **Counts** — rows_updated counts matched DISTINCT target keys (the
-   row count of the per-key probe; on the persisted path, a distinct
-   count over the persisted probe rows run beside the rewrites — no
-   second scan of the touched files), so rows_inserted =
-   |source| − rows_updated is never negative even when plain appends
-   left duplicate keys across files; the duplicate copies swept by the
-   rewrite are reported separately as ``rows_replaced_dupes`` (computed
-   free of charge from manifest arithmetic: touched_records −
-   keep_records − rows_updated).
-4. **Commit** — old manifest minus touched files plus new entries, as one
-   ``merge`` snapshot (readers never see a half-merge).
+Counts: ``rows_updated`` / ``rows_deleted`` count affected DISTINCT
+target keys, so ``rows_inserted`` (delta rows minus updated keys) is
+never negative when plain appends left a key duplicated across files;
+the extra copies the write removes are ``rows_replaced_dupes``, from
+manifest arithmetic (copy-on-write) or delete-file footers
+(merge-on-read). ``rows_nmbs_deleted`` is part of ``rows_deleted``.
 
-Repeated merges shrink keep-files below target and accrete small delta
-files — exactly the debt bin-packing compaction repays; clustering
-restores global sort order. This is the same division of labor as
-Iceberg's MERGE + RewriteDataFiles.
-
-Skew: the hot-phash tail concentrates matched keys in a few files; with
-broadcast key-joins there is no shuffle for skew to poison. In the SMJ
-fallback (source too large to broadcast its keys) two mechanisms apply:
-AQE skew-join splitting (session default, splits oversized LEFT
-partitions of the anti-join at runtime) and — opt-in via
-``smj_salt_buckets=N`` — explicit SALTED keys: every target row gets a
-row-local salt ``pmod(monotonically_increasing_id(), N)`` and the source
-key set is replicated across all N salt values, so a key duplicated
-across millions of target rows (hot phash bucket re-ingested many times)
-spreads over N reduce partitions instead of one. Row-salting is always
-correct for this replicate-the-keys join shape: a target row matches on
-(key, salt) iff its key matches, whatever its salt. The cost is an N×
-blow-up of the (small, key-only) build side, which is why it is opt-in
-for known-pathological tails rather than the default.
-
-Source key uniqueness is enforced (duplicate source keys make MERGE
-non-deterministic — same rule as Iceberg's cardinality check).
+Repeated copy-on-write merges shrink keep-files below target and accrete
+small delta files — the debt bin-packing compaction repays; clustering
+restores global sort order (Iceberg's MERGE + RewriteDataFiles split).
 """
 
 from __future__ import annotations
@@ -98,6 +84,7 @@ import os
 import re
 import time
 from dataclasses import dataclass
+from functools import reduce
 from typing import Optional
 
 import pandas as pd
@@ -113,13 +100,15 @@ from ..sources.tableformat import (
     FOOTER_SPARK_THRESHOLD,
     Snapshot,
     Table,
+    _pred_to_column,
     _strip_scheme,
+    prune_manifest,
     resolve_write_mode,
     rewrite_files,
     statable_cols,
+    write_position_deletes,
     written_entries,
 )
-from ..sources.tableformat import rel_path_expr as _rel_path_expr
 from .timing import PhaseTimer
 
 _SRC_REF = re.compile(r"\bsrc_([A-Za-z_][A-Za-z0-9_]*)\b")
@@ -135,6 +124,11 @@ _SRC_REF = re.compile(r"\bsrc_([A-Za-z_][A-Za-z0-9_]*)\b")
 # 10^5 3.31 vs 3.82 and 1.86 vs 1.60; 10^6 15.0 vs 9.1 and 6.9 vs 3.1.
 # The bound is the largest size run for ten pairs; by 10^5 wall is worse.
 _HELD_KEYS = 10_000
+
+# Most source keys the probe and keep joins broadcast (a hash map of a
+# few hundred MB); larger key sets take a sort-merge join (module
+# docstring).
+_BROADCAST_KEYS = 4_000_000
 
 
 @dataclass(frozen=True)
@@ -164,6 +158,16 @@ class MergeClauses:
             and self.not_matched == "insert"
             and self.not_matched_condition is None
             and self.nmbs is None
+        )
+
+    def delta_is_source(self) -> bool:
+        """Every source row lands: matched keys replace their rows and the
+        rest insert, with no condition on either."""
+        return (
+            self.matched == "update"
+            and self.matched_condition is None
+            and self.not_matched == "insert"
+            and self.not_matched_condition is None
         )
 
     def validate(self, src_cols: list, tgt_cols: list) -> None:
@@ -221,14 +225,12 @@ def merge_into(
     *,
     key: str = "image_id",
     target_file_size_bytes: int = 128 * 1024 * 1024,
-    broadcast_key_limit: int = 4_000_000,
     when_matched: str = "update",
     matched_condition: Optional[str] = None,
     when_not_matched: str = "insert",
     not_matched_condition: Optional[str] = None,
     when_not_matched_by_source: Optional[str] = None,
     not_matched_by_source_condition: Optional[str] = None,
-    smj_salt_buckets: int = 0,
     properties: Optional[dict] = None,
     mode: Optional[str] = None,
 ) -> Snapshot:
@@ -240,9 +242,8 @@ def merge_into(
     - ``"update"`` (default): WHEN MATCHED THEN UPDATE SET * WHEN NOT
       MATCHED THEN INSERT * — the delta is the source wholesale.
     - ``"delete"``: WHEN MATCHED THEN DELETE WHEN NOT MATCHED THEN
-      INSERT * — matched target rows are dropped by the same key-only
-      anti-join rewrite; the delta is only the UNMATCHED source rows
-      (the retention/replace merge shape).
+      INSERT * — matched target rows are dropped; the delta is only the
+      UNMATCHED source rows (the retention/replace merge shape).
     - ``"ignore"``: matched rows untouched (insert-only MERGE).
 
     Clause surface (SQL:2003 / Delta parity — see ``MergeClauses``):
@@ -255,9 +256,9 @@ def merge_into(
     plain names); ``when_not_matched_by_source="delete"`` removes
     target rows whose key is absent from the source (the full-sync /
     mirror shape — inherently a whole-table probe unless
-    ``not_matched_by_source_condition`` scopes it, so stats pruning on
-    the condition bounds the touched set). Defaults reproduce the
-    classic upsert exactly (same fast path, zero plan change).
+    ``not_matched_by_source_condition`` scopes it). ``mode`` is
+    ``"copy-on-write"`` or ``"merge-on-read"`` (default: the table's
+    write-mode property).
     """
     cl = MergeClauses(
         matched=when_matched,
@@ -267,666 +268,249 @@ def merge_into(
         nmbs=when_not_matched_by_source,
         nmbs_condition=not_matched_by_source_condition,
     )
-    cl.validate(source.columns, [f.name for f in table._schema(spark).fields])
-    mode = resolve_write_mode(table.metadata(), "merge", mode)
-    if mode == "copy-on-write":
-        # the keep-path rewrite copies whole files, resurrecting rows a
-        # pending positional/equality delete suppresses (the
-        # merge-on-read path instead probes THROUGH the pending sets, so
-        # it composes with them)
+    cols = [f.name for f in table._schema(spark).fields]
+    cl.validate(source.columns, cols)
+    meta = table.metadata()
+    mode = resolve_write_mode(meta, "merge", mode)
+    mor = mode == "merge-on-read"
+    if not mor:
+        # the keep rewrite copies whole files, resurrecting rows a pending
+        # positional/equality delete suppresses (the merge-on-read probe
+        # reads THROUGH the pending sets, so it composes with them)
         table.refuse_pending_deletes("MERGE")
     t0 = time.time()
     pt = PhaseTimer()
-    man = table.manifest_pdf()
-
-    # The source PAYLOAD is deliberately NOT cached: every payload column
-    # is consumed exactly once (the delta write), while the KEY column is
-    # consumed several times (duplicate check, probe join, delete-mode
-    # anti-join) — so only the key set is kept. Caching the payload
-    # forced a full materialization of the binary column during the
-    # check, an allocation-heavy parallelism-independent term measured at
-    # 6-14 s on the bench source (and anti-scaling with cores on
-    # alloc-degraded hosts); the key-only scan is column-pruned at the
-    # parquet reader. Computed (non-file) sources pay one re-evaluation
-    # at the delta write — cache upstream if that plan is expensive.
     src = source
-    src_key_counts = None
-    # the source's key column on the driver, when its parquet footers
-    # hold at most ``_HELD_KEYS`` rows (and they fit the broadcast limit)
-    held = None
-    held_limit = min(_HELD_KEYS, broadcast_key_limit)
-    src_lo = src_hi = None
     with pt.phase("source_check"):
-        if _footer_rows_fit(src, held_limit):
-            # ONE column-pruned fetch of at most limit+1 keys gives the
-            # duplicate check, the key count AND the source key range for
-            # probe-scan pruning, with no aggregate and nothing persisted.
-            # It overflows only when the plan multiplies rows (a join).
-            got = src.select(key).limit(held_limit + 1).toArrow()
-            if got.num_rows <= held_limit:
-                held = got.column(0)
-                if pc.count_distinct(held, mode="all").as_py() < len(held):
-                    raise ValueError(f"MERGE source has duplicate keys on {key!r}")
-                n_src_keys = len(held)
-                bounds = pc.min_max(held)
-                src_lo, src_hi = bounds["min"].as_py(), bounds["max"].as_py()
-        if held is None:
-            src_key_counts = src.groupBy(key).count().persist()
-            # ONE job gives the duplicate check, the key count AND the
-            # source key range for probe-scan pruning (its fixed driver
-            # cost is the parallelism-independent term that caps merge's
-            # measured scaling at small stage durations — a separate
-            # min/max job would re-scan the source key column). Read as
-            # Arrow, like the held keys, so a timestamp range is
-            # tz-aware, as the manifest stats it is compared with are.
-            r = src_key_counts.agg(
-                F.count(F.lit(1)).alias("n_keys"),
-                F.max("count").alias("max_dup"),
-                F.min(key).alias("lo"),
-                F.max(key).alias("hi"),
-            ).toArrow().to_pylist()[0]
-            if (r["max_dup"] or 0) > 1:
-                raise ValueError(f"MERGE source has duplicate keys on {key!r}")
-            n_src_keys = int(r["n_keys"] or 0)
-            src_lo, src_hi = r["lo"], r["hi"]
-    # a driver-held key set re-enters Spark as a LocalRelation: nothing
-    # persisted, no aggregate
-    key_frame = (
-        local_frame(spark, {key: held})
-        if held is not None
-        else src_key_counts.select(key)
-    )
-    src_keys = key_frame
-    use_salt = n_src_keys > broadcast_key_limit and smj_salt_buckets > 1
-    if n_src_keys <= broadcast_key_limit:
-        # explicit hint — see module docstring: AQE does NOT convert this
-        # anti-join on its own, and the SMJ it keeps shuffles the payload
-        src_keys = F.broadcast(src_keys)
-    elif use_salt:
-        salted_keys = src_keys.crossJoin(
-            spark.range(smj_salt_buckets).select(
-                F.col("id").cast("int").alias("__salt")
-            )
+        held, src_key_counts, n_src_keys, src_lo, src_hi = _source_keys(src, key)
+
+    def bc(df: DataFrame) -> DataFrame:
+        # explicit hint (module docstring): AQE does NOT convert these
+        # joins on its own, and the sort-merge join shuffles the payload
+        return F.broadcast(df) if n_src_keys <= _BROADCAST_KEYS else df
+
+    matched = nm = aff = None
+    try:
+        key_frame = (
+            local_frame(spark, {key: held})
+            if held is not None
+            else src_key_counts.select(key)
         )
+        man = table.manifest_pdf()
 
-    def _key_join(tgt_df: DataFrame, how: str) -> DataFrame:
-        """Join target rows against the source key set (``inner`` for the
-        probe, ``left_anti`` for the keep rewrite). In salted-SMJ mode the
-        target side gets a ROW-local salt — duplicates of one hot key
-        spread across ``smj_salt_buckets`` reduce partitions — and the
-        key set is replicated over every salt value (see module
-        docstring: correct for any row salt)."""
-        if not use_salt:
-            return tgt_df.join(src_keys, key, how)
-        return (
-            tgt_df.withColumn(
-                "__salt",
-                F.pmod(
-                    F.monotonically_increasing_id(), F.lit(smj_salt_buckets)
-                ).cast("int"),
+        # probe: the live rows of the candidate files against the source
+        # keys. Without NMBS only files whose key range meets the SOURCE
+        # key range can hold a match: at 10^12 rows, recency-biased
+        # (monotone) merge keys then scan a sliver of the key column, while
+        # uniform keys prune nothing, which is the honest cost.
+        preds: list = []
+        cand = man
+        if not cl.nmbs and src_lo is not None:
+            statable = statable_cols(meta)
+            stat_keys = transforms.identity_names(meta.partition_cols) + list(
+                meta.stats_cols
             )
-            .join(salted_keys, [key, "__salt"], how)
-            .drop("__salt")
-        )
-
-    # 1. touched files: column-pruned probe scan, aggregated per file and
-    #    resolved against the manifest — one Arrow batch of manifest rows
-    #    for exactly the touched files, never a row-object collect. The
-    #    (key, path) probe rows are persisted so the matched-DISTINCT-key
-    #    count is a re-aggregation of this small cached set instead of a
-    #    second scan of every touched file.
-    #    When the merge key carries manifest min/max stats, the probe scan
-    #    is additionally pruned to files whose key range intersects the
-    #    SOURCE key range — sound (every match lies inside [min(src),
-    #    max(src)]), and the difference between scanning the whole key
-    #    column of a 10^12-row table and scanning a sliver of it when
-    #    merges are recency-biased (monotone ids: the common production
-    #    case). Uniform-random source keys span the table and prune
-    #    nothing, which is the honest cost.
-    meta = table.metadata()
-    probe_preds = None
-    if src_lo is not None and key in (
-        [c for c in transforms.identity_names(meta.partition_cols)
-        + list(meta.stats_cols) if c in statable_cols(meta)]
-    ):
-        probe_preds = [(key, "between", (src_lo, src_hi))]
-    if mode == "merge-on-read":
-        try:
-            return _mor_merge(
-                table, spark, src, key, src_keys, probe_preds, cl,
-                n_src_keys, properties, pt, t0,
-            )
-        finally:
-            _unpersist(src_key_counts)
-    if not cl.is_default():
-        try:
-            return _cow_merge_clauses(
-                table, spark, src, key,
-                broadcast=n_src_keys <= broadcast_key_limit,
-                held_keys=key_frame if held is not None else None,
-                probe_preds=probe_preds, cl=cl, properties=properties,
-                pt=pt, t0=t0,
-                target_file_size_bytes=target_file_size_bytes,
-            )
-        finally:
-            _unpersist(src_key_counts)
-
-    target_all = table.scan(spark, predicates=probe_preds)
-    rel = _rel_path_expr(table.root)
-    probe_rows = _key_join(
-        target_all.select(F.col(key), rel.alias("path")), "inner"
-    )
-    count_box = {"n": 0}
-    probe = None
-    if held is not None:
-        # one row per matched key, at most n_src_keys rows: the touched
-        # files, the matched-DISTINCT-key count and the matched keys
-        # themselves, from one query and nothing persisted
-        with pt.phase("probe"):
-            hits = (
-                probe_rows.groupBy(key)
-                .agg(F.collect_set("path").alias("paths"))
-                .toArrow()
-            )
-        touched_rel = set(
-            pc.unique(pc.list_flatten(hits.column("paths"))).to_pylist()
-        )
-        count_box["n"] = hits.num_rows
-        if when_matched == "delete":
-            matched_keys = F.broadcast(
-                local_frame(spark, {key: hits.column(key)})
-            )
-    else:
-        probe = probe_rows.persist()
-        with pt.phase("probe"):
-            touched_pdf = (
-                probe.groupBy("path")
-                .agg(F.count(F.lit(1)).alias("n_matched_rows"))
-                .toPandas()
-            )
-        touched_rel = set(touched_pdf["path"])
-        matched_keys = probe.select(key).distinct()
-    touched_man = man[man["path"].isin(touched_rel)]
-
-    cols = [f.name for f in table._schema(spark).fields]
-    delta: dict = {}
-
-    def write_delta() -> None:
-        # Every source row survives an UPDATE-mode MERGE: matched keys
-        # replace target rows (their old copies were filtered from the
-        # touched files), unmatched keys are inserts — and since
-        # `touched` contains EVERY file holding a source key,
-        # updates ∪ inserts == source exactly. One wholesale delta
-        # write, no insert anti-join job. DELETE mode keeps only the
-        # unmatched (insert) source rows: matched rows vanish with the
-        # keep-side anti-join.
-        delta_src = src.select(cols)
-        if when_matched == "delete":
-            delta_src = delta_src.join(matched_keys, key, "left_anti")
-        delta["prefix"] = _modest_write(table, delta_src, key)
-        delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
-
-    def count_matched() -> None:
-        # rows_updated = matched DISTINCT keys (duplicate target copies
-        # must not push rows_inserted negative) — re-aggregated from the
-        # cached probe rows (no second file scan), and run INSIDE the
-        # pool so its job hides behind the rewrites.
-        with pt.phase("count_matched"):
-            count_box["n"] = matched_keys.count()
-
-    # MATCHED THEN UPDATE SET * == replace whole row → key-only anti-join;
-    # the broadcast filter preserves input splits, so each read task
-    # writes its (already clustered, already ≈target-sized) partition
-    # straight back out. The delta write depends only on the source, so
-    # it runs CONCURRENTLY with the keep-rewrites — its cost hides inside
-    # the rewrite wall time instead of adding a serial tail.
-    keep_entries = rewrite_files(
-        table,
-        spark,
-        touched_man,
-        lambda rows: _key_join(rows, "left_anti"),
-        target_file_size_bytes,
-        pt,
-        alongside=[write_delta] + ([count_matched] if probe is not None else []),
-    )
-
-    n_matched = count_box["n"]
-    delta_entries = delta["entries"]
-    n_src = int(delta_entries["record_count"].sum()) if delta_entries is not None else 0
-    keep_records = int(keep_entries["record_count"].sum())
-    # delete mode: the delta holds only unmatched rows, so its record
-    # count IS the insert count; matched keys were dropped, not updated
-    n_inserts = n_src if when_matched == "delete" else n_src - n_matched
-    touched_records = int(touched_man["record_count"].sum()) if len(touched_man) else 0
-    n_dupes = max(0, touched_records - keep_records - n_matched)
-
-    keep_man = man[~man["path"].isin(touched_rel)]
-    new_man = pd.concat([keep_man, keep_entries, delta_entries], ignore_index=True)
-    snap = table.commit(
-        "merge",
-        new_man,
-        {
-            "stage": "merge",
-            # delta files = the upserted source rows; Table.changes()
-            # uses this prefix for snapshot-diff incremental reads (T5)
-            "delta_prefix": _rel(table, delta["prefix"]) + "/",
-            "when_matched": when_matched,
-            "rows_updated": int(n_matched) if when_matched == "update" else 0,
-            "rows_deleted": int(n_matched) if when_matched == "delete" else 0,
-            "rows_inserted": int(n_inserts),
-            "rows_replaced_dupes": int(n_dupes),
-            "files_rewritten": len(touched_rel),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-        properties=properties,
-    )
-    _unpersist(probe, src_key_counts)
-    return snap
-
-
-def _cow_merge_clauses(
-    table: Table,
-    spark: SparkSession,
-    src: DataFrame,
-    key: str,
-    *,
-    broadcast: bool,
-    held_keys: Optional[DataFrame],
-    probe_preds,
-    cl: MergeClauses,
-    properties: Optional[dict],
-    pt: PhaseTimer,
-    t0: float,
-    target_file_size_bytes: int,
-) -> Snapshot:
-    """Generalized copy-on-write MERGE for any non-default clause config
-    (conditional WHEN MATCHED, insert suppression/filtering, WHEN NOT
-    MATCHED BY SOURCE DELETE). Same architecture as the fast path —
-    column-pruned probes, key-only anti-join rewrites in bounded
-    thread-pool groups, one atomic commit — plus:
-
-    - the matched CONDITION is evaluated once, at probe time, over a
-      projection carrying only the referenced columns (target plain,
-      source as ``src_<name>``); the rewrite itself stays a key-only
-      anti-join against the *affected* key set, so files whose every
-      match fails the condition are never rewritten at all;
-    - NOT MATCHED BY SOURCE probes the FULL table (source-key-range
-      pruning is unsound there — a deletable row is precisely one the
-      source doesn't cover); its condition is re-evaluated per row in
-      the keep-side rewrite with a broadcast membership marker.
-
-    At 10^12 rows the unconditioned full-sync shape (``nmbs="delete"``,
-    no condition) honestly touches every file not fully covered by the
-    source — that IS the operation; a scoped condition (partition
-    predicate) bounds the probe like any stats-pruned scan.
-    """
-    man = table.manifest_pdf()
-    schema_cols = [f.name for f in table._schema(spark).fields]
-    rel = _rel_path_expr(table.root)
-
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast else df
-
-    # merge_into's driver-held key set (a LocalRelation: no distinct
-    # shuffle) when it fetched one
-    src_keys = held_keys if held_keys is not None else src.select(key).distinct()
-
-    # ---- matched probe: (key, path) pairs + the clause condition,
-    # evaluated over only the referenced columns
-    m_src = _cond_src_cols(cl.matched_condition)
-    m_tgt = _cond_tgt_cols(cl.matched_condition, schema_cols)
-    probe_side = src.select(
-        key, *[F.col(c).alias(f"src_{c}") for c in m_src]
-    )
-    tgt = table.scan(spark, predicates=probe_preds)
-    probe = (
-        tgt.select(
-            F.col(key),
-            *[F.col(c) for c in m_tgt if c != key],
-            rel.alias("__path"),
-        )
-        .join(_bc(probe_side), key, "inner")
-        .persist()
-    )
-    if cl.matched == "ignore":
-        aff = probe.limit(0).select(key, "__path")
-    elif cl.matched_condition:
-        aff = probe.filter(F.expr(cl.matched_condition)).select(key, "__path")
-    else:
-        aff = probe.select(key, "__path")
-    aff = aff.persist()
-    with pt.phase("probe"):
-        touched_matched = set(
-            aff.select("__path").distinct().toPandas()["__path"]
-        )
-        n_replaced = aff.select(key).distinct().count()
-    replaced_keys = aff.select(key).distinct()
-
-    # ---- NOT MATCHED BY SOURCE probe: full-table, no source-range pruning
-    nmbs_rows = 0
-    touched_nmbs: set = set()
-    if cl.nmbs == "delete":
-        nm_tgt = _cond_tgt_cols(cl.nmbs_condition, schema_cols)
-        nm = table.scan(spark).select(
-            F.col(key),
-            *[F.col(c) for c in nm_tgt if c != key],
-            rel.alias("__path"),
-        ).join(_bc(src_keys), key, "left_anti")
-        if cl.nmbs_condition:
-            nm = nm.filter(F.expr(cl.nmbs_condition))
-        with pt.phase("nmbs_probe"):
-            nm_pdf = nm.groupBy("__path").agg(
-                F.count(F.lit(1)).alias("n")
-            ).toPandas()
-        touched_nmbs = set(nm_pdf["__path"])
-        nmbs_rows = int(nm_pdf["n"].sum()) if len(nm_pdf) else 0
-
-    touched_rel = touched_matched | touched_nmbs
-    delta: dict = {}
-
-    def keep(rows: DataFrame) -> DataFrame:
-        kept = rows.join(_bc(replaced_keys), key, "left_anti")
-        if cl.nmbs != "delete":
-            return kept
-        # drop rows where the nmbs condition holds AND the key has no
-        # source coverage — broadcast membership marker, tri-state
-        # condition folded to drop-only-when-TRUE
-        cond = (
-            F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
-            if cl.nmbs_condition
-            else F.lit(True)
-        )
-        return (
-            kept.join(
-                _bc(src_keys.withColumn("__in_src", F.lit(1))), key, "left"
-            )
-            .filter(~(cond & F.col("__in_src").isNull()))
-            .drop("__in_src")
-        )
-
-    def write_delta() -> None:
-        parts = []
-        if cl.matched == "update" and n_replaced:
-            parts.append(src.join(_bc(replaced_keys), key, "left_semi"))
-        if cl.not_matched == "insert":
-            ins = src.join(_bc(probe.select(key).distinct()), key, "left_anti")
-            if cl.not_matched_condition:
-                ins = ins.filter(F.expr(cl.not_matched_condition))
-            parts.append(ins)
-        if not parts:
-            return
-        delta_src = parts[0].select(schema_cols)
-        for p in parts[1:]:
-            delta_src = delta_src.unionByName(p.select(schema_cols))
-        delta["prefix"] = _modest_write(table, delta_src, key)
-        delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
-
-    keep_entries = rewrite_files(
-        table,
-        spark,
-        man[man["path"].isin(touched_rel)],
-        keep,
-        target_file_size_bytes,
-        pt,
-        alongside=[write_delta],
-    )
-    delta_entries = delta.get("entries")
-    delta_records = (
-        int(delta_entries["record_count"].sum()) if delta_entries is not None else 0
-    )
-    n_inserts = delta_records - (n_replaced if cl.matched == "update" else 0)
-
-    keep_man = man[~man["path"].isin(touched_rel)]
-    new_man = pd.concat([keep_man, keep_entries, delta_entries], ignore_index=True)
-    summary = {
-        "stage": "merge",
-        "when_matched": cl.matched,
-        "clauses": {
-            "matched_condition": cl.matched_condition,
-            "when_not_matched": cl.not_matched,
-            "not_matched_condition": cl.not_matched_condition,
-            "when_not_matched_by_source": cl.nmbs,
-            "not_matched_by_source_condition": cl.nmbs_condition,
-        },
-        "rows_updated": int(n_replaced) if cl.matched == "update" else 0,
-        "rows_deleted": (int(n_replaced) if cl.matched == "delete" else 0)
-        + int(nmbs_rows),
-        "rows_nmbs_deleted": int(nmbs_rows),
-        "rows_inserted": int(max(0, n_inserts)),
-        "files_rewritten": len(touched_rel),
-        "duration_sec": round(time.time() - t0, 3),
-        "phase_sec": pt.summary(),
-    }
-    if delta_entries is not None:
-        summary["delta_prefix"] = _rel(table, delta["prefix"]) + "/"
-    snap = table.commit("merge", new_man, summary, properties=properties)
-    probe.unpersist()
-    aff.unpersist()
-    return snap
-
-
-def _mor_merge(
-    table: Table,
-    spark: SparkSession,
-    src: DataFrame,
-    key: str,
-    src_keys: DataFrame,
-    probe_preds,
-    cl: MergeClauses,
-    n_src_keys: int,
-    properties: Optional[dict],
-    pt: PhaseTimer,
-    t0: float,
-) -> Snapshot:
-    """Merge-on-read MERGE (Iceberg v2 write mode): matched target rows
-    are suppressed with POSITIONAL DELETE files and the source lands as
-    an appended delta — O(delta + matched positions) IO instead of
-    rewriting every file holding a source key. This is the write path a
-    clustered table needs: after a Morton/Hilbert cluster run, source
-    keys scatter across the curve, so a copy-on-write merge degenerates
-    to a full-table rewrite (measured: uniform keys touch 100% of
-    files); merge-on-read keeps the merge O(changes) and defers the
-    rewrite to ``apply_deletes`` maintenance, exactly like the
-    positional-delete flavor of DELETE. Commits with an append-style
-    delta manifest (O(added) manifest bytes) plus the grown delete set;
-    scans compose it with any pending deletes (the probe reads THROUGH
-    them, so already-suppressed rows are never re-recorded).
-    CDC note: ``changes_cdc`` reads this commit as delta inserts + the
-    positional deletes; with ``key_cols`` the matched keys pair into
-    update pre/post images exactly like the copy-on-write path.
-
-    Clause generality comes almost free in this write mode: a matched
-    CONDITION just filters which (path, pos) pairs become delete
-    records; WHEN NOT MATCHED BY SOURCE DELETE is a second anti-join
-    probe whose positions land in the same delete-file write —
-    O(deleted rows), no rewrite, the natural physical plan for sync
-    deletes on a clustered 10^12-row table (the copy-on-write path
-    must rewrite every touched file instead). The NMBS probe disables
-    source-key-range pruning (a deletable row is precisely one the
-    source does not cover)."""
-    import shutil
-
-    import pyarrow.parquet as _pq
-
-    from ..sources.tableformat import prune_manifest
-
-    schema = table._schema(spark)
-    cols = [f.name for f in schema.fields]
-    meta = table.metadata()
-    man = table.manifest_pdf() if meta.current_snapshot_id is not None else None
-    snap = table.snapshot() if meta.current_snapshot_id is not None else None
-
-    dprefix = table.new_data_prefix()
-    new_delete_rel: list = []
-    n_del_rows = 0
-    n_matched_pos = 0
-    nmbs_rows = 0
-    matched = None
-    aff_keys = None
-    if man is not None and len(man):
-        statable = statable_cols(meta)
-        # NMBS must see the whole table; otherwise prune to the source
-        # key range as usual
-        cand = (
-            prune_manifest(
-                man,
-                transforms.extend_predicates(meta.partition_cols, probe_preds),
-                statable,
-            )
-            if probe_preds and not cl.nmbs
-            else man
-        )
+            if key in stat_keys and key in statable:
+                preds = [(key, "between", (src_lo, src_hi))]
+                cand = prune_manifest(
+                    man,
+                    transforms.extend_predicates(meta.partition_cols, preds),
+                    statable,
+                )
+        # the matched rows the matched action applies to (None: all of them)
+        aff_cond = None
+        if cl.matched == "ignore":
+            aff_cond = F.lit(False)
+        elif cl.matched_condition:
+            aff_cond = F.coalesce(F.expr(cl.matched_condition), F.lit(False))
         if len(cand):
-            m_src = _cond_src_cols(cl.matched_condition)
-            probe_side = (
-                src.select(
-                    key, *[F.col(c).alias(f"src_{c}") for c in m_src]
-                )
-                if m_src
-                else src_keys
-            )
-            with pt.phase("probe"):
-                live = table._apply_mor_deletes(
+            live = table.live_rows(
+                spark,
+                table.read_data(
                     spark,
-                    table.read_data(
-                        spark,
-                        [os.path.join(table.root, p) for p in cand["path"]],
-                    ),
-                    snap,
-                    keep_pos_cols=True,
-                )
-                live = table._apply_eq_deletes(
-                    spark, live, snap, path_col="__mor_path"
-                )
-                m_tgt = _cond_tgt_cols(cl.matched_condition, cols)
-                matched = (
-                    live.select(
-                        F.col(key),
-                        *[F.col(c) for c in m_tgt if c != key],
-                        "__mor_path",
-                        "__mor_pos",
-                    )
-                    .join(probe_side, key, "inner")
-                    .persist()
-                )
-                if cl.matched == "ignore":
-                    affpos = matched.limit(0)
-                elif cl.matched_condition:
-                    affpos = matched.filter(F.expr(cl.matched_condition))
-                else:
-                    affpos = matched
-                aff_keys = affpos.select(key).distinct().persist()
-                (
-                    affpos.select(
-                        F.col("__mor_path").alias("path"),
-                        F.col("__mor_pos").alias("pos"),
-                    )
-                    .sortWithinPartitions("path", "pos")
-                    .coalesce(4)  # sparse by design — delete files are tiny
-                    .write.mode("append")
-                    .parquet(dprefix)
-                )
-            n_matched_pos = sum(
-                _pq.ParquetFile(os.path.join(dprefix, f)).metadata.num_rows
-                for f in os.listdir(dprefix)
-                if f.endswith(".parquet")
+                    [os.path.join(table.root, p) for p in cand["path"]],
+                    meta=meta,
+                ),
+                table.snapshot(),
             )
-            if cl.nmbs == "delete":
-                nm_tgt = _cond_tgt_cols(cl.nmbs_condition, cols)
-                nm = live.select(
-                    F.col(key),
-                    *[F.col(c) for c in nm_tgt if c != key],
-                    "__mor_path",
-                    "__mor_pos",
-                ).join(src_keys, key, "left_anti")
+            for c, op, v in preds:
+                live = live.filter(_pred_to_column(c, op, v))
+            refs = set(
+                _cond_tgt_cols(cl.matched_condition, cols)
+                + _cond_tgt_cols(cl.nmbs_condition, cols)
+            )
+            probe = live.select(
+                key,
+                *[c for c in cols if c in refs and c != key],
+                "__mor_path",
+                *(["__mor_pos"] if mor else []),
+            )
+            src_refs = _cond_src_cols(cl.matched_condition)
+            side = (
+                src.select(key, *[F.col(c).alias(f"src_{c}") for c in src_refs])
+                if src_refs
+                else key_frame
+            )
+            if cl.nmbs:
+                probe = probe.join(
+                    bc(side.withColumn("__in_src", F.lit(True))), key, "left"
+                )
+                matched = probe.filter(F.col("__in_src").isNotNull())
+                nm = probe.filter(F.col("__in_src").isNull())
                 if cl.nmbs_condition:
                     nm = nm.filter(F.expr(cl.nmbs_condition))
-                with pt.phase("nmbs_probe"):
-                    (
-                        nm.select(
-                            F.col("__mor_path").alias("path"),
-                            F.col("__mor_pos").alias("pos"),
-                        )
-                        .sortWithinPartitions("path", "pos")
-                        .coalesce(4)
-                        .write.mode("append")
-                        .parquet(dprefix)
-                    )
-            new_delete_rel = sorted(
-                os.path.relpath(os.path.join(dprefix, f), table.root)
-                for f in os.listdir(dprefix)
-                if f.endswith(".parquet")
-            )
-            n_del_rows = sum(
-                _pq.ParquetFile(os.path.join(table.root, p)).metadata.num_rows
-                for p in new_delete_rel
-            )
-            nmbs_rows = n_del_rows - n_matched_pos
-    if n_del_rows == 0:
-        shutil.rmtree(dprefix, ignore_errors=True)
-        new_delete_rel = []
+            else:
+                matched = probe.join(bc(side), key, "inner")
+            if held is None:
+                matched = matched.persist()
+            aff = matched if aff_cond is None else matched.filter(aff_cond)
 
-    with pt.phase("count_matched"):
-        n_matched = (
-            aff_keys.count() if aff_keys is not None and n_matched_pos else 0
-        )
-
-    with pt.phase("rewrite"):
-        if (
-            cl.matched == "update"
-            and cl.matched_condition is None
-            and cl.not_matched == "insert"
-            and cl.not_matched_condition is None
-        ):
-            # fast shape: every source row survives (matched keys replace,
-            # unmatched insert) — one wholesale delta, no join
-            delta_src = src.select(cols)
-        else:
-            parts = []
-            if cl.matched == "update" and n_matched:
-                parts.append(src.join(aff_keys, key, "left_semi"))
-            if cl.not_matched == "insert":
-                ins = (
-                    src.join(matched.select(key).distinct(), key, "left_anti")
-                    if matched is not None
-                    else src
+        hits = aff_hits = None
+        if matched is not None and held is not None:
+            # one row per matched key: the files holding its affected rows
+            path = F.col("__mor_path")
+            if aff_cond is not None:
+                path = F.when(aff_cond, path)
+            with pt.phase("probe"):
+                hits = (
+                    matched.groupBy(key)
+                    .agg(F.collect_set(path).alias("paths"))
+                    .toArrow()
                 )
+            aff_hits = hits.filter(
+                pc.greater(pc.list_value_length(hits.column("paths")), 0)
+            )
+
+        def key_set(affected: bool) -> DataFrame:
+            """The matched target keys (``affected``: only the affected
+            ones) as a join build side."""
+            if hits is not None:
+                got = aff_hits if affected else hits
+                return bc(local_frame(spark, {key: got.column(key)}))
+            return bc((aff if affected else matched).select(key).distinct())
+
+        touched: set = set()
+        new_deletes: list = []
+        n_removed = n_nmbs = 0
+        if mor:
+            if aff is not None:
+                with pt.phase("probe"):
+                    new_deletes, n_removed = write_position_deletes(table, aff)
+            if nm is not None:
+                with pt.phase("nmbs_probe"):
+                    nm_deletes, n_nmbs = write_position_deletes(table, nm)
+                new_deletes += nm_deletes
+                n_removed += n_nmbs
+        else:
+            if hits is not None:
+                flat = pc.list_flatten(hits.column("paths"))
+                touched = set(pc.unique(flat).to_pylist())
+            elif aff is not None:
+                with pt.phase("probe"):
+                    touched = set(
+                        aff.select("__mor_path").distinct().toPandas()["__mor_path"]
+                    )
+            if nm is not None:
+                with pt.phase("nmbs_probe"):
+                    per_file = nm.groupBy("__mor_path").count().toPandas()
+                touched |= set(per_file["__mor_path"])
+                n_nmbs = int(per_file["count"].sum())
+
+        # with no matched condition every source key found in a touched
+        # file is affected, so the source key set itself is the build side
+        drop_keys = None
+        if touched:
+            drop_keys = bc(key_frame) if aff_cond is None else key_set(True)
+
+        def keep(rows: DataFrame) -> DataFrame:
+            kept = rows.join(drop_keys, key, "left_anti")
+            if nm is None:
+                return kept
+            # drop rows with no source coverage whose NMBS condition holds
+            # (tri-state: only TRUE drops)
+            gone = (
+                F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
+                if cl.nmbs_condition
+                else F.lit(True)
+            )
+            return (
+                kept.join(
+                    bc(key_frame.withColumn("__in_src", F.lit(True))), key, "left"
+                )
+                .filter(~(gone & F.col("__in_src").isNull()))
+                .drop("__in_src")
+            )
+
+        def delta_frame() -> Optional[DataFrame]:
+            if cl.delta_is_source():
+                return src.select(cols)
+            parts = []
+            if cl.matched == "update" and matched is not None:
+                parts.append(src.join(key_set(True), key, "left_semi"))
+            if cl.not_matched == "insert":
+                ins = src
+                if matched is not None:
+                    ins = ins.join(key_set(False), key, "left_anti")
                 if cl.not_matched_condition:
                     ins = ins.filter(F.expr(cl.not_matched_condition))
                 parts.append(ins)
-            if parts:
-                delta_src = parts[0].select(cols)
-                for p in parts[1:]:
-                    delta_src = delta_src.unionByName(p.select(cols))
-            else:
-                delta_src = src.select(cols).limit(0)
-        delta_prefix = _modest_write(table, delta_src, key)
-    written = written_entries(table, spark, delta_prefix, pt)
-    entries = (
-        written
-        if written is not None
-        else (man.iloc[0:0] if man is not None else pd.DataFrame())
-    )
-    n_delta = int(entries["record_count"].sum()) if len(entries) else 0
-    n_inserts = n_delta - (n_matched if cl.matched == "update" else 0)
+            if not parts:
+                return None
+            return reduce(DataFrame.unionByName, [p.select(cols) for p in parts])
 
+        delta: dict = {}
+
+        def write_delta() -> None:
+            df = delta_frame()
+            if df is not None:
+                delta["prefix"] = _modest_write(table, df, key)
+                delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
+
+        def count_matched() -> None:
+            # re-aggregated from the persisted probe rows (no second file
+            # scan), inside the pool so its job hides behind the writes
+            with pt.phase("count_matched"):
+                delta["n_aff"] = key_set(True).count()
+
+        # the delta depends only on the source: it runs CONCURRENTLY with
+        # the keep rewrites (none in merge-on-read), its cost hidden in the
+        # rewrite wall time
+        touched_man = man[man["path"].isin(touched)]
+        keep_entries = rewrite_files(
+            table,
+            spark,
+            touched_man,
+            keep,
+            target_file_size_bytes,
+            pt,
+            alongside=[write_delta]
+            + ([count_matched] if hits is None and matched is not None else []),
+        )
+        if not mor:
+            n_removed = int(touched_man["record_count"].sum()) - int(
+                keep_entries["record_count"].sum()
+            )
+    finally:
+        _unpersist(matched, src_key_counts)
+
+    n_aff = aff_hits.num_rows if aff_hits is not None else delta.get("n_aff", 0)
+    delta_entries = delta.get("entries")
+    n_delta = 0 if delta_entries is None else int(delta_entries["record_count"].sum())
+    n_updated = n_aff if cl.matched == "update" else 0
     summary = {
         "stage": "merge",
-        "mode": "merge-on-read",
+        "mode": mode,
         "when_matched": cl.matched,
-        "rows_updated": int(n_matched) if cl.matched == "update" else 0,
-        "rows_deleted": (int(n_matched) if cl.matched == "delete" else 0)
-        + int(max(0, nmbs_rows)),
-        "rows_inserted": int(max(0, n_inserts)),
-        "rows_suppressed_positions": int(n_del_rows),
-        "files_rewritten": 0,
-        "delete_files_added": len(new_delete_rel),
+        "rows_updated": int(n_updated),
+        "rows_deleted": int((n_aff if cl.matched == "delete" else 0) + n_nmbs),
+        "rows_nmbs_deleted": int(n_nmbs),
+        "rows_inserted": int(max(0, n_delta - n_updated)),
+        "rows_replaced_dupes": int(max(0, n_removed - n_aff - n_nmbs)),
+        "files_rewritten": len(touched),
         "duration_sec": round(time.time() - t0, 3),
         "phase_sec": pt.summary(),
     }
     if not cl.is_default():
-        summary["rows_nmbs_deleted"] = int(max(0, nmbs_rows))
         summary["clauses"] = {
             "matched_condition": cl.matched_condition,
             "when_not_matched": cl.not_matched,
@@ -934,21 +518,64 @@ def _mor_merge(
             "when_not_matched_by_source": cl.nmbs,
             "not_matched_by_source_condition": cl.nmbs_condition,
         }
-    if written is not None:
-        summary["delta_prefix"] = _rel(table, delta_prefix) + "/"
-    out = table.commit(
-        "merge",
-        entries,
-        summary,
-        properties=properties,
-        delta_manifest=True,
-        delete_paths=table.pending_delete_paths() + new_delete_rel,
+    if delta_entries is not None:
+        # delta files = the upserted source rows; Table.changes() uses this
+        # prefix for snapshot-diff incremental reads (T5)
+        summary["delta_prefix"] = os.path.relpath(delta["prefix"], table.root) + "/"
+    if mor:
+        summary.update(
+            rows_suppressed_positions=int(n_removed),
+            delete_files_added=len(new_deletes),
+        )
+        return table.commit(
+            "merge",
+            delta_entries if delta_entries is not None else keep_entries,
+            summary,
+            properties=properties,
+            delta_manifest=True,
+            delete_paths=table.pending_delete_paths() + new_deletes,
+        )
+    new_man = pd.concat(
+        [man[~man["path"].isin(touched)], keep_entries, delta_entries],
+        ignore_index=True,
     )
-    if matched is not None:
-        matched.unpersist()
-    if aff_keys is not None:
-        aff_keys.unpersist()
-    return out
+    return table.commit("merge", new_man, summary, properties=properties)
+
+
+def _source_keys(src: DataFrame, key: str) -> tuple:
+    """Step 1 of the module docstring: ``(held, counts, n_keys, lo, hi)``
+    — the source key column on the driver (``held``, a pyarrow array) or
+    the persisted per-key counts (``counts``), the key count and the key
+    range. Raises on a duplicate source key."""
+    limit = min(_HELD_KEYS, _BROADCAST_KEYS)
+    if _footer_rows_fit(src, limit):
+        # ONE column-pruned fetch of at most limit+1 keys gives the
+        # duplicate check, the key count AND the source key range for
+        # probe-scan pruning, with no aggregate and nothing persisted. It
+        # overflows only when the plan multiplies rows (a join).
+        got = src.select(key).limit(limit + 1).toArrow()
+        if got.num_rows <= limit:
+            held = got.column(0)
+            if pc.count_distinct(held, mode="all").as_py() < len(held):
+                raise ValueError(f"MERGE source has duplicate keys on {key!r}")
+            bounds = pc.min_max(held)
+            lo, hi = bounds["min"].as_py(), bounds["max"].as_py()
+            return held, None, len(held), lo, hi
+    counts = src.groupBy(key).count().persist()
+    # ONE job gives the duplicate check, the key count AND the key range
+    # (a separate min/max job would re-scan the source key column). Read
+    # as Arrow, like the held keys, so a timestamp range is tz-aware, as
+    # the manifest stats it is compared with are.
+    r = counts.agg(
+        F.count(F.lit(1)).alias("n_keys"),
+        F.max("count").alias("max_dup"),
+        F.min(key).alias("lo"),
+        F.max(key).alias("hi"),
+    ).toArrow().to_pylist()[0]
+    if (r["max_dup"] or 0) > 1:
+        counts.unpersist()
+        raise ValueError(f"MERGE source has duplicate keys on {key!r}")
+    return None, counts, int(r["n_keys"] or 0), r["lo"], r["hi"]
 
 
 def _modest_write(table, df, key: str) -> str:
@@ -1003,7 +630,3 @@ def _unpersist(*dfs) -> None:
     for df in dfs:
         if df is not None:
             df.unpersist()
-
-
-def _rel(table, prefix: str) -> str:
-    return os.path.relpath(prefix, table.root)

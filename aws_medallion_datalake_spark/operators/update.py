@@ -64,6 +64,8 @@ from ..sources.tableformat import (
     resolve_write_mode,
     rewrite_files,
     statable_cols,
+    write_position_deletes,
+    written_entries,
 )
 from .timing import PhaseTimer
 
@@ -218,44 +220,16 @@ def _mor_update(
     The probe reads the candidates THROUGH the pending positional and
     equality delete sets, so a row an earlier merge-on-read commit
     already suppressed is neither re-deleted nor re-emitted."""
-    import shutil
-
-    import pyarrow.parquet as _pq
-
     from .merge import _modest_write
 
-    dprefix = table.new_data_prefix()
     with pt.phase("probe"):
-        snap = table.snapshot()
-        live = table._apply_mor_deletes(
-            spark,
-            table.read_data(spark, cand_paths),
-            snap,
-            keep_pos_cols=True,
+        live = table.live_rows(
+            spark, table.read_data(spark, cand_paths), table.snapshot()
         )
-        live = table._apply_eq_deletes(spark, live, snap, path_col="__mor_path")
         matched = live.filter(cond).persist()
-        (
-            matched.select(
-                F.col("__mor_path").alias("path"), F.col("__mor_pos").alias("pos")
-            )
-            .sortWithinPartitions("path", "pos")
-            .coalesce(4)  # sparse by design — delete files are tiny
-            .write.mode("append")
-            .parquet(dprefix)
-        )
-    new_delete_rel = sorted(
-        os.path.relpath(os.path.join(dprefix, f), table.root)
-        for f in os.listdir(dprefix)
-        if f.endswith(".parquet")
-    )
-    n_updated = sum(
-        _pq.ParquetFile(os.path.join(table.root, p)).metadata.num_rows
-        for p in new_delete_rel
-    )
+        new_delete_rel, n_updated = write_position_deletes(table, matched)
     if n_updated == 0:  # stats-overlap false positives only — no commit
         matched.unpersist()
-        shutil.rmtree(dprefix, ignore_errors=True)
         return None
 
     key = "image_id" if "image_id" in {f.name for f in schema.fields} else (
@@ -272,8 +246,7 @@ def _mor_update(
         )
         delta_prefix = _modest_write(table, updated, key)
     matched.unpersist()
-    with pt.phase("stats"):
-        entries = table.collect_stats_for_prefix(spark, delta_prefix)
+    entries = written_entries(table, spark, delta_prefix, pt)
 
     return table.commit(
         "update",

@@ -51,6 +51,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -1616,8 +1617,6 @@ class Table:
         (same column-name set, read from the first file's FOOTER — no data
         read); a mismatch raises before anything is linked.
         """
-        import shutil
-
         if isinstance(source, str):
             paths = sorted(
                 os.path.join(source, fn)
@@ -1673,8 +1672,6 @@ class Table:
         — reusing its data files verbatim would resurrect suppressed
         rows in the clone; run ``apply_deletes()`` first.
         """
-        import shutil
-
         s = self.snapshot(snapshot_id)
         if s.delete_paths or s.eq_deletes:
             raise ValueError(
@@ -1971,14 +1968,8 @@ class Table:
             return _empty()
         paths = [os.path.join(self.root, p) for p in rel_paths]
         df = self.read_data(spark, paths, meta=meta)
-        if s.eq_deletes:
-            # equality deletes need a file-path column that survives the
-            # positional anti-join; compute it once on the raw relation
-            df = self._apply_mor_deletes(spark, df, s, keep_pos_cols=True)
-            df = self._apply_eq_deletes(spark, df, s, path_col="__mor_path")
-            df = df.drop("__mor_path", "__mor_pos")
-        else:
-            df = self._apply_mor_deletes(spark, df, s)
+        if s.delete_paths or s.eq_deletes:
+            df = self.live_rows(spark, df, s).drop("__mor_path", "__mor_pos")
         for col, op, value in preds:
             df = df.filter(_pred_to_column(col, op, value))
         if columns:
@@ -2011,9 +2002,16 @@ class Table:
                 f"apply_deletes() before {op}"
             )
 
-    def _apply_eq_deletes(
-        self, spark, df: DataFrame, s: Snapshot, path_col: Optional[str] = None
-    ) -> DataFrame:
+    def live_rows(self, spark, df: DataFrame, s: Snapshot) -> DataFrame:
+        """The rows of ``df``, a raw ``read_data`` relation, still visible
+        at snapshot ``s``: pending positional and equality deletes
+        anti-joined out. Each row carries its table-relative file path
+        ``__mor_path`` and its row position ``__mor_pos``, the pair a
+        positional delete names. Every merge-on-read probe and every
+        read through pending deletes goes through here."""
+        return self._apply_eq_deletes(spark, self._apply_mor_deletes(spark, df, s), s)
+
+    def _apply_eq_deletes(self, spark, df: DataFrame, s: Snapshot) -> DataFrame:
         """Anti-join out equality-deleted rows (Iceberg v2 equality delete
         semantics with sequence ordering): a value row in an equality
         delete file suppresses every data row matching it on the delete's
@@ -2034,14 +2032,9 @@ class Table:
         for e in s.eq_deletes:
             groups[(tuple(e["cols"]), int(e["as_of_snapshot_id"]))].append(e["path"])
         cur_paths = set(self.manifest_pdf(s.snapshot_id)["path"])
-        # ``_metadata`` resolves only on the raw file relation — callers
-        # that already projected it away (e.g. through the positional
-        # anti-join) pass the name of their retained path column instead
-        own_path = path_col is None
-        pc = "__eq_path" if own_path else path_col
-        out = (
-            df.withColumn("__eq_path", rel_path_expr(self.root)) if own_path else df
-        )
+        # ``_metadata`` resolves only on the raw file relation, so the
+        # exempt-file join uses the path column the positional step kept
+        out = df
         for (cols, as_of), dpaths in sorted(groups.items(), key=lambda kv: kv[0][1]):
             vals = (
                 spark.read.parquet(*[os.path.join(self.root, p) for p in dpaths])
@@ -2053,11 +2046,11 @@ class Table:
             exempt = sorted(cur_paths - covered)
             out = out.join(F.broadcast(vals), list(cols), "left")
             if exempt:
-                ex = local_frame(spark, {pc: exempt}, f"{pc} string").withColumn(
-                    "__eq_ex", F.lit(True)
-                )
+                ex = local_frame(
+                    spark, {"__mor_path": exempt}, "__mor_path string"
+                ).withColumn("__eq_ex", F.lit(True))
                 out = (
-                    out.join(F.broadcast(ex), pc, "left")
+                    out.join(F.broadcast(ex), "__mor_path", "left")
                     .filter(
                         F.col("__eq_hit").isNull() | F.col("__eq_ex").isNotNull()
                     )
@@ -2065,41 +2058,34 @@ class Table:
                 )
             else:
                 out = out.filter(F.col("__eq_hit").isNull()).drop("__eq_hit")
-        return out.drop("__eq_path") if own_path else out
+        return out
 
-    def _apply_mor_deletes(
-        self, spark, df: DataFrame, s: Snapshot, keep_pos_cols: bool = False
-    ) -> DataFrame:
+    def _apply_mor_deletes(self, spark, df: DataFrame, s: Snapshot) -> DataFrame:
         """Anti-join out positionally-deleted rows (Iceberg v2 positional
         delete semantics: a delete file row (path, pos) suppresses row
-        ``pos`` of data file ``path``). Zero-cost when no deletes are
-        pending. Delete sets are small by design (sparse deletes — bulk
+        ``pos`` of data file ``path``), adding the ``__mor_path`` /
+        ``__mor_pos`` columns it joins on; with none pending there is no
+        join. Delete sets are small by design (sparse deletes — bulk
         deletes should use copy-on-write), so the anti-join broadcasts;
         a large accumulated set falls back to a shuffle join and is the
         signal to run ``apply_deletes``."""
+        df = df.withColumn("__mor_path", rel_path_expr(self.root)).withColumn(
+            "__mor_pos", F.col("_metadata.row_index")
+        )
         if not s.delete_paths:
-            if keep_pos_cols:
-                return df.withColumn(
-                    "__mor_path", rel_path_expr(self.root)
-                ).withColumn("__mor_pos", F.col("_metadata.row_index"))
             return df
         dabs = [os.path.join(self.root, p) for p in s.delete_paths]
         dels = spark.read.schema("path string, pos long").parquet(*dabs)
         nbytes = sum(os.path.getsize(p) for p in dabs if os.path.exists(p))
         if nbytes <= 64 * 1024 * 1024:
             dels = F.broadcast(dels)
-        out = (
-            df.withColumn("__mor_path", rel_path_expr(self.root))
-            .withColumn("__mor_pos", F.col("_metadata.row_index"))
-            .join(
-                dels.withColumnRenamed("path", "__mor_path").withColumnRenamed(
-                    "pos", "__mor_pos"
-                ),
-                ["__mor_path", "__mor_pos"],
-                "left_anti",
-            )
+        return df.join(
+            dels.withColumnRenamed("path", "__mor_path").withColumnRenamed(
+                "pos", "__mor_pos"
+            ),
+            ["__mor_path", "__mor_pos"],
+            "left_anti",
         )
-        return out if keep_pos_cols else out.drop("__mor_path", "__mor_pos")
 
     def changes(
         self,
@@ -2403,10 +2389,7 @@ class Table:
                 touched = sorted(
                     r["path"] for r in dels.select("path").distinct().collect()
                 )
-                base = _read(touched)
-                base = self._apply_mor_deletes(spark, base, prev, keep_pos_cols=True)
-                base = self._apply_eq_deletes(spark, base, prev, path_col="__mor_path")
-                hit = base.join(
+                hit = self.live_rows(spark, _read(touched), prev).join(
                     F.broadcast(
                         dels.withColumnRenamed("path", "__mor_path").withColumnRenamed(
                             "pos", "__mor_pos"
@@ -2565,6 +2548,42 @@ def written_entries(table: "Table", spark: SparkSession, prefix: str, pt):
         return None
     with pt.phase("stats"):
         return table.collect_stats_for_prefix(spark, prefix)
+
+
+def prefix_files(table: "Table", prefix: str) -> tuple:
+    """``(paths, rows)``: the parquet files just written under ``prefix``,
+    relative to the table root, and their row count from the footers.
+    A prefix that holds no row is removed and gives ``([], 0)``."""
+    rel = sorted(
+        os.path.relpath(os.path.join(prefix, f), table.root)
+        for f in os.listdir(prefix)
+        if f.endswith(".parquet")
+    )
+    n = sum(
+        pq.ParquetFile(os.path.join(table.root, p)).metadata.num_rows for p in rel
+    )
+    if n == 0:
+        shutil.rmtree(prefix, ignore_errors=True)
+        return [], 0
+    return rel, n
+
+
+def write_position_deletes(table: "Table", rows: DataFrame) -> tuple:
+    """Write positional delete files naming ``rows`` (a ``live_rows``
+    frame: their ``__mor_path`` / ``__mor_pos``) into a fresh prefix;
+    returns ``prefix_files`` of it. Delete sets are sparse by design, so
+    the write is sorted within partitions and coalesced to four files."""
+    prefix = table.new_data_prefix()
+    (
+        rows.select(
+            F.col("__mor_path").alias("path"), F.col("__mor_pos").alias("pos")
+        )
+        .sortWithinPartitions("path", "pos")
+        .coalesce(4)
+        .write.mode("append")
+        .parquet(prefix)
+    )
+    return prefix_files(table, prefix)
 
 
 def rewrite_files(

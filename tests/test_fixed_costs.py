@@ -154,16 +154,17 @@ def test_small_source_merge_holds_keys_on_driver(tmp_path, spark, monkeypatch):
     [(True, "update"), (False, "delete"), (True, "delete")],
     ids=["dup-target-update", "delete", "dup-target-delete"],
 )
-def test_driver_held_and_smj_branches_agree(tmp_path, spark, dup, when_matched):
+def test_driver_held_and_smj_branches_agree(
+    tmp_path, spark, monkeypatch, dup, when_matched
+):
     held = _merge_table(tmp_path, spark, "a", dup=dup)
     smj = held.clone(str(tmp_path / "b"))
     source = _file_source(
         spark, tmp_path, generate_updates(spark, 200, n_updates=60, n_inserts=15)
     )
     s_held = merge_into(held, spark, source, when_matched=when_matched)
-    s_smj = merge_into(
-        smj, spark, source, when_matched=when_matched, broadcast_key_limit=0
-    )
+    monkeypatch.setattr(merge_mod, "_BROADCAST_KEYS", 0)
+    s_smj = merge_into(smj, spark, source, when_matched=when_matched)
     assert "count_matched" not in s_held.summary["phase_sec"]
     assert "count_matched" in s_smj.summary["phase_sec"]
     assert {k: s_held.summary[k] for k in MERGE_COUNTS} == {
@@ -212,17 +213,17 @@ def test_other_sources_take_persisted_path_without_key_fetch(
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["driver-held", "smj"])
-def test_duplicate_source_key_raises_on_both_branches(tmp_path, spark, limit):
+def test_duplicate_source_key_raises_on_both_branches(
+    tmp_path, spark, monkeypatch, limit
+):
     t = _merge_table(tmp_path, spark, "dupsrc", n=60)
     source = _file_source(
         spark, tmp_path, generate_updates(spark, 60, n_updates=10, n_inserts=5)
     )
     head = t.snapshot().snapshot_id
+    monkeypatch.setattr(merge_mod, "_BROADCAST_KEYS", limit)
     with pytest.raises(ValueError, match="duplicate keys"):
-        merge_into(
-            t, spark, source.unionByName(source.limit(1)),
-            broadcast_key_limit=limit,
-        )
+        merge_into(t, spark, source.unionByName(source.limit(1)))
     assert t.snapshot().snapshot_id == head
 
 

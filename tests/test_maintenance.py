@@ -12,6 +12,7 @@ from aws_medallion_datalake_spark.operators import (
     expire_snapshots,
     merge_into,
 )
+from aws_medallion_datalake_spark.operators import merge as merge_mod
 from aws_medallion_datalake_spark.operators.checkpoint import RunCheckpoint
 from aws_medallion_datalake_spark.operators.cluster import clustering_quality
 from aws_medallion_datalake_spark.operators.run import run_maintenance
@@ -343,8 +344,8 @@ def test_expire_gc_spark_path(tmp_path, spark):
     assert on_disk == set(t.manifest_pdf()["path"])
 
 
-def test_merge_smj_fallback_matches_oracle(tmp_path, spark):
-    """broadcast_key_limit=0 forces the sort-merge fallback (the path a
+def test_merge_smj_fallback_matches_oracle(tmp_path, spark, monkeypatch):
+    """A zero broadcast bound forces the sort-merge fallback (the path a
     non-broadcastable 10^10-key source takes); result must equal the
     broadcast path's upsert algebra."""
     n = 300
@@ -354,8 +355,9 @@ def test_merge_smj_fallback_matches_oracle(tmp_path, spark):
     source = generate_updates(spark, n, n_updates=70, n_inserts=30).cache()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(merge_mod, "_BROADCAST_KEYS", 0)
     try:
-        snap = merge_into(t, spark, source, broadcast_key_limit=0)
+        snap = merge_into(t, spark, source)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert snap.summary["rows_updated"] == 70
@@ -369,11 +371,11 @@ def test_merge_smj_fallback_matches_oracle(tmp_path, spark):
     assert merged.exceptAll(expected).isEmpty()
 
 
-def test_merge_smj_salted_skew_matches_oracle(tmp_path, spark):
-    """Explicit salted-key skew mitigation (north_rule): SMJ fallback with
-    smj_salt_buckets spreads a hot duplicated key's target rows across
-    salt buckets; result must equal the unsalted upsert algebra — row
-    salting is correct for the replicate-the-keys join shape."""
+def test_merge_smj_salted_skew_matches_oracle(tmp_path, spark, monkeypatch):
+    """Skewed target on the SMJ fallback: every key is duplicated (a hot
+    phash bucket re-ingested), so the anti-join's partitions are skewed;
+    AQE skew-join splitting handles them, and the result must equal the
+    upsert algebra with every duplicate copy of a matched key swept."""
     n = 240
     t = make_table(tmp_path, spark, n=n, n_files=8)
     # skew the target: re-append the same rows so every key is duplicated
@@ -386,10 +388,9 @@ def test_merge_smj_salted_skew_matches_oracle(tmp_path, spark):
     source = generate_updates(spark, n, n_updates=60, n_inserts=25).cache()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    monkeypatch.setattr(merge_mod, "_BROADCAST_KEYS", 0)
     try:
-        snap = merge_into(
-            t, spark, source, broadcast_key_limit=0, smj_salt_buckets=4
-        )
+        snap = merge_into(t, spark, source)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert snap.summary["rows_updated"] == 60
@@ -451,9 +452,10 @@ def test_remove_orphan_files(tmp_path, spark):
 
 
 def test_merge_probe_pruning_narrow_source(tmp_path, spark, monkeypatch):
-    """When the merge key has manifest stats, the touched-file probe scan
-    carries a between-predicate over the SOURCE key range (file-level
-    pruning for recency-biased merges), and results are unchanged."""
+    """When the merge key has manifest stats, the touched-file probe
+    prunes its candidate files with a between-predicate over the SOURCE
+    key range (file-level pruning for recency-biased merges), and results
+    are unchanged."""
     t = make_table(tmp_path, spark, n=300, n_files=10)
     full = t.scan(spark)
     ids = [
@@ -464,17 +466,13 @@ def test_merge_probe_pruning_narrow_source(tmp_path, spark, monkeypatch):
         "caption", F.lit("updated")
     )
     captured = {}
-    orig_scan = Table.scan
+    orig_prune = merge_mod.prune_manifest
 
-    def spy(self, spark_, snapshot_id=None, predicates=None, columns=None, as_of_ms=None):
-        if predicates:
-            captured["preds"] = list(predicates)
-        return orig_scan(
-            self, spark_, snapshot_id=snapshot_id, predicates=predicates,
-            columns=columns, as_of_ms=as_of_ms,
-        )
+    def spy(man, preds, stats_cols):
+        captured["preds"] = list(preds)
+        return orig_prune(man, preds, stats_cols)
 
-    monkeypatch.setattr(Table, "scan", spy)
+    monkeypatch.setattr(merge_mod, "prune_manifest", spy)
     snap = merge_into(t, spark, src, key="image_id")
     assert captured["preds"] == [("image_id", "between", (ids[0], ids[-1]))]
     assert snap.summary["rows_updated"] == 20

@@ -2,10 +2,15 @@
 filtering, WHEN NOT MATCHED BY SOURCE DELETE — SQL:2003 / Delta parity in
 both write modes (reference writes only blind overwrites,
 /root/reference/scripts/silver_digit_clean.py:127; the clause surface is
-the north_rule MERGE generalized)."""
+the north_rule MERGE generalized).
+
+Clause cases run on both source kinds: a computed frame takes the
+persisted key path, a parquet-file source the driver-held one, and every
+kind and mode must give the same content and the same counts."""
 
 import pytest
 from pyspark.sql import functions as F
+from test_fixed_costs import _file_source
 
 from aws_medallion_datalake_spark.operators import merge_into
 from aws_medallion_datalake_spark.sources.generator import (
@@ -34,6 +39,40 @@ def make_table(tmp_path, spark, n=200, n_files=8) -> Table:
     return t
 
 
+SOURCES = ["computed", "file"]
+
+
+def cases(*modes):
+    """Parametrize ``mode, kind`` over ``modes`` and both source kinds;
+    the computed source keeps the bare mode as its test id."""
+    return pytest.mark.parametrize(
+        "mode, kind",
+        [
+            pytest.param(m, k, id=m if k == "computed" else f"{m}-file")
+            for k in SOURCES
+            for m in modes
+        ],
+    )
+
+
+def as_source(kind, spark, tmp_path, df):
+    """``df`` as a MERGE source of ``kind`` (``"file"``: parquet written
+    and read back, small enough for the driver-held path)."""
+    return df.cache() if kind == "computed" else _file_source(spark, tmp_path, df)
+
+
+def assert_counts(snap, kind, updated, inserted, deleted=0, nmbs=0):
+    s = snap.summary
+    got = tuple(
+        s[k] for k in (
+            "rows_updated", "rows_inserted", "rows_deleted", "rows_nmbs_deleted"
+        )
+    )
+    assert got == (updated, inserted, deleted, nmbs)
+    if kind == "file":  # the held path counts its keys without a job
+        assert "count_matched" not in s["phase_sec"]
+
+
 def assert_same(actual, expected):
     assert actual.exceptAll(expected).isEmpty()
     assert expected.exceptAll(actual).isEmpty()
@@ -52,14 +91,16 @@ def expected_state(before, src, affected_keys, insert_keys):
     )
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_matched_condition_target_cols(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_matched_condition_target_cols(tmp_path, spark, mode, kind):
     """WHEN MATCHED AND <target cond> THEN UPDATE: only matched rows
     satisfying the condition are replaced; the rest keep their old
     captions; unmatched source rows insert."""
     t = make_table(tmp_path, spark)
     before = t.scan(spark).select(COLS).cache()
-    src = generate_updates(spark, 200, n_updates=60, n_inserts=15).cache()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=60, n_inserts=15)
+    )
     cond = "pmod(phash, 2) = 0"
 
     matched_keys = before.join(src, "image_id", "left_semi").select("image_id")
@@ -75,8 +116,7 @@ def test_matched_condition_target_cols(tmp_path, spark, mode):
     assert 0 < n_affected < 60  # the condition must actually split
 
     snap = merge_into(t, spark, src, matched_condition=cond, mode=mode)
-    assert snap.summary["rows_updated"] == n_affected
-    assert snap.summary["rows_inserted"] == 15
+    assert_counts(snap, kind, n_affected, 15)
     assert_same(
         t.scan(spark).select(COLS),
         expected_state(before, src, affected_keys, insert_keys),
@@ -86,30 +126,41 @@ def test_matched_condition_target_cols(tmp_path, spark, mode):
     affected_keys.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_matched_condition_src_ref_false(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_matched_condition_src_ref_false(tmp_path, spark, mode, kind):
     """A src_-referencing condition that never holds: zero updates, zero
     rewrites — matched source rows are dropped, inserts still land."""
     t = make_table(tmp_path, spark)
-    n0 = t.scan(spark).count()
-    src = generate_updates(spark, 200, n_updates=40, n_inserts=10)
+    before = t.scan(spark).select(COLS).cache()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=40, n_inserts=10)
+    )
     snap = merge_into(
         t, spark, src, matched_condition="src_caption = caption", mode=mode
     )
-    assert snap.summary["rows_updated"] == 0
-    assert snap.summary["rows_inserted"] == 10
+    assert_counts(snap, kind, 0, 10)
     assert snap.summary["files_rewritten"] == 0
-    assert t.scan(spark).count() == n0 + 10
+    inserts = src.join(before, "image_id", "left_anti").select("image_id")
+    assert_same(
+        t.scan(spark).select(COLS),
+        expected_state(before, src, inserts.limit(0), inserts),
+    )
+    before.unpersist()
 
 
-def test_matched_condition_src_ref_true_cow(tmp_path, spark):
+@cases("copy-on-write")
+def test_matched_condition_src_ref_true_cow(tmp_path, spark, mode, kind):
     """src_caption <> caption holds for every update row (captions get a
     rev suffix) — equivalent to the unconditional upsert."""
     t = make_table(tmp_path, spark)
     before = t.scan(spark).select(COLS).cache()
-    src = generate_updates(spark, 200, n_updates=40, n_inserts=10).cache()
-    snap = merge_into(t, spark, src, matched_condition="src_caption <> caption")
-    assert snap.summary["rows_updated"] == 40
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=40, n_inserts=10)
+    )
+    snap = merge_into(
+        t, spark, src, matched_condition="src_caption <> caption", mode=mode
+    )
+    assert_counts(snap, kind, 40, 10)
     matched = before.join(src, "image_id", "left_semi").select("image_id")
     inserts = src.join(before, "image_id", "left_anti").select("image_id")
     assert_same(
@@ -120,48 +171,69 @@ def test_matched_condition_src_ref_true_cow(tmp_path, spark):
     src.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_when_not_matched_ignore(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_when_not_matched_ignore(tmp_path, spark, mode, kind):
     """Updates apply, inserts suppressed."""
     t = make_table(tmp_path, spark)
-    n0 = t.scan(spark).count()
-    src = generate_updates(spark, 200, n_updates=30, n_inserts=25)
+    before = t.scan(spark).select(COLS).cache()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=30, n_inserts=25)
+    )
     snap = merge_into(t, spark, src, when_not_matched="ignore", mode=mode)
-    assert snap.summary["rows_updated"] == 30
-    assert snap.summary["rows_inserted"] == 0
-    assert t.scan(spark).count() == n0
+    assert_counts(snap, kind, 30, 0)
+    matched = before.join(src, "image_id", "left_semi").select("image_id")
+    assert_same(
+        t.scan(spark).select(COLS),
+        expected_state(before, src, matched, matched.limit(0)),
+    )
     # the updated captions did land
     assert (
         t.scan(spark).filter(F.col("caption").endswith("(rev2)")).count() == 30
     )
+    before.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_not_matched_condition_filters_inserts(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_not_matched_condition_filters_inserts(tmp_path, spark, mode, kind):
     t = make_table(tmp_path, spark)
-    src = generate_updates(spark, 200, n_updates=20, n_inserts=30).cache()
-    before = t.scan(spark).select("image_id").cache()
-    cond = "pmod(phash, 2) = 1"
-    exp_ins = (
-        src.join(before, "image_id", "left_anti").filter(F.expr(cond)).count()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=20, n_inserts=30)
     )
+    before = t.scan(spark).select(COLS).cache()
+    cond = "pmod(phash, 2) = 1"
+    insert_keys = (
+        src.join(before, "image_id", "left_anti").filter(F.expr(cond))
+        .select("image_id").cache()
+    )
+    exp_ins = insert_keys.count()
     assert 0 < exp_ins < 30
     snap = merge_into(t, spark, src, not_matched_condition=cond, mode=mode)
-    assert snap.summary["rows_inserted"] == exp_ins
-    assert snap.summary["rows_updated"] == 20
+    assert_counts(snap, kind, 20, exp_ins)
+    matched = before.join(src, "image_id", "left_semi").select("image_id")
+    assert_same(
+        t.scan(spark).select(COLS),
+        expected_state(before, src, matched, insert_keys),
+    )
     before.unpersist()
-    src.unpersist()
+    insert_keys.unpersist()
 
 
-def test_insert_only_merge(tmp_path, spark):
+@cases("copy-on-write", "merge-on-read")
+def test_insert_only_merge(tmp_path, spark, mode, kind):
     """when_matched='ignore': matched target rows keep their old payload."""
     t = make_table(tmp_path, spark)
     before = t.scan(spark).select(COLS).cache()
-    src = generate_updates(spark, 200, n_updates=30, n_inserts=10)
-    snap = merge_into(t, spark, src, when_matched="ignore")
-    assert snap.summary["rows_updated"] == 0
-    assert snap.summary["rows_inserted"] == 10
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=30, n_inserts=10)
+    )
+    snap = merge_into(t, spark, src, when_matched="ignore", mode=mode)
+    assert_counts(snap, kind, 0, 10)
     assert snap.summary["files_rewritten"] == 0
+    inserts = src.join(before, "image_id", "left_anti").select("image_id")
+    assert_same(
+        t.scan(spark).select(COLS),
+        expected_state(before, src, inserts.limit(0), inserts),
+    )
     # no (rev2) caption appears on pre-existing ids
     assert (
         t.scan(spark).filter(F.col("caption").endswith("(rev2)")).count() == 0
@@ -169,20 +241,19 @@ def test_insert_only_merge(tmp_path, spark):
     before.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_nmbs_full_sync(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_nmbs_full_sync(tmp_path, spark, mode, kind):
     """update + insert + NOT MATCHED BY SOURCE DELETE == make target
     mirror the source exactly."""
     t = make_table(tmp_path, spark)
     # source: updated copies of half the table + some fresh rows
-    src = generate_updates(spark, 200, n_updates=100, n_inserts=40).cache()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=100, n_inserts=40)
+    )
     snap = merge_into(
         t, spark, src, when_not_matched_by_source="delete", mode=mode
     )
-    assert snap.summary["rows_deleted"] == 200 - 100
-    assert snap.summary["rows_nmbs_deleted"] == 100
-    assert snap.summary["rows_updated"] == 100
-    assert snap.summary["rows_inserted"] == 40
+    assert_counts(snap, kind, 100, 40, deleted=200 - 100, nmbs=100)
     assert_same(t.scan(spark).select(COLS), src.select(COLS))
     if mode == "merge-on-read":
         assert snap.summary["files_rewritten"] == 0
@@ -190,12 +261,14 @@ def test_nmbs_full_sync(tmp_path, spark, mode):
     src.unpersist()
 
 
-@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-def test_nmbs_condition_scopes_deletes(tmp_path, spark, mode):
+@cases("copy-on-write", "merge-on-read")
+def test_nmbs_condition_scopes_deletes(tmp_path, spark, mode, kind):
     t = make_table(tmp_path, spark)
     a_date = t.scan(spark).select("ingest_date").first()["ingest_date"]
     before = t.scan(spark).cache()
-    src = generate_updates(spark, 200, n_updates=50, n_inserts=0).cache()
+    src = as_source(
+        kind, spark, tmp_path, generate_updates(spark, 200, n_updates=50, n_inserts=0)
+    )
     cond = f"ingest_date = '{a_date}'"
     exp_del = (
         before.filter(F.expr(cond))
@@ -211,14 +284,15 @@ def test_nmbs_condition_scopes_deletes(tmp_path, spark, mode):
         not_matched_by_source_condition=cond,
         mode=mode,
     )
-    assert snap.summary["rows_nmbs_deleted"] == exp_del
-    assert t.scan(spark).count() == 200 - exp_del
-    # rows outside the scoped date survive untouched
-    out = t.scan(spark).filter(~F.expr(cond)).join(src, "image_id", "left_anti")
-    exp_out = before.filter(~F.expr(cond)).join(src, "image_id", "left_anti")
-    assert out.count() == exp_out.count()
+    assert_counts(snap, kind, 50, 0, deleted=exp_del, nmbs=exp_del)
+    # matched rows take the source version; unmatched rows survive
+    # outside the scoped date
+    kept = before.filter(~F.expr(cond)).join(src, "image_id", "left_anti")
+    assert_same(
+        t.scan(spark).select(COLS),
+        kept.select(COLS).unionByName(src.select(COLS)),
+    )
     before.unpersist()
-    src.unpersist()
 
 
 def test_sql_merge_clause_surface(tmp_path, spark):

@@ -2,9 +2,11 @@
 query on Spark AND its oracle SQL on DuckDB at a given sf dir, then
 compares row count, column-name set, and order-insensitive values
 (columns sorted by name, rows sorted). ``norm_cell`` stringifies values,
-which hides their types, so an oracle column typed HUGEINT or DECIMAL
-fails on its own: DuckDB's integer ``sum()`` returns int128, which no
-Spark integer type matches (cast it, e.g. with ``_isum``).
+which hides their types, so types are checked on their own: an oracle
+column typed HUGEINT or DECIMAL fails (DuckDB's integer ``sum()``
+returns int128, which no Spark integer type matches; cast it, e.g. with
+``_isum``), and so does any column whose Spark type family (int,
+float, decimal, string, ...) differs from its oracle's.
 
 Usage: python tools/check_entry.py [sf_dir] [query ...]
 """
@@ -32,6 +34,59 @@ TABLES = [
 # oracle result types the Spark queries here never produce: DuckDB sums
 # integers into HUGEINT (int128), and decimal literals make DECIMALs
 WIDE_TYPES = ("HUGEINT", "DECIMAL")
+
+
+# the type family a Spark column and its DuckDB oracle column must share:
+# int, float, decimal, string, bool, date, timestamp, binary, list, map or
+# struct; widths within a family (INTEGER vs BIGINT) may differ
+_SPARK_FAMILY = {
+    "ByteType": "int", "ShortType": "int", "IntegerType": "int",
+    "LongType": "int", "FloatType": "float", "DoubleType": "float",
+    "DecimalType": "decimal", "StringType": "string",
+    "VarcharType": "string", "CharType": "string", "BooleanType": "bool",
+    "DateType": "date", "TimestampType": "timestamp",
+    "TimestampNTZType": "timestamp", "BinaryType": "binary",
+    "ArrayType": "list", "MapType": "map", "StructType": "struct",
+}
+_DUCK_FAMILY = {
+    "TINYINT": "int", "SMALLINT": "int", "INTEGER": "int", "BIGINT": "int",
+    "HUGEINT": "int", "UTINYINT": "int", "USMALLINT": "int",
+    "UINTEGER": "int", "UBIGINT": "int", "UHUGEINT": "int",
+    "FLOAT": "float", "DOUBLE": "float", "DECIMAL": "decimal",
+    "VARCHAR": "string", "BOOLEAN": "bool", "DATE": "date",
+    "TIMESTAMP": "timestamp", "TIMESTAMP WITH TIME ZONE": "timestamp",
+    "TIMESTAMP_S": "timestamp", "TIMESTAMP_MS": "timestamp",
+    "TIMESTAMP_NS": "timestamp", "BLOB": "binary", "MAP": "map",
+    "STRUCT": "struct",
+}
+
+
+def spark_family(dtype) -> str:
+    """Type family of a Spark ``DataType`` (its class name when it has
+    none, which matches no oracle family)."""
+    name = type(dtype).__name__
+    return _SPARK_FAMILY.get(name, name)
+
+
+def duck_family(dtype: str) -> str:
+    """Type family of a DuckDB type string: ``INTEGER[]`` and
+    ``INTEGER[3]`` are lists, ``DECIMAL(18,2)`` a decimal,
+    ``MAP(VARCHAR, INTEGER)`` a map (the type string itself when it has
+    none)."""
+    t = dtype.strip().upper()
+    if t.endswith("]"):
+        return "list"
+    return _DUCK_FAMILY.get(t.split("(", 1)[0].strip(), dtype)
+
+
+def family_mismatches(scols, stypes, ocols, otypes) -> list:
+    """``"col spark/oracle"`` for each column (paired by name) whose type
+    families differ."""
+    spark = sorted(zip(scols, map(spark_family, stypes)))
+    duck = sorted(zip(ocols, map(duck_family, map(str, otypes))))
+    return [
+        f"{c} {a}/{b}" for (c, a), (_, b) in zip(spark, duck) if a != b
+    ]
 
 
 def norm_cell(v):
@@ -72,6 +127,7 @@ def main():
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            stypes = [f.dataType for f in sdf.schema.fields]
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
@@ -103,6 +159,11 @@ def main():
         oc, orr = norm_rows(ocols, orows)
         if sc != oc:
             print(f"FAIL {name}: columns differ spark={sc} duck={oc}")
+            n_fail += 1
+            continue
+        mixed = family_mismatches(scols, stypes, ocols, otypes)
+        if mixed:
+            print(f"FAIL {name}: type families differ (spark/oracle) {mixed}")
             n_fail += 1
             continue
         if len(sr) != len(orr):
