@@ -12,26 +12,26 @@ Spark-first execution plan (ONE full pass over the payload per tile):
 1. **Tiling** — the manifest is split into *tiles* of at most
    ``max_files_per_job`` output files each (partition-major order, so a
    tile rarely straddles a partition). Each tile is an independent
-   boundary-plan + route + sort + write job; tiles run concurrently from
-   a driver thread pool (the Iceberg RewriteDataFiles architecture). At
-   10^12 rows / 10^8 files no single job ever plans more than
-   ``max_files_per_job`` ranges — the driver never materializes an
-   O(total_files) structure in any query plan.
+   route + sort + write job and a unit of ``tableformat.rewrite_units``,
+   the runner every data-file rewrite shares (the Iceberg
+   RewriteDataFiles architecture). At 10^12 rows / 10^8 files no single
+   job ever plans more than ``max_files_per_job`` ranges — the driver
+   never materializes an O(total_files) structure in any query plan.
 2. **Boundary planning: one grouped bounds job for every tile** — the
    curve key needs only (partition cols, phash, w, h), a few bytes/row,
    so range boundaries come from a scan that never touches the image
-   payload. Before any multi-file tile is submitted, ONE aggregate over
+   payload. Before any multi-file tile is planned, ONE aggregate over
    that key scan (the cached one when the partition-tuple pass already
    read it) tags each row with its tile through a broadcast path→tile
    frame and runs ``groupBy(tile).agg(percentile_approx(key, <union of
    the tiles' i/n_out fractions>, 4 × max n_out))``. So the bounds cost
    one job per ``cluster()`` call whatever the tile count, and the
    cheap key scan never queues behind other tiles' payload rewrites.
-   Single-file tiles need no bounds and start while it runs; tiles a
-   checkpoint already holds get none. (A plain ``repartitionByRange``
-   instead runs its boundary-sampling job over the FULL child plan —
-   every payload byte read and every key computed twice, or a
-   cluster-wide persist.)
+   It is the runner's first task: single-file tiles need no bounds and
+   start while it runs; tiles a checkpoint already holds get none. (A
+   plain ``repartitionByRange`` instead runs its boundary-sampling job
+   over the FULL child plan — every payload byte read and every key
+   computed twice, or a cluster-wide persist.)
 3. **Exact-route shuffle, zero plan literals** — rows get their target
    partition from one vectorized Arrow UDF: ``np.searchsorted`` against
    the tile's boundary array, then a *routing salt* per bucket such that
@@ -44,16 +44,15 @@ Spark-first execution plan (ONE full pass over the payload per tile):
    evaluation. ``repartition(n, route)`` is then a single exact shuffle:
    no sampling, no skewed modulo collisions.
 4. **Sort within partitions + write** — files come out key-clustered and
-   ≈target-sized; stats for all tiles are collected by one grouped
-   aggregate, and all tiles commit as ONE replace snapshot.
+   ≈target-sized; the runner collects each tile's stats as its write
+   lands, and all tiles commit as ONE replace snapshot.
 
 Skew: low bits of the composite bucket key carry a per-row salt, so a hot
 single key (the phash hot-bucket tail) is split across adjacent buckets
 while staying contiguous on disk — pruning power unaffected.
 
-Resumability (north_rule): with a ``checkpoint``, each finished tile
-appends a ``unit_done`` lineage record (source snapshot, input files,
-rows/bytes, output prefix); a killed run redoes only unfinished tiles.
+Resumability (north_rule): with a ``checkpoint`` the runner records each
+finished tile's lineage, and a killed run redoes only unfinished tiles.
 
 The Morton key is a pure Catalyst column expression
 (functions/udfs.py::morton64_expr) — whole-stage codegen end-to-end;
@@ -65,8 +64,8 @@ payload bytes never cross the Arrow boundary.
 from __future__ import annotations
 
 import re
+import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 import numpy as np
@@ -83,6 +82,8 @@ from ..sources.tableformat import (
     Table,
     read_split_size,
     rel_path_expr,
+    resumed_units,
+    rewrite_units,
     statable_cols,
 )
 from .checkpoint import RunCheckpoint
@@ -324,6 +325,9 @@ def _tile_bounds(spark: SparkSession, keys, tile_paths: dict, n_outs: dict) -> d
     }
 
 
+# mode="auto" rewrites incrementally only while at most this fraction of
+# the table's bytes is dirty
+INCREMENTAL_MAX_DIRTY_FRAC = 0.5
 _SORTED_PREFIX_PROP = "cluster.sorted_prefixes"
 _SORT_SPEC_PROP = "cluster.sort_spec"
 SORT_ORDER_PROP = "sort.order"
@@ -337,11 +341,9 @@ def cluster(
     cols: Optional[tuple] = None,
     target_file_size_bytes: int = 128 * 1024 * 1024,
     max_files_per_job: int = 4096,
-    tile_parallelism: int = 4,
     snapshot_id: Optional[int] = None,
     checkpoint: Optional[RunCheckpoint] = None,
     mode: str = "auto",
-    incremental_max_dirty_frac: float = 0.5,
     predicates: Optional[list] = None,
 ) -> Optional[Snapshot]:
     """Rewrite the table clustered by the chosen space-filling curve.
@@ -369,7 +371,7 @@ def cluster(
       generation's files stay disjoint within itself.
     - ``"auto"`` (default) — incremental when a matching sorted
       generation exists and the dirty fraction is at most
-      ``incremental_max_dirty_frac`` of table bytes; full otherwise
+      ``INCREMENTAL_MAX_DIRTY_FRAC`` of table bytes; full otherwise
       (rewriting nearly everything incrementally would just fragment
       generations without saving IO).
 
@@ -409,7 +411,6 @@ def cluster(
     t0 = time.time()
     pt = PhaseTimer()
     meta = table.metadata()
-    src_snapshot = meta.current_snapshot_id
     man = table.manifest_pdf(snapshot_id)
 
     import json as _json
@@ -431,7 +432,7 @@ def cluster(
     incremental = mode == "incremental" or (
         mode == "auto"
         and bool(sorted_mask.any())
-        and dirty_bytes <= incremental_max_dirty_frac * max(total_bytes, 1)
+        and dirty_bytes <= INCREMENTAL_MAX_DIRTY_FRAC * max(total_bytes, 1)
     )
     if incremental:
         keep, work = man[sorted_mask], man[~sorted_mask]
@@ -509,115 +510,82 @@ def cluster(
             F.lit(np.iinfo(np.int64).min + 1),
         )
 
-    prefixes: dict = {}
     broadcasts: list = []
-    stats_frames: dict = {}
+    stage = ("cluster", "tile")
+    # tiles that still have to write more than one file need range bounds
+    resumed = resumed_units(checkpoint, stage, range(len(tiles)))
+    ranged = [i for i in range(len(tiles)) if n_outs[i] > 1 and i not in resumed]
+    bounds: dict = {}
+    lock = threading.Lock()
 
-    def stats_for(tile_no: int, prefix: str) -> None:
-        # per-tile stats collected INSIDE the tile's own thread, the
-        # moment its write lands (or its checkpoint resume resolves):
-        # tile A's stats job overlaps tile B's write instead of forming
-        # a serial post-barrier tail (measured 1-5 s on the bench).
-        with pt.phase("stats"):
-            stats_frames[tile_no] = table.collect_stats_for_prefix(
-                spark, prefix
-            )
+    def tile_bounds() -> dict:
+        # ONE grouped job for every ranged tile, run once: it is the
+        # first task of the pool, so single-file and resumed tiles
+        # overlap it while each ranged tile's plan waits on it
+        with lock:
+            if not bounds:
+                keys = pruned_cache if pruned_cache is not None else _key_scan(
+                    table, spark, [p for i in ranged for p in tile_rows[i]["path"]], need
+                )
+                with pt.phase("quantile"):
+                    bounds.update(
+                        _tile_bounds(
+                            spark,
+                            keys.select(ck_of(key).alias("ck"), _PATH),
+                            {i: list(tile_rows[i]["path"]) for i in ranged},
+                            {i: n_outs[i] for i in ranged},
+                        )
+                    )
+        return bounds
 
-    def tile_done(tile_no: int) -> bool:
-        return checkpoint is not None and checkpoint.is_unit_done(
-            "cluster", f"tile-{tile_no}"
+    def plan(tile_no: int, df):
+        n_out = n_outs[tile_no]
+        full = df.withColumn(_KEY, key)
+        if n_out == 1:
+            return full.coalesce(1).sortWithinPartitions(*sort_cols).drop(_KEY)
+        # one full pass: route → exact shuffle → sort → write. The
+        # composite key is materialized as a column FIRST so it is
+        # evaluated once per row on either route path.
+        tile_b = tile_bounds()[tile_no]
+        salts = exact_route_salts(n_out)
+        keyed = full.withColumn("__ck", ck_of(F.col(_KEY)))
+        if n_out <= _JVM_ROUTE_MAX:
+            routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), tile_b, salts))
+        else:
+            route, bc = _route_udf(spark, tile_b, salts)
+            broadcasts.append(bc)
+            routed = keyed.withColumn(_ROUTE, route(F.col("__ck")))
+        return (
+            routed.repartition(n_out, F.col(_ROUTE))
+            .sortWithinPartitions(*sort_cols)
+            .drop(_KEY, _ROUTE, "__ck")
         )
 
-    def run_tile(tile_no: int, bounds: Optional[np.ndarray] = None) -> None:
-        import os
-
-        unit = f"tile-{tile_no}"
-        if tile_done(tile_no):
-            prefixes[tile_no] = checkpoint.unit_payload("cluster", unit)["output_prefix"]
-            stats_for(tile_no, prefixes[tile_no])
-            return
-        rows = tile_rows[tile_no]
-        paths = [os.path.join(table.root, p) for p in rows["path"]]
-        n_out = n_outs[tile_no]
-        full = table.read_data(spark, paths).withColumn(_KEY, key)
-        if n_out == 1:
-            out = full.coalesce(1).sortWithinPartitions(*sort_cols).drop(_KEY)
-        else:
-            # one full pass: route → exact shuffle → sort → write. The
-            # composite key is materialized as a column FIRST so it is
-            # evaluated once per row on either route path.
-            salts = exact_route_salts(n_out)
-            keyed = full.withColumn("__ck", ck_of(F.col(_KEY)))
-            if n_out <= _JVM_ROUTE_MAX:
-                routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), bounds, salts))
-            else:
-                route, bc = _route_udf(spark, bounds, salts)
-                broadcasts.append(bc)
-                routed = keyed.withColumn(_ROUTE, route(F.col("__ck")))
-            out = (
-                routed.repartition(n_out, F.col(_ROUTE))
-                .sortWithinPartitions(*sort_cols)
-                .drop(_KEY, _ROUTE, "__ck")
-            )
-        prefix = table.new_data_prefix()
-        with pt.phase("rewrite"):
-            table.data_writer(out).parquet(prefix)
-        prefixes[tile_no] = prefix
-        if checkpoint is not None:
-            checkpoint.unit_done(
-                "cluster",
-                unit,
-                {
-                    "source_snapshot_id": src_snapshot,
-                    "input_files": list(rows["path"]),
-                    "input_bytes": int(rows["file_size_bytes"].sum()),
-                    "input_records": int(rows["record_count"].sum()),
-                    "output_prefix": prefix,
-                },
-            )
-        stats_for(tile_no, prefix)
-
-    # tiles that still have to write more than one file need range bounds
-    ranged = [i for i in range(len(tiles)) if n_outs[i] > 1 and not tile_done(i)]
-    unranged = sorted(set(range(len(tiles))) - set(ranged))
     # Read splits aligned with the target file size for the whole stage:
     # the default 128 MB split caps the read/route stage at
     # total_bytes/128MB tasks no matter how many executors exist; one
     # split ≈ one input file keeps scan parallelism proportional to the
     # table, matching the shuffle side's n_out partitions.
-    with read_split_size(spark, target_file_size_bytes), ThreadPoolExecutor(
-        max_workers=max(1, tile_parallelism)
-    ) as pool:
-        # single-file (and resumed) tiles need no bounds: they start now
-        # and overlap the bounds job, which runs once for all the others
-        futures = [pool.submit(run_tile, i) for i in unranged]
-        if ranged:
-            keys = pruned_cache if pruned_cache is not None else _key_scan(
-                table, spark, [p for i in ranged for p in tile_rows[i]["path"]], need
-            )
-            with pt.phase("quantile"):
-                bounds = _tile_bounds(
-                    spark,
-                    keys.select(ck_of(key).alias("ck"), _PATH),
-                    {i: list(tile_rows[i]["path"]) for i in ranged},
-                    {i: n_outs[i] for i in ranged},
-                )
-            futures += [pool.submit(run_tile, i, bounds[i]) for i in ranged]
-        for f in futures:
-            f.result()  # surface the first failure
+    order = [i for i in range(len(tiles)) if i not in ranged] + ranged
+    with read_split_size(spark, target_file_size_bytes):
+        entries, prefixes = rewrite_units(
+            table,
+            spark,
+            {i: tile_rows[i] for i in order},
+            plan,
+            pt,
+            checkpoint=checkpoint,
+            stage=stage,
+            alongside=[tile_bounds] if ranged else [],
+        )
 
-    entries = pd.concat(
-        [stats_frames[i] for i in range(len(tiles))], ignore_index=True
-    )
     import os as _os
 
     # sorted-generation bookkeeping: output prefixes of this run, plus any
     # previous generation's prefixes that still own kept files (dead
     # prefixes — fully rewritten by a later full run — are dropped so the
     # property stays O(cluster runs since last full rewrite))
-    new_rel = sorted(
-        {_os.path.relpath(prefixes[i], table.root) for i in range(len(tiles))}
-    )
+    new_rel = sorted({_os.path.relpath(p, table.root) for p in prefixes.values()})
     # (keyed on kept files, not the incremental flag: a predicate-scoped
     # full run also keeps files, whose generations stay live)
     live_old = [

@@ -5,27 +5,22 @@ The scale path the reference lacks: its writers ``coalesce(1)`` every run
 "small-file management"), accumulating one small file per partition per day
 forever. A planner packs manifest entries into ≈target-size rewrite groups
 (plans/binpack.py); groups are then rewritten in BATCHES: one Spark job
-routes up to ``groups_per_job`` groups' rows (broadcast path→salt join +
-one exact shuffle, plan size O(1) in the batch width) into one output
-file per group — a 10^6-small-file backlog costs hundreds of jobs, not a
-job per file pack. When the backlog exceeds one batch, batches run
-concurrently from a driver thread pool — the same architecture as
-Iceberg's RewriteDataFiles action: batch jobs are independent, so
-parallelism scales with batch count × groups-per-batch, not with any
-single shuffle. (Within one batch the exact shuffle already spreads
-across the cluster; the pool only matters for multi-batch backlogs.)
+routes up to ``DEFAULT_GROUPS_PER_JOB`` groups' rows (broadcast
+path→salt join + one exact shuffle, plan size O(1) in the batch width)
+into one output file per group — a 10^6-small-file backlog costs
+hundreds of jobs, not a job per file pack.
 
-Resumability (north_rule): each finished batch appends a ``unit_done``
-lineage record (source snapshot, groups, input files, rows/bytes, output
-prefix) to the RunCheckpoint. A killed run restarted with the same
-checkpoint rewrites only the remaining batches and commits the identical
-snapshot content.
+Batches are the units of ``tableformat.rewrite_units``, the runner every
+data-file rewrite shares: it runs them concurrently (up to
+``parallelism`` jobs), collects each batch's stats as its write lands,
+and with a ``checkpoint`` records per-batch lineage (plus the batch's
+``groups`` and ``partitions``) so a killed run rewrites only the
+remaining batches and commits the identical snapshot content.
 """
 
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 import pandas as pd
@@ -39,7 +34,13 @@ from ..plans.binpack import (
 )
 from ..session import local_frame
 from ..sources import transforms
-from ..sources.tableformat import Snapshot, Table, statable_cols
+from ..sources.tableformat import (
+    Snapshot,
+    Table,
+    rel_path_expr,
+    rewrite_units,
+    statable_cols,
+)
 from .checkpoint import RunCheckpoint
 from .timing import PhaseTimer
 
@@ -62,8 +63,8 @@ def _sort_key(df):
     return None
 
 
-def _group_plan(table: Table, spark: SparkSession, group: CompactionGroup):
-    """One group's lazy rewrite plan.
+def _group_plan(table: Table, group: CompactionGroup, df):
+    """One group's rewrite plan over ``df``, its files' rows.
 
     Sort order is preserved, not destroyed: pack groups (N small files →
     1) concatenate key-adjacent inputs with ``coalesce(1)`` (no
@@ -74,12 +75,6 @@ def _group_plan(table: Table, spark: SparkSession, group: CompactionGroup):
     disjoint key ranges and manifest pruning quality survives until the
     next cluster run. (Sorting random bronze input is skipped: it buys
     no pruning and costs CPU.)"""
-    import os
-
-    from pyspark.sql import functions as F
-
-    paths = [os.path.join(table.root, p) for p in group.paths]
-    df = table.read_data(spark, paths)
     key = _sort_key(df)
     part_cols = transforms.exprs(table.metadata().partition_cols)
     sort_cols = part_cols + ([key] if key is not None else [])
@@ -113,10 +108,9 @@ def _route_frame(spark: SparkSession, groups: list):
     )
 
 
-def _rewrite_batch(
-    table: Table, spark: SparkSession, groups: list
-) -> str:
-    """Rewrite a batch of PACK groups as ONE Spark job.
+def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df):
+    """A batch of PACK groups as ONE Spark job over ``df``, the rows of
+    all their files.
 
     Each input file belongs to exactly one group, so rows are routed by
     their source file: a (path → routing salt) TABLE is broadcast and
@@ -132,39 +126,24 @@ def _rewrite_batch(
     re-sort each packed partition, unordered (raw bronze) skip the sort.
 
     (A union of per-group ``coalesce(1)`` plans does NOT work: Spark
-    collapses the union of coalesced children into a single partition.)
-
-    Returns the output prefix; per-file stats are collected for ALL
-    batches in one batched Spark job afterwards."""
-    import os
-
+    collapses the union of coalesced children into a single partition.)"""
     from pyspark.sql import functions as F
 
-    from ..sources.tableformat import rel_path_expr
-
     if len(groups) == 1:
-        df = _group_plan(table, spark, groups[0])
-        prefix = table.new_data_prefix()
-        table.data_writer(df).parquet(prefix)
-        return prefix
-
-    n = len(groups)
-    paths = [os.path.join(table.root, p) for g in groups for p in g.paths]
+        return _group_plan(table, groups[0], df)
     df = (
-        table.read_data(spark, paths)
-        .withColumn("__route_path", rel_path_expr(table.root))
+        df.withColumn("__route_path", rel_path_expr(table.root))
         .join(F.broadcast(_route_frame(spark, groups)), "__route_path", "inner")
         .drop("__route_path")
+        .repartition(len(groups), F.col("__rt"))
+        .drop("__rt")
     )
-    df = df.repartition(n, F.col("__rt")).drop("__rt")
     key = _sort_key(df)
     part_cols = transforms.exprs(table.metadata().partition_cols)
     sort_cols = part_cols + ([key] if key is not None else [])
     if sort_cols and groups[0].ordered:
         df = df.sortWithinPartitions(*sort_cols)
-    prefix = table.new_data_prefix()
-    table.data_writer(df).parquet(prefix)
-    return prefix
+    return df
 
 
 def compact(
@@ -174,7 +153,6 @@ def compact(
     target_file_size_bytes: int = DEFAULT_TARGET_BYTES,
     min_input_files: int = 2,
     parallelism: int = 8,
-    groups_per_job: int = DEFAULT_GROUPS_PER_JOB,
     checkpoint: Optional[RunCheckpoint] = None,
     predicates: Optional[list] = None,
 ) -> Optional[Snapshot]:
@@ -203,7 +181,6 @@ def compact(
         )
 
         meta = table.metadata()
-        src_snapshot = meta.current_snapshot_id
         prune_preds = (
             transforms.extend_predicates(meta.partition_cols, list(predicates))
             if predicates
@@ -243,65 +220,39 @@ def compact(
     packs_ordered = [g for g in plan.groups if g.n_output_files == 1 and g.ordered]
     packs_plain = [g for g in plan.groups if g.n_output_files == 1 and not g.ordered]
     singles = [g for g in plan.groups if g.n_output_files != 1]
-    k = max(1, groups_per_job)
+    k = DEFAULT_GROUPS_PER_JOB
     batches: list = []
     for pool_groups in (packs_ordered, packs_plain):
         batches += [pool_groups[i : i + k] for i in range(0, len(pool_groups), k)]
     batches += [[g] for g in singles]
-    results: dict = {}
-    stats_frames: dict = {}
 
-    def stats_for(bno: int, prefix: str) -> None:
-        # per-batch stats collected INSIDE the batch's own thread as its
-        # write lands (or its checkpoint resume resolves): batch A's
-        # stats job overlaps batch B's write instead of forming a serial
-        # post-barrier tail (measured 3-6 s on the bench).
-        with pt.phase("stats"):
-            stats_frames[bno] = table.collect_stats_for_prefix(spark, prefix)
-
-    def run_batch(bno: int, groups: list):
-        unit = f"batch-{bno}"
-        if checkpoint is not None and checkpoint.is_unit_done("compact", unit):
-            results[bno] = checkpoint.unit_payload("compact", unit)["output_prefix"]
-            stats_for(bno, results[bno])
-            return
-        with pt.phase("rewrite"):
-            prefix = _rewrite_batch(table, spark, groups)
-        if checkpoint is not None:
-            checkpoint.unit_done(
-                "compact",
-                unit,
-                {
-                    "source_snapshot_id": src_snapshot,
-                    "groups": [g.group_id for g in groups],
-                    "partitions": sorted({g.partition_json for g in groups}),
-                    "input_files": [p for g in groups for p in g.paths],
-                    "input_records": sum(g.input_records for g in groups),
-                    "input_bytes": sum(g.input_bytes for g in groups),
-                    "output_prefix": prefix,
-                },
-            )
-        results[bno] = prefix
-        stats_for(bno, prefix)
-
+    # the batches' manifest rows and the commit manifest: pandas on either
+    # planner path, loaded once, here
+    man = table.manifest_pdf()
+    by_path = man.set_index("path", drop=False)
     # Concurrent batch jobs keep many executors busy on a real cluster
     # (Iceberg's RewriteDataFiles ships 5 by default); more driver threads
     # than ~8 just contend on the GIL/py4j in local mode.
-    if len(batches) == 1:
-        run_batch(0, batches[0])
-    else:
-        with ThreadPoolExecutor(max_workers=min(parallelism, 8)) as pool:
-            futures = [pool.submit(run_batch, i, b) for i, b in enumerate(batches)]
-            for f in futures:
-                f.result()  # surface the first failure
+    new_entries, _ = rewrite_units(
+        table,
+        spark,
+        {
+            i: by_path.loc[[p for g in b for p in g.paths]]
+            for i, b in enumerate(batches)
+        },
+        lambda i, df: _rewrite_batch(table, spark, batches[i], df),
+        pt,
+        threads=min(parallelism, 8),
+        checkpoint=checkpoint,
+        stage=("compact", "batch"),
+        lineage=lambda i: {
+            "groups": [g.group_id for g in batches[i]],
+            "partitions": sorted({g.partition_json for g in batches[i]}),
+        },
+    )
 
     rewritten = plan.rewritten_paths
-    # the commit manifest is pandas either way; load it once, here
-    man = table.manifest_pdf()
     keep = man[~man["path"].isin(rewritten)]
-    new_entries = pd.concat(
-        [stats_frames[i] for i in range(len(batches))], ignore_index=True
-    )
     new_man = pd.concat([keep, new_entries], ignore_index=True)
     # residual of duration_sec minus the phases = commit/manifest IO
     snap = table.commit(

@@ -20,8 +20,8 @@ Two GC executions share that policy:
 - **driver path** (default below ``SPARK_MANIFEST_THRESHOLD`` manifest
   entries): ``os.walk`` + a python set — zero job overhead for the
   common small/medium table.
-- **Spark path** (``spark=`` given and the retained manifests are large,
-  or ``force_spark=True``): the listing parallelizes over commit
+- **Spark path** (``spark=`` given and the retained manifests hold more
+  than ``SPARK_MANIFEST_THRESHOLD`` entries): the listing parallelizes over commit
   prefixes (one executor task walks each slice), the reachable set is
   the retained manifests read as parquet, orphans = listing ANTI-JOIN
   reachable, and deletion runs in ``foreachPartition`` — no file list
@@ -123,7 +123,6 @@ def expire_snapshots(
     table: Table,
     *,
     spark=None,
-    force_spark: bool = False,
     keep_last: Optional[int] = None,
     older_than_ms: Optional[int] = None,
     dry_run: bool = False,
@@ -195,9 +194,7 @@ def expire_snapshots(
     n_entries = sum(
         pq.ParquetFile(m).metadata.num_rows for m in retained_manifests
     )
-    use_spark = spark is not None and (
-        force_spark or n_entries > SPARK_MANIFEST_THRESHOLD
-    )
+    use_spark = spark is not None and n_entries > SPARK_MANIFEST_THRESHOLD
     reachable = set(retained_manifests)
     reachable.update(
         os.path.join(table.root, rel) for s in retained for rel in s.delete_paths

@@ -652,35 +652,12 @@ class Table:
                 if present:
                     for c in present:
                         mdf = mdf.withColumn(c, F.col(c).cast(new_t))
-                    tot = mdf.agg(
-                        F.count("*").alias("files"),
-                        F.sum("record_count").alias("records"),
-                        F.sum("file_size_bytes").alias("bytes"),
-                    ).collect()[0]
-                    n_parts = max(
-                        1, -(-int(tot["files"]) // MANIFEST_PART_ROWS)
-                    )
-                    rel_dir = os.path.join(
-                        "metadata", f"manifest-wd-{uuid.uuid4().hex}"
-                    )
-                    mdf.repartition(n_parts).write.parquet(
-                        os.path.join(self.root, rel_dir)
-                    )
-                    rel_paths = sorted(
-                        os.path.join(rel_dir, f)
-                        for f in os.listdir(os.path.join(self.root, rel_dir))
-                        if f.endswith(".parquet")
-                    )
-                    self._commit_manifest_list(
+                    self.commit(
                         "replace",
-                        rel_paths,
-                        dict(
-                            added_or_total_files=int(tot["files"]),
-                            total_records=int(tot["records"] or 0),
-                            total_bytes=int(tot["bytes"] or 0),
-                        ),
+                        pd.DataFrame(),
                         {"stage": "widen_column_manifests", "column": name,
                          "to": new_t},
+                        manifests=self._write_manifest_parts(mdf, "wd"),
                     )
             else:
                 man = self.manifest_pdf()
@@ -866,6 +843,7 @@ class Table:
         branch: Optional[str] = None,
         max_retries: int = 5,
         txn: Optional[tuple] = None,
+        manifests: Optional[tuple] = None,
     ) -> Snapshot:
         """Commit with optimistic concurrency (Iceberg's commit protocol):
         the metadata-version CAS (``open(…, "x")``) detects a concurrent
@@ -903,6 +881,7 @@ class Table:
                     delta_manifest=delta_manifest,
                     branch=branch,
                     txn=txn,
+                    manifests=manifests,
                 )
             except FileExistsError as e:
                 last = e
@@ -930,6 +909,7 @@ class Table:
         delta_manifest: bool = False,
         branch: Optional[str] = None,
         txn: Optional[tuple] = None,
+        manifests: Optional[tuple] = None,
     ) -> Snapshot:
         """Commit the next snapshot (atomic).
 
@@ -965,6 +945,12 @@ class Table:
         shares every ancestor manifest, append-style — the merge-on-read
         MERGE uses this to keep manifest IO O(delta) under a non-append
         operation name.
+
+        ``manifests=(paths, totals)``: the full file list is ALREADY
+        WRITTEN as the manifest files ``paths`` (a Spark re-shard,
+        ``_write_manifest_parts``) whose file / record / byte totals are
+        ``totals``; ``new_manifest`` must be empty — the entry rows never
+        pass through the driver.
 
         ``branch``: commit onto the named branch (``create_branch``)
         instead of ``main`` — the snapshot parents on the BRANCH head and
@@ -1008,7 +994,9 @@ class Table:
                 eq_deletes = (
                     list(parent_for_deletes.eq_deletes) if parent_for_deletes else []
                 )
-        if reuse_manifests:
+        if manifests is not None:
+            manifest_paths, totals = list(manifests[0]), dict(manifests[1])
+        elif reuse_manifests:
             if len(new_manifest):
                 raise ValueError("reuse_manifests commits add no files")
             parent = self.snapshot(head_id)
@@ -1071,105 +1059,57 @@ class Table:
         self,
         min_manifests: int = 2,
         spark: Optional[SparkSession] = None,
-        force_spark: bool = False,
     ) -> Optional[Snapshot]:
         """Compact the current snapshot's manifest LIST into one manifest
         (Iceberg's ``rewriteManifests``): long append chains accumulate one
         delta manifest per commit, which taxes every scan's footer reads.
         Physical metadata reorganization only — committed as a ``replace``
-        so incremental consumers (``changes``) correctly see no new rows.
+        so incremental consumers (``changes``) correctly see no new rows,
+        and the pending delete sets carry over unchanged.
         No-op (returns None) when the list is already small.
 
         Same planner split as scan/compact/expire: below
         ``SPARK_MANIFEST_THRESHOLD`` entries the rewrite is a driver-side
-        pandas concat; above it (``spark`` given, or ``force_spark``) the
-        manifest is re-sharded BY SPARK into ``MANIFEST_PART_ROWS``-row
-        parquet parts — a 10^8-file manifest (~10 GB) never materializes
-        on the driver."""
+        pandas concat; above it (``spark`` given) the manifest is
+        re-sharded BY SPARK into ``MANIFEST_PART_ROWS``-row parquet parts
+        — a 10^8-file manifest (~10 GB) never materializes on the
+        driver."""
         s = self.snapshot()
         if len(s.manifest_paths) < max(2, min_manifests):
             return None
-        use_spark = spark is not None and (
-            force_spark or self.manifest_rows() > SPARK_MANIFEST_THRESHOLD
+        summary = {"stage": "rewrite_manifests", "manifests_in": len(s.manifest_paths)}
+        if spark is None or self.manifest_rows() <= SPARK_MANIFEST_THRESHOLD:
+            return self.commit("replace", self.manifest_pdf(), summary)
+        return self.commit(
+            "replace",
+            pd.DataFrame(),
+            dict(summary, spark_path="true"),
+            manifests=self._write_manifest_parts(self.manifest_df(spark), "rw"),
         )
-        if not use_spark:
-            return self.commit(
-                "replace",
-                self.manifest_pdf(),
-                {"stage": "rewrite_manifests", "manifests_in": len(s.manifest_paths)},
-            )
-        mdf = self.manifest_df(spark)
+
+    def _write_manifest_parts(self, mdf: DataFrame, tag: str) -> tuple:
+        """Re-shard the manifest frame ``mdf`` BY SPARK into
+        ``MANIFEST_PART_ROWS``-row parquet parts under a fresh
+        ``metadata/manifest-<tag>-<uuid>/``; returns ``commit``'s
+        ``manifests`` argument: (part paths, snapshot totals)."""
         tot = mdf.agg(
             F.count("*").alias("files"),
             F.sum("record_count").alias("records"),
             F.sum("file_size_bytes").alias("bytes"),
         ).collect()[0]
         n_parts = max(1, -(-int(tot["files"]) // MANIFEST_PART_ROWS))
-        rel_dir = os.path.join("metadata", f"manifest-rw-{uuid.uuid4().hex}")
+        rel_dir = os.path.join("metadata", f"manifest-{tag}-{uuid.uuid4().hex}")
         mdf.repartition(n_parts).write.parquet(os.path.join(self.root, rel_dir))
-        out_dir = os.path.join(self.root, rel_dir)
         rel_paths = sorted(
             os.path.join(rel_dir, f)
-            for f in os.listdir(out_dir)
+            for f in os.listdir(os.path.join(self.root, rel_dir))
             if f.endswith(".parquet")
         )
-        return self._commit_manifest_list(
-            "replace",
-            rel_paths,
-            dict(
-                added_or_total_files=int(tot["files"]),
-                total_records=int(tot["records"] or 0),
-                total_bytes=int(tot["bytes"] or 0),
-            ),
-            {
-                "stage": "rewrite_manifests",
-                "manifests_in": len(s.manifest_paths),
-                "spark_path": "true",
-            },
+        return rel_paths, dict(
+            added_or_total_files=int(tot["files"]),
+            total_records=int(tot["records"] or 0),
+            total_bytes=int(tot["bytes"] or 0),
         )
-
-    def _commit_manifest_list(
-        self,
-        operation: str,
-        manifest_paths: list,
-        totals: dict,
-        summary: Optional[dict] = None,
-        properties: Optional[dict] = None,
-    ) -> Snapshot:
-        """Commit tail for manifests ALREADY WRITTEN (by Spark executors):
-        same snapshot/metadata bookkeeping as ``commit`` without routing the
-        entry rows through the driver."""
-        version = self.current_version()
-        meta = self.metadata(version)
-        if properties:
-            meta.properties.update({str(k): str(v) for k, v in properties.items()})
-        sid = max((s.snapshot_id for s in meta.snapshots), default=0) + 1
-        # a manifest rewrite reorganizes metadata only — the pending
-        # merge-on-read delete set must survive it
-        parent_deletes = (
-            list(self.snapshot(meta.current_snapshot_id).delete_paths)
-            if meta.current_snapshot_id is not None
-            else []
-        )
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_snapshot_id=meta.current_snapshot_id,
-            timestamp_ms=int(time.time() * 1000),
-            operation=operation,
-            manifest_paths=list(manifest_paths),
-            summary=dict(summary or {}, **totals),
-            delete_paths=parent_deletes,
-        )
-        meta.snapshots.append(snap)
-        meta.current_snapshot_id = sid
-        try:
-            self._write_metadata_version(version + 1, meta)
-        except FileExistsError as e:
-            raise CommitConflictError(
-                f"{operation!r} commit lost a race with a concurrent "
-                f"writer; re-plan against the new table head"
-            ) from e
-        return snap
 
     # ---------- named refs (tags) ----------
 
@@ -2532,10 +2472,10 @@ def rewrite_split_size(
     return read_split_size(spark, split)
 
 
-# Copy-on-write rewrites run in groups of at most this many files, at
-# most _REWRITE_THREADS jobs at once (the Iceberg RewriteDataFiles
-# shape): a broad rewrite over 10^7 files becomes many medium jobs
-# instead of one monster job.
+# Every data-file rewrite runs at most _REWRITE_THREADS jobs at once
+# (the Iceberg RewriteDataFiles shape), and a copy-on-write rewrite cuts
+# its files into groups of at most REWRITE_GROUP_FILES: a broad rewrite
+# over 10^7 files becomes many medium jobs instead of one monster job.
 REWRITE_GROUP_FILES = 4096
 _REWRITE_THREADS = 4
 
@@ -2586,6 +2526,99 @@ def write_position_deletes(table: "Table", rows: DataFrame) -> tuple:
     return prefix_files(table, prefix)
 
 
+def resumed_units(checkpoint, stage: tuple, unit_nos) -> dict:
+    """``{unit_no: unit_done record}`` for the units of ``unit_nos`` that
+    ``checkpoint`` already holds under ``stage = (stage, label)``; unit n
+    is recorded as ``<stage>/<label>-<n>``."""
+    if checkpoint is None:
+        return {}
+    name, label = stage
+    done = {n: checkpoint.unit_payload(name, f"{label}-{n}") for n in unit_nos}
+    return {n: rec for n, rec in done.items() if rec is not None}
+
+
+def rewrite_units(
+    table: "Table",
+    spark: SparkSession,
+    units: dict,
+    plan,
+    pt,
+    *,
+    threads: Optional[int] = None,
+    checkpoint=None,
+    stage: tuple = (),
+    lineage=None,
+    alongside=(),
+) -> tuple:
+    """The one runner under every data-file rewrite: compaction batches,
+    cluster tiles and copy-on-write groups.
+
+    ``units`` maps a unit number to its manifest rows; units are submitted
+    in the mapping's order. A unit's rows are read here with
+    ``read_data`` (the one place a rewrite reads its input), and
+    ``plan(unit_no, frame)`` turns that frame into the unit's output,
+    which is written into a fresh prefix. Its stats are collected in the
+    same thread the moment the write lands, so one unit's stats job
+    overlaps another's write. The zero-argument callables ``alongside``
+    (MERGE's delta write, a cluster's bounds job) are submitted first to
+    the same pool. At most ``threads`` (default ``_REWRITE_THREADS``) run
+    at once. The whole pass is the ``rewrite`` phase of ``pt``; the units'
+    stats are its ``stats`` phase.
+
+    With a ``checkpoint``, ``stage = (stage, label)`` makes the pass
+    resumable: each written unit appends a ``unit_done`` lineage record
+    (source snapshot, input files / bytes / records, the extras
+    ``lineage(unit_no)`` returns, output prefix), and a unit the
+    checkpoint already holds (``resumed_units``) is not rewritten: its
+    recorded prefix is read back for stats.
+
+    Returns ``(entries, prefixes)``: the new manifest entries in unit
+    order and ``{unit_no: prefix}``."""
+    resumed = resumed_units(checkpoint, stage, units)
+    src = table.metadata().current_snapshot_id if checkpoint is not None else None
+    prefixes: dict = {}
+    entries: dict = {}
+
+    def run(n: int) -> None:
+        rows = units[n]
+        if n in resumed:
+            prefix = resumed[n]["output_prefix"]
+        else:
+            frame = table.read_data(
+                spark, [os.path.join(table.root, p) for p in rows["path"]]
+            )
+            out = plan(n, frame)
+            prefix = table.new_data_prefix()
+            table.data_writer(out).parquet(prefix)
+            if checkpoint is not None:
+                checkpoint.unit_done(
+                    stage[0],
+                    f"{stage[1]}-{n}",
+                    {
+                        "source_snapshot_id": src,
+                        "input_files": list(rows["path"]),
+                        "input_bytes": int(rows["file_size_bytes"].sum()),
+                        "input_records": int(rows["record_count"].sum()),
+                        **(lineage(n) if lineage else {}),
+                        "output_prefix": prefix,
+                    },
+                )
+        prefixes[n] = prefix
+        entries[n] = written_entries(table, spark, prefix, pt)
+
+    with pt.phase("rewrite"), ThreadPoolExecutor(
+        max_workers=threads or _REWRITE_THREADS
+    ) as pool:
+        futures = [pool.submit(fn) for fn in alongside]
+        futures += [pool.submit(run, n) for n in units]
+        for f in futures:
+            f.result()  # surface the first failure
+    frames = [entries[n] for n in sorted(units) if entries[n] is not None]
+    if not frames:
+        return pd.DataFrame(columns=MANIFEST_BASE_COLS), prefixes
+    return pd.concat(frames, ignore_index=True), prefixes
+
+
 def rewrite_files(
     table: "Table",
     spark: SparkSession,
@@ -2599,37 +2632,19 @@ def rewrite_files(
     manifest rows ``files``, write ``keep(rows)`` back out and return the
     new manifest entries (an empty frame when nothing survives).
 
-    Files are rewritten in path-ordered groups of at most
-    ``REWRITE_GROUP_FILES``, each into a fresh prefix, concurrently from a
-    driver thread pool; each group's stats are collected in its own
-    writer thread the moment its write lands, so one group's stats job
-    overlaps another's write. The zero-argument callables ``alongside``
-    (MERGE's delta write) run in the same pool. The whole pass is the
-    ``rewrite`` phase of ``pt``, under ``rewrite_split_size``."""
+    ``rewrite_units`` over path-ordered groups of at most
+    ``REWRITE_GROUP_FILES`` files, with ``alongside`` in the same pool,
+    under ``rewrite_split_size``."""
     if not len(files) and not alongside:
         return files.iloc[0:0]
-    paths = sorted(files["path"])
-    groups = [
-        paths[i : i + REWRITE_GROUP_FILES]
-        for i in range(0, len(paths), REWRITE_GROUP_FILES)
-    ]
-    out: dict = {}
-
-    def rewrite(gno: int, group: list) -> None:
-        rows = table.read_data(spark, [os.path.join(table.root, p) for p in group])
-        prefix = table.new_data_prefix()
-        table.data_writer(keep(rows)).parquet(prefix)
-        out[gno] = written_entries(table, spark, prefix, pt)
-
-    with pt.phase("rewrite"), rewrite_split_size(
-        spark, target_bytes, table.root, files
-    ), ThreadPoolExecutor(max_workers=_REWRITE_THREADS) as pool:
-        futures = [pool.submit(rewrite, i, g) for i, g in enumerate(groups)]
-        futures += [pool.submit(fn) for fn in alongside]
-        for f in futures:
-            f.result()
-    frames = [out[i] for i in range(len(groups)) if out[i] is not None]
-    return pd.concat(frames, ignore_index=True) if frames else files.iloc[0:0]
+    ordered = files.sort_values("path")
+    n = REWRITE_GROUP_FILES
+    units = {i: ordered.iloc[i * n : (i + 1) * n] for i in range(-(-len(files) // n))}
+    with rewrite_split_size(spark, target_bytes, table.root, files):
+        entries, _ = rewrite_units(
+            table, spark, units, lambda _n, rows: keep(rows), pt, alongside=alongside
+        )
+    return entries if len(entries) else files.iloc[0:0]
 
 
 def rel_path_expr(root: str):

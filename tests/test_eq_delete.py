@@ -144,3 +144,28 @@ def test_expire_pins_as_of_snapshot_and_value_files(table, spark):
     apply_deletes(table, spark)
     expire_snapshots(table, keep_last=1)
     assert table.scan(spark).count() == N - len(ids) + 40
+
+
+@pytest.mark.parametrize("planner", ["driver", "spark"])
+def test_rewrite_manifests_keeps_pending_eq_deletes(table, spark, monkeypatch, planner):
+    """A manifest rewrite reorganizes metadata only: on either planner
+    path the pending equality deletes carry over, so no deleted row comes
+    back."""
+    import aws_medallion_datalake_spark.sources.tableformat as tf
+
+    # a second manifest, so the list has something to compact
+    table.commit(
+        "append", table.write_files(generate_images(spark, 20, n_files=1, start=N))
+    )
+    equality_delete(table, spark, _some_ids(table, spark, k=10), cols=["image_id"])
+    visible = table.scan(spark).count()
+    pending = table.pending_eq_deletes()
+    assert visible == N + 20 - 10 and pending
+    with monkeypatch.context() as m:
+        if planner == "spark":
+            m.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
+        snap = table.rewrite_manifests(spark=spark)
+    assert snap is not None and len(table.snapshot().manifest_paths) == 1
+    assert snap.summary.get("spark_path") == ("true" if planner == "spark" else None)
+    assert table.pending_eq_deletes() == pending
+    assert table.scan(spark).count() == visible

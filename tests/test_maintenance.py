@@ -22,6 +22,7 @@ from aws_medallion_datalake_spark.sources.generator import (
     generate_images,
     generate_updates,
 )
+from aws_medallion_datalake_spark.sources import tableformat as tf
 from aws_medallion_datalake_spark.sources.tableformat import Table
 
 STATS = ["phash", "w", "h", "image_id"]
@@ -144,35 +145,36 @@ def test_compact_resume_skips_done_groups(tmp_path, spark, monkeypatch):
         "aws_medallion_datalake_spark.operators.compact"
     )
 
-    real = compact_mod._rewrite_batch
+    real = Table.new_data_prefix
     calls = {"n": 0}
 
-    def flaky(table, spark_, groups):
+    def flaky(self):
         calls["n"] += 1
         if calls["n"] == 3:
             raise RuntimeError("simulated executor loss")
-        return real(table, spark_, groups)
+        return real(self)
 
-    # groups_per_job=1 → one batch per group: unit granularity = group
-    monkeypatch.setattr(compact_mod, "_rewrite_batch", flaky)
+    # one batch per group: unit granularity = group; the failure hits the
+    # rewrite runner's per-unit write
+    monkeypatch.setattr(compact_mod, "DEFAULT_GROUPS_PER_JOB", 1)
+    monkeypatch.setattr(Table, "new_data_prefix", flaky)
     with pytest.raises(RuntimeError):
         compact(t, spark, target_file_size_bytes=TARGET, parallelism=1,
-                groups_per_job=1, checkpoint=RunCheckpoint(cp_path))
+                checkpoint=RunCheckpoint(cp_path))
     done_after_crash = len(RunCheckpoint(cp_path).units_done("compact"))
     assert done_after_crash >= 1  # some batches committed to the checkpoint
     # no snapshot was committed by the failed run
     assert t.metadata().current_snapshot_id == 1
 
-    monkeypatch.setattr(compact_mod, "_rewrite_batch", real)
     calls2 = {"n": 0}
 
-    def counting(table, spark_, groups):
+    def counting(self):
         calls2["n"] += 1
-        return real(table, spark_, groups)
+        return real(self)
 
-    monkeypatch.setattr(compact_mod, "_rewrite_batch", counting)
+    monkeypatch.setattr(Table, "new_data_prefix", counting)
     snap = compact(t, spark, target_file_size_bytes=TARGET, parallelism=1,
-                   groups_per_job=1, checkpoint=RunCheckpoint(cp_path))
+                   checkpoint=RunCheckpoint(cp_path))
     assert snap is not None
     # resumed run did NOT rewrite the batches already checkpointed
     total_units = len(RunCheckpoint(cp_path).units_done("compact"))
@@ -248,7 +250,7 @@ def test_cluster_incremental_spec_change_forces_full(tmp_path, spark):
 def test_cluster_auto_full_when_mostly_dirty(tmp_path, spark):
     t = make_table(tmp_path, spark, n=200, n_files=4)
     cluster(t, spark, curve="morton", target_file_size_bytes=TARGET)
-    # append far more than incremental_max_dirty_frac of the table
+    # append far more than INCREMENTAL_MAX_DIRTY_FRAC of the table
     t.commit(
         "append",
         t.write_files(generate_images(spark, 800, n_files=16, n_dates=2, start=20_000)),
@@ -324,16 +326,19 @@ def test_expire_gc(tmp_path, spark):
     assert on_disk == set(t.manifest_pdf()["path"])
 
 
-def test_expire_gc_spark_path(tmp_path, spark):
-    """force_spark exercises the distributed listing/anti-join/delete GC;
-    outcome must be identical to the driver path."""
+def test_expire_gc_spark_path(tmp_path, spark, monkeypatch):
+    """A zero planner threshold exercises the distributed listing/anti-join/
+    delete GC; outcome must be identical to the driver path."""
+    import aws_medallion_datalake_spark.operators.expire as expire_mod
+
     t = make_table(tmp_path, spark)
     compact(t, spark, target_file_size_bytes=TARGET)
     cluster(t, spark, target_file_size_bytes=TARGET)
     rows = t.scan(spark).count()
-    dry = expire_snapshots(t, spark=spark, force_spark=True, keep_last=1, dry_run=True)
+    monkeypatch.setattr(expire_mod, "SPARK_MANIFEST_THRESHOLD", 0)
+    dry = expire_snapshots(t, spark=spark, keep_last=1, dry_run=True)
     assert dry["deleted_files"] > 0 and dry["freed_bytes"] > 0
-    metrics = expire_snapshots(t, spark=spark, force_spark=True, keep_last=1)
+    metrics = expire_snapshots(t, spark=spark, keep_last=1)
     assert metrics["expired_snapshots"] == [1, 2]
     assert metrics["deleted_files"] == dry["deleted_files"]
     assert t.scan(spark).count() == rows
@@ -674,7 +679,8 @@ def test_cluster_tiles_and_resume(tmp_path, spark, monkeypatch):
     )
     # force multiple tiles: each tile may produce at most 2 target files
     kwargs = dict(curve="morton", target_file_size_bytes=TARGET // 8,
-                  max_files_per_job=2, tile_parallelism=1)
+                  max_files_per_job=2)
+    monkeypatch.setattr(tf, "_REWRITE_THREADS", 1)
 
     real = cluster_mod.Table.new_data_prefix
     calls = {"n": 0}
@@ -819,8 +825,9 @@ def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypat
     before = table_fingerprint(t, spark)
     target, n_outs = _tiling(t, 3, [2, 3])
     cm, calls = _bounds_spy(monkeypatch)
+    monkeypatch.setattr(tf, "_REWRITE_THREADS", 2)
     snap = cluster(t, spark, curve="morton", target_file_size_bytes=target,
-                   max_files_per_job=3, tile_parallelism=2)
+                   max_files_per_job=3)
     assert table_fingerprint(t, spark) == before
     assert snap.summary["tiles"] == 2
     assert snap.summary["files_out"] == 5
@@ -864,7 +871,8 @@ def test_cluster_resume_bounds_only_unfinished_tiles(tmp_path, spark, monkeypatc
     target, n_outs = _tiling(t, 2, [2, 2, 2, 2])
     cp_path = str(tmp_path / "cluster-run.jsonl")
     kwargs = dict(curve="morton", target_file_size_bytes=target,
-                  max_files_per_job=2, tile_parallelism=1)
+                  max_files_per_job=2)
+    monkeypatch.setattr(tf, "_REWRITE_THREADS", 1)
 
     cm, calls = _bounds_spy(monkeypatch)
     real = cm.Table.new_data_prefix

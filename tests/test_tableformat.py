@@ -304,11 +304,11 @@ def test_rewrite_manifests(table, spark):
     assert table.rewrite_manifests() is None  # already compact
 
 
-def test_rewrite_manifests_spark_path(table, spark):
-    """Distributed manifest rewrite (force_spark): executors re-shard the
-    manifest list; driver sees only the part paths and the totals. Result
-    must be indistinguishable from the pandas path: same rows, physical-only
-    commit, scan + changes() unaffected."""
+def test_rewrite_manifests_spark_path(table, spark, monkeypatch):
+    """Distributed manifest rewrite (zero planner threshold): executors
+    re-shard the manifest list; driver sees only the part paths and the
+    totals. Result must be indistinguishable from the pandas path: same
+    rows, physical-only commit, scan + changes() unaffected."""
     for i in range(3):
         table.commit(
             "append",
@@ -316,7 +316,11 @@ def test_rewrite_manifests_spark_path(table, spark):
         )
     s_pre = table.snapshot()
     assert len(s_pre.manifest_paths) == 4
-    snap = table.rewrite_manifests(spark=spark, force_spark=True)
+    import aws_medallion_datalake_spark.sources.tableformat as tf
+
+    with monkeypatch.context() as m:
+        m.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
+        snap = table.rewrite_manifests(spark=spark)
     assert snap is not None and snap.operation == "replace"
     assert snap.summary["spark_path"] == "true"
     assert snap.summary["total_records"] == 260
