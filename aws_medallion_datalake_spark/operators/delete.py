@@ -1,34 +1,35 @@
-"""DELETE FROM ... WHERE (predicate copy-on-write).
+"""The row-level planner: DELETE, UPDATE and REPLACE WHERE in both write
+modes, and the merge-on-read delete family beside it.
 
-Rounds out the write family next to MERGE INTO: the reference's only
-row-removal story is a full overwrite-refresh of the layer
-(/root/reference/scripts/silver_digit_clean.py:127 — SURVEY.md §2.9 T6);
-this is the Iceberg ``DELETE FROM t WHERE p`` copy-on-write semantics.
+The reference's only row-changing story is a full overwrite-refresh of
+the layer (its scripts/silver_digit_clean.py:127 — SURVEY.md §2.9 T6). ``row_level_write`` is the Iceberg ``DELETE FROM t WHERE p`` /
+``UPDATE t SET … WHERE p`` / ``overwrite(expr)`` plan, one planner for
+all three (Spark's DSv2 ``RowLevelOperation``; Iceberg's
+``write.{delete,update}.mode`` pick the mode):
 
-Plan (everything is file-pruned BEFORE any payload IO):
-
-1. **Candidates** — prune the manifest with the predicate against
-   per-file min/max stats: only files whose range overlaps the predicate
-   can hold a matching row. A delete keyed on the cluster column after a
-   cluster run touches a handful of files out of 10^8.
-2. **Containment split** — candidates whose stats PROVE every row
-   matches (min/max inside the predicate, zero nulls — the same proof
-   ``fast_count`` uses) are dropped WHOLESALE: a partition-scoped
-   DELETE over partition-homogeneous files is a metadata-only commit
-   with zero payload IO. Only boundary files continue to:
-3. **Probe** — a column-pruned scan of the boundary files (predicate
-   columns + ``_metadata.file_path`` only) finds the files that
-   ACTUALLY contain matches; stats-overlap false positives drop out
-   here and are never rewritten.
-4. **Rewrite** — read the touched files, keep rows for which the
-   predicate is NOT true (SQL tri-state: NULL predicate rows survive a
-   DELETE), write each read split straight back out — split size is
-   aligned with the target file size, so the keep path preserves
-   clustering and sizing with zero shuffle, exactly like MERGE's keep
-   path.
-5. **Commit** — manifest minus dropped/touched files plus rewritten
-   entries as one ``delete`` snapshot; readers never observe a
-   half-delete, and time travel still reads the pre-delete snapshot.
+1. **Mode** — copy-on-write (default) or merge-on-read, resolved once; a
+   copy-on-write write refuses while merge-on-read deletes are pending.
+   REPLACE WHERE is copy-on-write, and first checks that every incoming
+   row satisfies the predicate, then writes them.
+2. **Candidates** — prune the manifest with the predicate (plus the
+   hidden-partitioning derived predicates) against per-file min/max
+   stats: only files whose range overlaps the predicate can hold a
+   matching row. Everything is file-pruned BEFORE any payload IO.
+3. **Merge-on-read** — one probe reads the candidates through the
+   pending deletes (``Table.live_rows``) and writes Iceberg-v2-style
+   POSITIONAL DELETE files naming the matching rows; an UPDATE also
+   appends the new row versions as a delta. The snapshot shares the
+   parent's manifests: O(matched rows) IO.
+4. **Copy-on-write** — when matching rows are removed (DELETE, REPLACE
+   WHERE), candidates whose stats PROVE every row matches (the proof
+   ``fast_count`` uses) drop WHOLESALE with zero payload IO; one
+   column-pruned probe, grouped by file, finds the other candidates that
+   ACTUALLY hold a match and how many (stats false positives drop out
+   here), and ``rewrite_files`` rewrites exactly those: a DELETE keeps
+   the rows the predicate is NOT true for (SQL tri-state: NULL survives),
+   an UPDATE applies its assignments to predicate-TRUE rows only. The
+   ``tableformat.FileSwap`` commit lands removals, rewrites and inserts
+   as one snapshot.
 
 Predicates use the same ``(col, op, value)`` triples as ``Table.scan``
 so the pruning logic is shared, not reimplemented.
@@ -42,7 +43,6 @@ import time
 from functools import reduce
 from typing import Iterable, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,19 +50,191 @@ from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
     DEFAULTS_PROP,
+    FileSwap,
     Snapshot,
     Table,
     _pred_to_column,
     prefix_files,
     prune_manifest,
+    records,
     rel_path_expr,
     resolve_write_mode,
-    rewrite_files,
     statable_cols,
     write_position_deletes,
+    written_entries,
 )
+from .merge import _modest_write
 from .metascan import _fully_covered_mask
 from .timing import PhaseTimer
+
+# Fewest pending positional-delete files rewrite_delete_files compacts.
+MIN_DELETE_FILES = 2
+
+_OPERATION = {"delete": "delete", "update": "update", "replace_where": "overwrite"}
+
+
+def row_level_write(
+    table: Table,
+    spark: SparkSession,
+    preds: list,
+    *,
+    assignments: Optional[dict] = None,
+    insert: Optional[DataFrame] = None,
+    mode: Optional[str] = None,
+    target_file_size_bytes: int = 128 * 1024 * 1024,
+) -> Optional[Snapshot]:
+    """The plan of the module docstring. ``preds``: the predicate triples;
+    ``assignments``: column name → Column for an UPDATE; ``insert``: the
+    frame a REPLACE WHERE lands, already cast to the table schema.
+    Returns the new snapshot, or None when a DELETE or UPDATE matches no
+    row (no commit)."""
+    stage = (
+        "update" if assignments else "replace_where" if insert is not None
+        else "delete"
+    )
+    meta = table.metadata()
+    mode = resolve_write_mode(
+        meta, stage, "copy-on-write" if insert is not None else mode
+    )
+    if mode == "copy-on-write":
+        table.refuse_pending_deletes(f"a copy-on-write {stage}")
+    t0 = time.time()
+    pt = PhaseTimer()
+    cond = reduce(
+        lambda a, b: a & b, (_pred_to_column(c, op, v) for c, op, v in preds)
+    )
+    hit = F.coalesce(cond, F.lit(False))
+    summ = {"stage": stage}
+
+    def done() -> dict:
+        return dict(
+            summ, duration_sec=round(time.time() - t0, 3), phase_sec=pt.summary()
+        )
+
+    with FileSwap(table, spark, pt) as swap:
+        if insert is not None:
+            with pt.phase("validate"):
+                bad = insert.filter(~hit).limit(1).count()
+            if bad:
+                raise ValueError(
+                    "replace_where validation failed: incoming rows exist "
+                    "outside the predicate"
+                )
+            summ["rows_inserted"] = records(swap.insert(insert))
+            if meta.current_snapshot_id is None:
+                return swap.commit("overwrite", done())
+        summ["predicates"] = [[str(c), str(op), str(v)] for c, op, v in preds]
+        if assignments:
+            summ["set_columns"] = sorted(assignments)
+        with pt.phase("plan"):
+            cand = prune_manifest(
+                swap.man,
+                transforms.extend_predicates(meta.partition_cols, preds),
+                statable_cols(meta),
+            )
+        if not len(cand) and insert is None:
+            return None
+        summ["files_candidate"] = int(len(cand))
+        if mode == "merge-on-read":
+            return _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt)
+
+        if assignments:
+            # predicate-TRUE rows take the assignments, all evaluated
+            # against the OLD row; FALSE and NULL rows pass through
+            cols = table._schema(spark).fieldNames()
+
+            def keep(rows: DataFrame) -> DataFrame:
+                return rows.select(*[
+                    F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
+                    if c in assignments else F.col(c)
+                    for c in cols
+                ])
+
+            boundary = cand
+        else:
+            def keep(rows: DataFrame) -> DataFrame:
+                # the predicate is NOT TRUE (false OR null): NULL survives
+                return rows.filter(~hit)
+
+            with pt.phase("plan"):
+                dfl = set(json.loads(str(meta.properties.get(DEFAULTS_PROP, "{}"))))
+                full = _fully_covered_mask(cand, preds, unsound_cols=dfl)
+            swap.drop(cand.loc[full])
+            summ["files_dropped_wholesale"] = int(full.sum())
+            boundary = cand.loc[~full]
+        touched = boundary.iloc[0:0]
+        if len(boundary):
+            with pt.phase("probe"):
+                hits = (
+                    table.read_data(
+                        spark, [os.path.join(table.root, p) for p in boundary["path"]]
+                    )
+                    .filter(cond)
+                    .select(rel_path_expr(table.root).alias("path"))
+                    .groupBy("path")
+                    .count()
+                    .toPandas()
+                )
+            touched = boundary[boundary["path"].isin(hits["path"])]
+            if assignments:
+                summ["rows_updated"] = int(hits["count"].sum())
+        if insert is None and not len(touched) and len(boundary) == len(cand):
+            return None  # no match, and no file dropped wholesale
+        summ["files_rewritten"] = len(touched)
+        swap.rewrite(touched, keep, target_file_size_bytes)
+        return swap.commit(
+            _OPERATION[stage], done(), rows_key=None if assignments else "rows_deleted"
+        )
+
+
+def _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt):
+    """Step 3: positional deletes for the matching live rows, plus the
+    UPDATE's delta of new row versions; no data file is rewritten.
+
+    The probe reads the candidates THROUGH the pending positional and
+    equality deletes, so a row an earlier merge-on-read commit already
+    suppressed is neither re-deleted nor re-emitted."""
+    with pt.phase("probe"):
+        matched = table.live_rows(
+            spark,
+            table.read_data(spark, [os.path.join(table.root, p) for p in cand["path"]]),
+            table.snapshot(),
+        ).filter(cond)
+        if assignments:
+            matched = matched.persist()
+        new_deletes, n = write_position_deletes(table, matched)
+    summ.update(
+        mode="merge-on-read",
+        files_rewritten=0,
+        delete_files_added=len(new_deletes),
+        **{"rows_updated" if assignments else "rows_deleted": int(n)},
+    )
+    if n == 0:  # stats-overlap false positives only — no commit
+        if assignments:
+            matched.unpersist()
+        return None
+    deletes = table.pending_delete_paths() + new_deletes
+    if not assignments:
+        return table.commit(
+            "delete", cand.iloc[0:0], done(), reuse_manifests=True,
+            delete_paths=deletes,
+        )
+    names = table._schema(spark).fieldNames()
+    key = "image_id" if "image_id" in names else names[0]
+    with pt.phase("rewrite"):
+        delta_prefix = _modest_write(
+            table,
+            matched.select(
+                *[assignments[c].alias(c) if c in assignments else F.col(c) for c in names]
+            ),
+            key,
+        )
+    matched.unpersist()
+    entries = written_entries(table, spark, delta_prefix, pt)
+    summ["delta_prefix"] = os.path.relpath(delta_prefix, table.root) + "/"
+    return table.commit(
+        "update", entries, done(), delta_manifest=True, delete_paths=deletes
+    )
 
 
 def delete_where(
@@ -86,162 +258,13 @@ def delete_where(
     bytes. Scans anti-join the (small) delete set out; a later
     ``apply_deletes`` run materializes them back to copy-on-write form.
     """
-    mode = resolve_write_mode(table.metadata(), "delete", mode)
-    t0 = time.time()
-    pt = PhaseTimer()
     preds = list(predicates)
     if not preds:
         raise ValueError("delete_where with no predicate would truncate the "
                          "table; pass an explicit predicate list")
-    if mode == "copy-on-write":
-        table.refuse_pending_deletes("a copy-on-write delete")
-    meta = table.metadata()
-    man = table.manifest_pdf()
-
-    with pt.phase("plan"):
-        statable = statable_cols(meta)
-        # hidden-partitioning transforms add derived predicates for the
-        # FILE-level prune; the row-level predicate stays the original
-        cand = prune_manifest(
-            man, transforms.extend_predicates(meta.partition_cols, preds), statable
-        )
-    if not len(cand):
-        return None
-
-    cond = reduce(
-        lambda a, b: a & b, (_pred_to_column(c, op, v) for c, op, v in preds)
-    )
-
-    if mode == "merge-on-read":
-        cand_paths = [os.path.join(table.root, p) for p in cand["path"]]
-        return _mor_delete(
-            table, spark, preds, cond, cand_paths, len(cand), t0, pt
-        )
-
-    dropped, touched_rel, new_entries = delete_matching(
-        table, spark, cand, preds, cond, target_file_size_bytes, pt
-    )
-    if not touched_rel and not len(dropped):
-        return None
-
-    removed_rel = touched_rel | set(dropped["path"])
-    touched_man = man[man["path"].isin(removed_rel)]
-    keep_man = man[~man["path"].isin(removed_rel)]
-    new_man = pd.concat([keep_man, new_entries], ignore_index=True)
-
-    touched_records = int(touched_man["record_count"].sum())
-    kept_records = int(new_entries["record_count"].sum()) if len(new_entries) else 0
-    return table.commit(
-        "delete",
-        new_man,
-        {
-            "stage": "delete",
-            "predicates": [[str(c), str(op), str(v)] for c, op, v in preds],
-            "rows_deleted": touched_records - kept_records,
-            "files_rewritten": len(touched_rel),
-            "files_dropped_wholesale": int(len(dropped)),
-            "files_candidate": int(len(cand)),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-    )
-
-
-def delete_matching(
-    table: Table,
-    spark: SparkSession,
-    cand: pd.DataFrame,
-    preds: list,
-    cond,
-    target_file_size_bytes: int,
-    pt: PhaseTimer,
-) -> tuple:
-    """Remove the rows matching ``cond`` (the conjunction of ``preds``)
-    from the stats-pruned candidate files ``cand``: steps 2-4 of the
-    module docstring, shared by ``delete_where`` and ``replace_where``.
-
-    Returns ``(dropped, touched_rel, new_entries)``: the candidate rows
-    dropped wholesale, the paths of the files rewritten, and the
-    manifest entries of their rewrites."""
-    # containment split (same proof as metascan.fast_count): files whose
-    # EVERY row provably matches the predicate drop WHOLESALE — a
-    # partition-scoped DELETE over partition-homogeneous files is then a
-    # metadata-only commit (zero payload IO), not a read-and-rewrite-
-    # nothing job. Only boundary files take the probe + keep-rewrite.
-    with pt.phase("plan"):
-        dfl = set(
-            json.loads(str(table.metadata().properties.get(DEFAULTS_PROP, "{}")))
-        )
-        full_mask = _fully_covered_mask(cand, preds, unsound_cols=dfl)
-        dropped = cand.loc[full_mask]
-        boundary = cand.loc[~full_mask]
-
-    touched_rel: set = set()
-    if len(boundary):
-        with pt.phase("probe"):
-            touched_rel = set(
-                table.read_data(
-                    spark,
-                    [os.path.join(table.root, p) for p in boundary["path"]],
-                )
-                .filter(cond)
-                .select(rel_path_expr(table.root).alias("path"))
-                .distinct()
-                .toPandas()["path"]
-            )
-    # keep rows where the predicate is NOT TRUE (false OR null) — plain
-    # ~cond drops predicate-NULL rows, which DELETE must keep
-    new_entries = rewrite_files(
-        table,
-        spark,
-        boundary[boundary["path"].isin(touched_rel)],
-        lambda rows: rows.filter(~F.coalesce(cond, F.lit(False))),
-        target_file_size_bytes,
-        pt,
-    )
-    return dropped, touched_rel, new_entries
-
-
-def _mor_delete(
-    table: Table,
-    spark: SparkSession,
-    preds: list,
-    cond,
-    cand_paths: list,
-    n_candidates: int,
-    t0: float,
-    pt: PhaseTimer,
-) -> Optional[Snapshot]:
-    """Merge-on-read branch: write positional delete files, touch no data.
-
-    The probe reads the candidates THROUGH the pending-delete filter so a
-    row already deleted by an earlier merge-on-read commit is not
-    re-recorded (duplicate (path, pos) rows are harmless to the anti-join
-    but would double-count ``rows_deleted``)."""
-    with pt.phase("probe"):
-        live = table.live_rows(
-            spark, table.read_data(spark, cand_paths), table.snapshot()
-        )
-        new_delete_rel, n_deleted = write_position_deletes(table, live.filter(cond))
-    if n_deleted == 0:  # stats-overlap false positives only — no commit
-        return None
-    man = table.manifest_pdf()
-    return table.commit(
-        "delete",
-        man.iloc[0:0],
-        {
-            "stage": "delete",
-            "mode": "merge-on-read",
-            "predicates": [[str(c), str(op), str(v)] for c, op, v in preds],
-            "rows_deleted": int(n_deleted),
-            "files_rewritten": 0,
-            "files_candidate": int(n_candidates),
-            "delete_files_added": len(new_delete_rel),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-        reuse_manifests=True,
-        delete_paths=table.pending_delete_paths() + new_delete_rel,
+    return row_level_write(
+        table, spark, preds, mode=mode,
+        target_file_size_bytes=target_file_size_bytes,
     )
 
 
@@ -313,21 +336,16 @@ def equality_delete(
     )
 
 
-def rewrite_delete_files(
-    table: Table,
-    spark: SparkSession,
-    *,
-    min_files: int = 2,
-) -> Optional[Snapshot]:
+def rewrite_delete_files(table: Table, spark: SparkSession) -> Optional[Snapshot]:
     """Minor-compact the pending positional-delete set: many small delete
     files (one per merge-on-read DELETE) → one sorted file. Purely
     physical — the suppressed row set is unchanged, data files untouched,
     manifests shared — but every scan's anti-join build side drops from
     N tiny parquet reads to one. The MoR analogue of
-    ``rewrite_manifests``. No-op below ``min_files``."""
+    ``rewrite_manifests``. No-op below ``MIN_DELETE_FILES``."""
     t0 = time.time()
     pend = table.pending_delete_paths()
-    if len(pend) < min_files:
+    if len(pend) < MIN_DELETE_FILES:
         return None
     dabs = [os.path.join(table.root, p) for p in pend]
     prefix = table.new_data_prefix()
@@ -376,7 +394,8 @@ def apply_deletes(
     pend_eq = table.pending_eq_deletes()
     if not pend and not pend_eq:
         return None
-    man = table.manifest_pdf()
+    swap = FileSwap(table, spark, pt)
+    man = swap.man
     snap = table.snapshot()
     meta = table.metadata()
     touched: set = set()
@@ -462,25 +481,18 @@ def apply_deletes(
     def keep(rows):
         return table.live_rows(spark, rows, snap).drop("__mor_path", "__mor_pos")
 
-    touched_man = man[man["path"].isin(touched)]
-    new_entries = rewrite_files(
-        table, spark, touched_man, keep, target_file_size_bytes, pt
-    )
-    keep_man = man[~man["path"].isin(touched)]
-    new_man = pd.concat([keep_man, new_entries], ignore_index=True)
-    touched_records = int(touched_man["record_count"].sum())
-    kept_records = int(new_entries["record_count"].sum()) if len(new_entries) else 0
-    return table.commit(
-        "replace",
-        new_man,
-        {
-            "stage": "apply_deletes",
-            "rows_removed": touched_records - kept_records,
-            "files_rewritten": len(touched),
-            "delete_files_applied": len(pend) + len(pend_eq),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-        delete_paths=[],
-        eq_deletes=[],
-    )
+    with swap:
+        swap.rewrite(man[man["path"].isin(touched)], keep, target_file_size_bytes)
+        return swap.commit(
+            "replace",
+            {
+                "stage": "apply_deletes",
+                "files_rewritten": len(touched),
+                "delete_files_applied": len(pend) + len(pend_eq),
+                "duration_sec": round(time.time() - t0, 3),
+                "phase_sec": pt.summary(),
+            },
+            rows_key="rows_removed",
+            delete_paths=[],
+            eq_deletes=[],
+        )

@@ -46,7 +46,7 @@ from typing import Mapping, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tableformat import Snapshot, Table
+from ..sources.tableformat import FileSwap, Snapshot, Table, records
 
 MV_QUERY_PROP = "mv.query"
 MV_BASE_PROP = "mv.base"
@@ -327,27 +327,19 @@ def refresh_matview(
         out = _run_query(
             spark, query, base_name, base.scan(spark, snapshot_id=cur)
         ).select(*combiners.keys())
-    entries = mv.write_files(out)
-    n = int(entries["record_count"].sum()) if len(entries) else 0
-    summ = {
-        "stage": "mv_refresh",
-        "refresh": mode,
-        "rows": n,
-        "base_snapshot_id": cur,
-        "base_snapshots_folded": len(chain),
-    }
-    if len(entries):
-        import os
-
-        summ["insert_prefix"] = (
-            os.path.dirname(str(entries.iloc[0]["path"])) + "/"
+    with FileSwap(mv, spark) as swap:
+        swap.drop(swap.man)
+        return swap.commit(
+            "overwrite",
+            {
+                "stage": "mv_refresh",
+                "refresh": mode,
+                "rows": records(swap.insert(out)),
+                "base_snapshot_id": cur,
+                "base_snapshots_folded": len(chain),
+            },
+            properties={MV_BASE_SNAPSHOT_PROP: cur},
         )
-    return mv.commit(
-        "overwrite",
-        entries,
-        summ,
-        properties={MV_BASE_SNAPSHOT_PROP: cur},
-    )
 
 
 def mv_display_frame(

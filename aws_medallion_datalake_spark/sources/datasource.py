@@ -92,6 +92,7 @@ from .tableformat import (
     RENAMES_PROP,
     Table,
     TxnAlreadyCommittedError,
+    logical_adds,
     prune_manifest,
     statable_cols,
 )
@@ -341,12 +342,11 @@ def _filters_to_preds(filters: Sequence[Filter]) -> list:
 
 def _added_rel_paths(table: Table, from_sid: int, to_sid: int) -> list:
     """Relative data-file paths LOGICALLY ADDED in ``(from_sid, to_sid]`` —
-    the pandas planner of ``Table.changes`` (same per-operation rules:
-    append → new files; merge/update → delta prefix only; overwrite →
-    insert prefix only; replace/expire/delete → nothing), usable with no
-    SparkSession. ``from_sid == 0`` means "before the first snapshot":
-    the walk starts at the oldest live ancestor with an empty previous
-    file set (streaming ``startingOffsets=earliest``)."""
+    the pandas planner of ``Table.changes`` (the same ``logical_adds``
+    rule per snapshot), usable with no SparkSession. ``from_sid == 0``
+    means "before the first snapshot": the walk starts at the oldest live
+    ancestor with an empty previous file set (streaming
+    ``startingOffsets=earliest``)."""
     meta = table.metadata()
     by_id = {s.snapshot_id: s for s in meta.snapshots}
     chain: list = []
@@ -381,19 +381,8 @@ def _added_rel_paths(table: Table, from_sid: int, to_sid: int) -> list:
     out: list = []
     for s in chain:
         cur = set(table.manifest_pdf(s.snapshot_id)["path"])
-        added = cur - prev
-        if s.operation == "append":
-            out += sorted(added)
-        elif s.operation == "overwrite":
-            ip = s.summary.get("insert_prefix")
-            out += sorted(p for p in added if not ip or p.startswith(ip))
-        elif s.operation in ("merge", "update"):
-            dp = s.summary.get("delta_prefix")
-            if dp:
-                out += sorted(p for p in added if p.startswith(dp))
-        # replace / expire / delete: physical-only or row-removal — an
-        # append-only incremental feed emits nothing (Iceberg's
-        # streaming-skip-delete-snapshots default)
+        # a delete emits nothing: Iceberg's streaming-skip-delete-snapshots
+        out += logical_adds(s, cur - prev)
         prev = cur
     return out
 

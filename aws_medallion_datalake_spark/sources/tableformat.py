@@ -1534,9 +1534,17 @@ class Table:
                     df = df.repartitionByRange(n, *keys).sortWithinPartitions(
                         *keys
                     )
+        # a failed write, and a write of no rows, leave no prefix behind
         prefix = self.new_data_prefix()
-        self.data_writer(df).parquet(prefix)
-        return self.collect_stats_for_prefix(df.sparkSession, prefix)
+        try:
+            self.data_writer(df).parquet(prefix)
+            entries = self.collect_stats_for_prefix(df.sparkSession, prefix)
+        except BaseException:
+            shutil.rmtree(prefix, ignore_errors=True)
+            raise
+        if not len(entries):
+            shutil.rmtree(prefix, ignore_errors=True)
+        return entries
 
     def add_files(
         self,
@@ -2041,14 +2049,10 @@ class Table:
         SURVEY.md §2.9 T5), planned from manifest diffs instead of
         directory listing.
 
-        Per-snapshot semantics (Iceberg incremental-read rules):
-
-        - ``append``  → all files new to that snapshot's manifest.
-        - ``merge``   → only the delta files (the upserted source rows;
-          the snapshot summary records their prefix). Keep-side rewrites
-          carry no new logical rows.
-        - ``replace`` / ``expire`` → physical reorganization only; no
-          logical change, nothing emitted.
+        Per-snapshot semantics (Iceberg incremental-read rules) are
+        ``logical_adds``: an append emits every added file, an overwrite
+        its inserted files, a merge / update its delta files, and a
+        replace / expire / delete nothing.
 
         A consumer that checkpoints the last snapshot id it processed and
         reads ``changes(last, current)`` sees every appended/upserted row
@@ -2066,51 +2070,17 @@ class Table:
             prev_man = self.manifest_df(spark, from_snapshot_id).select("path")
             for s in chain:
                 cur_man = self.manifest_df(spark, s.snapshot_id).select("path")
-                if s.operation in ("append", "merge", "update", "overwrite"):
+                if s.operation in _ADDING_OPS:
                     added_df = cur_man.join(prev_man, "path", "left_anti")
-                    if s.operation in ("merge", "update"):
-                        delta_prefix = s.summary.get("delta_prefix")
-                        added_df = (
-                            added_df.filter(
-                                F.col("path").startswith(delta_prefix)
-                            )
-                            if delta_prefix
-                            else added_df.limit(0)
-                        )
-                    elif s.operation == "overwrite":
-                        # only the landed frame's files are logical
-                        # inserts; boundary-file keep-rewrites carry
-                        # PRE-EXISTING rows and must not re-emit
-                        ip = s.summary.get("insert_prefix")
-                        if ip:
-                            added_df = added_df.filter(
-                                F.col("path").startswith(ip)
-                            )
-                    new_paths += sorted(r["path"] for r in added_df.collect())
-                # replace / expire: physical-only, nothing emitted
+                    new_paths += logical_adds(
+                        s, [r["path"] for r in added_df.collect()]
+                    )
                 prev_man = cur_man
         else:
             prev_paths = set(self.manifest_pdf(from_snapshot_id)["path"])
             for s in chain:
                 cur_paths = set(self.manifest_pdf(s.snapshot_id)["path"])
-                added = cur_paths - prev_paths
-                if s.operation == "append":
-                    new_paths += sorted(added)
-                elif s.operation == "overwrite":
-                    # the landed frame's files (insert_prefix) are the
-                    # logical payload; boundary keep-rewrites carry
-                    # pre-existing rows; removals surface in changes_cdc
-                    ip = s.summary.get("insert_prefix")
-                    new_paths += sorted(
-                        p for p in added if not ip or p.startswith(ip)
-                    )
-                elif s.operation in ("merge", "update"):
-                    delta_prefix = s.summary.get("delta_prefix")
-                    if delta_prefix:
-                        new_paths += sorted(
-                            p for p in added if p.startswith(delta_prefix)
-                        )
-                # replace / expire: physical-only, nothing emitted
+                new_paths += logical_adds(s, cur_paths - prev_paths)
                 prev_paths = cur_paths
         if not new_paths:
             e = self.empty_relation(spark, meta.schema_ddl)
@@ -2414,7 +2384,7 @@ class Table:
         return reach
 
 
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 
 @contextmanager
@@ -2572,12 +2542,17 @@ def rewrite_units(
     checkpoint already holds (``resumed_units``) is not rewritten: its
     recorded prefix is read back for stats.
 
+    Without a checkpoint nothing can resume a unit, so a failed pass
+    removes every prefix it created, and a unit that writes no row leaves
+    no prefix.
+
     Returns ``(entries, prefixes)``: the new manifest entries in unit
     order and ``{unit_no: prefix}``."""
     resumed = resumed_units(checkpoint, stage, units)
     src = table.metadata().current_snapshot_id if checkpoint is not None else None
     prefixes: dict = {}
     entries: dict = {}
+    made: list = []
 
     def run(n: int) -> None:
         rows = units[n]
@@ -2589,6 +2564,7 @@ def rewrite_units(
             )
             out = plan(n, frame)
             prefix = table.new_data_prefix()
+            made.append(prefix)
             table.data_writer(out).parquet(prefix)
             if checkpoint is not None:
                 checkpoint.unit_done(
@@ -2605,14 +2581,22 @@ def rewrite_units(
                 )
         prefixes[n] = prefix
         entries[n] = written_entries(table, spark, prefix, pt)
+        if checkpoint is None and (entries[n] is None or not len(entries[n])):
+            shutil.rmtree(prefix, ignore_errors=True)
 
-    with pt.phase("rewrite"), ThreadPoolExecutor(
-        max_workers=threads or _REWRITE_THREADS
-    ) as pool:
-        futures = [pool.submit(fn) for fn in alongside]
-        futures += [pool.submit(run, n) for n in units]
-        for f in futures:
-            f.result()  # surface the first failure
+    try:
+        with pt.phase("rewrite"), ThreadPoolExecutor(
+            max_workers=threads or _REWRITE_THREADS
+        ) as pool:
+            futures = [pool.submit(fn) for fn in alongside]
+            futures += [pool.submit(run, n) for n in units]
+            for f in futures:
+                f.result()  # surface the first failure
+    except BaseException:
+        if checkpoint is None:
+            for p in made:
+                shutil.rmtree(p, ignore_errors=True)
+        raise
     frames = [entries[n] for n in sorted(units) if entries[n] is not None]
     if not frames:
         return pd.DataFrame(columns=MANIFEST_BASE_COLS), prefixes
@@ -2645,6 +2629,126 @@ def rewrite_files(
             table, spark, units, lambda _n, rows: keep(rows), pt, alongside=alongside
         )
     return entries if len(entries) else files.iloc[0:0]
+
+
+def records(files: pd.DataFrame) -> int:
+    """Rows held by the manifest rows ``files``."""
+    return int(files["record_count"].sum()) if len(files) else 0
+
+
+class FileSwap:
+    """The one commit under every copy-on-write overwrite: the current
+    manifest minus the files dropped or rewritten, plus their
+    keep-rewrites and the inserted files, as one snapshot.
+
+    Used as a context manager around the whole write: if anything raises
+    before the commit lands, every prefix the call wrote (its inserted
+    files and its keep-rewrites) is removed. A whole-table replace drops
+    ``swap.man`` and inserts the new frame."""
+
+    def __init__(self, table: "Table", spark: SparkSession, pt=None):
+        self.table, self.spark, self.pt = table, spark, pt
+        self.dropped: list = []
+        self.rewritten: list = []
+        self.inserted: Optional[pd.DataFrame] = None
+        self._man: Optional[pd.DataFrame] = None
+        self._landed = False
+
+    def __enter__(self) -> "FileSwap":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None and not self._landed:
+            added = [e for e in (*self.rewritten, self.inserted) if e is not None]
+            for rel in {os.path.dirname(p) for e in added for p in e["path"]}:
+                shutil.rmtree(os.path.join(self.table.root, rel), ignore_errors=True)
+
+    @property
+    def man(self) -> pd.DataFrame:
+        """The current manifest (empty for a table with no snapshot),
+        read on first use."""
+        if self._man is None:
+            empty = self.table.metadata().current_snapshot_id is None
+            self._man = (
+                pd.DataFrame(columns=MANIFEST_BASE_COLS)
+                if empty
+                else self.table.manifest_pdf()
+            )
+        return self._man
+
+    def insert(self, df: DataFrame) -> pd.DataFrame:
+        """Write ``df`` (the ``write`` phase) as the swap's inserted files."""
+        with self.pt.phase("write") if self.pt else nullcontext():
+            self.inserted = self.table.write_files(df)
+        return self.inserted
+
+    def drop(self, files: pd.DataFrame) -> None:
+        """Remove the manifest rows ``files`` wholesale."""
+        self.dropped.append(files)
+
+    def rewrite(self, files: pd.DataFrame, keep, target_bytes: int) -> pd.DataFrame:
+        """Replace the manifest rows ``files`` by ``rewrite_files`` of them."""
+        entries = rewrite_files(
+            self.table, self.spark, files, keep, target_bytes, self.pt
+        )
+        self.dropped.append(files)
+        self.rewritten.append(entries)
+        return entries
+
+    def commit(
+        self, operation: str, summary: dict, rows_key="rows_deleted", **kw
+    ) -> Snapshot:
+        """Commit the swap. ``summary[rows_key]`` (unless ``rows_key`` is
+        None) is the rows removed: those of the dropped and rewritten
+        files minus those their rewrites kept. ``insert_prefix`` names
+        the inserted files, the logical inserts of the snapshot
+        (``logical_adds``). ``kw`` goes to ``Table.commit``."""
+        gone = {p for f in self.dropped for p in f["path"]}
+        frames = [self.man[~self.man["path"].isin(gone)], *self.rewritten]
+        frames += [self.inserted] if self.inserted is not None else []
+        # empty frames are left out of the concat (their dtypes would
+        # leak into the manifest); an empty result keeps the last frame
+        new_man = pd.concat(
+            [f for f in frames if len(f)] or frames[-1:], ignore_index=True
+        )
+        summ = dict(summary)
+        if rows_key:
+            summ[rows_key] = sum(records(f) for f in self.dropped) - sum(
+                records(e) for e in self.rewritten
+            )
+        if self.inserted is not None and len(self.inserted):
+            summ["insert_prefix"] = (
+                os.path.dirname(str(self.inserted.iloc[0]["path"])) + "/"
+            )
+        snap = self.table.commit(operation, new_man, summ, **kw)
+        self._landed = True
+        return snap
+
+
+# operations whose added files can hold logically new rows
+_ADDING_OPS = ("append", "overwrite", "merge", "update")
+
+
+def logical_adds(s: Snapshot, added) -> list:
+    """The files among ``added`` (paths new to snapshot ``s``'s manifest)
+    that hold logically new rows, sorted: the one incremental-read rule
+    under ``Table.changes`` and the ``medallion`` streaming source.
+
+    An append adds rows in all of them; an overwrite in its
+    ``insert_prefix`` (all when unset), since its boundary keep-rewrites
+    carry pre-existing rows; a merge or update only in its
+    ``delta_prefix`` (none when unset: a copy-on-write update's rewrites
+    hold old rows). Replace / expire / delete add none: physical-only or
+    row removal, which surfaces in ``changes_cdc``."""
+    if s.operation == "append":
+        prefix = ""
+    elif s.operation == "overwrite":
+        prefix = s.summary.get("insert_prefix") or ""
+    elif s.operation in ("merge", "update") and s.summary.get("delta_prefix"):
+        prefix = s.summary["delta_prefix"]
+    else:
+        return []
+    return sorted(p for p in added if p.startswith(prefix))
 
 
 def rel_path_expr(root: str):

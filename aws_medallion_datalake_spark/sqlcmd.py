@@ -102,7 +102,7 @@ from .operators import (
     update_where,
 )
 from .sources.metatables import column_stats_df
-from .sources.tableformat import Snapshot, Table
+from .sources.tableformat import FileSwap, Snapshot, Table, records
 
 _LIT = r"(?:'[^']*'|-?\d+(?:\.\d+)?)"
 _ID = r"[A-Za-z_][A-Za-z0-9_]*"
@@ -635,8 +635,6 @@ class EngineSQL:
                 "INSERT OVERWRITE replaces by partition or table"
             )
         t = self._table(name)
-        if overwrite:
-            t.refuse_pending_deletes("INSERT OVERWRITE")
         self._register_all()
         df = self.spark.sql(self._rewrite_time_travel(query.strip()))
         from pyspark.sql.types import StructType
@@ -670,19 +668,16 @@ class EngineSQL:
 
                 snap = overwrite_partitions(t, self.spark, out)
                 return self._summary_df("INSERT OVERWRITE", name, snap)
-            entries = t.write_files(out)
-            n = int(entries["record_count"].sum()) if len(entries) else 0
+            t.refuse_pending_deletes("INSERT OVERWRITE")
             # operation "overwrite", not "replace": this commit changes
             # LOGICAL rows, so changes()/changes_cdc() must emit it
             # ("replace" is reserved for physical-only rewrites)
-            summ = {"stage": "insert_overwrite", "rows_inserted": n}
-            if len(entries):
-                import os as _os
-
-                summ["insert_prefix"] = (
-                    _os.path.dirname(str(entries.iloc[0]["path"])) + "/"
+            with FileSwap(t, self.spark) as swap:
+                swap.drop(swap.man)
+                n = records(swap.insert(out))
+                snap = swap.commit(
+                    "overwrite", {"stage": "insert_overwrite", "rows_inserted": n}
                 )
-            snap = t.commit("overwrite", entries, summ)
             return self._summary_df("INSERT OVERWRITE", name, snap)
         entries = t.write_files(out)
         n = int(entries["record_count"].sum()) if len(entries) else 0

@@ -37,6 +37,9 @@ def table(tmp_path, spark):
     return t
 
 
+_JAN2 = ("ingest_date", "=", "2024-01-02")
+
+
 def _fresh_day(spark, n=30):
     """A refresh frame that lives entirely on one existing date."""
     return (
@@ -228,10 +231,27 @@ def test_overwrite_partitions_tuple_cap_leaves_no_data_prefix(
     assert table.snapshot().snapshot_id == head
 
 
-@pytest.mark.parametrize("where", ["plan", "commit"])
+@pytest.mark.parametrize(
+    "where", ["plan", "commit", "commit-mixed", "commit-replace_where"]
+)
 def test_overwrite_partitions_failure_before_commit_leaves_no_data_prefix(
-    table, spark, monkeypatch, where
+    table, spark, tmp_path, monkeypatch, where
 ):
+    """A failure before the commit lands removes every prefix the call
+    wrote. ``-mixed``: every file of the table spans all dates, so the
+    overwrite also keep-rewrites them; ``-replace_where``: the same
+    failure under REPLACE WHERE, which keep-rewrites the same files."""
+    if where.startswith("commit-"):
+        table = Table.create(
+            str(tmp_path / "mixed"), SCHEMA, partition_cols=["ingest_date"],
+            stats_cols=STATS,
+        )
+        table.commit(
+            "append", table.write_files(generate_images(spark, 80, n_files=4))
+        )
+        man = table.manifest_pdf()
+        assert (man["min_ingest_date"] < man["max_ingest_date"]).all()
+
     def boom(*args, **kwargs):
         raise RuntimeError(where)
 
@@ -242,7 +262,10 @@ def test_overwrite_partitions_failure_before_commit_leaves_no_data_prefix(
     prefixes = set(os.listdir(table.data_dir))
     head = table.snapshot().snapshot_id
     with pytest.raises(RuntimeError, match=where):
-        overwrite_partitions(table, spark, _fresh_day(spark, 8))
+        if where.endswith("replace_where"):
+            replace_where(table, spark, _fresh_day(spark, 8), [_JAN2])
+        else:
+            overwrite_partitions(table, spark, _fresh_day(spark, 8))
     assert set(os.listdir(table.data_dir)) == prefixes
     assert table.snapshot().snapshot_id == head
 
@@ -299,12 +322,6 @@ def test_replace_where_validates_incoming_rows(table, spark):
         replace_where(
             table, spark, stray, [("ingest_date", "=", "2024-01-02")]
         )
-    # validate=False lands them (Iceberg overwrite(expr) semantics)
-    snap = replace_where(
-        table, spark, stray, [("ingest_date", "=", "2024-01-02")],
-        validate=False,
-    )
-    assert snap.summary["rows_inserted"] == 8
 
 
 def test_replace_where_non_partition_predicate(table, spark):

@@ -248,3 +248,62 @@ def test_write_mode_table_properties(tmp_path, spark):
         mode="copy-on-write",
     )
     assert "mode" not in s4.summary or s4.summary["mode"] != "merge-on-read"
+
+
+# (w values per file) for the mode matrix, against ``w between 10 and 20``:
+# fully covered, boundary (a match, a miss and a predicate-NULL row),
+# stats false positive, pruned
+_MATRIX_FILES = [[10, 11, 12], [15, 25, None], [5, 30], [40]]
+
+
+def _matrix_table(tmp_path, spark):
+    t = Table.create(str(tmp_path / "mx"), SCHEMA, stats_cols=["w", "image_id"])
+    i = 0
+    for ws in _MATRIX_FILES:
+        w = F.lit(None).cast("int")
+        for j, v in enumerate(ws):
+            w = F.when(F.col("id_n") == i + j, F.lit(v).cast("int")).otherwise(w)
+        df = generate_images(spark, len(ws), n_files=1, start=i)
+        df = df.withColumn("id_n", F.substring("image_id", 5, 12).cast("int"))
+        t.commit("append", t.write_files(df.withColumn("w", w).drop("id_n")))
+        i += len(ws)
+    return t
+
+
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_row_level_mode_matrix(tmp_path, spark, op, mode):
+    """DELETE and UPDATE give the same content and counts in both write
+    modes (merge-on-read read before and after ``apply_deletes``) over a
+    fully covered file, a boundary file, a stats false positive and a
+    predicate-NULL row, which DELETE keeps and UPDATE leaves alone."""
+    t = _matrix_table(tmp_path, spark)
+    rows = {r["image_id"]: (r["w"], r["caption"]) for r in t.scan(spark).collect()}
+    hit = {k for k, (w, _) in rows.items() if w is not None and 10 <= w <= 20}
+    assert len(hit) == 4 and any(w is None for w, _ in rows.values())
+    preds = [("w", "between", (10, 20))]
+    if op == "delete":
+        snap = delete_where(t, spark, preds, mode=mode)
+        want = {k: v for k, v in rows.items() if k not in hit}
+        assert int(snap.summary["rows_deleted"]) == 4
+    else:
+        snap = update_where(t, spark, preds, {"caption": "'upd'"}, mode=mode)
+        want = {k: (w, "upd" if k in hit else c) for k, (w, c) in rows.items()}
+        assert int(snap.summary["rows_updated"]) == 4
+    assert int(snap.summary["files_candidate"]) == 3
+    if mode == "copy-on-write":
+        # the false positive is probed, never rewritten; DELETE drops the
+        # fully covered file wholesale, UPDATE rewrites it
+        assert int(snap.summary["files_rewritten"]) == (1 if op == "delete" else 2)
+        if op == "delete":
+            assert int(snap.summary["files_dropped_wholesale"]) == 1
+
+    def scanned():
+        return {
+            r["image_id"]: (r["w"], r["caption"]) for r in t.scan(spark).collect()
+        }
+
+    assert scanned() == want
+    if mode == "merge-on-read":
+        assert apply_deletes(t, spark) is not None
+        assert scanned() == want
