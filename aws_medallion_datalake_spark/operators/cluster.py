@@ -45,7 +45,8 @@ Spark-first execution plan (ONE full pass over the payload per tile):
    no sampling, no skewed modulo collisions.
 4. **Sort within partitions + write** — files come out key-clustered and
    ≈target-sized; the runner collects each tile's stats as its write
-   lands, and all tiles commit as ONE replace snapshot.
+   lands, and all tiles commit as ONE replace snapshot, a
+   ``tableformat.FileSwap`` delta that keeps appends landed meanwhile.
 
 Skew: low bits of the composite bucket key carry a per-row salt, so a hot
 single key (the phash hot-bucket tail) is split across adjacent buckets
@@ -66,6 +67,7 @@ from __future__ import annotations
 import re
 import threading
 import time
+from contextlib import nullcontext
 from typing import Optional
 
 import numpy as np
@@ -78,6 +80,7 @@ from ..functions.udfs import hilbert64_udf, morton64_expr
 from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
+    FileSwap,
     Snapshot,
     Table,
     read_split_size,
@@ -341,7 +344,6 @@ def cluster(
     cols: Optional[tuple] = None,
     target_file_size_bytes: int = 128 * 1024 * 1024,
     max_files_per_job: int = 4096,
-    snapshot_id: Optional[int] = None,
     checkpoint: Optional[RunCheckpoint] = None,
     mode: str = "auto",
     predicates: Optional[list] = None,
@@ -410,8 +412,9 @@ def cluster(
     table.refuse_pending_deletes("clustering")
     t0 = time.time()
     pt = PhaseTimer()
+    swap = FileSwap(table, spark, pt)
     meta = table.metadata()
-    man = table.manifest_pdf(snapshot_id)
+    man = swap.man
 
     import json as _json
 
@@ -493,10 +496,6 @@ def cluster(
         )
 
     tiles = _plan_tiles(work, target_file_size_bytes, max_files_per_job)
-    if not tiles:  # empty table: nothing to rewrite
-        return table.commit(
-            "replace", man, {"stage": "cluster", "noop": True, "tiles": 0}
-        )
     tile_rows = [work.loc[idxs] for idxs in tiles]
     n_outs = [
         max(1, round(int(r["file_size_bytes"].sum()) / target_file_size_bytes))
@@ -597,26 +596,27 @@ def cluster(
         _SORT_SPEC_PROP: spec,
         _SORTED_PREFIX_PROP: _json.dumps(sorted(set(live_old) | set(new_rel))),
     }
-    full_manifest = (
-        pd.concat([keep, entries], ignore_index=True) if len(keep) else entries
-    )
-    snap = table.commit(
-        "replace",
-        full_manifest,
-        {
-            "stage": "cluster",
-            "mode": "incremental" if incremental else "full",
-            "curve": curve,
-            "cluster_cols": list(cols),
-            "files_in": int(len(work)),
-            "files_kept": int(len(keep)),
-            "files_out": int(len(entries)),
-            "tiles": len(tiles),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-        properties=props,
-    )
+    swap.drop(work)
+    swap.add(entries)
+    # a checkpointed pass keeps its prefixes on failure, so it can resume
+    with swap if checkpoint is None else nullcontext():
+        snap = swap.commit(
+            "replace",
+            {
+                "stage": "cluster",
+                "mode": "incremental" if incremental else "full",
+                "curve": curve,
+                "cluster_cols": list(cols),
+                "files_in": int(len(work)),
+                "files_kept": int(len(keep)),
+                "files_out": int(len(entries)),
+                "tiles": len(tiles),
+                "duration_sec": round(time.time() - t0, 3),
+                "phase_sec": pt.summary(),
+            },
+            rows_key=None,
+            properties=props,
+        )
     for bc in broadcasts:
         bc.unpersist()
     if pruned_cache is not None:

@@ -15,15 +15,17 @@ data-file rewrite shares: it runs them concurrently (up to
 ``parallelism`` jobs), collects each batch's stats as its write lands,
 and with a ``checkpoint`` records per-batch lineage (plus the batch's
 ``groups`` and ``partitions``) so a killed run rewrites only the
-remaining batches and commits the identical snapshot content.
+remaining batches and commits the identical snapshot content. The
+commit is a ``tableformat.FileSwap`` delta (rewritten files out, batch
+outputs in), so an append that lands during the rewrite is kept.
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import nullcontext
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from ..plans.binpack import (
@@ -35,6 +37,7 @@ from ..plans.binpack import (
 from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
+    FileSwap,
     Snapshot,
     Table,
     rel_path_expr,
@@ -172,6 +175,7 @@ def compact(
     table.refuse_pending_deletes("compaction")
     t0 = time.time()
     pt = PhaseTimer()
+    swap = FileSwap(table, spark, pt)
     with pt.phase("plan"):
         from ..sources import transforms
         from ..sources.tableformat import (
@@ -187,13 +191,13 @@ def compact(
             else []
         )
         statable = statable_cols(meta)
-        n_entries = table.manifest_rows()
+        n_entries = table.manifest_rows(swap.base)
         if n_entries > SPARK_MANIFEST_THRESHOLD:
             # distributed planning: the FFD loop runs per-partition on
             # executors; the driver gets one row per GROUP, not per file.
             # Predicate scoping filters the manifest RELATION — surviving
             # paths never land on the driver.
-            man_df = table.manifest_df(spark)
+            man_df = table.manifest_df(spark, swap.base)
             if prune_preds:
                 man_df = man_df.filter(
                     manifest_prune_cond(set(man_df.columns), prune_preds, statable)
@@ -204,7 +208,7 @@ def compact(
                 min_input_files=min_input_files,
             )
         else:
-            man_scope = table.manifest_pdf()
+            man_scope = swap.man
             if prune_preds:
                 man_scope = prune_manifest(man_scope, prune_preds, statable)
             plan = plan_compaction(
@@ -226,9 +230,9 @@ def compact(
         batches += [pool_groups[i : i + k] for i in range(0, len(pool_groups), k)]
     batches += [[g] for g in singles]
 
-    # the batches' manifest rows and the commit manifest: pandas on either
-    # planner path, loaded once, here
-    man = table.manifest_pdf()
+    # the batches' manifest rows: pandas on either planner path (the
+    # swap's base manifest, read once)
+    man = swap.man
     by_path = man.set_index("path", drop=False)
     # Concurrent batch jobs keep many executors busy on a real cluster
     # (Iceberg's RewriteDataFiles ships 5 by default); more driver threads
@@ -252,21 +256,23 @@ def compact(
     )
 
     rewritten = plan.rewritten_paths
-    keep = man[~man["path"].isin(rewritten)]
-    new_man = pd.concat([keep, new_entries], ignore_index=True)
+    swap.drop(man[man["path"].isin(rewritten)])
+    swap.add(new_entries)
+    # a checkpointed pass keeps its prefixes on failure, so it can resume;
     # residual of duration_sec minus the phases = commit/manifest IO
-    snap = table.commit(
-        "replace",
-        new_man,
-        {
-            "stage": "compact",
-            **plan.summary(),
-            "batches": len(batches),
-            "rewritten_files": len(rewritten),
-            "duration_sec": round(time.time() - t0, 3),
-            "phase_sec": pt.summary(),
-        },
-    )
+    with swap if checkpoint is None else nullcontext():
+        snap = swap.commit(
+            "replace",
+            {
+                "stage": "compact",
+                **plan.summary(),
+                "batches": len(batches),
+                "rewritten_files": len(rewritten),
+                "duration_sec": round(time.time() - t0, 3),
+                "phase_sec": pt.summary(),
+            },
+            rows_key=None,
+        )
     if checkpoint is not None:
         checkpoint.stage_done("compact", dict(snap.summary, snapshot_id=snap.snapshot_id))
     return snap

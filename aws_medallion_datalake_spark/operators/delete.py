@@ -136,7 +136,7 @@ def row_level_write(
             return None
         summ["files_candidate"] = int(len(cand))
         if mode == "merge-on-read":
-            return _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt)
+            return _merge_on_read(table, spark, swap, cand, cond, assignments, summ, done)
 
         if assignments:
             # predicate-TRUE rows take the assignments, all evaluated
@@ -187,22 +187,24 @@ def row_level_write(
         )
 
 
-def _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt):
+def _merge_on_read(table, spark, swap, cand, cond, assignments, summ, done):
     """Step 3: positional deletes for the matching live rows, plus the
     UPDATE's delta of new row versions; no data file is rewritten.
 
     The probe reads the candidates THROUGH the pending positional and
     equality deletes, so a row an earlier merge-on-read commit already
     suppressed is neither re-deleted nor re-emitted."""
+    pt = swap.pt
     with pt.phase("probe"):
         matched = table.live_rows(
             spark,
             table.read_data(spark, [os.path.join(table.root, p) for p in cand["path"]]),
-            table.snapshot(),
+            swap.snapshot,
         ).filter(cond)
         if assignments:
             matched = matched.persist()
         new_deletes, n = write_position_deletes(table, matched)
+    swap.add_deletes(new_deletes)
     summ.update(
         mode="merge-on-read",
         files_rewritten=0,
@@ -213,12 +215,8 @@ def _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt):
         if assignments:
             matched.unpersist()
         return None
-    deletes = table.pending_delete_paths() + new_deletes
     if not assignments:
-        return table.commit(
-            "delete", cand.iloc[0:0], done(), reuse_manifests=True,
-            delete_paths=deletes,
-        )
+        return swap.commit("delete", done(), rows_key=None)
     names = table._schema(spark).fieldNames()
     key = "image_id" if "image_id" in names else names[0]
     with pt.phase("rewrite"):
@@ -230,11 +228,9 @@ def _merge_on_read(table, spark, cand, cond, assignments, summ, done, pt):
             key,
         )
     matched.unpersist()
-    entries = written_entries(table, spark, delta_prefix, pt)
+    swap.add(written_entries(table, spark, delta_prefix, pt))
     summ["delta_prefix"] = os.path.relpath(delta_prefix, table.root) + "/"
-    return table.commit(
-        "update", entries, done(), delta_manifest=True, delete_paths=deletes
-    )
+    return swap.commit("update", done(), rows_key=None)
 
 
 def delete_where(
@@ -293,8 +289,8 @@ def equality_delete(
     Returns the new snapshot, or None for an empty table/value set.
     """
     cols = list(cols)
-    meta = table.metadata()
-    if meta.current_snapshot_id is None:
+    swap = FileSwap(table, spark)
+    if swap.base is None:
         return None
     fields = {f.name for f in table._schema(spark).fields}
     missing = [c for c in cols if c not in fields]
@@ -308,32 +304,30 @@ def equality_delete(
         # cast to the table's column type so the scan-side join matches
         tgt_type = {f.name: f.dataType for f in table._schema(spark).fields}[cols[0]]
         values = values.select(F.col(cols[0]).cast(tgt_type).alias(cols[0]))
-    prefix = table.new_data_prefix()
-    vals = values.select(*cols).distinct()
-    vals.coalesce(1).write.mode("append").parquet(prefix)
-    new_rel, n_values = prefix_files(table, prefix)
-    if n_values == 0:
-        return None
-    as_of = int(meta.current_snapshot_id)
-    man = table.manifest_pdf()
-    return table.commit(
-        "delete",
-        man.iloc[0:0],
-        {
-            "stage": "delete",
-            "mode": "equality",
-            "equality_cols": cols,
-            "delete_values": int(n_values),
-            "files_rewritten": 0,
-            "duration_sec": round(time.time() - t0, 3),
-        },
-        reuse_manifests=True,
-        eq_deletes=table.pending_eq_deletes()
-        + [
-            {"path": p, "cols": cols, "as_of_snapshot_id": as_of}
-            for p in new_rel
-        ],
-    )
+    with swap:
+        prefix = table.new_data_prefix()
+        values.select(*cols).distinct().coalesce(1).write.mode("append").parquet(prefix)
+        new_rel, n_values = prefix_files(table, prefix)
+        if n_values == 0:
+            return None
+        swap.add_deletes(
+            equality=[
+                {"path": p, "cols": cols, "as_of_snapshot_id": swap.base}
+                for p in new_rel
+            ]
+        )
+        return swap.commit(
+            "delete",
+            {
+                "stage": "delete",
+                "mode": "equality",
+                "equality_cols": cols,
+                "delete_values": int(n_values),
+                "files_rewritten": 0,
+                "duration_sec": round(time.time() - t0, 3),
+            },
+            rows_key=None,
+        )
 
 
 def rewrite_delete_files(table: Table, spark: SparkSession) -> Optional[Snapshot]:
@@ -344,7 +338,8 @@ def rewrite_delete_files(table: Table, spark: SparkSession) -> Optional[Snapshot
     N tiny parquet reads to one. The MoR analogue of
     ``rewrite_manifests``. No-op below ``MIN_DELETE_FILES``."""
     t0 = time.time()
-    pend = table.pending_delete_paths()
+    swap = FileSwap(table, spark)
+    pend = list(swap.snapshot.delete_paths) if swap.snapshot else []
     if len(pend) < MIN_DELETE_FILES:
         return None
     dabs = [os.path.join(table.root, p) for p in pend]
@@ -359,19 +354,18 @@ def rewrite_delete_files(table: Table, spark: SparkSession) -> Optional[Snapshot
         .parquet(prefix)
     )
     new_rel, _ = prefix_files(table, prefix)
-    man = table.manifest_pdf()
-    return table.commit(
-        "replace",
-        man.iloc[0:0],
-        {
-            "stage": "rewrite_delete_files",
-            "delete_files_in": len(pend),
-            "delete_files_out": len(new_rel),
-            "duration_sec": round(time.time() - t0, 3),
-        },
-        reuse_manifests=True,
-        delete_paths=new_rel,
-    )
+    with swap:
+        swap.add_deletes(new_rel, retire=pend)
+        return swap.commit(
+            "replace",
+            {
+                "stage": "rewrite_delete_files",
+                "delete_files_in": len(pend),
+                "delete_files_out": len(new_rel),
+                "duration_sec": round(time.time() - t0, 3),
+            },
+            rows_key=None,
+        )
 
 
 def apply_deletes(
@@ -390,14 +384,13 @@ def apply_deletes(
     suppressed rows)."""
     t0 = time.time()
     pt = PhaseTimer()
-    pend = table.pending_delete_paths()
-    pend_eq = table.pending_eq_deletes()
+    swap = FileSwap(table, spark, pt)
+    snap = swap.snapshot
+    pend = list(snap.delete_paths) if snap else []
+    pend_eq = list(snap.eq_deletes) if snap else []
     if not pend and not pend_eq:
         return None
-    swap = FileSwap(table, spark, pt)
     man = swap.man
-    snap = table.snapshot()
-    meta = table.metadata()
     touched: set = set()
     with pt.phase("plan"):
         if pend:
@@ -411,78 +404,48 @@ def apply_deletes(
                 .distinct()
                 .collect()
             )
-        if pend_eq:
-            # equality: probe which covered files actually hold a matching
-            # key — candidates are (files at as_of ∩ current), stats-pruned
-            # to the value range when the column carries min/max stats,
-            # then a column-pruned semi-join finds real matches
-            from collections import defaultdict
-
-            groups: dict = defaultdict(list)
-            for e in pend_eq:
-                groups[(tuple(e["cols"]), int(e["as_of_snapshot_id"]))].append(
-                    e["path"]
-                )
-            statable = statable_cols(meta)
-            cur = set(man["path"])
-            rel = rel_path_expr(table.root)
-            for (cols, as_of), dpaths in groups.items():
-                vals = (
-                    spark.read.parquet(
-                        *[os.path.join(table.root, p) for p in dpaths]
+        # equality: probe which covered files actually hold a matching
+        # key — candidates are (files at as_of ∩ current), stats-pruned
+        # to the value range when the column carries min/max stats,
+        # then a column-pruned semi-join finds real matches
+        statable = statable_cols(table.metadata())
+        rel = rel_path_expr(table.root)
+        for cols, vals, covered in table.eq_delete_scopes(
+            spark, snap, set(man["path"])
+        ):
+            cand = man[man["path"].isin(covered)]
+            if len(cols) == 1 and cols[0] in statable and len(cand):
+                b = vals.agg(
+                    F.min(cols[0]).alias("lo"), F.max(cols[0]).alias("hi")
+                ).first()
+                if b["lo"] is not None:
+                    cand = prune_manifest(
+                        cand,
+                        [(cols[0], "between", (b["lo"], b["hi"]))],
+                        statable,
                     )
-                    .select(*cols)
-                    .distinct()
+            if not len(cand):
+                continue
+            probe = (
+                table.read_data(
+                    spark,
+                    [os.path.join(table.root, p) for p in cand["path"]],
                 )
-                covered = set(table.manifest_pdf(as_of)["path"]) & cur
-                cand = man[man["path"].isin(covered)]
-                if len(cols) == 1 and cols[0] in statable and len(cand):
-                    b = vals.agg(
-                        F.min(cols[0]).alias("lo"), F.max(cols[0]).alias("hi")
-                    ).first()
-                    if b["lo"] is not None:
-                        cand = prune_manifest(
-                            cand,
-                            [(cols[0], "between", (b["lo"], b["hi"]))],
-                            statable,
-                        )
-                if not len(cand):
-                    continue
-                probe = (
-                    table.read_data(
-                        spark,
-                        [os.path.join(table.root, p) for p in cand["path"]],
-                    )
-                    .select(*cols, rel.alias("__p"))
-                    .join(F.broadcast(vals), list(cols), "left_semi")
-                    .select("__p")
-                    .distinct()
-                )
-                touched.update(r["__p"] for r in probe.collect())
-    if not touched:
-        # stats/probe found nothing to rewrite (e.g. equality values that
-        # match no row) — clear the pending sets with a metadata-only commit
-        return table.commit(
-            "replace",
-            man.iloc[0:0],
-            {
-                "stage": "apply_deletes",
-                "rows_removed": 0,
-                "files_rewritten": 0,
-                "delete_files_applied": len(pend) + len(pend_eq),
-                "duration_sec": round(time.time() - t0, 3),
-                "phase_sec": pt.summary(),
-            },
-            reuse_manifests=True,
-            delete_paths=[],
-            eq_deletes=[],
-        )
+                .select(*cols, rel.alias("__p"))
+                .join(F.broadcast(vals), list(cols), "left_semi")
+                .select("__p")
+                .distinct()
+            )
+            touched.update(r["__p"] for r in probe.collect())
 
     def keep(rows):
         return table.live_rows(spark, rows, snap).drop("__mor_path", "__mor_pos")
 
+    # with nothing touched (e.g. equality values that match no row) the
+    # commit only clears the pending sets
     with swap:
         swap.rewrite(man[man["path"].isin(touched)], keep, target_file_size_bytes)
+        swap.add_deletes(retire=pend + [e["path"] for e in pend_eq])
         return swap.commit(
             "replace",
             {
@@ -493,6 +456,4 @@ def apply_deletes(
                 "phase_sec": pt.summary(),
             },
             rows_key="rows_removed",
-            delete_paths=[],
-            eq_deletes=[],
         )

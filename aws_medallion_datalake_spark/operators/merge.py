@@ -47,13 +47,18 @@ its last step.
    - *copy-on-write*: ``tableformat.rewrite_files`` rewrites the files
      holding affected or NMBS rows, keeping the rows whose key is not
      affected and that are not NMBS rows, in bounded groups beside the
-     delta write; one ``merge`` snapshot swaps old files for new.
+     delta write.
    - *merge-on-read*: positional delete files name the affected and NMBS
      rows (``write_position_deletes``), and the delta lands as a delta
      manifest with the grown delete set — O(changes) IO, the rewrite
      deferred to ``apply_deletes``. After a cluster run source keys
      scatter over the curve and a copy-on-write merge rewrites most
      files; this mode does not.
+
+   Both modes commit one ``merge`` snapshot through
+   ``tableformat.FileSwap``, created before the probe: a delta against
+   the snapshot the probe read, which keeps any append that lands
+   meanwhile and refuses to rebase over anything else.
 
 The source key set is broadcast EXPLICITLY (``F.broadcast``) up to
 ``_BROADCAST_KEYS`` keys: relying on AQE to convert the keep anti-join
@@ -87,7 +92,6 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Optional
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -98,13 +102,14 @@ from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
     FOOTER_SPARK_THRESHOLD,
+    FileSwap,
     Snapshot,
     Table,
     _pred_to_column,
     _strip_scheme,
     prune_manifest,
+    records,
     resolve_write_mode,
-    rewrite_files,
     statable_cols,
     write_position_deletes,
     written_entries,
@@ -290,256 +295,241 @@ def merge_into(
         return F.broadcast(df) if n_src_keys <= _BROADCAST_KEYS else df
 
     matched = nm = aff = None
-    try:
-        key_frame = (
-            local_frame(spark, {key: held})
-            if held is not None
-            else src_key_counts.select(key)
-        )
-        man = table.manifest_pdf()
-
-        # probe: the live rows of the candidate files against the source
-        # keys. Without NMBS only files whose key range meets the SOURCE
-        # key range can hold a match: at 10^12 rows, recency-biased
-        # (monotone) merge keys then scan a sliver of the key column, while
-        # uniform keys prune nothing, which is the honest cost.
-        preds: list = []
-        cand = man
-        if not cl.nmbs and src_lo is not None:
-            statable = statable_cols(meta)
-            stat_keys = transforms.identity_names(meta.partition_cols) + list(
-                meta.stats_cols
+    with FileSwap(table, spark, pt) as swap:
+        try:
+            key_frame = (
+                local_frame(spark, {key: held})
+                if held is not None
+                else src_key_counts.select(key)
             )
-            if key in stat_keys and key in statable:
-                preds = [(key, "between", (src_lo, src_hi))]
-                cand = prune_manifest(
-                    man,
-                    transforms.extend_predicates(meta.partition_cols, preds),
-                    statable,
+            man = swap.man
+
+            # probe: the live rows of the candidate files against the source
+            # keys. Without NMBS only files whose key range meets the SOURCE
+            # key range can hold a match: at 10^12 rows, recency-biased
+            # (monotone) merge keys then scan a sliver of the key column, while
+            # uniform keys prune nothing, which is the honest cost.
+            preds: list = []
+            cand = man
+            if not cl.nmbs and src_lo is not None:
+                statable = statable_cols(meta)
+                stat_keys = transforms.identity_names(meta.partition_cols) + list(
+                    meta.stats_cols
                 )
-        # the matched rows the matched action applies to (None: all of them)
-        aff_cond = None
-        if cl.matched == "ignore":
-            aff_cond = F.lit(False)
-        elif cl.matched_condition:
-            aff_cond = F.coalesce(F.expr(cl.matched_condition), F.lit(False))
-        if len(cand):
-            live = table.live_rows(
-                spark,
-                table.read_data(
-                    spark,
-                    [os.path.join(table.root, p) for p in cand["path"]],
-                    meta=meta,
-                ),
-                table.snapshot(),
-            )
-            for c, op, v in preds:
-                live = live.filter(_pred_to_column(c, op, v))
-            refs = set(
-                _cond_tgt_cols(cl.matched_condition, cols)
-                + _cond_tgt_cols(cl.nmbs_condition, cols)
-            )
-            probe = live.select(
-                key,
-                *[c for c in cols if c in refs and c != key],
-                "__mor_path",
-                *(["__mor_pos"] if mor else []),
-            )
-            src_refs = _cond_src_cols(cl.matched_condition)
-            side = (
-                src.select(key, *[F.col(c).alias(f"src_{c}") for c in src_refs])
-                if src_refs
-                else key_frame
-            )
-            if cl.nmbs:
-                probe = probe.join(
-                    bc(side.withColumn("__in_src", F.lit(True))), key, "left"
-                )
-                matched = probe.filter(F.col("__in_src").isNotNull())
-                nm = probe.filter(F.col("__in_src").isNull())
-                if cl.nmbs_condition:
-                    nm = nm.filter(F.expr(cl.nmbs_condition))
-            else:
-                matched = probe.join(bc(side), key, "inner")
-            if held is None:
-                matched = matched.persist()
-            aff = matched if aff_cond is None else matched.filter(aff_cond)
-
-        hits = aff_hits = None
-        if matched is not None and held is not None:
-            # one row per matched key: the files holding its affected rows
-            path = F.col("__mor_path")
-            if aff_cond is not None:
-                path = F.when(aff_cond, path)
-            with pt.phase("probe"):
-                hits = (
-                    matched.groupBy(key)
-                    .agg(F.collect_set(path).alias("paths"))
-                    .toArrow()
-                )
-            aff_hits = hits.filter(
-                pc.greater(pc.list_value_length(hits.column("paths")), 0)
-            )
-
-        def key_set(affected: bool) -> DataFrame:
-            """The matched target keys (``affected``: only the affected
-            ones) as a join build side."""
-            if hits is not None:
-                got = aff_hits if affected else hits
-                return bc(local_frame(spark, {key: got.column(key)}))
-            return bc((aff if affected else matched).select(key).distinct())
-
-        touched: set = set()
-        new_deletes: list = []
-        n_removed = n_nmbs = 0
-        if mor:
-            if aff is not None:
-                with pt.phase("probe"):
-                    new_deletes, n_removed = write_position_deletes(table, aff)
-            if nm is not None:
-                with pt.phase("nmbs_probe"):
-                    nm_deletes, n_nmbs = write_position_deletes(table, nm)
-                new_deletes += nm_deletes
-                n_removed += n_nmbs
-        else:
-            if hits is not None:
-                flat = pc.list_flatten(hits.column("paths"))
-                touched = set(pc.unique(flat).to_pylist())
-            elif aff is not None:
-                with pt.phase("probe"):
-                    touched = set(
-                        aff.select("__mor_path").distinct().toPandas()["__mor_path"]
+                if key in stat_keys and key in statable:
+                    preds = [(key, "between", (src_lo, src_hi))]
+                    cand = prune_manifest(
+                        man,
+                        transforms.extend_predicates(meta.partition_cols, preds),
+                        statable,
                     )
-            if nm is not None:
-                with pt.phase("nmbs_probe"):
-                    per_file = nm.groupBy("__mor_path").count().toPandas()
-                touched |= set(per_file["__mor_path"])
-                n_nmbs = int(per_file["count"].sum())
-
-        # with no matched condition every source key found in a touched
-        # file is affected, so the source key set itself is the build side
-        drop_keys = None
-        if touched:
-            drop_keys = bc(key_frame) if aff_cond is None else key_set(True)
-
-        def keep(rows: DataFrame) -> DataFrame:
-            kept = rows.join(drop_keys, key, "left_anti")
-            if nm is None:
-                return kept
-            # drop rows with no source coverage whose NMBS condition holds
-            # (tri-state: only TRUE drops)
-            gone = (
-                F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
-                if cl.nmbs_condition
-                else F.lit(True)
-            )
-            return (
-                kept.join(
-                    bc(key_frame.withColumn("__in_src", F.lit(True))), key, "left"
+            # the matched rows the matched action applies to (None: all of them)
+            aff_cond = None
+            if cl.matched == "ignore":
+                aff_cond = F.lit(False)
+            elif cl.matched_condition:
+                aff_cond = F.coalesce(F.expr(cl.matched_condition), F.lit(False))
+            if len(cand):
+                live = table.live_rows(
+                    spark,
+                    table.read_data(
+                        spark,
+                        [os.path.join(table.root, p) for p in cand["path"]],
+                        meta=meta,
+                    ),
+                    swap.snapshot,
                 )
-                .filter(~(gone & F.col("__in_src").isNull()))
-                .drop("__in_src")
+                for c, op, v in preds:
+                    live = live.filter(_pred_to_column(c, op, v))
+                refs = set(
+                    _cond_tgt_cols(cl.matched_condition, cols)
+                    + _cond_tgt_cols(cl.nmbs_condition, cols)
+                )
+                probe = live.select(
+                    key,
+                    *[c for c in cols if c in refs and c != key],
+                    "__mor_path",
+                    *(["__mor_pos"] if mor else []),
+                )
+                src_refs = _cond_src_cols(cl.matched_condition)
+                side = (
+                    src.select(key, *[F.col(c).alias(f"src_{c}") for c in src_refs])
+                    if src_refs
+                    else key_frame
+                )
+                if cl.nmbs:
+                    probe = probe.join(
+                        bc(side.withColumn("__in_src", F.lit(True))), key, "left"
+                    )
+                    matched = probe.filter(F.col("__in_src").isNotNull())
+                    nm = probe.filter(F.col("__in_src").isNull())
+                    if cl.nmbs_condition:
+                        nm = nm.filter(F.expr(cl.nmbs_condition))
+                else:
+                    matched = probe.join(bc(side), key, "inner")
+                if held is None:
+                    matched = matched.persist()
+                aff = matched if aff_cond is None else matched.filter(aff_cond)
+
+            hits = aff_hits = None
+            if matched is not None and held is not None:
+                # one row per matched key: the files holding its affected rows
+                path = F.col("__mor_path")
+                if aff_cond is not None:
+                    path = F.when(aff_cond, path)
+                with pt.phase("probe"):
+                    hits = (
+                        matched.groupBy(key)
+                        .agg(F.collect_set(path).alias("paths"))
+                        .toArrow()
+                    )
+                aff_hits = hits.filter(
+                    pc.greater(pc.list_value_length(hits.column("paths")), 0)
+                )
+
+            def key_set(affected: bool) -> DataFrame:
+                """The matched target keys (``affected``: only the affected
+                ones) as a join build side."""
+                if hits is not None:
+                    got = aff_hits if affected else hits
+                    return bc(local_frame(spark, {key: got.column(key)}))
+                return bc((aff if affected else matched).select(key).distinct())
+
+            touched: set = set()
+            n_removed = n_nmbs = 0
+            if mor:
+                if aff is not None:
+                    with pt.phase("probe"):
+                        new_deletes, n_removed = write_position_deletes(table, aff)
+                    swap.add_deletes(new_deletes)
+                if nm is not None:
+                    with pt.phase("nmbs_probe"):
+                        nm_deletes, n_nmbs = write_position_deletes(table, nm)
+                    swap.add_deletes(nm_deletes)
+                    n_removed += n_nmbs
+            else:
+                if hits is not None:
+                    flat = pc.list_flatten(hits.column("paths"))
+                    touched = set(pc.unique(flat).to_pylist())
+                elif aff is not None:
+                    with pt.phase("probe"):
+                        touched = set(
+                            aff.select("__mor_path").distinct().toPandas()["__mor_path"]
+                        )
+                if nm is not None:
+                    with pt.phase("nmbs_probe"):
+                        per_file = nm.groupBy("__mor_path").count().toPandas()
+                    touched |= set(per_file["__mor_path"])
+                    n_nmbs = int(per_file["count"].sum())
+
+            # with no matched condition every source key found in a touched
+            # file is affected, so the source key set itself is the build side
+            drop_keys = None
+            if touched:
+                drop_keys = bc(key_frame) if aff_cond is None else key_set(True)
+
+            def keep(rows: DataFrame) -> DataFrame:
+                kept = rows.join(drop_keys, key, "left_anti")
+                if nm is None:
+                    return kept
+                # drop rows with no source coverage whose NMBS condition holds
+                # (tri-state: only TRUE drops)
+                gone = (
+                    F.coalesce(F.expr(cl.nmbs_condition), F.lit(False))
+                    if cl.nmbs_condition
+                    else F.lit(True)
+                )
+                return (
+                    kept.join(
+                        bc(key_frame.withColumn("__in_src", F.lit(True))), key, "left"
+                    )
+                    .filter(~(gone & F.col("__in_src").isNull()))
+                    .drop("__in_src")
+                )
+
+            def delta_frame() -> Optional[DataFrame]:
+                if cl.delta_is_source():
+                    return src.select(cols)
+                parts = []
+                if cl.matched == "update" and matched is not None:
+                    parts.append(src.join(key_set(True), key, "left_semi"))
+                if cl.not_matched == "insert":
+                    ins = src
+                    if matched is not None:
+                        ins = ins.join(key_set(False), key, "left_anti")
+                    if cl.not_matched_condition:
+                        ins = ins.filter(F.expr(cl.not_matched_condition))
+                    parts.append(ins)
+                if not parts:
+                    return None
+                return reduce(DataFrame.unionByName, [p.select(cols) for p in parts])
+
+            delta: dict = {}
+
+            def write_delta() -> None:
+                df = delta_frame()
+                if df is not None:
+                    delta["prefix"] = _modest_write(table, df, key)
+                    delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
+                    swap.add(delta["entries"])
+
+            def count_matched() -> None:
+                # re-aggregated from the persisted probe rows (no second file
+                # scan), inside the pool so its job hides behind the writes
+                with pt.phase("count_matched"):
+                    delta["n_aff"] = key_set(True).count()
+
+            # the delta depends only on the source: it runs CONCURRENTLY with
+            # the keep rewrites (none in merge-on-read), its cost hidden in the
+            # rewrite wall time
+            touched_man = man[man["path"].isin(touched)]
+            keep_entries = swap.rewrite(
+                touched_man,
+                keep,
+                target_file_size_bytes,
+                alongside=[write_delta]
+                + ([count_matched] if hits is None and matched is not None else []),
             )
+            if not mor:
+                n_removed = records(touched_man) - records(keep_entries)
+        finally:
+            _unpersist(matched, src_key_counts)
 
-        def delta_frame() -> Optional[DataFrame]:
-            if cl.delta_is_source():
-                return src.select(cols)
-            parts = []
-            if cl.matched == "update" and matched is not None:
-                parts.append(src.join(key_set(True), key, "left_semi"))
-            if cl.not_matched == "insert":
-                ins = src
-                if matched is not None:
-                    ins = ins.join(key_set(False), key, "left_anti")
-                if cl.not_matched_condition:
-                    ins = ins.filter(F.expr(cl.not_matched_condition))
-                parts.append(ins)
-            if not parts:
-                return None
-            return reduce(DataFrame.unionByName, [p.select(cols) for p in parts])
-
-        delta: dict = {}
-
-        def write_delta() -> None:
-            df = delta_frame()
-            if df is not None:
-                delta["prefix"] = _modest_write(table, df, key)
-                delta["entries"] = written_entries(table, spark, delta["prefix"], pt)
-
-        def count_matched() -> None:
-            # re-aggregated from the persisted probe rows (no second file
-            # scan), inside the pool so its job hides behind the writes
-            with pt.phase("count_matched"):
-                delta["n_aff"] = key_set(True).count()
-
-        # the delta depends only on the source: it runs CONCURRENTLY with
-        # the keep rewrites (none in merge-on-read), its cost hidden in the
-        # rewrite wall time
-        touched_man = man[man["path"].isin(touched)]
-        keep_entries = rewrite_files(
-            table,
-            spark,
-            touched_man,
-            keep,
-            target_file_size_bytes,
-            pt,
-            alongside=[write_delta]
-            + ([count_matched] if hits is None and matched is not None else []),
-        )
-        if not mor:
-            n_removed = int(touched_man["record_count"].sum()) - int(
-                keep_entries["record_count"].sum()
-            )
-    finally:
-        _unpersist(matched, src_key_counts)
-
-    n_aff = aff_hits.num_rows if aff_hits is not None else delta.get("n_aff", 0)
-    delta_entries = delta.get("entries")
-    n_delta = 0 if delta_entries is None else int(delta_entries["record_count"].sum())
-    n_updated = n_aff if cl.matched == "update" else 0
-    summary = {
-        "stage": "merge",
-        "mode": mode,
-        "when_matched": cl.matched,
-        "rows_updated": int(n_updated),
-        "rows_deleted": int((n_aff if cl.matched == "delete" else 0) + n_nmbs),
-        "rows_nmbs_deleted": int(n_nmbs),
-        "rows_inserted": int(max(0, n_delta - n_updated)),
-        "rows_replaced_dupes": int(max(0, n_removed - n_aff - n_nmbs)),
-        "files_rewritten": len(touched),
-        "duration_sec": round(time.time() - t0, 3),
-        "phase_sec": pt.summary(),
-    }
-    if not cl.is_default():
-        summary["clauses"] = {
-            "matched_condition": cl.matched_condition,
-            "when_not_matched": cl.not_matched,
-            "not_matched_condition": cl.not_matched_condition,
-            "when_not_matched_by_source": cl.nmbs,
-            "not_matched_by_source_condition": cl.nmbs_condition,
+        n_aff = aff_hits.num_rows if aff_hits is not None else delta.get("n_aff", 0)
+        delta_entries = delta.get("entries")
+        n_delta = 0 if delta_entries is None else int(delta_entries["record_count"].sum())
+        n_updated = n_aff if cl.matched == "update" else 0
+        summary = {
+            "stage": "merge",
+            "mode": mode,
+            "when_matched": cl.matched,
+            "rows_updated": int(n_updated),
+            "rows_deleted": int((n_aff if cl.matched == "delete" else 0) + n_nmbs),
+            "rows_nmbs_deleted": int(n_nmbs),
+            "rows_inserted": int(max(0, n_delta - n_updated)),
+            "rows_replaced_dupes": int(max(0, n_removed - n_aff - n_nmbs)),
+            "files_rewritten": len(touched),
+            "duration_sec": round(time.time() - t0, 3),
+            "phase_sec": pt.summary(),
         }
-    if delta_entries is not None:
-        # delta files = the upserted source rows; Table.changes() uses this
-        # prefix for snapshot-diff incremental reads (T5)
-        summary["delta_prefix"] = os.path.relpath(delta["prefix"], table.root) + "/"
-    if mor:
-        summary.update(
-            rows_suppressed_positions=int(n_removed),
-            delete_files_added=len(new_deletes),
-        )
-        return table.commit(
-            "merge",
-            delta_entries if delta_entries is not None else keep_entries,
-            summary,
-            properties=properties,
-            delta_manifest=True,
-            delete_paths=table.pending_delete_paths() + new_deletes,
-        )
-    new_man = pd.concat(
-        [man[~man["path"].isin(touched)], keep_entries, delta_entries],
-        ignore_index=True,
-    )
-    return table.commit("merge", new_man, summary, properties=properties)
+        if not cl.is_default():
+            summary["clauses"] = {
+                "matched_condition": cl.matched_condition,
+                "when_not_matched": cl.not_matched,
+                "not_matched_condition": cl.not_matched_condition,
+                "when_not_matched_by_source": cl.nmbs,
+                "not_matched_by_source_condition": cl.nmbs_condition,
+            }
+        if delta_entries is not None:
+            # delta files = the upserted source rows; Table.changes() uses this
+            # prefix for snapshot-diff incremental reads (T5)
+            summary["delta_prefix"] = os.path.relpath(delta["prefix"], table.root) + "/"
+        if mor:
+            summary.update(
+                rows_suppressed_positions=int(n_removed),
+                delete_files_added=len(swap.delete_paths),
+            )
+        return swap.commit("merge", summary, rows_key=None, properties=properties)
 
 
 def _source_keys(src: DataFrame, key: str) -> tuple:

@@ -90,6 +90,7 @@ from .tableformat import (
     DEFAULTS_PROP,
     FOOTER_SPARK_THRESHOLD,
     RENAMES_PROP,
+    FileSwap,
     Table,
     TxnAlreadyCommittedError,
     logical_adds,
@@ -617,7 +618,10 @@ class MedallionArrowWriter(_WriterBase, DataSourceArrowWriter):
                 # changes() emits exactly the landed frame
                 "insert_prefix": "data/pyds-",
             }
-            table.commit("overwrite", entries, summ)
+            swap = FileSwap(table, None)
+            swap.drop(swap.man)
+            swap.add(entries)
+            swap.commit("overwrite", summ)
         else:
             table.commit(
                 "append", entries, {"stage": "append", "rows_inserted": n}

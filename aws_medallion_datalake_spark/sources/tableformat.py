@@ -69,10 +69,11 @@ from . import transforms
 
 
 class CommitConflictError(RuntimeError):
-    """A commit lost the metadata-version CAS to a concurrent writer and
-    cannot be transparently rebased (non-additive operations encode the
-    parent's exact file set). Re-plan against the new head and retry —
-    Iceberg's optimistic-concurrency validation failure."""
+    """A commit cannot be rebased onto the head a concurrent writer left:
+    a non-append commit landed since the write's base snapshot (or the
+    base expired), or a full-file-list commit lost the metadata-version
+    CAS. Re-plan against the new head and retry — Iceberg's
+    optimistic-concurrency validation failure."""
 
 
 class TxnAlreadyCommittedError(RuntimeError):
@@ -836,25 +837,24 @@ class Table:
         properties: Optional[dict] = None,
         stage_only: bool = False,
         wap_id: Optional[str] = None,
-        delete_paths: Optional[list] = None,
-        eq_deletes: Optional[list] = None,
-        reuse_manifests: bool = False,
-        delta_manifest: bool = False,
         branch: Optional[str] = None,
         max_retries: int = 5,
         txn: Optional[tuple] = None,
         manifests: Optional[tuple] = None,
+        swap: Optional["FileSwap"] = None,
     ) -> Snapshot:
-        """Commit with optimistic concurrency (Iceberg's commit protocol):
-        the metadata-version CAS (``open(…, "x")``) detects a concurrent
-        writer; ADD-ONLY commits (append / ``delta_manifest``) commute
-        with any winner, so they are transparently REBASED — re-read the
-        new head, recompute the shared manifest list, retry — up to
-        ``max_retries`` times. Non-additive commits (replace / merge /
-        expire / merge-on-read deletes) encode assumptions about the
-        parent's exact file set, so a lost race raises
-        :class:`CommitConflictError` and the caller re-plans against the
-        new head (exactly Iceberg's validation failure).
+        """Commit with optimistic concurrency (Iceberg's commit protocol).
+        The metadata-version CAS (``open(…, "x")``) detects a concurrent
+        writer, and one rebase rule decides what follows — Delta's
+        WriteSerializable level, where blind appends commute with every
+        operation. An ``append`` rebases onto the new head. A ``swap``
+        commit (the ``FileSwap`` delta every other write commits) rebases
+        when every snapshot since its base is an ``append``, and raises
+        :class:`CommitConflictError` otherwise, also when the base has
+        expired; the caller re-plans against the new head. The rule runs
+        on every attempt, so it also catches a writer that landed between
+        planning and commit. Rebases retry up to ``max_retries`` times. A
+        commit carrying a full file list of its own raises on a lost CAS.
 
         ``txn=(property_name, version)``: idempotent-sink validation —
         the commit aborts with :class:`TxnAlreadyCommittedError` if the
@@ -863,25 +863,14 @@ class Table:
         freshly-read metadata, two concurrent writers replaying the same
         (txnAppId, batchId) cannot both commit: the loser's CAS fails,
         its retry re-reads the winner's property, and it aborts."""
-        additive = operation == "append" or delta_manifest
+        additive = operation == "append" or swap is not None
         attempts = max(1, max_retries + 1) if additive else 1
         last: Optional[BaseException] = None
         for _ in range(attempts):
             try:
                 return self._commit_once(
-                    operation,
-                    new_manifest,
-                    summary=summary,
-                    properties=properties,
-                    stage_only=stage_only,
-                    wap_id=wap_id,
-                    delete_paths=delete_paths,
-                    eq_deletes=eq_deletes,
-                    reuse_manifests=reuse_manifests,
-                    delta_manifest=delta_manifest,
-                    branch=branch,
-                    txn=txn,
-                    manifests=manifests,
+                    operation, new_manifest, summary, properties, stage_only,
+                    wap_id, branch, txn, manifests, swap,
                 )
             except FileExistsError as e:
                 last = e
@@ -892,33 +881,29 @@ class Table:
                     ) from e
                 time.sleep(0.01 * (1 + (uuid.uuid4().int & 7)))
         raise CommitConflictError(
-            f"append commit still conflicting after {attempts} attempts"
+            f"{operation!r} commit still conflicting after {attempts} attempts"
         ) from last
 
     def _commit_once(
-        self,
-        operation: str,
-        new_manifest: pd.DataFrame,
-        summary: Optional[dict] = None,
-        properties: Optional[dict] = None,
-        stage_only: bool = False,
-        wap_id: Optional[str] = None,
-        delete_paths: Optional[list] = None,
-        eq_deletes: Optional[list] = None,
-        reuse_manifests: bool = False,
-        delta_manifest: bool = False,
-        branch: Optional[str] = None,
-        txn: Optional[tuple] = None,
-        manifests: Optional[tuple] = None,
+        self, operation, new_manifest, summary, properties, stage_only,
+        wap_id, branch, txn, manifests, swap,
     ) -> Snapshot:
-        """Commit the next snapshot (atomic).
+        """One attempt of ``commit``: the next snapshot (atomic).
 
         ``operation == "append"``: ``new_manifest`` holds only the ADDED
         files; they are written as a DELTA manifest and the snapshot's
         manifest LIST shares every ancestor manifest — an append to a
         10^8-file table writes O(added) manifest bytes. Any other
-        operation (replace/merge/expire): ``new_manifest`` IS the full new
-        file list, written as a single fresh manifest.
+        operation without a ``swap`` (replace/expire): ``new_manifest``
+        IS the full new file list, written as a single fresh manifest.
+
+        ``swap``: ``new_manifest`` holds the files the ``FileSwap`` adds.
+        With no dropped file the snapshot is append-style (a delta
+        manifest, or the parent's manifest list shared verbatim when
+        nothing is added); otherwise one fresh manifest holds the head's
+        files minus the dropped plus the added. Its delete sets are the
+        head's minus the retired plus the added; every other commit
+        carries the parent's forward.
 
         ``properties`` are merged into the table properties in the SAME
         metadata version — the non-prunable state streaming sinks use for
@@ -932,19 +917,6 @@ class Table:
         gate. ``publish()`` then fast-forwards (or cherry-picks an
         append) to make it visible. Iceberg's ``spark.wap.id`` staged
         commit. ``wap_id`` is the audit handle recorded in the summary.
-
-        ``delete_paths``: the snapshot's merge-on-read positional-delete
-        file set. ``None`` (default) carries the parent's pending set
-        forward — appends/stages never clear deletes; ``apply_deletes``
-        passes ``[]`` explicitly. ``reuse_manifests``: the file set is
-        UNCHANGED (a merge-on-read delete touches zero data files) — the
-        snapshot shares the parent's manifest list verbatim and writes no
-        manifest bytes at all; ``new_manifest`` must be empty.
-        ``delta_manifest``: the commit only ADDS files (removes none), so
-        ``new_manifest`` holds just the additions and the manifest list
-        shares every ancestor manifest, append-style — the merge-on-read
-        MERGE uses this to keep manifest IO O(delta) under a non-append
-        operation name.
 
         ``manifests=(paths, totals)``: the full file list is ALREADY
         WRITTEN as the manifest files ``paths`` (a Spark re-shard,
@@ -974,48 +946,46 @@ class Table:
             head_id = self._branch_head(meta, branch)
         else:
             head_id = meta.current_snapshot_id
+        snaps = {s.snapshot_id: s for s in meta.snapshots}
+        parent = snaps.get(head_id)
+        delete_paths = list(parent.delete_paths) if parent else []
+        eq_deletes = [dict(e) for e in parent.eq_deletes] if parent else []
+        if swap is not None:
+            at = head_id
+            while at != swap.base and at in snaps and snaps[at].operation == "append":
+                at = snaps[at].parent_snapshot_id
+            if at != swap.base or (at is not None and at not in snaps):
+                raise CommitConflictError(
+                    f"{operation!r} commit planned on snapshot {swap.base}, but "
+                    f"a non-append commit has moved the table since (or that "
+                    f"snapshot expired); re-plan against the new table head"
+                )
+            gone = {p for f in swap.dropped for p in f["path"]}
+            if gone:
+                man = swap.man if head_id == swap.base else self.manifest_pdf(head_id)
+                frames = [man[~man["path"].isin(gone)], new_manifest]
+                # empty frames are left out of the concat (their dtypes
+                # would leak into the manifest)
+                new_manifest = pd.concat(
+                    [f for f in frames if len(f)] or frames[:1], ignore_index=True
+                )
+            delete_paths = [p for p in delete_paths if p not in swap.retired]
+            delete_paths += swap.delete_paths
+            eq_deletes = [e for e in eq_deletes if e["path"] not in swap.retired]
+            eq_deletes += swap.eq_deletes
         if properties:
             meta.properties.update({str(k): str(v) for k, v in properties.items()})
         # next id = max over HISTORY, not current+1: after rollback() the
         # current pointer sits on an old snapshot while later ids still
         # exist in the log — current+1 would overwrite their manifests
-        sid = max((s.snapshot_id for s in meta.snapshots), default=0) + 1
+        sid = max(snaps, default=0) + 1
         added_records = int(new_manifest["record_count"].sum()) if len(new_manifest) else 0
         added_bytes = int(new_manifest["file_size_bytes"].sum()) if len(new_manifest) else 0
-        if delete_paths is None or eq_deletes is None:
-            parent_for_deletes = (
-                self.snapshot(head_id) if head_id is not None else None
-            )
-            if delete_paths is None:
-                delete_paths = (
-                    list(parent_for_deletes.delete_paths) if parent_for_deletes else []
-                )
-            if eq_deletes is None:
-                eq_deletes = (
-                    list(parent_for_deletes.eq_deletes) if parent_for_deletes else []
-                )
         if manifests is not None:
             manifest_paths, totals = list(manifests[0]), dict(manifests[1])
-        elif reuse_manifests:
-            if len(new_manifest):
-                raise ValueError("reuse_manifests commits add no files")
-            parent = self.snapshot(head_id)
-            manifest_paths = list(parent.manifest_paths)
-            ps = parent.summary
-            totals = dict(
-                added_or_total_files=int(
-                    ps.get(
-                        "added_or_total_files",
-                        self.manifest_rows(parent.snapshot_id),
-                    )
-                ),
-                total_records=int(ps.get("total_records", 0)),
-                total_bytes=int(ps.get("total_bytes", 0)),
-            )
         elif (
-            operation == "append" or delta_manifest
-        ) and head_id is not None:
-            parent = self.snapshot(head_id)
+            operation == "append" or (swap is not None and not gone)
+        ) and parent is not None:
             manifest_paths = list(parent.manifest_paths)
             if len(new_manifest):
                 manifest_paths.append(self._write_manifest(sid, new_manifest))
@@ -1974,23 +1944,12 @@ class Table:
         and joins as a broadcast path-marker."""
         if not s.eq_deletes:
             return df
-        from collections import defaultdict
-
-        groups: dict = defaultdict(list)
-        for e in s.eq_deletes:
-            groups[(tuple(e["cols"]), int(e["as_of_snapshot_id"]))].append(e["path"])
         cur_paths = set(self.manifest_pdf(s.snapshot_id)["path"])
         # ``_metadata`` resolves only on the raw file relation, so the
         # exempt-file join uses the path column the positional step kept
         out = df
-        for (cols, as_of), dpaths in sorted(groups.items(), key=lambda kv: kv[0][1]):
-            vals = (
-                spark.read.parquet(*[os.path.join(self.root, p) for p in dpaths])
-                .select(*cols)
-                .distinct()
-                .withColumn("__eq_hit", F.lit(True))
-            )
-            covered = set(self.manifest_pdf(as_of)["path"])
+        for cols, vals, covered in self.eq_delete_scopes(spark, s, cur_paths):
+            vals = vals.withColumn("__eq_hit", F.lit(True))
             exempt = sorted(cur_paths - covered)
             out = out.join(F.broadcast(vals), list(cols), "left")
             if exempt:
@@ -2007,6 +1966,27 @@ class Table:
             else:
                 out = out.filter(F.col("__eq_hit").isNull()).drop("__eq_hit")
         return out
+
+    def eq_delete_scopes(self, spark, s: Snapshot, cur_paths: set) -> list:
+        """``[(cols, values, covered)]``: the equality deletes pending at
+        ``s`` grouped by ``(cols, as_of_snapshot_id)`` in ``as_of`` order,
+        each with its distinct value rows and the paths of ``cur_paths``
+        (``s``'s files) already in the table at ``as_of``, the only files
+        it deletes from (the sequence rule)."""
+        groups: dict = {}
+        for e in s.eq_deletes:
+            key = (tuple(e["cols"]), int(e["as_of_snapshot_id"]))
+            groups.setdefault(key, []).append(e["path"])
+        return [
+            (
+                cols,
+                spark.read.parquet(*[os.path.join(self.root, p) for p in dpaths])
+                .select(*cols)
+                .distinct(),
+                set(self.manifest_pdf(as_of)["path"]) & cur_paths,
+            )
+            for (cols, as_of), dpaths in sorted(groups.items(), key=lambda kv: kv[0][1])
+        ]
 
     def _apply_mor_deletes(self, spark, df: DataFrame, s: Snapshot) -> DataFrame:
         """Anti-join out positionally-deleted rows (Iceberg v2 positional
@@ -2637,20 +2617,36 @@ def records(files: pd.DataFrame) -> int:
 
 
 class FileSwap:
-    """The one commit under every copy-on-write overwrite: the current
-    manifest minus the files dropped or rewritten, plus their
-    keep-rewrites and the inserted files, as one snapshot.
+    """The one commit under every non-append write: a delta against the
+    snapshot the write planned on.
+
+    The swap pins its *base*, the current snapshot, when it is created;
+    ``man`` and ``snapshot`` read that base, so a caller creates the swap
+    before it plans. It records the data files the write drops (``drop``,
+    ``rewrite``) and adds (``rewrite``, ``insert``, ``add``), and the
+    delete files it adds and retires (``add_deletes``). ``Table.commit``
+    applies that delta to the head, which may have moved since the base
+    only by appends (``CommitConflictError`` otherwise).
 
     Used as a context manager around the whole write: if anything raises
-    before the commit lands, every prefix the call wrote (its inserted
-    files and its keep-rewrites) is removed. A whole-table replace drops
-    ``swap.man`` and inserts the new frame."""
+    before the commit lands, every prefix the swap recorded (inserted,
+    rewritten and added files, added delete files) is removed. A
+    whole-table replace drops ``swap.man`` and inserts the new frame."""
 
     def __init__(self, table: "Table", spark: SparkSession, pt=None):
         self.table, self.spark, self.pt = table, spark, pt
+        meta = table.metadata()
+        self.base: Optional[int] = meta.current_snapshot_id
+        self.snapshot: Optional[Snapshot] = next(
+            (s for s in meta.snapshots if s.snapshot_id == self.base), None
+        )
         self.dropped: list = []
         self.rewritten: list = []
+        self.added: list = []  # every added manifest frame, rewrites included
         self.inserted: Optional[pd.DataFrame] = None
+        self.delete_paths: list = []
+        self.eq_deletes: list = []
+        self.retired: set = set()
         self._man: Optional[pd.DataFrame] = None
         self._landed = False
 
@@ -2659,20 +2655,20 @@ class FileSwap:
 
     def __exit__(self, exc_type, exc, tb) -> None:
         if exc_type is not None and not self._landed:
-            added = [e for e in (*self.rewritten, self.inserted) if e is not None]
-            for rel in {os.path.dirname(p) for e in added for p in e["path"]}:
+            paths = [p for e in self.added for p in e["path"]] + self.delete_paths
+            paths += [e["path"] for e in self.eq_deletes]
+            for rel in {os.path.dirname(p) for p in paths}:
                 shutil.rmtree(os.path.join(self.table.root, rel), ignore_errors=True)
 
     @property
     def man(self) -> pd.DataFrame:
-        """The current manifest (empty for a table with no snapshot),
-        read on first use."""
+        """The base manifest (empty for a table with no snapshot), read
+        on first use."""
         if self._man is None:
-            empty = self.table.metadata().current_snapshot_id is None
             self._man = (
                 pd.DataFrame(columns=MANIFEST_BASE_COLS)
-                if empty
-                else self.table.manifest_pdf()
+                if self.base is None
+                else self.table.manifest_pdf(self.base)
             )
         return self._man
 
@@ -2680,20 +2676,37 @@ class FileSwap:
         """Write ``df`` (the ``write`` phase) as the swap's inserted files."""
         with self.pt.phase("write") if self.pt else nullcontext():
             self.inserted = self.table.write_files(df)
+        self.added.append(self.inserted)
         return self.inserted
+
+    def add(self, entries: Optional[pd.DataFrame]) -> None:
+        """Add the manifest entries of files already written elsewhere."""
+        if entries is not None:
+            self.added.append(entries)
 
     def drop(self, files: pd.DataFrame) -> None:
         """Remove the manifest rows ``files`` wholesale."""
         self.dropped.append(files)
 
-    def rewrite(self, files: pd.DataFrame, keep, target_bytes: int) -> pd.DataFrame:
+    def rewrite(
+        self, files: pd.DataFrame, keep, target_bytes: int, alongside=()
+    ) -> pd.DataFrame:
         """Replace the manifest rows ``files`` by ``rewrite_files`` of them."""
         entries = rewrite_files(
-            self.table, self.spark, files, keep, target_bytes, self.pt
+            self.table, self.spark, files, keep, target_bytes, self.pt, alongside
         )
         self.dropped.append(files)
         self.rewritten.append(entries)
+        self.added.append(entries)
         return entries
+
+    def add_deletes(self, positional=(), equality=(), retire=()) -> None:
+        """Add positional delete files (relative paths) and equality
+        deletes (``{"path", "cols", "as_of_snapshot_id"}`` dicts); take
+        the pending delete files ``retire`` out of the delete sets."""
+        self.delete_paths += list(positional)
+        self.eq_deletes += [dict(e) for e in equality]
+        self.retired |= set(retire)
 
     def commit(
         self, operation: str, summary: dict, rows_key="rows_deleted", **kw
@@ -2703,14 +2716,6 @@ class FileSwap:
         files minus those their rewrites kept. ``insert_prefix`` names
         the inserted files, the logical inserts of the snapshot
         (``logical_adds``). ``kw`` goes to ``Table.commit``."""
-        gone = {p for f in self.dropped for p in f["path"]}
-        frames = [self.man[~self.man["path"].isin(gone)], *self.rewritten]
-        frames += [self.inserted] if self.inserted is not None else []
-        # empty frames are left out of the concat (their dtypes would
-        # leak into the manifest); an empty result keeps the last frame
-        new_man = pd.concat(
-            [f for f in frames if len(f)] or frames[-1:], ignore_index=True
-        )
         summ = dict(summary)
         if rows_key:
             summ[rows_key] = sum(records(f) for f in self.dropped) - sum(
@@ -2720,7 +2725,16 @@ class FileSwap:
             summ["insert_prefix"] = (
                 os.path.dirname(str(self.inserted.iloc[0]["path"])) + "/"
             )
-        snap = self.table.commit(operation, new_man, summ, **kw)
+        adds = [e for e in self.added if len(e)]
+        snap = self.table.commit(
+            operation,
+            pd.concat(adds, ignore_index=True)
+            if adds
+            else pd.DataFrame(columns=MANIFEST_BASE_COLS),
+            summ,
+            swap=self,
+            **kw,
+        )
         self._landed = True
         return snap
 

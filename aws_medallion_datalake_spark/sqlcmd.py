@@ -87,8 +87,6 @@ import re
 import time
 from typing import Dict, Optional
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import (
@@ -699,13 +697,9 @@ class EngineSQL:
         name = m.group(1)
         t = self._table(name)
         t.refuse_pending_deletes("TRUNCATE")
-        man = t.manifest_pdf() if t.metadata().current_snapshot_id is not None else None
-        n = int(man["record_count"].sum()) if man is not None and len(man) else 0
-        snap = t.commit(
-            "delete",
-            man.iloc[0:0] if man is not None else pd.DataFrame(),
-            {"stage": "truncate", "rows_deleted": n},
-        )
+        with FileSwap(t, self.spark) as swap:
+            swap.drop(swap.man)
+            snap = swap.commit("delete", {"stage": "truncate"})
         return self._summary_df("TRUNCATE", name, snap)
 
     def _copy(self, s: str) -> DataFrame:

@@ -3,13 +3,25 @@
 Reference parity: the reference relies on Glue/LakeFormation to serialize
 writers (terraform/glue_digit.tf); this engine implements Iceberg's
 optimistic protocol itself — metadata-version CAS, transparent rebase for
-commuting (add-only) commits, validation failure for non-additive ones.
+appends, and a ``FileSwap`` delta for every other write that rebases over
+appends and fails validation over anything else.
 """
 
+import os
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 
+from aws_medallion_datalake_spark.operators import (
+    cluster,
+    compact,
+    delete_where,
+    equality_delete,
+    expire_snapshots,
+    merge_into,
+    update_where,
+)
 from aws_medallion_datalake_spark.sources.generator import SCHEMA, generate_images
 from aws_medallion_datalake_spark.sources.tableformat import (
     CommitConflictError,
@@ -129,3 +141,147 @@ def test_nonadditive_commit_raises_on_lost_race(table, spark, monkeypatch):
     full = table.manifest_pdf()
     table.commit("replace", full)
     assert table.scan(spark).count() == 110
+
+
+# ---- writers whose head moved between planning and commit ----
+#
+# Each race below injects the competing commit through a second handle
+# after our write has planned and written its files, right before its
+# own Table.commit runs: the window a long rewrite leaves open.
+
+
+@pytest.fixture()
+def table8(tmp_path, spark):
+    t = Table.create(
+        str(tmp_path / "race"),
+        schema_ddl=SCHEMA,
+        partition_cols=["ingest_date"],
+        stats_cols=STATS,
+    )
+    t.commit("append", t.write_files(generate_images(spark, 100, n_files=8, n_dates=2)))
+    return t
+
+
+def _race(monkeypatch, table, competitor):
+    """Run ``competitor(other)`` (``other`` a second handle on the table)
+    once, just before ``table``'s next commit; returns a dict whose
+    ``"winner"`` is what it returned."""
+    other = Table(table.root)
+    orig = table.commit
+    fired: dict = {}
+
+    def commit(*args, **kwargs):
+        if not fired:
+            fired["winner"] = competitor(other)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(table, "commit", commit)
+    return fired
+
+
+def _append10(spark):
+    def competitor(other):
+        entries = other.write_files(generate_images(spark, 10, n_files=1, start=4000))
+        return other.commit("append", entries)
+
+    return competitor
+
+
+def _ids(table, spark) -> set:
+    return {r[0] for r in table.scan(spark).select("image_id").collect()}
+
+
+def test_compaction_racing_an_append_keeps_it(table8, spark, monkeypatch):
+    fired = _race(monkeypatch, table8, _append10(spark))
+    snap = compact(table8, spark)
+    assert snap is not None and "winner" in fired
+    assert snap.parent_snapshot_id == fired["winner"].snapshot_id
+    assert table8.scan(spark).count() == 110
+    assert int(snap.summary["total_records"]) == 110
+
+
+def test_cow_delete_racing_an_append_keeps_it(table8, spark, monkeypatch):
+    victim = "img-%012d" % 5
+    fired = _race(monkeypatch, table8, _append10(spark))
+    snap = delete_where(table8, spark, [("image_id", "=", victim)])
+    assert snap.parent_snapshot_id == fired["winner"].snapshot_id
+    ids = _ids(table8, spark)
+    assert len(ids) == 109 and victim not in ids
+    assert {"img-%012d" % i for i in range(4000, 4010)} <= ids
+
+
+def test_mor_update_racing_a_mor_delete_keeps_the_row_deleted(
+    table8, spark, monkeypatch
+):
+    victim = "img-%012d" % 3
+
+    def competitor(other):
+        return delete_where(
+            other, spark, [("image_id", "=", victim)], mode="merge-on-read"
+        )
+
+    _race(monkeypatch, table8, competitor)
+    with pytest.raises(CommitConflictError):
+        update_where(
+            table8, spark, [("image_id", "<=", "img-%012d" % 9)],
+            {"caption": "'v2'"}, mode="merge-on-read",
+        )
+    ids = _ids(table8, spark)
+    assert len(ids) == 99 and victim not in ids
+    assert table8.scan(spark).filter(F.col("caption") == "v2").count() == 0
+
+
+def test_cow_delete_after_a_cluster_raises_and_cleans_up(table8, spark, monkeypatch):
+    before = set(os.listdir(table8.data_dir))
+    fired = _race(monkeypatch, table8, lambda other: cluster(other, spark, mode="full"))
+    with pytest.raises(CommitConflictError):
+        delete_where(table8, spark, [("image_id", "<=", "img-%012d" % 40)])
+    # the winner is intact and current
+    assert table8.snapshot().snapshot_id == fired["winner"].snapshot_id
+    assert table8.scan(spark).count() == 100
+    # the loser left no data prefix: only the winner's new ones appeared
+    winner = {p.split("/")[1] for p in table8.manifest_pdf()["path"]}
+    assert set(os.listdir(table8.data_dir)) == before | winner
+
+
+def test_cow_delete_over_an_expired_base_raises(table8, spark, monkeypatch):
+    def competitor(other):
+        _append10(spark)(other)
+        return expire_snapshots(other, keep_last=1)
+
+    _race(monkeypatch, table8, competitor)
+    with pytest.raises(CommitConflictError):
+        delete_where(table8, spark, [("image_id", "=", "img-%012d" % 5)])
+    assert table8.scan(spark).count() == 110
+
+
+@pytest.mark.parametrize(
+    "write", ["merge-cow", "merge-mor", "mor-delete", "equality-delete"]
+)
+def test_failed_commit_leaves_no_data_prefix(table8, spark, monkeypatch, write):
+    """A commit that raises removes every prefix the write created: the
+    keep-rewrites, the delta and the delete files."""
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(write)
+
+    monkeypatch.setattr(table8, "commit", boom)
+    prefixes = set(os.listdir(table8.data_dir))
+    head = table8.snapshot().snapshot_id
+    with pytest.raises(RuntimeError, match=write):
+        if write.startswith("merge"):
+            # 10 matched keys + 10 new ones
+            src = generate_images(spark, 20, n_files=1, start=90).withColumn(
+                "caption", F.lit("v2")
+            )
+            mode = "copy-on-write" if write == "merge-cow" else "merge-on-read"
+            merge_into(table8, spark, src, key="image_id", mode=mode)
+        elif write == "mor-delete":
+            delete_where(
+                table8, spark, [("image_id", "=", "img-%012d" % 7)],
+                mode="merge-on-read",
+            )
+        else:
+            equality_delete(table8, spark, ["img-%012d" % 7])
+    assert set(os.listdir(table8.data_dir)) == prefixes
+    assert table8.snapshot().snapshot_id == head
