@@ -9,29 +9,39 @@ phash/w/h predicates.
 
 Spark-first execution plan (ONE full pass over the payload per tile):
 
-1. **Tiling** — the manifest is split into *tiles* of at most
-   ``max_files_per_job`` output files each (partition-major order, so a
-   tile rarely straddles a partition). Each tile is an independent
-   route + sort + write job and a unit of ``tableformat.rewrite_units``,
-   the runner every data-file rewrite shares (the Iceberg
-   RewriteDataFiles architecture). At 10^12 rows / 10^8 files no single
-   job ever plans more than ``max_files_per_job`` ranges — the driver
-   never materializes an O(total_files) structure in any query plan.
+1. **Tiling by partition tuple** — a *tuple census*
+   (``tableformat.tuple_census``: pure files off the manifest, files
+   that mix tuples from one column-pruned ``groupBy(file, tuple)
+   .count()`` over their partition columns, no payload read) gives the
+   rows and bytes of every (file, tuple) piece. Tiles are runs of whole
+   tuples, in tuple order, of at most ``max_files_per_job`` output files;
+   each tuple writes ``max(1, round(bytes / target))`` files of its own,
+   so a tuple under the target writes one file and no output file mixes
+   tuples (only a tuple wider than a tile is cut across tiles, by
+   files). A tile reads only the files its tuples' pieces live in and
+   keeps, by a broadcast (path, tuple) join, only those pieces' rows.
+   Each tile is an independent route + sort + write job and a unit of
+   ``tableformat.rewrite_units``, the runner every data-file rewrite
+   shares (the Iceberg RewriteDataFiles architecture). At 10^12 rows /
+   10^8 files no single job ever plans more than ``max_files_per_job``
+   ranges — the driver never materializes an O(total_files) structure
+   in any query plan.
 2. **Boundary planning: one grouped bounds job for every tile** — the
    curve key needs only (partition cols, phash, w, h), a few bytes/row,
    so range boundaries come from a scan that never touches the image
-   payload. Before any multi-file tile is planned, ONE aggregate over
-   that key scan (the cached one when the partition-tuple pass already
-   read it) tags each row with its tile through a broadcast path→tile
-   frame and runs ``groupBy(tile).agg(percentile_approx(key, <union of
-   the tiles' i/n_out fractions>, 4 × max n_out))``. So the bounds cost
-   one job per ``cluster()`` call whatever the tile count, and the
-   cheap key scan never queues behind other tiles' payload rewrites.
-   It is the runner's first task: single-file tiles need no bounds and
-   start while it runs; tiles a checkpoint already holds get none. (A
-   plain ``repartitionByRange`` instead runs its boundary-sampling job
-   over the FULL child plan — every payload byte read and every key
-   computed twice, or a cluster-wide persist.)
+   payload. Before any tile with a multi-file tuple is planned, ONE
+   aggregate over that key scan tags each row with its tile and tuple
+   index through the broadcast piece frame and runs
+   ``groupBy(tile, tuple).agg(percentile_approx(key, <union of the
+   tuples' i/n fractions>, 4 × max n))``. The tuple-start boundaries
+   ``idx << 56`` need no job: the composite key is tuple-major. So the
+   bounds cost at most one job per ``cluster()`` call whatever the tile
+   count, and the cheap key scan never queues behind other tiles'
+   payload rewrites. It is the runner's first task: tiles that need no
+   quantiles start while it runs; tiles a checkpoint already holds get
+   none. (A plain ``repartitionByRange`` instead runs its
+   boundary-sampling job over the FULL child plan — every payload byte
+   read and every key computed twice, or a cluster-wide persist.)
 3. **Exact-route shuffle, zero plan literals** — rows get their target
    partition from one vectorized Arrow UDF: ``np.searchsorted`` against
    the tile's boundary array, then a *routing salt* per bucket such that
@@ -64,10 +74,12 @@ payload bytes never cross the Arrow boundary.
 
 from __future__ import annotations
 
+import os
 import re
 import threading
 import time
 from contextlib import nullcontext
+from dataclasses import dataclass
 from typing import Optional
 
 import numpy as np
@@ -83,11 +95,13 @@ from ..sources.tableformat import (
     FileSwap,
     Snapshot,
     Table,
+    check_rows_kept,
+    join_pieces,
     read_split_size,
-    rel_path_expr,
     resumed_units,
     rewrite_units,
     statable_cols,
+    tuple_census,
 )
 from .checkpoint import RunCheckpoint
 from .timing import PhaseTimer
@@ -163,44 +177,29 @@ def _curve_key(curve: str, cols: tuple):
     return morton64_expr(c0, c1, c2)  # morton / zorder: JVM-only
 
 
-_PART_SEP = "\x1f"  # multi-level partition tuple separator
+def _low(key):
+    """The 56 low bits of the composite key: ``key>>10 << 2 | per-row
+    salt``; a NULL key reads as 0 and sorts first."""
+    comp = F.shiftrightunsigned(F.coalesce(key.cast("long"), F.lit(0)), 10)
+    if _SALT_BITS:
+        salt = F.pmod(F.xxhash64(F.col("image_id")), F.lit(1 << _SALT_BITS))
+        comp = F.shiftleft(comp, _SALT_BITS).bitwiseOR(salt)
+    return comp
 
 
-def _part_key_col(partition_cols: list):
-    """One string per partition TUPLE — supports multi-level specs like
-    the reference's year=/month=/day= layout
-    (/root/reference/scripts/bronze_digit.py:143-148) and hidden-
-    partitioning transforms (the tuple is built from the TRANSFORM
-    values, cast to string to match the manifest's partition_json
-    values)."""
-    pexprs = [t.expr().cast("string") for t in transforms.parse_spec(partition_cols)]
-    if len(pexprs) == 1:
-        return pexprs[0]
-    return F.concat_ws(_PART_SEP, *pexprs)
+def _composite(key, idx):
+    """Sortable long: (tuple idx << 56 | key>>10 << 2 | per-row salt).
 
-
-def _composite(key, partition_cols: list, part_values: list):
-    """Sortable long: (partition idx << 56 | key>>10 << 2 | per-row salt).
-
-    The partition idx orders the full partition TUPLE (all partition
-    columns, multi-level specs included), so the global sort is
-    partition-major across every level, then key-ordered within.
+    ``idx`` is the row's 1-based partition-tuple index within its tile
+    (at most ``_MAX_TILE_TUPLES``, so the long stays positive): the sort
+    is tuple-major, then key-ordered within, and a tuple starts at
+    ``idx << 56`` whatever its keys.
 
     The key+salt field is exactly 56 bits (64 - 10 + 2) so it NEVER
-    overlaps the partition-index field — an overlap would OR high-key
-    rows into the wrong partition band and interleave distant key
-    regions inside one range bucket (wide file min/max, broken
-    pruning)."""
-    comp = F.shiftrightunsigned(key.cast("long"), 10)
-    if _SALT_BITS:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in ("image_id",)]), F.lit(1 << _SALT_BITS))
-        comp = F.shiftleft(comp, _SALT_BITS).bitwiseOR(salt)
-    if partition_cols and part_values:
-        idx = F.array_position(
-            F.array(*[F.lit(v) for v in part_values]), _part_key_col(partition_cols)
-        ).cast("long")  # 1-based; 0 (not found / __mixed__) sorts first
-        comp = F.shiftleft(idx, 56).bitwiseOR(comp)
-    return comp
+    overlaps the tuple-index field — an overlap would OR high-key rows
+    into the wrong tuple band and interleave distant key regions inside
+    one range bucket (wide file min/max, broken pruning)."""
+    return F.shiftleft(idx.cast("long"), 56).bitwiseOR(_low(key))
 
 
 # Up to this output-file count, routing stays a pure-JVM expression (no
@@ -247,85 +246,129 @@ def _route_jvm(ck_col, bounds: np.ndarray, salts: np.ndarray):
     return F.element_at(sarr, bucket + 1).cast("int")
 
 
-def _plan_tiles(man: pd.DataFrame, target_bytes: int, max_files_per_job: int) -> list:
-    """Split manifest rows into partition-major tiles whose OUTPUT file
-    count stays ≤ max_files_per_job. Returns a list of pandas index
-    arrays. Cross-tile key ranges may overlap only where a partition is
-    split across tiles — per-file min/max pruning is unaffected."""
-    order = man.sort_values(["partition_json", "path"]).index
+# a tile holds at most this many partition tuples: their 1-based index
+# fills the composite key's top byte below the sign bit
+_MAX_TILE_TUPLES = 127
+
+
+@dataclass
+class _Tile:
+    """One tile: its pieces (``tuple_census`` rows: ``path``, ``slice``,
+    ``file_size_bytes``, plus ``tidx``, the 1-based index of the piece's
+    tuple in the tile) and the output files of each tuple, by index."""
+
+    pieces: pd.DataFrame
+    n_outs: list
+
+    @property
+    def n_out(self) -> int:
+        return sum(self.n_outs)
+
+    @property
+    def sliced(self) -> bool:
+        return bool(self.pieces["slice"].notna().any())
+
+
+def _plan_tiles(census: pd.DataFrame, target_bytes: int, max_files_per_job: int) -> list:
+    """Split the ``tuple_census`` rows of the files to rewrite into tiles:
+    runs of whole partition tuples, in tuple order, whose OUTPUT file
+    count stays ≤ max_files_per_job. Each tuple writes
+    ``max(1, round(bytes / target))`` files of its own, so a tuple under
+    the target writes one file and no file mixes tuples. A tuple wider
+    than a tile is cut into one-tuple tiles of at most
+    ``max_files_per_job × target`` input bytes, in path order; cross-tile
+    key ranges overlap only there."""
+    tiles: list = []
+    cur: list = []
+
+    def flush() -> None:
+        if cur:
+            pieces = [p.assign(tidx=j) for j, (p, _) in enumerate(cur, start=1)]
+            tiles.append(_Tile(pd.concat(pieces), [n for _, n in cur]))
+            cur.clear()
+
+    def n_files(pieces) -> int:
+        return max(1, round(int(pieces["file_size_bytes"].sum()) / target_bytes))
+
+    def one_tuple(pieces) -> "_Tile":
+        return _Tile(pieces.assign(tidx=1), [n_files(pieces)])
+
     cap = max_files_per_job * target_bytes
-    tiles, cur, cur_bytes = [], [], 0
-    sizes = man["file_size_bytes"]
-    for idx in order:
-        b = int(sizes[idx])
-        if cur and cur_bytes + b > cap:
-            tiles.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(idx)
-        cur_bytes += b
-    if cur:
-        tiles.append(cur)
+    for _, pieces in census.sort_values(["tuple", "path"]).groupby("tuple", sort=True):
+        n = n_files(pieces)
+        if n > max_files_per_job:
+            flush()
+            chunk, nbytes = [], 0
+            for idx, size in pieces["file_size_bytes"].items():
+                if chunk and nbytes + int(size) > cap:
+                    tiles.append(one_tuple(pieces.loc[chunk]))
+                    chunk, nbytes = [], 0
+                chunk.append(idx)
+                nbytes += int(size)
+            tiles.append(one_tuple(pieces.loc[chunk]))
+            continue
+        width = sum(m for _, m in cur) + n
+        if cur and (width > max_files_per_job or len(cur) == _MAX_TILE_TUPLES):
+            flush()
+        cur.append((pieces, n))
+    flush()
     return tiles
 
 
-_PATH = "__cluster_path"
-
-
-def _key_scan(table: Table, spark: SparkSession, rel_paths, need: list):
-    """Column-pruned scan of ``need`` (partition, curve and salt columns:
-    a few bytes a row, no payload) plus each row's table-relative file
-    path in ``_PATH``."""
-    import os
-
-    paths = [os.path.join(table.root, p) for p in rel_paths]
-    return table.read_data(spark, paths).select(
-        *need, rel_path_expr(table.root).alias(_PATH)
-    )
-
-
-def _tile_frame(spark: SparkSession, tile_paths: dict):
-    """(``_PATH`` → ``__tile``) table over every file of the given tiles,
-    as a ``LocalRelation`` (Arrow-built: no job, no Python worker)."""
+def _piece_frame(spark: SparkSession, pieces: dict):
+    """``pieces`` ({tile: its pieces}) as the frame of
+    ``tableformat.join_pieces``, each piece tagged with its ``__tile``
+    and ``__tidx``: a ``LocalRelation`` (Arrow-built: no job, no Python
+    worker)."""
+    rows = pd.concat([p.assign(tile=n) for n, p in pieces.items()])
     return local_frame(
         spark,
         {
-            _PATH: [p for paths in tile_paths.values() for p in paths],
-            "__tile": [t for t, paths in tile_paths.items() for _ in paths],
+            "__pp": list(rows["path"]),
+            "__pt": [None if pd.isna(s) else s for s in rows["slice"]],
+            "__tile": [int(n) for n in rows["tile"]],
+            "__tidx": [int(j) for j in rows["tidx"]],
         },
-        f"{_PATH} string, __tile int",
+        "__pp string, __pt string, __tile int, __tidx int",
     )
 
 
-def _tile_bounds(spark: SparkSession, keys, tile_paths: dict, n_outs: dict) -> dict:
-    """Range bounds of every tile from ONE grouped aggregate.
+def _tile_bounds(spark: SparkSession, keys, n_outs: dict) -> dict:
+    """Range quantiles of every (tile, tuple) that writes several files,
+    from ONE grouped aggregate.
 
-    ``keys`` holds the composite key ``ck`` and the file path ``_PATH``
-    of each row; a broadcast path→tile frame tags each row with its
-    tile, then one ``percentile_approx`` per tile evaluates the union of
-    the tiles' ``i / n_out`` fractions. Accuracy ``4 × max n_out`` holds
-    every tile's rank error to at most 1/(4 n_out) of its rows. Returns
-    {tile: sorted int64 bounds, n_out - 1 of them}; a tile with no rows
-    gets none (its rows, if any, all route to file 0)."""
+    ``keys`` holds ``__tile``, ``__tidx`` and the low key bits ``k`` of
+    each row; ``n_outs`` maps (tile, tidx) to that tuple's output files.
+    One ``percentile_approx`` per group evaluates the union of the
+    tuples' ``i / n`` fractions; accuracy ``4 × max n`` holds every
+    tuple's rank error to at most 1/(4 n) of its rows. Returns
+    {(tile, tidx): the tuple's n - 1 sorted quantiles}; a tuple with no
+    rows gets none."""
     fracs = sorted({i / n for n in n_outs.values() for i in range(1, n)})
     at = {f: j for j, f in enumerate(fracs)}
     rows = (
-        keys.join(F.broadcast(_tile_frame(spark, tile_paths)), _PATH)
-        .groupBy("__tile")
-        .agg(
-            F.percentile_approx("ck", fracs, 4 * max(n_outs.values())).alias("q")
-        )
+        keys.groupBy("__tile", "__tidx")
+        .agg(F.percentile_approx("k", fracs, 4 * max(n_outs.values())).alias("q"))
         .collect()
     )
-    q = {r["__tile"]: r["q"] for r in rows}
+    q = {(r["__tile"], r["__tidx"]): r["q"] for r in rows}
     return {
-        t: np.sort(
-            np.array(
-                [q[t][at[i / n]] for i in range(1, n)] if t in q else [],
-                dtype=np.int64,
-            )
-        )
-        for t, n in n_outs.items()
+        g: sorted(int(q[g][at[i / n]]) for i in range(1, n))
+        for g, n in n_outs.items()
+        if g in q
     }
+
+
+def _bounds(tile_no: int, tile: _Tile, quantiles: dict) -> np.ndarray:
+    """A tile's n_out - 1 route bounds: each later tuple's start just
+    below ``idx << 56``, and each tuple's own range quantiles inside its
+    band."""
+    b = []
+    for j, n in enumerate(tile.n_outs, start=1):
+        if j > 1:
+            b.append((j << 56) - 1)
+        b += [(j << 56) | k for k in quantiles.get((tile_no, j), [])]
+    return np.sort(np.array(b, dtype=np.int64))
 
 
 # mode="auto" rewrites incrementally only while at most this fraction of
@@ -454,100 +497,80 @@ def cluster(
     if work.empty:
         return None  # nothing in scope / fully clustered: nothing to commit
 
-    # distinct partition TUPLES straight from the manifest (no data read);
-    # multi-level specs (year=/month=/day=) join levels with _PART_SEP
-    part_values: list = []
-    if meta.partition_cols:
-        vals = set()
-        for pj in work["partition_json"].unique():
-            d = _json.loads(pj)
-            levels = [d.get(c) for c in transforms.field_names(meta.partition_cols)]
-            if any(v is None or v == "__mixed__" for v in levels):
-                continue
-            vals.add(_PART_SEP.join(str(v) for v in levels))
-        part_values = sorted(vals)
-
+    # the files' partition tuples: pure files off the manifest, the
+    # mixed ones from one column-pruned count (no payload read)
+    with pt.phase("plan"):
+        census = tuple_census(table, spark, work)
     key = _curve_key(curve, cols)
     sort_cols = transforms.exprs(meta.partition_cols) + [F.col(_KEY)]
-    need = list(
-        dict.fromkeys(
-            transforms.source_cols(meta.partition_cols) + list(cols) + ["image_id"]
-        )
-    )
+    tiles = _plan_tiles(census, target_file_size_bytes, max_files_per_job)
+    by_path = work.set_index("path", drop=False)
+    tile_rows = [by_path.loc[list(dict.fromkeys(t.pieces["path"]))] for t in tiles]
 
-    pruned_cache = None
-    if meta.partition_cols and not part_values:
-        # mixed input files (raw bronze): learn the partition tuples from
-        # a column-pruned distinct — reads only key/partition columns of
-        # the FILES BEING REWRITTEN, no payloads — so clustering is
-        # partition-major even on a table whose current layout ignores
-        # partitions. The pruned frame is CACHED: the bounds job
-        # re-aggregates it instead of re-reading the files (one planning
-        # pass, not two).
-        pruned_cache = _key_scan(table, spark, work["path"], need).persist()
-        part_values = sorted(
-            r[0]
-            for r in pruned_cache.select(
-                _part_key_col(list(meta.partition_cols)).alias("pk")
-            )
-            .distinct()
-            .collect()
-            if r[0] is not None
-        )
-
-    tiles = _plan_tiles(work, target_file_size_bytes, max_files_per_job)
-    tile_rows = [work.loc[idxs] for idxs in tiles]
-    n_outs = [
-        max(1, round(int(r["file_size_bytes"].sum()) / target_file_size_bytes))
-        for r in tile_rows
-    ]
-
-    def ck_of(k):
-        """The routed composite key; a NULL key sorts first."""
-        return F.coalesce(
-            _composite(k, meta.partition_cols, part_values),
-            F.lit(np.iinfo(np.int64).min + 1),
-        )
+    def pieces_of(df, pieces: dict):
+        """The rows of ``df`` that ``pieces`` ({tile: its pieces}) take,
+        tagged with their ``__tile`` and ``__tidx``."""
+        sliced = any(p["slice"].notna().any() for p in pieces.values())
+        return join_pieces(table, df, _piece_frame(spark, pieces), sliced)
 
     broadcasts: list = []
     stage = ("cluster", "tile")
-    # tiles that still have to write more than one file need range bounds
     resumed = resumed_units(checkpoint, stage, range(len(tiles)))
-    ranged = [i for i in range(len(tiles)) if n_outs[i] > 1 and i not in resumed]
-    bounds: dict = {}
+    # tuples that still have to write more than one file need quantiles
+    n_outs = {
+        (i, j): n
+        for i, t in enumerate(tiles)
+        if i not in resumed
+        for j, n in enumerate(t.n_outs, start=1)
+        if n > 1
+    }
+    ranged = sorted({i for i, _ in n_outs})
+    quantiles: dict = {}
     lock = threading.Lock()
+    done: list = []
 
     def tile_bounds() -> dict:
         # ONE grouped job for every ranged tile, run once: it is the
-        # first task of the pool, so single-file and resumed tiles
-        # overlap it while each ranged tile's plan waits on it
+        # first task of the pool, so the other tiles overlap it while
+        # each ranged tile's plan waits on it
         with lock:
-            if not bounds:
-                keys = pruned_cache if pruned_cache is not None else _key_scan(
-                    table, spark, [p for i in ranged for p in tile_rows[i]["path"]], need
-                )
+            if not done:
+                done.append(True)
+                pieces = {
+                    i: p[[(i, j) in n_outs for j in p["tidx"]]]
+                    for i in ranged
+                    for p in [tiles[i].pieces]
+                }
+                files = dict.fromkeys(f for p in pieces.values() for f in p["path"])
+                paths = [os.path.join(table.root, f) for f in files]
+                rows = pieces_of(table.read_data(spark, paths), pieces)
                 with pt.phase("quantile"):
-                    bounds.update(
+                    quantiles.update(
                         _tile_bounds(
                             spark,
-                            keys.select(ck_of(key).alias("ck"), _PATH),
-                            {i: list(tile_rows[i]["path"]) for i in ranged},
-                            {i: n_outs[i] for i in ranged},
+                            rows.select("__tile", "__tidx", _low(key).alias("k")),
+                            n_outs,
                         )
                     )
-        return bounds
+        return quantiles
 
     def plan(tile_no: int, df):
-        n_out = n_outs[tile_no]
+        tile = tiles[tile_no]
+        n_out = tile.n_out
+        if len(tile.n_outs) > 1 or tile.sliced:
+            df = pieces_of(df, {tile_no: tile.pieces}).drop("__tile")
+            idx = F.col("__tidx")
+        else:
+            idx = F.lit(1)
         full = df.withColumn(_KEY, key)
         if n_out == 1:
-            return full.coalesce(1).sortWithinPartitions(*sort_cols).drop(_KEY)
+            return full.coalesce(1).sortWithinPartitions(*sort_cols).drop(_KEY, "__tidx")
         # one full pass: route → exact shuffle → sort → write. The
         # composite key is materialized as a column FIRST so it is
         # evaluated once per row on either route path.
-        tile_b = tile_bounds()[tile_no]
+        tile_b = _bounds(tile_no, tile, tile_bounds() if tile_no in ranged else {})
         salts = exact_route_salts(n_out)
-        keyed = full.withColumn("__ck", ck_of(F.col(_KEY)))
+        keyed = full.withColumn("__ck", _composite(F.col(_KEY), idx))
         if n_out <= _JVM_ROUTE_MAX:
             routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), tile_b, salts))
         else:
@@ -557,16 +580,20 @@ def cluster(
         return (
             routed.repartition(n_out, F.col(_ROUTE))
             .sortWithinPartitions(*sort_cols)
-            .drop(_KEY, _ROUTE, "__ck")
+            .drop(_KEY, _ROUTE, "__ck", "__tidx")
         )
 
     # Read splits aligned with the target file size for the whole stage:
     # the default 128 MB split caps the read/route stage at
     # total_bytes/128MB tasks no matter how many executors exist; one
-    # split ≈ one input file keeps scan parallelism proportional to the
-    # table, matching the shuffle side's n_out partitions.
+    # split ≈ one target of input keeps scan parallelism proportional to
+    # the table, matching the shuffle side's n_out partitions. A file
+    # counts 1/16 of the target beyond its bytes, so a split packs up to
+    # 16 small files: a tile of one date reads every raw bronze file
+    # that holds the date, and at Spark's 4 MB open cost each would be
+    # a task of its own.
     order = [i for i in range(len(tiles)) if i not in ranged] + ranged
-    with read_split_size(spark, target_file_size_bytes):
+    with read_split_size(spark, target_file_size_bytes, target_file_size_bytes // 16):
         entries, prefixes = rewrite_units(
             table,
             spark,
@@ -578,13 +605,11 @@ def cluster(
             alongside=[tile_bounds] if ranged else [],
         )
 
-    import os as _os
-
     # sorted-generation bookkeeping: output prefixes of this run, plus any
     # previous generation's prefixes that still own kept files (dead
     # prefixes — fully rewritten by a later full run — are dropped so the
     # property stays O(cluster runs since last full rewrite))
-    new_rel = sorted({_os.path.relpath(p, table.root) for p in prefixes.values()})
+    new_rel = sorted({os.path.relpath(p, table.root) for p in prefixes.values()})
     # (keyed on kept files, not the incremental flag: a predicate-scoped
     # full run also keeps files, whose generations stay live)
     live_old = [
@@ -600,6 +625,7 @@ def cluster(
     swap.add(entries)
     # a checkpointed pass keeps its prefixes on failure, so it can resume
     with swap if checkpoint is None else nullcontext():
+        check_rows_kept("cluster", work, entries)
         snap = swap.commit(
             "replace",
             {
@@ -619,8 +645,6 @@ def cluster(
         )
     for bc in broadcasts:
         bc.unpersist()
-    if pruned_cache is not None:
-        pruned_cache.unpersist()
     if checkpoint is not None:
         checkpoint.stage_done("cluster", dict(snap.summary, snapshot_id=snap.snapshot_id))
     return snap

@@ -10,6 +10,16 @@ path→salt join + one exact shuffle, plan size O(1) in the batch width)
 into one output file per group — a 10^6-small-file backlog costs
 hundreds of jobs, not a job per file pack.
 
+Mixed files are packed per tuple: the planner's input replaces every
+file that mixes partition tuples by its (file, tuple) pieces from the
+tuple census (``tableformat.tuple_census``: one column-pruned count over
+only those files' partition columns; pure files are read off the
+manifest), and the batch job routes rows by (file, tuple). A tuple that
+mixed files hold is written as ``max(1, round(bytes / target))`` files
+of near-equal size, the rule ``cluster`` writes a tuple by. So every
+output file holds one tuple, a tuple under the target gets one file, and
+the next ``overwrite_partitions`` of a tuple drops its files by metadata.
+
 Batches are the units of ``tableformat.rewrite_units``, the runner every
 data-file rewrite shares: it runs them concurrently (up to
 ``parallelism`` jobs), collects each batch's stats as its write lands,
@@ -24,8 +34,10 @@ from __future__ import annotations
 
 import time
 from contextlib import nullcontext
+from functools import reduce
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 from ..plans.binpack import (
@@ -40,9 +52,11 @@ from ..sources.tableformat import (
     FileSwap,
     Snapshot,
     Table,
-    rel_path_expr,
+    check_rows_kept,
+    join_pieces,
     rewrite_units,
     statable_cols,
+    tuple_census,
 )
 from .checkpoint import RunCheckpoint
 from .timing import PhaseTimer
@@ -94,8 +108,9 @@ def _group_plan(table: Table, group: CompactionGroup, df):
 
 
 def _route_frame(spark: SparkSession, groups: list):
-    """(``__route_path`` → ``__rt``) table: every input file of group i
-    carries the exact-route salt that lands it in shuffle partition i.
+    """The pieces (``tableformat.join_pieces``) of ``groups``: every input
+    file of group i, or the slice of it group i takes, carries the
+    exact-route salt ``__rt`` that lands it in shuffle partition i.
     Built from Arrow, so it is a ``LocalRelation`` (no job, no Python
     worker)."""
     from .cluster import exact_route_salts
@@ -104,10 +119,57 @@ def _route_frame(spark: SparkSession, groups: list):
     return local_frame(
         spark,
         {
-            "__route_path": [p for g in groups for p in g.paths],
+            "__pp": [p for g in groups for p in g.paths],
+            "__pt": [s for g in groups for s in g.slices],
             "__rt": [int(salts[i]) for i, g in enumerate(groups) for _ in g.paths],
         },
-        "__route_path string, __rt int",
+        "__pp string, __pt string, __rt int",
+    )
+
+
+def _sliced(table: Table, spark: SparkSession, man):
+    """The manifest rows ``man`` with every file that mixes partition
+    tuples replaced by one row per (file, tuple) of ``tuple_census``,
+    carrying the file's other columns and the tuple as ``slice``.
+
+    ``man`` is pandas, or above ``SPARK_MANIFEST_THRESHOLD`` the manifest
+    relation: then only the mixed files' rows reach the driver, and
+    their census rows are joined back in."""
+    from pyspark.sql import functions as F
+
+    base = ["partition_json", "record_count", "file_size_bytes"]
+    if isinstance(man, pd.DataFrame):
+        census = tuple_census(table, spark, man).drop(columns="tuple")
+        return man.drop(columns=base).merge(census, on="path")
+    fields = transforms.field_names(table.metadata().partition_cols)
+    pj = F.col("partition_json")
+    mixed = reduce(
+        lambda a, b: a | b,
+        [
+            F.get_json_object(pj, f"$.{f}").isNull()
+            | (F.get_json_object(pj, f"$.{f}") == "__mixed__")
+            for f in fields
+        ],
+        F.lit(False),
+    )
+    rows = man.filter(mixed).select("path", *base).toPandas()
+    census = tuple_census(table, spark, rows)
+    sl = local_frame(
+        spark,
+        {
+            "path": list(census["path"]),
+            "slice": list(census["slice"]),
+            **{f"__c_{c}": list(census[c]) for c in base},
+        },
+        "path string, slice string, __c_partition_json string, "
+        "__c_record_count long, __c_file_size_bytes long",
+    )
+    return man.join(F.broadcast(sl), "path", "left").select(
+        *[
+            F.coalesce(F.col(f"__c_{c}"), F.col(c)).alias(c) if c in base else F.col(c)
+            for c in man.columns
+        ],
+        "slice",
     )
 
 
@@ -115,10 +177,12 @@ def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df):
     """A batch of PACK groups as ONE Spark job over ``df``, the rows of
     all their files.
 
-    Each input file belongs to exactly one group, so rows are routed by
-    their source file: a (path → routing salt) TABLE is broadcast and
-    hash-joined against ``_metadata.file_path``, then one exact shuffle
-    lands one partition — and one output file — per group. The routing
+    Each input file, or each tuple's slice of a file that mixes
+    partition tuples, belongs to exactly one group, so rows are routed by
+    their source piece: a (path, slice → routing salt) TABLE is broadcast
+    and hash-joined against ``_metadata.file_path`` (``join_pieces``),
+    then one exact shuffle lands one partition — and one output file, of
+    one tuple — per group. The routing
     table is DATA, not plan literals (an earlier version in-lined a
     ``create_map`` with one literal pair per file, which grows the plan
     O(files-per-batch) and forced small batches — the same plan-size
@@ -132,15 +196,13 @@ def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df):
     collapses the union of coalesced children into a single partition.)"""
     from pyspark.sql import functions as F
 
-    if len(groups) == 1:
+    sliced = any(s is not None for g in groups for s in g.slices)
+    if len(groups) == 1 and not sliced:
         return _group_plan(table, groups[0], df)
-    df = (
-        df.withColumn("__route_path", rel_path_expr(table.root))
-        .join(F.broadcast(_route_frame(spark, groups)), "__route_path", "inner")
-        .drop("__route_path")
-        .repartition(len(groups), F.col("__rt"))
-        .drop("__rt")
-    )
+    df = join_pieces(table, df, _route_frame(spark, groups), sliced)
+    if len(groups) == 1:
+        return _group_plan(table, groups[0], df.drop("__rt"))
+    df = df.repartition(len(groups), F.col("__rt")).drop("__rt")
     key = _sort_key(df)
     part_cols = transforms.exprs(table.metadata().partition_cols)
     sort_cols = part_cols + ([key] if key is not None else [])
@@ -169,7 +231,11 @@ def compact(
     at 10^12-row scale maintenance targets the hot partitions of the
     day's ingest, not the whole table. Hidden-partition transforms apply
     (a plain ``ingest_date`` predicate scopes a ``days(ingest_date)``
-    table)."""
+    table).
+
+    Every file in scope that mixes partition tuples is rewritten, its
+    rows routed by tuple (``tableformat.tuple_census`` slices), so every
+    output file holds one partition tuple."""
     # a pack-group rewrite copies whole files (and re-stamping a file's
     # path would break the equality sequence rule)
     table.refuse_pending_deletes("compaction")
@@ -203,7 +269,7 @@ def compact(
                     manifest_prune_cond(set(man_df.columns), prune_preds, statable)
                 )
             plan: CompactionPlan = plan_compaction_spark(
-                man_df,
+                _sliced(table, spark, man_df),
                 target_file_size_bytes,
                 min_input_files=min_input_files,
             )
@@ -212,7 +278,7 @@ def compact(
             if prune_preds:
                 man_scope = prune_manifest(man_scope, prune_preds, statable)
             plan = plan_compaction(
-                man_scope,
+                _sliced(table, spark, man_scope),
                 target_file_size_bytes,
                 min_input_files=min_input_files,
             )
@@ -231,7 +297,8 @@ def compact(
     batches += [[g] for g in singles]
 
     # the batches' manifest rows: pandas on either planner path (the
-    # swap's base manifest, read once)
+    # swap's base manifest, read once); a file sliced across batches is
+    # read by each
     man = swap.man
     by_path = man.set_index("path", drop=False)
     # Concurrent batch jobs keep many executors busy on a real cluster
@@ -241,7 +308,7 @@ def compact(
         table,
         spark,
         {
-            i: by_path.loc[[p for g in b for p in g.paths]]
+            i: by_path.loc[list(dict.fromkeys(p for g in b for p in g.paths))]
             for i, b in enumerate(batches)
         },
         lambda i, df: _rewrite_batch(table, spark, batches[i], df),
@@ -256,11 +323,13 @@ def compact(
     )
 
     rewritten = plan.rewritten_paths
-    swap.drop(man[man["path"].isin(rewritten)])
+    dropped = man[man["path"].isin(rewritten)]
+    swap.drop(dropped)
     swap.add(new_entries)
     # a checkpointed pass keeps its prefixes on failure, so it can resume;
     # residual of duration_sec minus the phases = commit/manifest IO
     with swap if checkpoint is None else nullcontext():
+        check_rows_kept("compaction", dropped, new_entries)
         snap = swap.commit(
             "replace",
             {

@@ -570,8 +570,9 @@ def _source_keys(src: DataFrame, key: str) -> tuple:
 
 def _modest_write(table, df, key: str) -> str:
     """Write a small delta (updates/inserts) as a handful of files sorted
-    by the cluster key — no shuffle beyond a coalesce. Falls back to a
-    plain key sort for tables without the (phash, w, h) image columns."""
+    by the table's partition spec, then the cluster key — no shuffle
+    beyond a coalesce. Falls back to a plain key sort for tables without
+    the (phash, w, h) image columns."""
     from ..functions.udfs import morton64_expr
 
     # parallel encode: a fixed-size delta written with 1 task is a pure
@@ -582,12 +583,8 @@ def _modest_write(table, df, key: str) -> str:
         sort_key = morton64_expr(F.col("phash"), F.col("w"), F.col("h"))
     else:
         sort_key = F.col(key)
-    out = (
-        df.coalesce(n_out)
-        .sortWithinPartitions(
-            *[c for c in ("ingest_date",) if c in names],
-            sort_key,
-        )
+    out = df.coalesce(n_out).sortWithinPartitions(
+        *transforms.exprs(table.metadata().partition_cols), sort_key
     )
     prefix = table.new_data_prefix()
     table.data_writer(out).parquet(prefix)

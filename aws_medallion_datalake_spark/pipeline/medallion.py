@@ -92,40 +92,33 @@ def silver_refine(
         stats_cols=STATS,
     )
     df = silver_transform(bronze.scan(spark, snapshot_id=snapshot_id), batch_id)
-    # Partition-homogeneous files without a sampling job: dates are known
-    # from the bronze manifest, so route each (date, hash-slot) pair to
-    # exactly one output partition via the cluster module's exact
-    # hash-routing salts. (repartitionByRange here would sample the full
-    # child plan — every image payload — to learn what the manifest
-    # already knows.)
-    import json as _json
-
+    # Partition-homogeneous files without a sampling job: the dates come
+    # from one scan of the ingest_date column alone (column-pruned, no
+    # payload read; whatever bronze's partition spec), so route each
+    # (date, hash-slot) pair to exactly one output partition via the
+    # cluster module's exact hash-routing salts. (repartitionByRange here
+    # would sample the full child plan — every image payload — to learn
+    # the dates.) NULL dates get a band of their own.
     from ..operators.cluster import exact_route_salts
 
-    man = bronze.manifest_pdf(snapshot_id)
-    dates = sorted(
-        {
-            v
-            for pj in man["partition_json"].unique()
-            for v in [_json.loads(pj).get("ingest_date")]
-            if v is not None and v != "__mixed__"
-        }
-    )
-    if not dates:  # raw bronze files are usually date-mixed: fall back to
-        # a column-pruned distinct (reads one string column, no payloads)
-        dates = sorted(
-            r[0]
-            for r in bronze.scan(spark, snapshot_id=snapshot_id, columns=["ingest_date"])
-            .distinct()
-            .collect()
-            if r[0] is not None
-        )
-    slots_per_date = max(1, spark.sparkContext.defaultParallelism // max(1, len(dates)))
-    n_out = max(1, len(dates)) * slots_per_date
+    found = {
+        r[0]
+        for r in bronze.scan(spark, snapshot_id=snapshot_id, columns=["ingest_date"])
+        .distinct()
+        .collect()
+    }
+    dates = sorted(d for d in found if d is not None)
+    bands = max(1, len(dates) + (None in found))
+    slots_per_date = max(1, spark.sparkContext.defaultParallelism // bands)
+    n_out = bands * slots_per_date
     salts = [int(s) for s in exact_route_salts(n_out)]
-    didx = F.greatest(
-        F.array_position(F.array(*[F.lit(d) for d in dates]), F.col("ingest_date")),
-        F.lit(1),
+    didx = (
+        F.coalesce(
+            F.array_position(F.array(*[F.lit(d) for d in dates]), F.col("ingest_date")),
+            F.lit(len(dates) + 1),
+        )
+        if dates
+        else F.lit(1)
     )
     slot = F.pmod(F.xxhash64("image_id"), F.lit(slots_per_date))
     bucket = (didx - 1) * slots_per_date + slot  # didx is 1-based

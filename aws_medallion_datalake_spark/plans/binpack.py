@@ -5,7 +5,9 @@ Replaces the reference's degenerate ``coalesce(1)`` small-file policy
  scripts/bronze_digit.py:149 — SURVEY.md §2.1 S7, §4) with the policy the
 north_star demands: pack manifest entries per partition into rewrite groups
 of ≈ ``target_file_size_bytes``; each group becomes one right-sized output
-file. Oversized files get their own split groups.
+file. Oversized files get their own split groups. Files that mix
+partition tuples arrive as one row per (file, tuple) *slice*
+(``tableformat.tuple_census``), so they are packed per tuple too.
 
 Planning is O(files log files) pure pandas on the manifest — no data read.
 At 10^8-file scale the same FFD runs per-partition inside a Spark
@@ -38,6 +40,10 @@ class CompactionGroup:
     # output. Random-order inputs (raw bronze, span-overlapping) skip the
     # sort — it buys no pruning and costs CPU.
     ordered: bool = False
+    # per path: the tuple key of the rows this group takes from a file
+    # that holds several partition tuples (``tableformat.tuple_census``
+    # ``slice``), None for the whole file
+    slices: list = field(default_factory=list)
 
 
 @dataclass
@@ -51,7 +57,7 @@ class CompactionPlan:
     def summary(self) -> dict:
         return {
             "groups": len(self.groups),
-            "files_in": sum(len(g.paths) for g in self.groups),
+            "files_in": len(self.rewritten_paths),
             "files_out": sum(g.n_output_files for g in self.groups),
             "bytes": sum(g.input_bytes for g in self.groups),
         }
@@ -90,6 +96,15 @@ def plan_compaction(
       > max_file_ratio * target (too big).
     - pack groups with fewer than ``min_input_files`` inputs are dropped —
       rewriting a lone small file buys nothing.
+    - *slices*: rows with a ``slice`` (``tableformat.tuple_census`` of a
+      file that mixes partition tuples, ``partition_json`` the slice's
+      tuple) are always rewritten, since the file they come from must be
+      rewritten whole: a slice is packed at any size up to the split
+      threshold, and a group holding a slice is kept whatever its input
+      count. So every output holds one tuple. A tuple with slices is cut,
+      in packing order, into ``max(1, round(bytes / target))`` bins of
+      near-equal bytes, the rule ``cluster`` writes a tuple by, so it
+      leaves no small remainder file.
     - packing order: when the manifest carries ``min_<order_col>`` stats,
       candidates are packed NEXT-FIT in (min_key, path) order so each
       output file concatenates key-ADJACENT inputs — a clustered table
@@ -102,10 +117,23 @@ def plan_compaction(
     key_stats = f"min_{order_col}" if f"min_{order_col}" in manifest.columns else None
     groups: list = []
     gid = 0
+    if "slice" not in manifest.columns:
+        manifest = manifest.assign(slice=None)
     for pjson, part in manifest.groupby("partition_json", sort=True):
-        cand = part[part["file_size_bytes"] < small]
+        sliced = part["slice"].notna()
+        size = part["file_size_bytes"]
+        cand = part[(size < small) | (sliced & (size <= big))]
         bins: list = []  # (remaining_bytes, [rows])
-        if key_stats is not None:
+        if sliced.any():
+            cand = cand.sort_values([key_stats or "path", "path"])
+            sizes = cand["file_size_bytes"].astype("int64")
+            total = int(sizes.sum())
+            n = max(1, round(total / target_file_size_bytes))
+            # each row's bin: where its middle byte falls among n equal cuts
+            which = (sizes.cumsum() - sizes // 2) * n // max(total, 1)
+            for _, rows in cand.groupby(which.clip(upper=n - 1).to_numpy(), sort=True):
+                bins.append([0, [r for _, r in rows.iterrows()]])
+        elif key_stats is not None:
             cand = cand.sort_values([key_stats, "path"])
             for _, row in cand.iterrows():  # next-fit: keep key adjacency
                 sz = int(row["file_size_bytes"])
@@ -127,7 +155,10 @@ def plan_compaction(
                     bins.append([target_file_size_bytes - sz, [row]])
         for b in bins:
             rows = b[1]
-            if len(rows) < min_input_files:
+            slices = [r["slice"] if pd.notna(r["slice"]) else None for r in rows]
+            # a slice's tuple key may be '' (an empty string value), so
+            # test for a slice, not for a truthy one
+            if len(rows) < min_input_files and all(s is None for s in slices):
                 continue
             groups.append(
                 CompactionGroup(
@@ -139,6 +170,7 @@ def plan_compaction(
                     input_records=int(sum(r["record_count"] for r in rows)),
                     n_output_files=1,
                     ordered=_is_range_structured(rows, order_col),
+                    slices=slices,
                 )
             )
             gid += 1
@@ -153,6 +185,7 @@ def plan_compaction(
                     input_bytes=int(row["file_size_bytes"]),
                     input_records=int(row["record_count"]),
                     n_output_files=int(n_out),
+                    slices=[row["slice"] if pd.notna(row["slice"]) else None],
                 )
             )
             gid += 1
@@ -161,7 +194,8 @@ def plan_compaction(
 
 _GROUP_ROW_DDL = (
     "partition_json string, kind string, paths array<string>, "
-    "input_bytes long, input_records long, n_output_files int, ordered boolean"
+    "input_bytes long, input_records long, n_output_files int, ordered boolean, "
+    "slices array<string>"
 )
 
 
@@ -198,12 +232,13 @@ def plan_compaction_spark(
                     "input_records": g.input_records,
                     "n_output_files": g.n_output_files,
                     "ordered": bool(g.ordered),
+                    "slices": list(g.slices),
                 }
                 for g in plan.groups
             ],
             columns=[
                 "partition_json", "kind", "paths", "input_bytes",
-                "input_records", "n_output_files", "ordered",
+                "input_records", "n_output_files", "ordered", "slices",
             ],
         )
 
@@ -225,6 +260,7 @@ def plan_compaction_spark(
             input_records=int(r["input_records"]),
             n_output_files=int(r["n_output_files"]),
             ordered=bool(r["ordered"]),
+            slices=list(r["slices"]),
         )
         for i, r in rows.iterrows()
     ]

@@ -18,6 +18,7 @@ harvests fan out over executors.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -31,6 +32,14 @@ _PKG_NAME = os.path.basename(_PKG_DIR)
 def build_pyfiles_zip(dest: str | None = None) -> str:
     """Zip the package for --py-files / addPyFile distribution.
 
+    By default the zip is named by a hash of the package's files
+    (``<tempdir>/<package>-<hash>.zip``) and written once: an unchanged
+    package returns the existing zip untouched, so processes on one host
+    never rewrite a zip another one has shipped (Spark refuses to add a
+    file whose contents changed under its name). Entries carry a fixed
+    timestamp, and the zip lands by ``os.replace`` of a temporary file,
+    so no reader sees a partial zip.
+
     When the package already IMPORTS from a zip (a spark-submit
     --py-files driver), that zip is the distributable — return it
     instead of walking a zip-interior path (which yields nothing and
@@ -42,18 +51,36 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
         if container and zipfile.is_zipfile(container):
             return container
         raise RuntimeError(f"package dir {_PKG_DIR!r} is not walkable")
-    if dest is None:
-        dest = os.path.join(tempfile.gettempdir(), f"{_PKG_NAME}.zip")
-    with zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(_PKG_DIR):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in filenames:
-                if not fn.endswith(".py"):
-                    continue
+    files = []
+    for dirpath, dirnames, filenames in os.walk(_PKG_DIR):
+        dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
+        for fn in sorted(filenames):
+            if fn.endswith(".py"):
                 full = os.path.join(dirpath, fn)
                 rel = os.path.join(_PKG_NAME, os.path.relpath(full, _PKG_DIR))
-                zf.write(full, rel)
+                with open(full, "rb") as fh:
+                    files.append((rel, fh.read()))
+    if dest is None:
+        h = hashlib.sha256()
+        for rel, data in files:
+            h.update(f"{rel}\0{len(data)}\0".encode())
+            h.update(data)
+        name = f"{_PKG_NAME}-{h.hexdigest()[:16]}.zip"
+        dest = os.path.join(tempfile.gettempdir(), name)
+        if os.path.isfile(dest):
+            return dest
+    where = os.path.dirname(os.path.abspath(dest))
+    fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=where)
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for rel, data in files:
+                entry = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+                zf.writestr(entry, data, zipfile.ZIP_DEFLATED)
+        os.replace(tmp, dest)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
     return dest
 
 

@@ -1780,20 +1780,11 @@ class Table:
         return pa.table({n: arrays[n] for n in names})
 
     def _stats_tail(self, atbl: pa.Table, part_fields) -> pd.DataFrame:
-        # via Arrow, NOT toPandas: pandas coerces a nullable int64 column
-        # that happens to be all-null in this batch to float64, which (a)
-        # breaks the mergeSchema manifest read against sibling int64
-        # manifests and (b) rounds >2^53 values (phash!) — unsound stats.
-        # Integer columns with nulls become pandas Int64 (exact).
-        pdf = atbl.to_pandas()
-        for f_ in atbl.schema:
-            if pa.types.is_integer(f_.type) and pdf[f_.name].dtype.kind == "f":
-                pdf[f_.name] = pd.Series(
-                    atbl[f_.name].to_pylist(), index=pdf.index, dtype="Int64"
-                )
+        pdf = _arrow_pandas(atbl)
         # A file "belongs" to a partition value iff min == max on every
-        # partition column; boundary files from range partitioning are
-        # tagged mixed and handled (rewritten) by compaction. Vectorized:
+        # partition column; files that span values (raw ingest, range
+        # boundaries) are tagged mixed, and the next compaction or cluster
+        # routes their rows by tuple (tuple_census). Vectorized:
         # an iterrows() loop here is O(files) of slow driver python —
         # pandas stays the planner only below SPARK_MANIFEST_THRESHOLD,
         # but 2M rows of iterrows is minutes while this is milliseconds.
@@ -2368,7 +2359,7 @@ from contextlib import contextmanager, nullcontext
 
 
 @contextmanager
-def read_split_size(spark: SparkSession, nbytes: int):
+def read_split_size(spark: SparkSession, nbytes: int, open_cost: Optional[int] = None):
     """Align parquet read-split size with a maintenance stage's target
     file size for the duration of the stage.
 
@@ -2381,17 +2372,25 @@ def read_split_size(spark: SparkSession, nbytes: int):
     size keeps one task ≈ one output file and lets read-stage
     parallelism scale with the cluster instead of the constant 128 MB.
 
+    ``open_cost`` also sets the bytes a file counts for beyond its size
+    when files are packed into a split (``openCostInBytes``, 4 MB by
+    default): a low cost packs many small files into one split.
+
     Session-scoped by design: maintenance stages are single-driver and
     sequential (operators/run.py); concurrent TILE/BATCH jobs inside one
     stage all want the same split size, and the conf is restored on
     exit."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(int(nbytes)))
+    confs = {"spark.sql.files.maxPartitionBytes": int(nbytes)}
+    if open_cost is not None:
+        confs["spark.sql.files.openCostInBytes"] = int(open_cost)
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, str(v))
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def rewrite_split_size(
@@ -2614,6 +2613,149 @@ def rewrite_files(
 def records(files: pd.DataFrame) -> int:
     """Rows held by the manifest rows ``files``."""
     return int(files["record_count"].sum()) if len(files) else 0
+
+
+def check_rows_kept(op: str, dropped: pd.DataFrame, added: pd.DataFrame) -> None:
+    """Refuse to commit a rewrite that moves rows without changing them
+    (compaction, ``cluster``) when the files it adds do not hold exactly
+    the rows of the files it drops: a planner that left a piece of a
+    dropped file unwritten would otherwise lose those rows silently."""
+    if records(dropped) != records(added):
+        raise RuntimeError(
+            f"{op}: the rewrite writes {records(added)} rows for the "
+            f"{records(dropped)} rows of the files it replaces"
+        )
+
+
+def _arrow_pandas(atbl: pa.Table) -> pd.DataFrame:
+    """``atbl`` as pandas, via Arrow, NOT toPandas: pandas coerces a
+    nullable int64 column that happens to be all-null in this batch to
+    float64, which (a) breaks the mergeSchema manifest read against
+    sibling int64 manifests and (b) rounds >2^53 values (phash!) —
+    unsound stats. Integer columns with nulls become pandas Int64
+    (exact)."""
+    pdf = atbl.to_pandas()
+    for f_ in atbl.schema:
+        if pa.types.is_integer(f_.type) and pdf[f_.name].dtype.kind == "f":
+            pdf[f_.name] = pd.Series(
+                atbl[f_.name].to_pylist(), index=pdf.index, dtype="Int64"
+            )
+    return pdf
+
+
+# A partition tuple as one string: every spec field's value cast to
+# string, joined by TUPLE_SEP; a NULL field reads as TUPLE_NULL.
+TUPLE_SEP = "\x1f"
+TUPLE_NULL = "\x00"
+
+
+def tuple_key_col(partition_cols):
+    """Each row's partition tuple as one ``TUPLE_SEP``-joined string."""
+    return F.concat_ws(
+        TUPLE_SEP,
+        *[
+            F.coalesce(e.cast("string"), F.lit(TUPLE_NULL))
+            for e in transforms.exprs(partition_cols)
+        ],
+    )
+
+
+def _tuple_json(fields: list, values: list) -> str:
+    """A tuple in the manifest's ``partition_json`` form (``_stats_tail``)."""
+    pairs = sorted(zip(fields, values))
+    return "{" + ", ".join(json.dumps(f) + ": " + json.dumps(v) for f, v in pairs) + "}"
+
+
+def tuple_census(
+    table: "Table", spark: SparkSession, files: pd.DataFrame
+) -> pd.DataFrame:
+    """Rows per (file, partition tuple) of the manifest rows ``files``.
+
+    A file whose ``partition_json`` gives one value for every field of
+    the current spec is *pure*: its one census row is read off the
+    manifest. The others (a ``__mixed__`` field, or a file written under
+    another spec) are counted by ONE column-pruned
+    ``groupBy(file, tuple).count()`` over only their partition source
+    columns: no payload byte is read.
+
+    Returns ``path``, ``tuple`` (the tuple's values joined by
+    ``TUPLE_SEP``), ``partition_json`` (the tuple in manifest form),
+    ``record_count``,
+    ``file_size_bytes`` (the file's bytes pro rata by rows) and
+    ``slice``: on the rows of a file that holds several tuples, the
+    tuple as ``tuple_key_col`` (Spark's string cast) computes it, which
+    a rewrite routes rows by; None on a file that holds one. ``tuple``
+    and ``partition_json`` format every value as the manifest does
+    (``_stats_tail``'s string of the typed value), so a pure and a mixed
+    file of one tuple agree whatever the value's type (a boolean reads
+    ``True`` there, ``true`` in Spark's cast)."""
+    cols = ["path", "partition_json", "record_count", "file_size_bytes"]
+    spec = table.metadata().partition_cols
+    fields = transforms.field_names(spec)
+
+    def pure_key(pj: str) -> Optional[str]:
+        d = json.loads(pj)
+        vals = [d.get(f) for f in fields]
+        if any(v is None or v == "__mixed__" for v in vals):
+            return None
+        return TUPLE_SEP.join(str(v) for v in vals)
+
+    pjs = files["partition_json"]
+    keys = pjs.map({pj: pure_key(pj) for pj in pjs.unique()})
+    pure = files.loc[keys.notna(), cols].assign(tuple=keys[keys.notna()], slice=None)
+    mixed = files.loc[keys.isna(), cols]
+    if not len(mixed):
+        return pure.reset_index(drop=True)
+    vcols = [f"__v{i}" for i in range(len(fields))]
+    counts = _arrow_pandas(
+        table.read_data(spark, [os.path.join(table.root, p) for p in mixed["path"]])
+        .select(
+            rel_path_expr(table.root).alias("path"),
+            tuple_key_col(spec).alias("slice"),
+            *[e.alias(v) for e, v in zip(transforms.exprs(spec), vcols)],
+        )
+        .groupBy("path", "slice", *vcols)
+        .count()
+        .toArrow()
+    )
+    vals = list(
+        zip(*[counts[v].astype(str).where(counts[v].notna(), None) for v in vcols])
+    )
+    census = pd.DataFrame(
+        {
+            "path": counts["path"],
+            "tuple": [
+                TUPLE_SEP.join(TUPLE_NULL if x is None else x for x in row) for row in vals
+            ],
+            "partition_json": [_tuple_json(fields, list(row)) for row in vals],
+            "record_count": counts["count"].astype("int64"),
+        },
+        columns=["path", "tuple", "partition_json", "record_count"],
+    )
+    per_file = census.groupby("path")["record_count"]
+    size = census["path"].map(mixed.set_index("path")["file_size_bytes"]).astype("int64")
+    share = size * census["record_count"] // per_file.transform("sum")
+    census["file_size_bytes"] = share.astype("int64")
+    census["slice"] = counts["slice"].where(per_file.transform("size") > 1, None)
+    return pd.concat([pure, census[pure.columns]], ignore_index=True)
+
+
+def join_pieces(
+    table: "Table", df: DataFrame, pieces: DataFrame, sliced: bool
+) -> DataFrame:
+    """The rows of ``df``, a rewrite's input frame, that belong to
+    ``pieces``, a small frame of ``__pp`` (file path) and ``__pt`` (a
+    ``slice`` of ``tuple_census``, or NULL), broadcast: a row matches
+    the piece of its file whose ``__pt`` is NULL (the whole file) or its
+    own tuple (one tuple's rows of a mixed file). ``sliced`` says whether
+    any ``__pt`` is set; without one the join is on the path alone. The
+    pieces' other columns ride along; ``__pp`` and ``__pt`` are dropped."""
+    rows = df.withColumn("__rp", rel_path_expr(table.root))
+    cond = rows["__rp"] == F.col("__pp")
+    if sliced:
+        tk = tuple_key_col(table.metadata().partition_cols)
+        cond = cond & (F.col("__pt").isNull() | (F.col("__pt") == tk))
+    return rows.join(F.broadcast(pieces), cond).drop("__rp", "__pp", "__pt")
 
 
 class FileSwap:

@@ -6,13 +6,14 @@ keep rewrites run no empty write task."""
 
 from types import SimpleNamespace
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from aws_medallion_datalake_spark.operators import apply_deletes, delete_where
 from aws_medallion_datalake_spark.operators import merge as merge_mod
-from aws_medallion_datalake_spark.operators.cluster import _tile_frame
+from aws_medallion_datalake_spark.operators.cluster import _piece_frame
 from aws_medallion_datalake_spark.operators.compact import _route_frame
 from aws_medallion_datalake_spark.operators.merge import merge_into
 from aws_medallion_datalake_spark.operators.overwrite import (
@@ -38,18 +39,22 @@ def _analyzed(df) -> str:
 
 
 def test_routing_and_tile_frames_are_local_relations(spark):
-    groups = [SimpleNamespace(paths=["a.parquet", "b.parquet"]),
-              SimpleNamespace(paths=["c.parquet"])]
+    groups = [SimpleNamespace(paths=["a.parquet", "b.parquet"], slices=[None, "x"]),
+              SimpleNamespace(paths=["c.parquet", "b.parquet"], slices=[None, "y"])]
     route = _route_frame(spark, groups)
-    tile = _tile_frame(spark, {0: ["a.parquet"], 3: ["b.parquet", "c.parquet"]})
+    pieces = pd.DataFrame(
+        {"path": ["a.parquet", "b.parquet"], "slice": [None, "x"], "tidx": [1, 2]}
+    )
+    tile = _piece_frame(spark, {0: pieces.iloc[:1], 3: pieces})
     for df in (route, tile):
         plan = _analyzed(df)
         assert "LocalRelation" in plan and "LogicalRDD" not in plan
-    assert route.dtypes == [("__route_path", "string"), ("__rt", "int")]
-    rt = {r["__route_path"]: r["__rt"] for r in route.collect()}
-    assert rt["a.parquet"] == rt["b.parquet"] != rt["c.parquet"]
+    assert route.dtypes == [("__pp", "string"), ("__pt", "string"), ("__rt", "int")]
+    rt = {(r["__pp"], r["__pt"]): r["__rt"] for r in route.collect()}
+    assert rt["a.parquet", None] == rt["b.parquet", "x"] != rt["c.parquet", None]
+    assert rt["b.parquet", "y"] == rt["c.parquet", None]
     assert sorted(tuple(r) for r in tile.collect()) == [
-        ("a.parquet", 0), ("b.parquet", 3), ("c.parquet", 3)
+        ("a.parquet", None, 0, 1), ("a.parquet", None, 3, 1), ("b.parquet", "x", 3, 2)
     ]
 
 

@@ -738,9 +738,8 @@ def test_multilevel_partition_cluster(tmp_path, spark):
 
     parts = [json.loads(p) for p in man["partition_json"]]
     homog = [p for p in parts if "__mixed__" not in p.values()]
-    # nearly every output file is homogeneous in BOTH levels (range
-    # boundaries may straddle at most n_partitions - 1 files)
-    assert len(man) - len(homog) < len({(p["year"], p["day"]) for p in parts})
+    # every output file is homogeneous in BOTH levels
+    assert len(homog) == len(man)
     # pruning works on the second level too
     days = sorted({p.get("day") for p in homog})
     kept = prune_manifest(man, [("day", "=", days[0])], ["year", "day"])
@@ -764,21 +763,18 @@ def test_cluster_udf_route_path(tmp_path, spark, monkeypatch):
     assert clustering_quality(t, "phash") < q_before
 
 
-def _tiling(t, max_files_per_job, want):
+def _tiling(t, spark, max_files_per_job, want):
     """A target size whose tiling gives exactly the tile ``n_out`` values
     in ``want`` (a sorted list), plus those per-tile values."""
     import importlib
 
     cm = importlib.import_module("aws_medallion_datalake_spark.operators.cluster")
-    man = t.manifest_pdf()
-    total = int(man["file_size_bytes"].sum())
+    census = tf.tuple_census(t, spark, t.manifest_pdf())
+    total = int(census["file_size_bytes"].sum())
     for k in range(40, 200):
         target = int(total * 10 / k)
-        tiles = cm._plan_tiles(man, target, max_files_per_job)
-        n_outs = [
-            max(1, round(int(man.loc[i, "file_size_bytes"].sum()) / target))
-            for i in tiles
-        ]
+        tiles = cm._plan_tiles(census, target, max_files_per_job)
+        n_outs = [tile.n_out for tile in tiles]
         if sorted(n_outs) == want:
             return target, n_outs
     raise AssertionError(f"no target tiles this table into {want}")
@@ -794,16 +790,16 @@ def _bounds_spy(monkeypatch):
     real = cm._tile_bounds
     calls = []
 
-    def spy(spark, keys, tile_paths, n_outs):
+    def spy(spark, keys, n_outs):
         sc = spark.sparkContext
         group = f"cluster-bounds-spy-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "bounds")
         try:
-            out = real(spark, keys, tile_paths, n_outs)
+            out = real(spark, keys, n_outs)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        calls.append({"tiles": sorted(tile_paths), "jobs": len(jobs)})
+        calls.append({"tiles": sorted({tile for tile, _ in n_outs}), "jobs": len(jobs)})
         return out
 
     monkeypatch.setattr(cm, "_tile_bounds", spy)
@@ -813,8 +809,11 @@ def _bounds_spy(monkeypatch):
 def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypatch):
     """Tiles that write 2 and 3 files get their range bounds from ONE
     grouped aggregate (no per-tile approxQuantile): content is unchanged,
-    every tile writes its n_out files, and within each tile the files
-    hold disjoint, near-equal ranges of the routed composite key."""
+    every tile writes its n_out files of one date, and within each tile
+    the files hold disjoint, near-equal ranges of the routed key.
+
+    The table is 16 files mixing two dates plus 8 pure files of the
+    first, so that date holds twice the rows and is tiled wider."""
     from pyspark.sql import DataFrame
 
     def no_quantile(*a, **k):
@@ -822,8 +821,10 @@ def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypat
 
     monkeypatch.setattr(DataFrame, "approxQuantile", no_quantile)
     t = make_table(tmp_path, spark, n=800, n_files=16)
+    t.commit("append", t.write_files(
+        generate_images(spark, 400, n_files=8, n_dates=1, start=800)))
     before = table_fingerprint(t, spark)
-    target, n_outs = _tiling(t, 3, [2, 3])
+    target, n_outs = _tiling(t, spark, 3, [2, 3])
     cm, calls = _bounds_spy(monkeypatch)
     monkeypatch.setattr(tf, "_REWRITE_THREADS", 2)
     snap = cluster(t, spark, curve="morton", target_file_size_bytes=target,
@@ -834,21 +835,18 @@ def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypat
     assert calls == [{"tiles": [0, 1], "jobs": calls[0]["jobs"]}]
     assert 1 <= calls[0]["jobs"] <= 3  # one aggregate: its stages only
 
-    # disjoint composite-key ranges across the files of each tile
+    # disjoint routed-key ranges across the files of each tile
     cols = ["phash", "w", "h"]
     df = t.scan(spark)
-    part_values = sorted(
-        r[0]
-        for r in df.select(cm._part_key_col(["ingest_date"])).distinct().collect()
-    )
-    ck = cm._composite(cm._curve_key("morton", cols), ["ingest_date"], part_values)
+    low = cm._low(cm._curve_key("morton", cols))
     per_file = (
-        df.withColumn("ck", ck)
+        df.withColumn("ck", low)
         .groupBy(F.col("_metadata.file_path").alias("f"))
         .agg(F.min("ck").alias("lo"), F.max("ck").alias("hi"),
-             F.count("*").alias("n"))
+             F.count("*").alias("n"), F.countDistinct("ingest_date").alias("dates"))
         .toPandas()
     )
+    assert (per_file["dates"] == 1).all()
     per_file["tile"] = per_file["f"].map(os.path.dirname)
     widths = []
     for _, g in per_file.groupby("tile"):
@@ -868,7 +866,7 @@ def test_cluster_resume_bounds_only_unfinished_tiles(tmp_path, spark, monkeypatc
     t = Table.create(str(tmp_path / "flat"), schema_ddl=SCHEMA, stats_cols=STATS)
     t.commit("append", t.write_files(generate_images(spark, 800, n_files=16)))
     before = table_fingerprint(t, spark)
-    target, n_outs = _tiling(t, 2, [2, 2, 2, 2])
+    target, n_outs = _tiling(t, spark, 2, [2, 2, 2, 2])
     cp_path = str(tmp_path / "cluster-run.jsonl")
     kwargs = dict(curve="morton", target_file_size_bytes=target,
                   max_files_per_job=2)

@@ -58,8 +58,11 @@ def test_scoped_compact_rewrites_only_matching_files(table, spark):
     man = table.manifest_pdf()
     # out-of-scope files carried through byte-identical (same paths)
     assert old_paths <= set(man["path"])
-    # in-scope fragments got packed
-    assert len(man) < 7 and len(man[~man["path"].isin(old_paths)]) >= 1
+    # in-scope fragments got packed: their three files each mix the four
+    # dates, so they become one file per date
+    new = man[~man["path"].isin(old_paths)]
+    assert len(new) == new["partition_json"].nunique() == 4
+    assert not new["partition_json"].str.contains("__mixed__").any()
     assert _fingerprint(table, spark) == before
 
 

@@ -80,3 +80,42 @@ def test_spark_submit_pyfiles_runs_maintenance(tmp_path, spark):
     assert int(man["record_count"].sum()) == n_before
     assert len(man) < files_before  # compaction actually packed files
     assert metrics["compact"]["rewritten_files"] == files_before
+
+
+def test_pyfiles_zip_is_named_by_content(tmp_path, monkeypatch):
+    """An unchanged package returns the same zip without rewriting it; a
+    changed one gets a new zip, so a process that shipped the old one
+    never sees it change."""
+    import tempfile
+    import zipfile
+
+    from aws_medallion_datalake_spark import session
+
+    pkg = tmp_path / "pkg" / "aws_medallion_datalake_spark"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "sub" / "mod.py").write_text("X = 1\n")
+    monkeypatch.setattr(session, "_PKG_DIR", str(pkg))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+
+    first = build_pyfiles_zip()
+    stat = os.stat(first)
+    again = build_pyfiles_zip()
+    assert again == first
+    assert os.stat(again).st_mtime_ns == stat.st_mtime_ns
+    assert os.stat(again).st_ino == stat.st_ino
+    with zipfile.ZipFile(first) as zf:
+        assert sorted(zf.namelist()) == [
+            "aws_medallion_datalake_spark/__init__.py",
+            "aws_medallion_datalake_spark/sub/mod.py",
+        ]
+
+    (pkg / "sub" / "mod.py").write_text("X = 2\n")
+    changed = build_pyfiles_zip()
+    assert changed != first and os.path.isfile(first)
+    with zipfile.ZipFile(changed) as zf:
+        assert zf.read("aws_medallion_datalake_spark/sub/mod.py") == b"X = 2\n"
+    assert sorted(os.listdir(tmp_path / "tmp")) == sorted(
+        os.path.basename(p) for p in (first, changed)
+    )

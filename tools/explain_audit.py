@@ -198,6 +198,13 @@ def _(spark, sf_dir):
     if n_read is None:  # fall back: location list length
         n_read = sum(1 for ln in p.splitlines() if ".parquet" in ln)
     assert n_read < n_full, (n_read, n_full)
+    # every clustered file holds one ingest date, so a date predicate
+    # lists only that date's files
+    mixed = [p for p in man["partition_json"] if "__mixed__" in p]
+    assert not mixed, mixed
+    day = t.scan(spark, predicates=[("ingest_date", "=", "2024-01-02")])
+    n_day = len(set(day.inputFiles()))
+    assert 0 < n_day < n_full, (n_day, n_full)
 
 
 @check("decontamination: benchmark side broadcasts, big side never shuffles")
