@@ -62,11 +62,6 @@ def _morton64():
     return morton64
 
 
-def morton64_udf(phash: Column, w: Column, h: Column) -> Column:
-    """pandas-UDF Morton key — parity oracle for morton64_expr."""
-    return _morton64()(phash, w, h)
-
-
 @lru_cache(maxsize=None)
 def _psnr():
     from .codec import decode_image, psnr
@@ -172,7 +167,7 @@ def morton64_expr(phash: Column, w: Column, h: Column) -> Column:
 
     Sign-bit flip + `shiftrightunsigned` turns the signed phash into its
     top-21-bit bucket identically to zcurve._norm_dims (signed order
-    preserved — no bucket straddles ±2^63). Preferred over morton64_udf in
+    preserved — no bucket straddles ±2^63). Preferred over the morton64 UDF in
     the hot path (whole-stage codegen keeps the clustering repartition
     JVM-only).
     """

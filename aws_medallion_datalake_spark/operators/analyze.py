@@ -47,7 +47,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.tableformat import BLOOM_COLS_PROP, BLOOM_NDV_PROP, Table
+from ..sources.tableformat import BLOOM_NDV_PROP, Table, bloom_columns
 
 STATS_PROP = "stats.columns"  # json: {col: {ndv, null_count, min, max, avg_len}}
 STATS_SNAPSHOT_PROP = "stats.snapshot-id"
@@ -121,11 +121,7 @@ def analyze_table(
     meta.properties[STATS_ROWS_PROP] = str(n_rows)
     meta.properties[STATS_TS_PROP] = str(int(time.time() * 1000))
     if tune_bloom:
-        bloom_cols = [
-            b.strip()
-            for b in str(meta.properties.get(BLOOM_COLS_PROP, "")).split(",")
-            if b.strip() and b.strip() in stats
-        ]
+        bloom_cols = [b for b in bloom_columns(meta) if b in stats]
         if bloom_cols:
             man = table.manifest_pdf()
             rows_per_file = max(

@@ -2,10 +2,11 @@
 
 The reference has no clustering at all (SURVEY.md §4 "data clustering /
 sort order: none") — this implements the north_star requirement: compute a
-64-bit Morton or Hilbert key over (phash, w, h), partition the table into
-key ranges, sort within partitions, rewrite, and recompute per-file
-min/max stats so the manifest becomes an effective pruning index for
-phash/w/h predicates.
+64-bit Morton or Hilbert key over the three columns of the table's write
+order (``Table.write_order``; (phash, w, h) on the image tables),
+partition the table into key ranges, sort within partitions, rewrite,
+and recompute per-file min/max stats so the manifest becomes an
+effective pruning index for predicates on those columns.
 
 Spark-first execution plan (ONE full pass over the payload per tile):
 
@@ -27,7 +28,7 @@ Spark-first execution plan (ONE full pass over the payload per tile):
    ranges — the driver never materializes an O(total_files) structure
    in any query plan.
 2. **Boundary planning: one grouped bounds job for every tile** — the
-   curve key needs only (partition cols, phash, w, h), a few bytes/row,
+   curve key needs only the partition and curve columns, a few bytes/row,
    so range boundaries come from a scan that never touches the image
    payload. Before any tile with a multi-file tuple is planned, ONE
    aggregate over that key scan tags each row with its tile and tuple
@@ -75,7 +76,6 @@ payload bytes never cross the Arrow boundary.
 from __future__ import annotations
 
 import os
-import re
 import threading
 import time
 from contextlib import nullcontext
@@ -88,7 +88,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from ..functions.udfs import hilbert64_udf, morton64_expr
 from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
@@ -170,24 +169,20 @@ def exact_route_salts(n_out: int) -> np.ndarray:
     return salts
 
 
-def _curve_key(curve: str, cols: tuple):
-    c0, c1, c2 = (F.col(c) for c in cols)
-    if curve == "hilbert":
-        return hilbert64_udf(c0, c1, c2)
-    return morton64_expr(c0, c1, c2)  # morton / zorder: JVM-only
-
-
-def _low(key):
+def _low(key, salted: bool):
     """The 56 low bits of the composite key: ``key>>10 << 2 | per-row
-    salt``; a NULL key reads as 0 and sorts first."""
+    salt``; a NULL key reads as 0 and sorts first. The salt hashes
+    ``image_id``; ``salted`` says the table has one (else the salt is 0)."""
     comp = F.shiftrightunsigned(F.coalesce(key.cast("long"), F.lit(0)), 10)
     if _SALT_BITS:
-        salt = F.pmod(F.xxhash64(F.col("image_id")), F.lit(1 << _SALT_BITS))
-        comp = F.shiftleft(comp, _SALT_BITS).bitwiseOR(salt)
+        comp = F.shiftleft(comp, _SALT_BITS)
+        if salted:
+            salt = F.pmod(F.xxhash64(F.col("image_id")), F.lit(1 << _SALT_BITS))
+            comp = comp.bitwiseOR(salt)
     return comp
 
 
-def _composite(key, idx):
+def _composite(key, idx, salted: bool):
     """Sortable long: (tuple idx << 56 | key>>10 << 2 | per-row salt).
 
     ``idx`` is the row's 1-based partition-tuple index within its tile
@@ -199,7 +194,7 @@ def _composite(key, idx):
     overlaps the tuple-index field — an overlap would OR high-key rows
     into the wrong tuple band and interleave distant key regions inside
     one range bucket (wide file min/max, broken pruning)."""
-    return F.shiftleft(idx.cast("long"), 56).bitwiseOR(_low(key))
+    return F.shiftleft(idx.cast("long"), 56).bitwiseOR(_low(key, salted))
 
 
 # Up to this output-file count, routing stays a pure-JVM expression (no
@@ -376,7 +371,6 @@ def _bounds(tile_no: int, tile: _Tile, quantiles: dict) -> np.ndarray:
 INCREMENTAL_MAX_DIRTY_FRAC = 0.5
 _SORTED_PREFIX_PROP = "cluster.sorted_prefixes"
 _SORT_SPEC_PROP = "cluster.sort_spec"
-SORT_ORDER_PROP = "sort.order"
 
 
 def cluster(
@@ -391,7 +385,10 @@ def cluster(
     mode: str = "auto",
     predicates: Optional[list] = None,
 ) -> Optional[Snapshot]:
-    """Rewrite the table clustered by the chosen space-filling curve.
+    """Rewrite the table clustered by a space-filling curve over three
+    columns: the table's write order (``Table.write_order``), where a
+    linear order falls back to the default curve; ``curve`` and ``cols``
+    override their half of it. Raises ValueError when no curve results.
 
     ``predicates``: scope the rewrite to files whose stats intersect the
     scan-style ``(col, op, value)`` predicates (whole-file selection,
@@ -422,34 +419,22 @@ def cluster(
 
     Returns None (no commit) when an incremental run finds nothing dirty.
     """
-    # declared sort order (Iceberg write-order analogue): when the caller
-    # names neither curve nor cols, the table's `sort.order` property —
-    # "morton(phash,w,h)" / "hilbert(a,b)" — decides, so `OPTIMIZE`,
-    # `--stages auto` policy runs and bare cluster() calls all honor the
-    # table's own declaration; engine defaults apply last
-    if curve is None and cols is None:
-        prop = str(table.metadata().properties.get(SORT_ORDER_PROP, "") or "")
-        pm = re.match(r"(morton|hilbert|zorder)\(([^)]+)\)$", prop.strip())
-        # a plain column list ("ts" / "ts, id") is a LINEAR Iceberg sort
-        # order — honored by write_files' range distribution at ingest,
-        # not a space-filling curve; bare cluster() falls back to the
-        # engine default curve rather than failing
-        plain = re.match(
-            r"[A-Za-z_]\w*(\s*,\s*[A-Za-z_]\w*)*$", prop.strip()
+    # the table's write order decides what the caller leaves out; a
+    # linear order (a column list, which range-mode ingest honors) is no
+    # curve, so it falls back to the default one
+    names = table._schema(spark).fieldNames()
+    order = table.write_order()
+    if order is None or order.curve is None:
+        order = transforms.default_order(names)
+    if curve or cols:
+        order = transforms.WriteOrder(
+            curve or (order.curve if order else "morton"),
+            tuple(cols or (order.cols if order else ())),
         )
-        if prop and not pm and not plain:
-            raise ValueError(
-                f"bad {SORT_ORDER_PROP} property {prop!r}: expected "
-                "curve(col, …) with curve in morton|hilbert|zorder, "
-                "or a plain column list"
-            )
-        if pm:
-            curve = pm.group(1)
-            cols = tuple(c.strip() for c in pm.group(2).split(","))
-    curve = curve or "morton"
-    cols = tuple(cols) if cols else ("phash", "w", "h")
-    if curve not in ("hilbert", "morton", "zorder"):
-        raise ValueError(f"unknown curve {curve!r}")
+    if order is None:
+        raise ValueError(
+            f"cluster: no curve to cluster by; declare one in {transforms.ORDER_PROP}"
+        )
     if mode not in ("auto", "full", "incremental"):
         raise ValueError(f"unknown mode {mode!r}")
     table.refuse_pending_deletes("clustering")
@@ -463,7 +448,7 @@ def cluster(
 
     # files written by a previous cluster run with this exact sort spec
     # are already sorted + disjoint: incremental mode keeps them untouched
-    spec = f"{curve}({','.join(cols)})"
+    spec = str(order)
     prev_prefixes: list = []
     if meta.properties.get(_SORT_SPEC_PROP) == spec:
         prev_prefixes = _json.loads(meta.properties.get(_SORTED_PREFIX_PROP, "[]"))
@@ -501,7 +486,8 @@ def cluster(
     # mixed ones from one column-pruned count (no payload read)
     with pt.phase("plan"):
         census = tuple_census(table, spark, work)
-    key = _curve_key(curve, cols)
+    (key,) = order.exprs()
+    salted = "image_id" in names
     sort_cols = transforms.exprs(meta.partition_cols) + [F.col(_KEY)]
     tiles = _plan_tiles(census, target_file_size_bytes, max_files_per_job)
     by_path = work.set_index("path", drop=False)
@@ -548,7 +534,7 @@ def cluster(
                     quantiles.update(
                         _tile_bounds(
                             spark,
-                            rows.select("__tile", "__tidx", _low(key).alias("k")),
+                            rows.select("__tile", "__tidx", _low(key, salted).alias("k")),
                             n_outs,
                         )
                     )
@@ -570,7 +556,7 @@ def cluster(
         # evaluated once per row on either route path.
         tile_b = _bounds(tile_no, tile, tile_bounds() if tile_no in ranged else {})
         salts = exact_route_salts(n_out)
-        keyed = full.withColumn("__ck", _composite(F.col(_KEY), idx))
+        keyed = full.withColumn("__ck", _composite(F.col(_KEY), idx, salted))
         if n_out <= _JVM_ROUTE_MAX:
             routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), tile_b, salts))
         else:
@@ -592,12 +578,12 @@ def cluster(
     # 16 small files: a tile of one date reads every raw bronze file
     # that holds the date, and at Spark's 4 MB open cost each would be
     # a task of its own.
-    order = [i for i in range(len(tiles)) if i not in ranged] + ranged
+    tile_order = [i for i in range(len(tiles)) if i not in ranged] + ranged
     with read_split_size(spark, target_file_size_bytes, target_file_size_bytes // 16):
         entries, prefixes = rewrite_units(
             table,
             spark,
-            {i: tile_rows[i] for i in order},
+            {i: tile_rows[i] for i in tile_order},
             plan,
             pt,
             checkpoint=checkpoint,
@@ -631,8 +617,8 @@ def cluster(
             {
                 "stage": "cluster",
                 "mode": "incremental" if incremental else "full",
-                "curve": curve,
-                "cluster_cols": list(cols),
+                "curve": order.curve,
+                "cluster_cols": list(order.cols),
                 "files_in": int(len(work)),
                 "files_kept": int(len(keep)),
                 "files_out": int(len(entries)),
@@ -650,12 +636,15 @@ def cluster(
     return snap
 
 
-def clustering_quality(table: Table, col: str = "phash") -> float:
-    """Average pairwise min/max overlap fraction on `col` across files of
+def clustering_quality(table: Table, col: Optional[str] = None) -> float:
+    """Average pairwise min/max overlap fraction on `col` (by default the
+    leading column of the table's write order) across files of
     the SAME partition — lower is better pruning; 0 = perfectly disjoint
     ranges. Cross-partition pairs are excluded: partition-major layout
     makes every partition span the full key range by design, and real
     scans prune on the partition column first."""
+    if col is None:
+        col = table.write_order().cols[0]  # a table without one must pass col
     man = table.manifest_pdf()
     total_pairs = 0
     overlaps = 0

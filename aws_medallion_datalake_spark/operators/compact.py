@@ -68,20 +68,10 @@ DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 DEFAULT_GROUPS_PER_JOB = 4096
 
 
-def _sort_key(df):
-    """Cluster sort key when the image columns exist, else None — keeps
-    compaction generic over non-image tables."""
-    from pyspark.sql import functions as F
-
-    from ..functions.udfs import morton64_expr
-
-    if {"phash", "w", "h"} <= set(df.columns):
-        return morton64_expr(F.col("phash"), F.col("w"), F.col("h"))
-    return None
-
-
-def _group_plan(table: Table, group: CompactionGroup, df):
-    """One group's rewrite plan over ``df``, its files' rows.
+def _group_plan(group: CompactionGroup, df, part_cols: list, keys: list):
+    """One group's rewrite plan over ``df``, its files' rows, ordered by
+    the partition expressions ``part_cols``, then ``keys``, the table's
+    write order (``Table.write_order``; empty when it has none).
 
     Sort order is preserved, not destroyed: pack groups (N small files →
     1) concatenate key-adjacent inputs with ``coalesce(1)`` (no
@@ -92,14 +82,12 @@ def _group_plan(table: Table, group: CompactionGroup, df):
     disjoint key ranges and manifest pruning quality survives until the
     next cluster run. (Sorting random bronze input is skipped: it buys
     no pruning and costs CPU.)"""
-    key = _sort_key(df)
-    part_cols = transforms.exprs(table.metadata().partition_cols)
-    sort_cols = part_cols + ([key] if key is not None else [])
+    sort_cols = part_cols + keys
     if group.n_output_files == 1:
         df = df.coalesce(1)
         if sort_cols and group.ordered:
             df = df.sortWithinPartitions(*sort_cols)
-    elif key is not None:
+    elif keys:
         df = df.repartitionByRange(group.n_output_files, *sort_cols)
         df = df.sortWithinPartitions(*sort_cols)
     else:
@@ -146,7 +134,7 @@ def _sliced(table: Table, spark: SparkSession, man):
     mixed = reduce(
         lambda a, b: a | b,
         [
-            F.get_json_object(pj, f"$.{f}").isNull()
+            ~F.array_contains(F.json_object_keys(pj), f)
             | (F.get_json_object(pj, f"$.{f}") == "__mixed__")
             for f in fields
         ],
@@ -173,9 +161,9 @@ def _sliced(table: Table, spark: SparkSession, man):
     )
 
 
-def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df):
+def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df, part_cols, keys):
     """A batch of PACK groups as ONE Spark job over ``df``, the rows of
-    all their files.
+    all their files, each output ordered as ``_group_plan`` orders it.
 
     Each input file, or each tuple's slice of a file that mixes
     partition tuples, belongs to exactly one group, so rows are routed by
@@ -198,14 +186,12 @@ def _rewrite_batch(table: Table, spark: SparkSession, groups: list, df):
 
     sliced = any(s is not None for g in groups for s in g.slices)
     if len(groups) == 1 and not sliced:
-        return _group_plan(table, groups[0], df)
+        return _group_plan(groups[0], df, part_cols, keys)
     df = join_pieces(table, df, _route_frame(spark, groups), sliced)
     if len(groups) == 1:
-        return _group_plan(table, groups[0], df.drop("__rt"))
+        return _group_plan(groups[0], df.drop("__rt"), part_cols, keys)
     df = df.repartition(len(groups), F.col("__rt")).drop("__rt")
-    key = _sort_key(df)
-    part_cols = transforms.exprs(table.metadata().partition_cols)
-    sort_cols = part_cols + ([key] if key is not None else [])
+    sort_cols = part_cols + keys
     if sort_cols and groups[0].ordered:
         df = df.sortWithinPartitions(*sort_cols)
     return df
@@ -243,7 +229,6 @@ def compact(
     pt = PhaseTimer()
     swap = FileSwap(table, spark, pt)
     with pt.phase("plan"):
-        from ..sources import transforms
         from ..sources.tableformat import (
             SPARK_MANIFEST_THRESHOLD,
             manifest_prune_cond,
@@ -251,6 +236,8 @@ def compact(
         )
 
         meta = table.metadata()
+        order = table.write_order()
+        order_col = order.cols[0] if order else None
         prune_preds = (
             transforms.extend_predicates(meta.partition_cols, list(predicates))
             if predicates
@@ -272,6 +259,7 @@ def compact(
                 _sliced(table, spark, man_df),
                 target_file_size_bytes,
                 min_input_files=min_input_files,
+                order_col=order_col,
             )
         else:
             man_scope = swap.man
@@ -281,6 +269,7 @@ def compact(
                 _sliced(table, spark, man_scope),
                 target_file_size_bytes,
                 min_input_files=min_input_files,
+                order_col=order_col,
             )
     if not plan.groups:
         return None
@@ -296,6 +285,8 @@ def compact(
         batches += [pool_groups[i : i + k] for i in range(0, len(pool_groups), k)]
     batches += [[g] for g in singles]
 
+    part_cols = transforms.exprs(meta.partition_cols)
+    keys = order.exprs() if order else []
     # the batches' manifest rows: pandas on either planner path (the
     # swap's base manifest, read once); a file sliced across batches is
     # read by each
@@ -311,7 +302,7 @@ def compact(
             i: by_path.loc[list(dict.fromkeys(p for g in b for p in g.paths))]
             for i, b in enumerate(batches)
         },
-        lambda i, df: _rewrite_batch(table, spark, batches[i], df),
+        lambda i, df: _rewrite_batch(table, spark, batches[i], df, part_cols, keys),
         pt,
         threads=min(parallelism, 8),
         checkpoint=checkpoint,

@@ -570,21 +570,16 @@ def _source_keys(src: DataFrame, key: str) -> tuple:
 
 def _modest_write(table, df, key: str) -> str:
     """Write a small delta (updates/inserts) as a handful of files sorted
-    by the table's partition spec, then the cluster key — no shuffle
-    beyond a coalesce. Falls back to a plain key sort for tables without
-    the (phash, w, h) image columns."""
-    from ..functions.udfs import morton64_expr
-
+    by the table's partition spec, then its write order
+    (``Table.write_order``; the key ``key`` when it has none) — no
+    shuffle beyond a coalesce."""
     # parallel encode: a fixed-size delta written with 1 task is a pure
     # anti-scaling term (identical absolute cost at every core count)
     n_out = max(1, min(df.sparkSession.sparkContext.defaultParallelism // 2, 16))
-    names = set(df.columns)
-    if {"phash", "w", "h"} <= names:
-        sort_key = morton64_expr(F.col("phash"), F.col("w"), F.col("h"))
-    else:
-        sort_key = F.col(key)
+    order = table.write_order()
     out = df.coalesce(n_out).sortWithinPartitions(
-        *transforms.exprs(table.metadata().partition_cols), sort_key
+        *transforms.exprs(table.metadata().partition_cols),
+        *(order.exprs() if order else [F.col(key)]),
     )
     prefix = table.new_data_prefix()
     table.data_writer(out).parquet(prefix)

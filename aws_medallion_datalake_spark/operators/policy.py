@@ -23,7 +23,7 @@ health dict says which metric it reports.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -38,10 +38,11 @@ def table_health(
     spark: Optional[SparkSession] = None,
     *,
     target_file_size_bytes: int = DEFAULT_TARGET_FILE_SIZE,
-    cluster_col: str = "phash",
 ) -> dict:
-    """Planner-sized health snapshot of a table (see module doc)."""
+    """Planner-sized health snapshot of a table (see module doc); the
+    clustering metric is on ``cluster_col``, the write order's lead column."""
     meta = table.metadata()
+    order = table.write_order()
     out: dict = {
         "n_snapshots": len(meta.snapshots),
         "n_manifests": 0,
@@ -52,6 +53,7 @@ def table_health(
         "small_file_ratio": 0.0,
         "cluster_metric": None,  # overlap (exact) or range_width (proxy)
         "cluster_metric_kind": "none",
+        "cluster_col": order.cols[0] if order else None,
         "pending_pos_delete_files": 0,
         "pending_eq_delete_files": 0,
         # ANALYZE freshness (operators/analyze.py): None = never analyzed
@@ -81,7 +83,8 @@ def table_health(
     if n_entries == 0:
         return out
     small = target_file_size_bytes // 2
-    has_stats = f"min_{cluster_col}"
+    cluster_col = out["cluster_col"]
+    has_stats = f"min_{cluster_col}" if cluster_col else None
     if n_entries > SPARK_MANIFEST_THRESHOLD and spark is not None:
         man = table.manifest_df(spark)
         aggs = [
@@ -133,7 +136,6 @@ def plan_maintenance(
     spark: Optional[SparkSession] = None,
     *,
     target_file_size_bytes: int = DEFAULT_TARGET_FILE_SIZE,
-    cluster_col: str = "phash",
     small_file_ratio_threshold: float = 0.3,
     cluster_metric_threshold: float = 0.4,
     manifest_count_threshold: int = 8,
@@ -150,10 +152,7 @@ def plan_maintenance(
     A healthy table yields an empty plan — the fixed-cron anti-pattern
     this module replaces.
     """
-    h = table_health(
-        table, spark,
-        target_file_size_bytes=target_file_size_bytes, cluster_col=cluster_col,
-    )
+    h = table_health(table, spark, target_file_size_bytes=target_file_size_bytes)
     plan: list = []
     n_pending = h["pending_pos_delete_files"] + h["pending_eq_delete_files"]
     wants_rewrite = (
@@ -183,7 +182,7 @@ def plan_maintenance(
         plan.append((
             "cluster",
             f"{h['cluster_metric_kind']} {h['cluster_metric']:.2f} on "
-            f"{cluster_col} > {cluster_metric_threshold}",
+            f"{h['cluster_col']} > {cluster_metric_threshold}",
         ))
     if h["n_manifests"] > manifest_count_threshold:
         plan.append((
@@ -210,12 +209,3 @@ def plan_maintenance(
             f">= {stats_lag_threshold}",
         ))
     return plan
-
-
-def auto_stages(
-    table: Table,
-    spark: Optional[SparkSession] = None,
-    **kwargs,
-) -> Sequence[str]:
-    """Stage names for run_maintenance(stages=...), policy-chosen."""
-    return tuple(stage for stage, _ in plan_maintenance(table, spark, **kwargs))

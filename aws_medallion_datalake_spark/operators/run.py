@@ -104,7 +104,6 @@ def run_maintenance(
     merge_source: Optional[DataFrame] = None,
     delete_predicates: Optional[Sequence[tuple]] = None,
     target_file_size_bytes: int = 128 * 1024 * 1024,
-    curve: str = "morton",
     cluster_mode: str = "auto",
     keep_last: int = 1,
     compaction_parallelism: int = 8,
@@ -118,6 +117,11 @@ def run_maintenance(
     fragmented one compacts, a scattered one clusters, pending
     merge-on-read deletes materialize first. The chosen plan and its
     reasons land in the result under ``"auto_plan"``.
+
+    Compaction, the merge delta and ``cluster`` write in the table's own
+    write order (``Table.write_order``). To cluster along the Hilbert
+    curve instead of the default Morton one, declare it on the table:
+    ``ALTER TABLE t WRITE LOCALLY ORDERED BY (hilbert(phash, w, h))``.
 
     ``on_stage_failure``: optional callable receiving the structured
     failure dict (timestamp, stage, layer, error, cause, checkpoint) the
@@ -166,7 +170,6 @@ def run_maintenance(
                 snap = cluster(
                     table,
                     spark,
-                    curve=curve,
                     mode=cluster_mode,
                     target_file_size_bytes=target_file_size_bytes,
                     checkpoint=cp,
@@ -304,7 +307,6 @@ print(build_pyfiles_zip())')" run_maintenance.py \
         '\'[["phash","between",[0, 1000]]]\'',
     )
     p.add_argument("--target-file-size-mb", type=int, default=128)
-    p.add_argument("--curve", default="morton", choices=["morton", "zorder", "hilbert"])
     p.add_argument("--keep-last", type=int, default=1)
     p.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     args = p.parse_args(argv)
@@ -331,7 +333,6 @@ print(build_pyfiles_zip())')" run_maintenance.py \
         merge_source=src,
         delete_predicates=preds,
         target_file_size_bytes=args.target_file_size_mb << 20,
-        curve=args.curve,
         keep_last=args.keep_last,
     )
     print(json.dumps(metrics, default=str))

@@ -22,6 +22,7 @@ and their path lists are needed driver-side anyway to submit the read).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Optional
 
 import pandas as pd
 
@@ -63,12 +64,12 @@ class CompactionPlan:
         }
 
 
-def _is_range_structured(rows: list, order_col: str) -> bool:
+def _is_range_structured(rows: list, order_col: Optional[str]) -> bool:
     """True when the files' key spans are near-disjoint (sum of per-file
     spans ≲ the group's total span) — i.e., a previously clustered
     layout whose order the rewrite should preserve with a re-sort."""
     lo_c, hi_c = f"min_{order_col}", f"max_{order_col}"
-    if not rows or lo_c not in rows[0].index:
+    if order_col is None or not rows or lo_c not in rows[0].index:
         return False
     los = [r[lo_c] for r in rows]
     his = [r[hi_c] for r in rows]
@@ -88,7 +89,7 @@ def plan_compaction(
     min_input_files: int = 2,
     small_file_ratio: float = 0.75,
     max_file_ratio: float = 1.8,
-    order_col: str = "phash",
+    order_col: Optional[str] = None,
 ) -> CompactionPlan:
     """Pack undersized files per partition; split oversized ones.
 
@@ -105,7 +106,8 @@ def plan_compaction(
       in packing order, into ``max(1, round(bytes / target))`` bins of
       near-equal bytes, the rule ``cluster`` writes a tuple by, so it
       leaves no small remainder file.
-    - packing order: when the manifest carries ``min_<order_col>`` stats,
+    - packing order: when the manifest carries ``min_<order_col>`` stats
+      (``order_col``: the leading column of the table's write order),
       candidates are packed NEXT-FIT in (min_key, path) order so each
       output file concatenates key-ADJACENT inputs — a clustered table
       stays clustered through compaction (path is the tiebreaker:
@@ -114,7 +116,8 @@ def plan_compaction(
     """
     small = int(target_file_size_bytes * small_file_ratio)
     big = int(target_file_size_bytes * max_file_ratio)
-    key_stats = f"min_{order_col}" if f"min_{order_col}" in manifest.columns else None
+    key_stats = f"min_{order_col}" if order_col else None
+    key_stats = key_stats if key_stats in manifest.columns else None
     groups: list = []
     gid = 0
     if "slice" not in manifest.columns:
@@ -206,7 +209,7 @@ def plan_compaction_spark(
     min_input_files: int = 2,
     small_file_ratio: float = 0.75,
     max_file_ratio: float = 1.8,
-    order_col: str = "phash",
+    order_col: Optional[str] = None,
 ) -> CompactionPlan:
     """The ≥``SPARK_MANIFEST_THRESHOLD`` planner: run ``plan_compaction``
     per partition inside ``applyInPandas`` over the manifest DataFrame.

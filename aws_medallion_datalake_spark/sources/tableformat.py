@@ -115,17 +115,18 @@ RETIRED_PROP = "schema.retired-names"  # json: [name, ...]
 DEFAULTS_PROP = "schema.column-defaults"  # json: {col: literal}
 
 
+def bloom_columns(meta: "TableMetadata") -> list:
+    """The columns ``BLOOM_COLS_PROP`` names."""
+    cols = str(meta.properties.get(BLOOM_COLS_PROP, "")).split(",")
+    return [c.strip() for c in cols if c.strip()]
+
+
 def bloom_write_options(meta: "TableMetadata") -> dict:
     """DataFrameWriter options implementing the table's bloom properties
     (parquet-mr's ``parquet.bloom.filter.enabled#col`` switches)."""
-    cols = [
-        c.strip()
-        for c in str(meta.properties.get(BLOOM_COLS_PROP, "")).split(",")
-        if c.strip()
-    ]
     ndv = str(meta.properties.get(BLOOM_NDV_PROP, "100000"))
     opts: dict = {}
-    for c in cols:
+    for c in bloom_columns(meta):
         opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
         opts[f"parquet.bloom.filter.expected.ndv#{c}"] = ndv
     return opts
@@ -360,7 +361,8 @@ class Table:
         simply stop pruning (missing stats → keep, sound) until the file
         is rewritten. Renaming a partition source column is refused —
         evolve the spec first; renames while merge-on-read deletes are
-        pending are refused (delete files reference physical names).
+        pending are refused (delete files reference physical names). A
+        declared write order naming the column is rewritten to the new name.
         """
         from pyspark.sql.types import StructType
 
@@ -393,11 +395,14 @@ class Table:
             dfl[new] = dfl.pop(old)
             meta.properties[DEFAULTS_PROP] = json.dumps(dfl)
         meta.stats_cols = [new if c == old else c for c in meta.stats_cols]
-        bloom = [
-            c.strip()
-            for c in str(meta.properties.get(BLOOM_COLS_PROP, "")).split(",")
-            if c.strip()
-        ]
+        order = meta.properties.get(transforms.ORDER_PROP)
+        order = transforms.parse_order(order) if order else None
+        if order and old in order.cols:
+            cols = tuple(new if c == old else c for c in order.cols)
+            meta.properties[transforms.ORDER_PROP] = str(
+                transforms.WriteOrder(order.curve, cols)
+            )
+        bloom = bloom_columns(meta)
         if old in bloom:
             meta.properties[BLOOM_COLS_PROP] = ",".join(
                 new if c == old else c for c in bloom
@@ -413,8 +418,9 @@ class Table:
         never be re-added, because not-yet-rewritten files still carry a
         physical column by that name and a name-resolved read would
         resurrect the old values (Iceberg avoids this with field ids).
-        Partition sources must be evolved off first; pending merge-on-read
-        deletes must be applied first.
+        Partition sources, and columns the declared write order names,
+        must be evolved off first; pending merge-on-read deletes must be
+        applied first.
         """
         from pyspark.sql.types import StructType
 
@@ -426,6 +432,9 @@ class Table:
         if len(fields) == 1:
             raise ValueError("cannot drop the last column")
         self._guard_schema_change(meta, name)
+        order = meta.properties.get(transforms.ORDER_PROP)
+        if order and name in transforms.parse_order(order).cols:
+            raise ValueError(f"column {name!r} is in the write order {order!r}")
         ren = json.loads(str(meta.properties.get(RENAMES_PROP, "{}")))
         retired = json.loads(str(meta.properties.get(RETIRED_PROP, "[]")))
         retired = sorted(set(retired) | {name} | set(ren.pop(name, [])))
@@ -439,12 +448,9 @@ class Table:
             del dfl[name]
             meta.properties[DEFAULTS_PROP] = json.dumps(dfl)
         meta.stats_cols = [c for c in meta.stats_cols if c != name]
-        bloom = [
-            c.strip()
-            for c in str(meta.properties.get(BLOOM_COLS_PROP, "")).split(",")
-            if c.strip() and c.strip() != name
-        ]
-        meta.properties[BLOOM_COLS_PROP] = ",".join(bloom)
+        meta.properties[BLOOM_COLS_PROP] = ",".join(
+            c for c in bloom_columns(meta) if c != name
+        )
         self._write_metadata_version(version + 1, meta)
 
     def empty_relation(self, spark: SparkSession, schema=None) -> DataFrame:
@@ -568,6 +574,18 @@ class Table:
             raise KeyError(f"partition source columns not in schema: {missing}")
         meta.partition_cols = list(partition_cols)
         self._write_metadata_version(version + 1, meta)
+
+    def write_order(self) -> Optional[transforms.WriteOrder]:
+        """The order every layout writer writes in: the declared ``sort.order``,
+        else ``transforms.default_order`` (None when that has none either)."""
+        from pyspark.sql.types import StructType
+
+        meta = self.metadata()
+        declared = meta.properties.get(transforms.ORDER_PROP)
+        if declared:
+            return transforms.parse_order(str(declared))
+        fields = StructType.fromDDL(meta.schema_ddl).fields
+        return transforms.default_order(f.name for f in fields)
 
     def set_properties(self, props: dict) -> None:
         """Upsert table properties (Iceberg ALTER TABLE … SET TBLPROPERTIES).
@@ -1459,8 +1477,8 @@ class Table:
         plain appends: ``hash`` shuffles rows onto their partition tuple
         (partition-homogeneous files — no writer holds every partition's
         files open at 10^12-row ingest widths), ``range`` additionally
-        range-orders by the declared ``sort.order`` curve and sorts
-        within files, so fresh ingest lands pre-clustered and the
+        range-orders by the table's write order (:meth:`write_order`)
+        and sorts within files, so fresh ingest lands pre-clustered and the
         nightly cluster run has less dirty data. ``none`` (default) is
         the current behavior. Width = ``spark.sql.shuffle.partitions``.
         Internal rewrite operators (compact/cluster/merge) plan their
@@ -1483,23 +1501,8 @@ class Table:
             if mode == "hash":
                 df = df.repartition(n, *pexprs) if pexprs else df
             else:  # range
-                keys = list(pexprs)
-                prop = str(meta.properties.get("sort.order", "") or "")
-                pm = re.match(
-                    r"(morton|hilbert|zorder)\(([^)]+)\)$", prop.strip()
-                )
-                if pm and pm.group(1) in ("morton", "zorder"):
-                    from ..functions.udfs import morton64_expr
-
-                    cs = [c.strip() for c in pm.group(2).split(",")]
-                    keys.append(morton64_expr(*[F.col(c) for c in cs[:3]]))
-                elif prop and not pm:
-                    # linear Iceberg sort order: plain column list
-                    keys += [
-                        F.col(c.strip())
-                        for c in prop.split(",")
-                        if c.strip()
-                    ]
+                order = self.write_order()
+                keys = pexprs + (order.exprs() if order else [])
                 if keys:
                     df = df.repartitionByRange(n, *keys).sortWithinPartitions(
                         *keys
@@ -1781,19 +1784,21 @@ class Table:
 
     def _stats_tail(self, atbl: pa.Table, part_fields) -> pd.DataFrame:
         pdf = _arrow_pandas(atbl)
-        # A file "belongs" to a partition value iff min == max on every
-        # partition column; files that span values (raw ingest, range
-        # boundaries) are tagged mixed, and the next compaction or cluster
+        # A file "belongs" to a partition value iff, on every partition
+        # column, min == max with no NULL, or all rows are NULL (JSON null);
+        # files that span values (raw ingest, range boundaries, a value
+        # and NULLs) are tagged mixed, and the next compaction or cluster
         # routes their rows by tuple (tuple_census). Vectorized:
         # an iterrows() loop here is O(files) of slow driver python —
         # pandas stays the planner only below SPARK_MANIFEST_THRESHOLD,
         # but 2M rows of iterrows is minutes while this is milliseconds.
         cols_json = []
         for c in sorted(part_fields):
-            v = pdf[f"min_{c}"].astype(str).where(
-                pdf[f"min_{c}"] == pdf[f"max_{c}"], "__mixed__"
-            )
-            cols_json.append(json.dumps(c) + ": " + v.map(json.dumps))
+            lo, nulls = pdf[f"min_{c}"], pdf[f"nulls_{c}"].fillna(-1)
+            pure = (lo == pdf[f"max_{c}"]).fillna(False) & (nulls == 0)
+            v = lo.astype(str).map(json.dumps).where(pure, json.dumps("__mixed__"))
+            v = v.mask(nulls == pdf["record_count"], "null")
+            cols_json.append(json.dumps(c) + ": " + v)
         if cols_json:
             body = cols_json[0]
             for part in cols_json[1:]:
@@ -2671,7 +2676,8 @@ def tuple_census(
 ) -> pd.DataFrame:
     """Rows per (file, partition tuple) of the manifest rows ``files``.
 
-    A file whose ``partition_json`` gives one value for every field of
+    A file whose ``partition_json`` gives one value (JSON null for the
+    NULL tuple) for every field of
     the current spec is *pure*: its one census row is read off the
     manifest. The others (a ``__mixed__`` field, or a file written under
     another spec) are counted by ONE column-pruned
@@ -2695,10 +2701,9 @@ def tuple_census(
 
     def pure_key(pj: str) -> Optional[str]:
         d = json.loads(pj)
-        vals = [d.get(f) for f in fields]
-        if any(v is None or v == "__mixed__" for v in vals):
+        if any(d.get(f, "__mixed__") == "__mixed__" for f in fields):
             return None
-        return TUPLE_SEP.join(str(v) for v in vals)
+        return TUPLE_SEP.join(TUPLE_NULL if d[f] is None else str(d[f]) for f in fields)
 
     pjs = files["partition_json"]
     keys = pjs.map({pj: pure_key(pj) for pj in pjs.unique()})

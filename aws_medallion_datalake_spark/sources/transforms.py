@@ -36,6 +36,8 @@ driver-side (``int(hashlib.md5(str(v)).hexdigest()[:15],16) % N``), so
 pruning literals need no Spark job. Bucket derivation is therefore
 restricted to string/int sources, where Spark's ``cast(string)`` and
 Python's ``str()`` agree.
+
+The table's write order (``sort.order``, :class:`WriteOrder`) is parsed here too.
 """
 
 from __future__ import annotations
@@ -44,10 +46,12 @@ import hashlib
 import re
 from dataclasses import dataclass
 from datetime import date
-from typing import Iterable, List, Optional
+from typing import Iterable, List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions.udfs import hilbert64_udf, morton64_expr
 
 _SPEC_RE = re.compile(
     r"^\s*([A-Za-z_]\w*)\s*\(\s*(?:(\d+)\s*,\s*)?([A-Za-z_]\w*)\s*\)\s*$"
@@ -212,3 +216,57 @@ def extend_predicates(entries: Iterable[str], preds: Iterable[tuple]) -> list:
             if d is not None:
                 out.append(d)
     return out
+
+
+# ------------------------------------------------------------ write order
+
+ORDER_PROP = "sort.order"
+CURVES = ("morton", "hilbert", "zorder")
+
+
+@dataclass(frozen=True)
+class WriteOrder:
+    """A table's write order (Iceberg's sort order,
+    https://iceberg.apache.org/spec/#sort-orders): a space-filling
+    ``curve`` over exactly three columns, or ``curve=None`` for a linear
+    order on ``cols``. ``str()`` is the canonical form (``morton(phash,w,h)``,
+    ``ts,id``) that ``cluster`` records as a generation's sort spec."""
+
+    curve: Optional[str]
+    cols: Tuple[str, ...]
+
+    def __post_init__(self):
+        if self.curve is not None and self.curve not in CURVES:
+            raise ValueError(f"unknown curve {self.curve!r}, expected one of {CURVES}")
+        if not all(re.fullmatch(r"[A-Za-z_]\w*", c) for c in self.cols):
+            raise ValueError("expected curve(col, col, col) or a column list")
+        if self.curve is not None and len(self.cols) != 3:
+            raise ValueError(f"{self.curve} takes exactly 3 columns, got {len(self.cols)}")
+
+    def __str__(self) -> str:
+        body = ",".join(self.cols)
+        return f"{self.curve}({body})" if self.curve else body
+
+    def exprs(self) -> List[Column]:
+        """The sort expressions: the curve's 64-bit key, or the columns."""
+        cs = [F.col(c) for c in self.cols]
+        if self.curve is None:
+            return cs
+        return [hilbert64_udf(*cs) if self.curve == "hilbert" else morton64_expr(*cs)]
+
+
+def parse_order(text: str) -> WriteOrder:
+    """``curve(a, b, c)`` or ``a, b`` → WriteOrder; ValueError if invalid."""
+    m = re.fullmatch(r"\s*(\w+)\s*\((.*)\)\s*", text, re.S)
+    cols = tuple(c.strip() for c in (m.group(2) if m else text).split(","))
+    try:
+        return WriteOrder(m.group(1).lower() if m else None, cols)
+    except ValueError as e:
+        raise ValueError(f"bad {ORDER_PROP} {text!r}: {e}") from None
+
+
+def default_order(names: Iterable[str]) -> Optional[WriteOrder]:
+    """The order of a table that declares none: ``morton(phash, w, h)``
+    when ``names`` holds the image columns, else None."""
+    order = WriteOrder("morton", ("phash", "w", "h"))
+    return order if set(order.cols) <= set(names) else None

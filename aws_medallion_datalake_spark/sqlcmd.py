@@ -99,6 +99,7 @@ from .operators import (
     remove_orphan_files,
     update_where,
 )
+from .sources import transforms
 from .sources.metatables import column_stats_df
 from .sources.tableformat import FileSwap, Snapshot, Table, records
 
@@ -850,16 +851,9 @@ class EngineSQL:
             preds = parse_where(str(where)) if where else None
             if strategy == "sort":
                 order = kwargs.get("sort_order")
-                cols = (
-                    tuple(c.strip().split()[0] for c in str(order).split(","))
-                    if order
-                    else None
-                )
-                snap = (
-                    cluster(t, self.spark, cols=cols, predicates=preds)
-                    if cols
-                    else cluster(t, self.spark, predicates=preds)
-                )
+                order = self._write_order(t, str(order)) if order else None
+                curve, cols = (order.curve, order.cols) if order else (None, None)
+                snap = cluster(t, self.spark, curve=curve, cols=cols, predicates=preds)
             elif strategy == "binpack":
                 snap = compact(t, self.spark, predicates=preds)
             else:
@@ -926,34 +920,21 @@ class EngineSQL:
             return history_df(t, self.spark)
         raise SQLCommandError(f"unknown procedure {proc!r}")
 
-    def _check_sort_order(self, t: Table, inner: str) -> None:
-        """WRITE [LOCALLY] ORDERED BY expression validation: either
-        ``curve(col, …)`` (morton|hilbert|zorder) or a plain column
-        list; every referenced column must exist. Catches at DDL time
-        what would otherwise silently no-op in write_files or fail a
-        later bare OPTIMIZE."""
-        from pyspark.sql.types import StructType
-
-        fields = {
-            f.name for f in StructType.fromDDL(t.metadata().schema_ddl).fields
-        }
-        pm = re.match(
-            r"(morton|hilbert|zorder)\(([^)]+)\)$", inner.strip(), re.I
-        )
-        if pm:
-            cols = [c.strip() for c in pm.group(2).split(",")]
-        elif re.match(r"[A-Za-z_]\w*(\s*,\s*[A-Za-z_]\w*)*$", inner.strip()):
-            cols = [c.strip() for c in inner.split(",")]
-        else:
-            raise SQLCommandError(
-                f"bad write order {inner!r}: expected curve(col, …) with "
-                "curve in morton|hilbert|zorder, or a plain column list"
-            )
-        missing = [c for c in cols if c not in fields]
+    def _write_order(self, t: Table, text: str) -> transforms.WriteOrder:
+        """A SQL write order (``WRITE [LOCALLY] ORDERED BY``, CALL
+        ``sort_order``), checked at statement time: it parses and every
+        column exists."""
+        try:
+            order = transforms.parse_order(text)
+        except ValueError as e:
+            raise SQLCommandError(f"bad write order: {e}") from None
+        fields = set(t._schema(self.spark).fieldNames())
+        missing = [c for c in order.cols if c not in fields]
         if missing:
             raise SQLCommandError(
                 f"write order references unknown columns {missing}"
             )
+        return order
 
     def _describe(self, s: str) -> DataFrame:
         dm = re.match(rf"DESCRIBE\s+DETAIL\s+({_ID})$", s, re.I)
@@ -1288,32 +1269,23 @@ class EngineSQL:
             return self._ddl_df("ALTER TABLE", name, f"dropped {dm.group(1)}")
         # Iceberg SQL-extension write-order/distribution DDL → the same
         # table properties write_files/cluster already honor
-        wob = re.match(r"WRITE\s+ORDERED\s+BY\s*", rest, re.I)
-        if wob:
-            inner, tail = _take_parens(rest[wob.end():])
+        wo = re.match(r"WRITE\s+(LOCALLY\s+)?ORDERED\s+BY\s*", rest, re.I)
+        if wo:
+            inner, tail = _take_parens(rest[wo.end():])
             if tail:
                 raise SQLCommandError(f"trailing input: {tail!r}")
-            self._check_sort_order(t, inner)
-            t.set_properties(
-                {"write.distribution-mode": "range", "sort.order": inner}
-            )
-            return self._ddl_df("ALTER TABLE", name, f"write ordered by {inner}")
-        wlb = re.match(r"WRITE\s+LOCALLY\s+ORDERED\s+BY\s*", rest, re.I)
-        if wlb:
-            inner, tail = _take_parens(rest[wlb.end():])
-            if tail:
-                raise SQLCommandError(f"trailing input: {tail!r}")
-            self._check_sort_order(t, inner)
-            t.set_properties({"sort.order": inner})
-            return self._ddl_df(
-                "ALTER TABLE", name, f"write locally ordered by {inner}"
-            )
+            self._write_order(t, inner)
+            # a global order also range-distributes the writes
+            props = {} if wo.group(1) else {"write.distribution-mode": "range"}
+            t.set_properties({**props, transforms.ORDER_PROP: inner})
+            local = "locally " if wo.group(1) else ""
+            return self._ddl_df("ALTER TABLE", name, f"write {local}ordered by {inner}")
         if re.match(r"WRITE\s+DISTRIBUTED\s+BY\s+PARTITION$", rest, re.I):
             t.set_properties({"write.distribution-mode": "hash"})
             return self._ddl_df("ALTER TABLE", name, "write distributed by partition")
         if re.match(r"WRITE\s+UNORDERED$", rest, re.I):
             t.set_properties(
-                {"write.distribution-mode": "none", "sort.order": None}
+                {"write.distribution-mode": "none", transforms.ORDER_PROP: None}
             )
             return self._ddl_df("ALTER TABLE", name, "write unordered")
         wm = re.match(

@@ -836,9 +836,9 @@ def test_cluster_one_bounds_job_for_mixed_tile_widths(tmp_path, spark, monkeypat
     assert 1 <= calls[0]["jobs"] <= 3  # one aggregate: its stages only
 
     # disjoint routed-key ranges across the files of each tile
-    cols = ["phash", "w", "h"]
     df = t.scan(spark)
-    low = cm._low(cm._curve_key("morton", cols))
+    (key,) = t.write_order().exprs()
+    low = cm._low(key, True)
     per_file = (
         df.withColumn("ck", low)
         .groupBy(F.col("_metadata.file_path").alias("f"))

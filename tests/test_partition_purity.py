@@ -297,3 +297,57 @@ def test_compaction_refuses_a_plan_that_loses_rows(tmp_path, spark, monkeypatch)
     with pytest.raises(RuntimeError, match="rows"):
         compact(t, spark, target_file_size_bytes=TARGET // 2)
     assert (t.metadata().current_snapshot_id, sorted(os.listdir(t.data_dir))) == before
+
+
+def test_an_all_null_partition_file_is_pure(tmp_path, spark, monkeypatch):
+    """A file whose partition value is NULL on every row is the NULL
+    tuple's: tagged pure (JSON null), so the census reads it off the
+    manifest, and compaction packs NULL files together."""
+    ddl = "id int, p string"
+    t = _small_table(tmp_path, spark, "nulls", ddl, [
+        [(i, None) for i in range(5)],
+        [(i, None) for i in range(5, 9)],
+        [(i, "b") for i in range(9, 14)],
+    ])
+    man = t.manifest_pdf()
+    assert sorted(man["partition_json"]) == ['{"p": "b"}', '{"p": null}', '{"p": null}']
+
+    def no_scan(*a, **k):
+        raise AssertionError("the census read a pure file")
+
+    with monkeypatch.context() as m:
+        m.setattr(Table, "read_data", no_scan)
+        census = tf.tuple_census(t, spark, man)
+    assert sorted(census["tuple"]) == [tf.TUPLE_NULL, tf.TUPLE_NULL, "b"]
+    assert census["slice"].isna().all()
+    compact(t, spark, target_file_size_bytes=TARGET)
+    man = t.manifest_pdf()
+    assert sorted(zip(man["partition_json"], man["record_count"])) == [
+        ('{"p": "b"}', 5), ('{"p": null}', 9)
+    ]
+
+
+@pytest.mark.parametrize("planner", ["pandas", "spark"])
+def test_a_value_beside_nulls_is_mixed(tmp_path, spark, monkeypatch, planner):
+    """A file holding ``p='a'`` and ``p=NULL`` rows holds two tuples
+    (min == max ignores NULLs): it is tagged mixed, the census counts
+    both, and compaction writes them to separate files."""
+    if planner == "spark":
+        monkeypatch.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
+    ddl = "id int, p string"
+    t = _small_table(tmp_path, spark, "mixed_null", ddl, [
+        [(i, "a" if i < 6 else None) for i in range(10)],
+        [(i, "a") for i in range(10, 15)],
+    ])
+    assert len(_mixed(t)) == 1
+    census = tf.tuple_census(t, spark, t.manifest_pdf())
+    assert census.groupby("tuple")["record_count"].sum().to_dict() == {
+        tf.TUPLE_NULL: 4, "a": 11
+    }
+    compact(t, spark, target_file_size_bytes=TARGET)
+    man = t.manifest_pdf()
+    assert sorted(zip(man["partition_json"], man["record_count"])) == [
+        ('{"p": "a"}', 11), ('{"p": null}', 4)
+    ]
+    got = {r["p"]: r["count"] for r in t.scan(spark).groupBy("p").count().collect()}
+    assert got == {"a": 11, None: 4}

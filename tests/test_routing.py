@@ -56,7 +56,7 @@ def test_composite_orders_by_partition_then_key(spark):
         )
     )
     idx = F.array_position(F.array(*[F.lit(d) for d in dates]), F.col("ingest_date"))
-    ck = _composite(F.col("k"), idx)
+    ck = _composite(F.col("k"), idx, True)
     pdf = df.select("image_id", "ingest_date", "k", ck.alias("ck")).toPandas()
     pdf = pdf.sort_values("ck")
     # all date-1 rows sort before all date-2 rows regardless of key
