@@ -2,10 +2,13 @@
 
 Only vectorized UDFs (Arrow batch transfer) — per-row Python Spark UDFs are
 forbidden in this engine (BASELINE.json input_hint). Also includes a pure
-column-expression Morton key (`morton64_expr`) that stays entirely JVM-side
-in whole-stage codegen, used as the default Z-order path; the pandas UDF
-variants exist for Hilbert (not expressible in F.* bit ops economically)
-and for parity testing.
+Catalyst Morton key (`morton64_expr`) that stays entirely JVM-side in
+whole-stage codegen, used as the Z-order sort key by every curve-ordered
+writer. It is built from column names by one SQL parse and grows linearly
+with its bit width (about 1 KB of analyzed SQL), because every query that
+sorts or routes by it analyzes, optimizes and codegens the whole tree on
+the driver. The pandas UDF variants exist for Hilbert (not expressible in
+bit ops economically) and for the SQL function surface.
 
 UDF objects are built lazily (Spark 4 requires an active session when a
 ``pandas_udf`` is instantiated) and cached per process.
@@ -148,40 +151,45 @@ def decode_ok_udf(payload: Column, w: Column, h: Column) -> Column:
     return _decode_ok()(payload, w, h)
 
 
-def _spread3_expr(c: Column) -> Column:
-    """JVM-side 3-way bit spread of the low 21 bits (mirrors zcurve._spread3)."""
-    x = c.bitwiseAND(F.lit((1 << 21) - 1))
-    for shift, mask in (
-        (32, 0x1F00000000FFFF),
-        (16, 0x1F0000FF0000FF),
-        (8, 0x100F00F00F00F00F),
-        (4, 0x10C30C30C30C30C3),
-        (2, 0x1249249249249249),
-    ):
-        x = x.bitwiseOR(F.shiftleft(x, shift)).bitwiseAND(F.lit(mask))
+# Spread a 10-bit value so bit i lands on bit 3i: each multiply adds a
+# copy of the value shifted onto bits it leaves clear, so it equals
+# ``x | x << s`` (s = 16, 8, 4, 2) while naming ``x`` once. Products stay
+# below 2^34, far from BIGINT overflow, so ANSI mode never fires.
+_SPREAD10 = ((65537, 0x30000FF), (257, 0x300F00F), (17, 0x30C30C3), (5, 0x9249249))
+
+
+def _spread10_sql(x: str) -> str:
+    for mul, mask in _SPREAD10:
+        x = f"({x}) * {mul}L & {mask}L"
     return x
 
 
-def morton64_expr(phash: Column, w: Column, h: Column) -> Column:
-    """Morton key as a pure Catalyst expression — no Python boundary.
+def morton64_expr(phash: str, w: str, h: str) -> Column:
+    """Morton key over the columns named ``phash``, ``w`` and ``h`` as one
+    parsed Catalyst expression, bit-identical to ``zcurve.morton64``.
 
-    Sign-bit flip + `shiftrightunsigned` turns the signed phash into its
-    top-21-bit bucket identically to zcurve._norm_dims (signed order
-    preserved — no bucket straddles ±2^63). Preferred over the morton64 UDF in
-    the hot path (whole-stage codegen keeps the clustering repartition
-    JVM-only).
+    The dims are those of ``zcurve._norm_dims``: phash's top 21 bits with
+    the sign flipped (signed order kept, no bucket straddles ±2^63), and
+    the low 21 bits of w and h. Each dim is cut into bits 0-9, 10-19 and
+    bit 20, and each 10-bit cut spread by ``_spread10_sql``, so every
+    column is named three times and the analyzed key stays about 1 KB of
+    SQL (the ``(x | x << s) & m`` ladder names ``x`` twice a step, 10 KB).
+    It is one ``F.expr`` rather than ~70 ``F.*`` calls, each of which
+    costs a Py4J round trip and a call-site capture. A NULL in any column
+    gives NULL.
     """
-    from . import zcurve
+    p, w, h = (f"CAST(`{c.replace('`', '``')}` AS BIGINT)" for c in (phash, w, h))
+    dims = (f"(shiftrightunsigned({p}, 43) ^ {1 << 20}L)", w, h)
 
-    p = F.shiftrightunsigned(
-        phash.cast("long").bitwiseXOR(F.lit(-(1 << 63))), 64 - zcurve.BITS
-    )
-    return (
-        F.shiftleft(_spread3_expr(p), 2)
-        .bitwiseOR(F.shiftleft(_spread3_expr(w.cast("long")), 1))
-        .bitwiseOR(_spread3_expr(h.cast("long")))
-        .cast("long")
-    )
+    def cut(lo: int, width: int) -> list:
+        return [f"shiftright({d}, {lo}) & {(1 << width) - 1}L" for d in dims]
+
+    def interleave(a: str, b: str, c: str) -> str:
+        return f"(shiftleft({a}, 2) | shiftleft({b}, 1) | {c})"
+
+    low, mid = (interleave(*map(_spread10_sql, cut(lo, 10))) for lo in (0, 10))
+    top = interleave(*cut(20, 1))
+    return F.expr(f"{low} | shiftleft({mid}, 30) | shiftleft({top}, 60)")
 
 
 def register_sql_functions(spark) -> list:

@@ -249,10 +249,11 @@ class WriteOrder:
 
     def exprs(self) -> List[Column]:
         """The sort expressions: the curve's 64-bit key, or the columns."""
-        cs = [F.col(c) for c in self.cols]
         if self.curve is None:
-            return cs
-        return [hilbert64_udf(*cs) if self.curve == "hilbert" else morton64_expr(*cs)]
+            return [F.col(c) for c in self.cols]
+        if self.curve == "hilbert":
+            return [hilbert64_udf(*map(F.col, self.cols))]
+        return [morton64_expr(*self.cols)]
 
 
 def parse_order(text: str) -> WriteOrder:

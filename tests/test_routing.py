@@ -104,3 +104,16 @@ def test_route_jvm_matches_searchsorted(spark):
         for i in np.searchsorted(bounds, np.array(sorted(keys)), side="left")
     ]
     assert list(out["r"]) == exp
+
+
+def test_route_literal_arrays_keep_their_types(spark):
+    """The router's literal arrays come from one SQL parse: bounds stay
+    BIGINT and salts INT, down to each type's extremes."""
+    from aws_medallion_datalake_spark.operators.cluster import _int_array
+
+    bounds = [-(1 << 63), -5, 0, (1 << 63) - 1]
+    salts = [-(1 << 31), -1, 7, (1 << 31) - 1]
+    df = spark.range(1).select(_int_array(bounds, "L").alias("b"), _int_array(salts).alias("s"))
+    assert df.schema.simpleString() == "struct<b:array<bigint>,s:array<int>>"
+    (row,) = df.collect()
+    assert (row["b"], row["s"]) == (bounds, salts)

@@ -7,13 +7,12 @@ and kept valid by schema changes."""
 import os
 import re
 
-import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 import aws_medallion_datalake_spark
-from aws_medallion_datalake_spark.functions.udfs import hilbert64_udf, morton64_expr
+from aws_medallion_datalake_spark.functions import zcurve
 from aws_medallion_datalake_spark.operators import cluster, compact, merge_into
 from aws_medallion_datalake_spark.operators.run import run_maintenance
 from aws_medallion_datalake_spark.sources.generator import (
@@ -43,37 +42,27 @@ def _table(tmp_path, spark, name, order, n=240, n_files=8, props=None) -> Table:
     return t
 
 
-def _sort_exprs(curve, cols) -> list:
-    cs = [F.col(c) for c in cols]
-    if curve is None:
-        return cs
-    return [hilbert64_udf(*cs) if curve == "hilbert" else morton64_expr(*cs)]
-
-
-def _file_keys(t, spark, order, paths) -> dict:
+def _file_keys(t, order, paths) -> dict:
     """Per data file in ``paths``: its rows' (ingest_date, *sort keys of
-    ``order``, a (curve, columns) pair), in the file's row order."""
-    cols = ["ingest_date", *order[1]]
-    pdf = pd.concat(
-        pq.read_table(os.path.join(t.root, p), columns=cols)
-        .to_pandas()
-        .assign(__f=p, __i=lambda d: range(len(d)))
-        for p in paths
-    )
-    keys = [e.alias(f"__k{j}") for j, e in enumerate(_sort_exprs(*order))]
-    rows = spark.createDataFrame(pdf).select("__f", "__i", "ingest_date", *keys).collect()
-    out: dict = {}
-    for r in sorted(rows, key=lambda r: (r["__f"], r["__i"])):
-        out.setdefault(r["__f"], []).append(tuple(r)[2:])
+    ``order``, a (curve, columns) pair), in the file's row order. Curve
+    keys come from the numpy kernels in ``zcurve``, not from the engine's
+    Spark key, so a wrong engine key cannot check itself."""
+    curve, cols = order
+    out = {}
+    for p in paths:
+        pdf = pq.read_table(os.path.join(t.root, p), columns=["ingest_date", *cols]).to_pandas()
+        keys = [pdf[c] for c in cols]
+        if curve is not None:
+            fn = zcurve.hilbert64 if curve == "hilbert" else zcurve.morton64
+            keys = [fn(*(k.to_numpy() for k in keys))]
+        out[p] = list(zip(pdf["ingest_date"], *keys))
     return out
 
 
-def _unordered(t, spark, order, paths) -> list:
+def _unordered(t, order, paths) -> list:
     """The files among ``paths`` whose rows are not in (ingest_date,
     order) order."""
-    return [
-        p for p, keys in _file_keys(t, spark, order, paths).items() if keys != sorted(keys)
-    ]
+    return [p for p, keys in _file_keys(t, order, paths).items() if keys != sorted(keys)]
 
 
 def _added(before, t) -> list:
@@ -92,7 +81,7 @@ def test_every_writer_applies_the_declared_order(tmp_path, spark, declared):
     # range-mode ingest: every file sorted by (date, order), several per date
     t = _table(tmp_path, spark, "t", declared, props={"write.distribution-mode": "range"})
     man = t.manifest_pdf()
-    if len(man) <= 2 or _unordered(t, spark, order, man["path"]):
+    if len(man) <= 2 or _unordered(t, order, man["path"]):
         ignored["range ingest"] = len(man)
 
     # compaction: splitting a one-date file range-orders and sorts its outputs
@@ -105,7 +94,7 @@ def test_every_writer_applies_the_declared_order(tmp_path, spark, declared):
     compact(one, spark, target_file_size_bytes=size // 3)
     man = one.manifest_pdf()
     assert len(man) == 3
-    if _unordered(one, spark, order, man["path"]):
+    if _unordered(one, order, man["path"]):
         ignored["compaction"] = True
 
     # MERGE: the delta files are sorted by (date, order)
@@ -113,14 +102,14 @@ def test_every_writer_applies_the_declared_order(tmp_path, spark, declared):
     snap = merge_into(t, spark, generate_updates(spark, 240, 30, 10, n_files=2))
     delta = [p for p in _added(before, t) if p.startswith(snap.summary["delta_prefix"])]
     assert delta
-    if _unordered(t, spark, order, delta):
+    if _unordered(t, order, delta):
         ignored["merge delta"] = True
 
     # bare cluster: the declared curve, its files in curve order
     before = t.manifest_pdf()
     snap = cluster(t, spark, target_file_size_bytes=1 << 26, mode="full")
     got = (snap.summary["curve"], tuple(snap.summary["cluster_cols"]))
-    if got != curve or _unordered(t, spark, curve, _added(before, t)):
+    if got != curve or _unordered(t, curve, _added(before, t)):
         ignored["cluster"] = got
     assert t.metadata().properties["cluster.sort_spec"] == f"{got[0]}({','.join(got[1])})"
 

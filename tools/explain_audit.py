@@ -89,8 +89,8 @@ def _(spark, sf_dir):
 def _(spark, sf_dir):
     from aws_medallion_datalake_spark.functions.udfs import morton64_expr
 
-    df = spark.range(100).select(
-        morton64_expr(F.col("id"), F.col("id") + 1, F.col("id") + 2).alias("k")
+    df = spark.range(100).selectExpr("id", "id + 1 AS w", "id + 2 AS h").select(
+        morton64_expr("id", "w", "h").alias("k")
     )
     p = plan_of(df)
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
