@@ -43,17 +43,16 @@ Spark-first execution plan (ONE full pass over the payload per tile):
    none. (A plain ``repartitionByRange`` instead runs its
    boundary-sampling job over the FULL child plan — every payload byte
    read and every key computed twice, or a cluster-wide persist.)
-3. **Exact-route shuffle, zero plan literals** — rows get their target
-   partition from one vectorized Arrow UDF: ``np.searchsorted`` against
-   the tile's boundary array, then a *routing salt* per bucket such that
+3. **Exact-route shuffle** — rows get their target partition from one
+   parsed Catalyst expression (``_route_expr``): a binary search of the
+   tile's boundary array, then a *routing salt* per bucket such that
    Spark's HashPartitioning lands bucket i exactly in partition i
    (``pmod(murmur3(salt_i), n) == i``; salts are found driver-side with
-   a numpy murmur3 that bit-matches Spark's ``F.hash``). The boundary
-   and salt arrays travel to executors as one ``sc.broadcast`` — the
-   query plan itself is O(1) in the file count, and routing is
-   O(log n_out) per row instead of the old O(n_out) literal-array
-   evaluation. ``repartition(n, route)`` is then a single exact shuffle:
-   no sampling, no skewed modulo collisions.
+   a numpy murmur3 that bit-matches Spark's ``F.hash``). Both arrays are
+   literals bounded by tiling (a tile plans at most max_files_per_job
+   outputs), routing is O(log n_out) per row at every n_out, and no
+   Python worker starts. ``repartition(n, route)`` is then a single
+   exact shuffle: no sampling, no skewed modulo collisions.
 4. **Sort within partitions + write** — files come out key-clustered and
    ≈target-sized; the runner collects each tile's stats as its write
    lands, and all tiles commit as ONE replace snapshot, a
@@ -70,10 +69,8 @@ The Morton key is a pure Catalyst expression built by one SQL parse
 (functions/udfs.py::morton64_expr) — whole-stage codegen end-to-end,
 and about 1 KB of analyzed SQL, since the bounds job and every tile
 analyze and codegen it again; Hilbert uses a vectorized pandas UDF
-(Arrow batches). The JVM router's boundary and salt arrays are one parse
-each too, not an ``F.lit`` per element. The route UDF transfers ONE
-int64 column to Python and one int32 back per batch — payload bytes
-never cross the Arrow boundary.
+(Arrow batches). The router is one parse too, not an ``F.lit`` per
+element.
 """
 
 from __future__ import annotations
@@ -89,7 +86,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 from ..session import local_frame
 from ..sources import transforms
@@ -99,6 +95,8 @@ from ..sources.tableformat import (
     Table,
     check_rows_kept,
     join_pieces,
+    prune_manifest,
+    prune_predicates,
     read_split_size,
     resumed_units,
     rewrite_units,
@@ -140,7 +138,8 @@ def route_exact(df, idx_col, n_out: int):
     no repartitionByRange sampling job. Callers writing a
     ``bucket(N, key)``-partitioned table route with
     ``route_exact(df, transform.expr(), N)`` before ``write_files``."""
-    route = F.element_at(_int_array(exact_route_salts(n_out)), idx_col.cast("int") + 1)
+    salts = F.expr(_array_sql(exact_route_salts(n_out)))
+    route = F.element_at(salts, idx_col.cast("int") + 1)
     return (
         df.withColumn("__rt", route.cast("int"))
         .repartition(n_out, F.col("__rt"))
@@ -148,12 +147,12 @@ def route_exact(df, idx_col, n_out: int):
     )
 
 
-def _int_array(values, suffix: str = "") -> Column:
-    """A literal INT array (BIGINT with ``suffix`` "L") built by one SQL
+def _array_sql(values, suffix: str = "") -> str:
+    """A literal INT array (BIGINT with ``suffix`` "L") as SQL, for one
     parse: an ``F.lit`` per element costs Py4J round trips and a
     call-site capture each, about 0.4 s of driver time for the two arrays
     of a 512-way route on a 4-core host."""
-    return F.expr(f"array({', '.join(f'{int(v)}{suffix}' for v in values)})")
+    return f"array({', '.join(f'{int(v)}{suffix}' for v in values)})"
 
 
 def exact_route_salts(n_out: int) -> np.ndarray:
@@ -205,46 +204,18 @@ def _composite(key, idx, salted: bool):
     return F.shiftleft(idx.cast("long"), 56).bitwiseOR(_low(key, salted))
 
 
-# Up to this output-file count, routing stays a pure-JVM expression (no
-# Arrow hop, no Python workers): the per-row cost is a linear O(n_out)
-# scan of a constant-folded boundary array, so it only wins while n_out
-# is small; past this the broadcast binary-search Arrow UDF
-# (O(log n_out), vectorized) takes over. Either way the literal count is
-# bounded by TILING (a tile never plans more than max_files_per_job =
-# 4096 outputs), so the plan can never grow the 800k-literal failure
-# mode.
-_JVM_ROUTE_MAX = 512
-
-
-def _route_udf(spark: SparkSession, bounds: np.ndarray, salts: np.ndarray):
-    """Vectorized bucket router: count of boundaries < key (binary
-    search), mapped through the exact-route salt table. The two arrays
-    ride one broadcast — the query plan carries no per-file literals."""
-    bc = spark.sparkContext.broadcast((bounds, salts.astype(np.int32)))
-
-    @F.pandas_udf(IntegerType())
-    def route(ck: pd.Series) -> pd.Series:
-        b, s = bc.value
-        v = ck.to_numpy()
-        if v.dtype != np.int64:  # nulls upstream → float; keys are coalesced
-            v = np.nan_to_num(v, nan=float(np.iinfo(np.int64).min)).astype(np.int64)
-        return pd.Series(s[np.searchsorted(b, v, side="left")])
-
-    return route, bc
-
-
-def _route_jvm(ck_col, bounds: np.ndarray, salts: np.ndarray):
-    """Small-n_out router as a Catalyst expression over the MATERIALIZED
-    key column (single evaluation per row). ``aggregate`` accumulates a
-    scalar rank — unlike ``size(filter(...))``, which materializes a
-    filtered ARRAY per row (n_out-element allocation × every row of the
-    tile, pure GC churn on the hot rewrite path)."""
-    bucket = F.aggregate(
-        _int_array(bounds, "L"),
-        F.lit(0),
-        lambda acc, b: acc + F.when(b < ck_col, 1).otherwise(0),
+def _route_expr(ck: str, bounds: np.ndarray, salts: np.ndarray) -> Column:
+    """The exact-route salt of each row's bucket, ``np.searchsorted(bounds,
+    ck, side="left")`` of the key column ``ck``, as ONE parsed Catalyst
+    expression: a binary search (``aggregate`` over descending powers of
+    two), then the bucket's salt. O(log n_out) per row, no Python worker."""
+    n = len(bounds)
+    steps = [1 << k for k in range(n.bit_length() - 1, -1, -1)]
+    bucket = (
+        f"aggregate({_array_sql(steps)}, 0, (p, s) -> IF(p + s <= {n} AND "
+        f"element_at({_array_sql(bounds, 'L')}, p + s) < {ck}, p + s, p))"
     )
-    return F.element_at(_int_array(salts), bucket + 1).cast("int")
+    return F.expr(f"element_at({_array_sql(salts)}, {bucket} + 1)").cast("int")
 
 
 # a tile holds at most this many partition tuples: their 1-based index
@@ -476,12 +447,8 @@ def cluster(
     else:
         keep, work = man.iloc[0:0], man
     if predicates and len(work):
-        from ..sources.tableformat import prune_manifest
-
         scoped = prune_manifest(
-            work,
-            transforms.extend_predicates(meta.partition_cols, list(predicates)),
-            statable_cols(meta),
+            work, prune_predicates(meta, list(predicates)), statable_cols(meta)
         )
         keep = man[~man["path"].isin(scoped["path"])]
         work = scoped
@@ -505,7 +472,6 @@ def cluster(
         sliced = any(p["slice"].notna().any() for p in pieces.values())
         return join_pieces(table, df, _piece_frame(spark, pieces), sliced)
 
-    broadcasts: list = []
     stage = ("cluster", "tile")
     resumed = resumed_units(checkpoint, stage, range(len(tiles)))
     # tuples that still have to write more than one file need quantiles
@@ -563,12 +529,7 @@ def cluster(
         tile_b = _bounds(tile_no, tile, tile_bounds() if tile_no in ranged else {})
         salts = exact_route_salts(n_out)
         keyed = full.withColumn("__ck", _composite(F.col(_KEY), idx, salted))
-        if n_out <= _JVM_ROUTE_MAX:
-            routed = keyed.withColumn(_ROUTE, _route_jvm(F.col("__ck"), tile_b, salts))
-        else:
-            route, bc = _route_udf(spark, tile_b, salts)
-            broadcasts.append(bc)
-            routed = keyed.withColumn(_ROUTE, route(F.col("__ck")))
+        routed = keyed.withColumn(_ROUTE, _route_expr("__ck", tile_b, salts))
         return (
             routed.repartition(n_out, F.col(_ROUTE))
             .sortWithinPartitions(*sort_cols)
@@ -635,8 +596,6 @@ def cluster(
             rows_key=None,
             properties=props,
         )
-    for bc in broadcasts:
-        bc.unpersist()
     if checkpoint is not None:
         checkpoint.stage_done("cluster", dict(snap.summary, snapshot_id=snap.snapshot_id))
     return snap
@@ -651,16 +610,33 @@ def clustering_quality(table: Table, col: Optional[str] = None) -> float:
     scans prune on the partition column first."""
     if col is None:
         col = table.write_order().cols[0]  # a table without one must pass col
-    man = table.manifest_pdf()
-    total_pairs = 0
-    overlaps = 0
-    for _, part in man.groupby("partition_json"):
-        lo = part[f"min_{col}"].to_numpy()
-        hi = part[f"max_{col}"].to_numpy()
-        n = len(part)
-        if n < 2:
-            continue
-        total_pairs += n * (n - 1)
-        for i in range(n):
-            overlaps += int(((lo < hi[i]) & (hi > lo[i])).sum()) - 1
-    return overlaps / total_pairs if total_pairs else 0.0
+    counts = [
+        overlap_pairs(part, col)
+        for _, part in table.manifest_pdf().groupby("partition_json")
+    ]
+    pairs = sum(p for _, p in counts)
+    return sum(o for o, _ in counts) / pairs if pairs else 0.0
+
+
+def overlap_pairs(part: pd.DataFrame, col: str) -> tuple:
+    """``(overlapping, all)`` ordered pairs of distinct files in ``part``,
+    one partition's manifest rows: j overlaps i when ``lo_j < hi_i`` and
+    ``hi_j > lo_i`` on ``col``; a file without stats overlaps none. Exact
+    in O(n log n): per file, the files starting below its max less those
+    ending at or below its min, plus the point files equal to it (in both
+    sets), less itself when it spans a range."""
+    n = len(part)
+    lo, hi = part[f"min_{col}"], part[f"max_{col}"]
+    has = (lo.notna() & hi.notna()).to_numpy()
+    lo, hi = lo[has].to_numpy(), hi[has].to_numpy()
+    point = lo == hi
+    pts = np.sort(lo[point])
+    equal = np.searchsorted(pts, lo, "right") - np.searchsorted(pts, lo, "left")
+    count = (
+        np.searchsorted(np.sort(lo), hi, "left")
+        - np.searchsorted(np.sort(hi), lo, "right")
+        + np.where(point, equal, 0)
+        - (lo < hi)
+    )
+    return int(count.sum()), n * (n - 1)
+

@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import time
 from contextlib import nullcontext
-from functools import reduce
 from typing import Optional
 
 import pandas as pd
@@ -53,7 +52,12 @@ from ..sources.tableformat import (
     Snapshot,
     Table,
     check_rows_kept,
+    filter_batches,
     join_pieces,
+    prune_manifest,
+    prune_manifest_spark,
+    prune_predicates,
+    pure_tuples,
     rewrite_units,
     statable_cols,
     tuple_census,
@@ -121,8 +125,9 @@ def _sliced(table: Table, spark: SparkSession, man):
     carrying the file's other columns and the tuple as ``slice``.
 
     ``man`` is pandas, or above ``SPARK_MANIFEST_THRESHOLD`` the manifest
-    relation: then only the mixed files' rows reach the driver, and
-    their census rows are joined back in."""
+    relation: then ``pure_tuples`` picks the mixed files per Arrow batch,
+    only their rows reach the driver, and their census rows are joined
+    back in."""
     from pyspark.sql import functions as F
 
     base = ["partition_json", "record_count", "file_size_bytes"]
@@ -130,17 +135,10 @@ def _sliced(table: Table, spark: SparkSession, man):
         census = tuple_census(table, spark, man).drop(columns="tuple")
         return man.drop(columns=base).merge(census, on="path")
     fields = transforms.field_names(table.metadata().partition_cols)
-    pj = F.col("partition_json")
-    mixed = reduce(
-        lambda a, b: a | b,
-        [
-            ~F.array_contains(F.json_object_keys(pj), f)
-            | (F.get_json_object(pj, f"$.{f}") == "__mixed__")
-            for f in fields
-        ],
-        F.lit(False),
+    mixed = filter_batches(
+        man, lambda m: m[pure_tuples(m, fields).isna()], ["partition_json"]
     )
-    rows = man.filter(mixed).select("path", *base).toPandas()
+    rows = mixed.select("path", *base).toPandas()
     census = tuple_census(table, spark, rows)
     sl = local_frame(
         spark,
@@ -229,48 +227,32 @@ def compact(
     pt = PhaseTimer()
     swap = FileSwap(table, spark, pt)
     with pt.phase("plan"):
-        from ..sources.tableformat import (
-            SPARK_MANIFEST_THRESHOLD,
-            manifest_prune_cond,
-            prune_manifest,
-        )
+        from ..sources.tableformat import SPARK_MANIFEST_THRESHOLD
 
         meta = table.metadata()
         order = table.write_order()
         order_col = order.cols[0] if order else None
-        prune_preds = (
-            transforms.extend_predicates(meta.partition_cols, list(predicates))
-            if predicates
-            else []
-        )
+        prune_preds = prune_predicates(meta, list(predicates or []))
         statable = statable_cols(meta)
         n_entries = table.manifest_rows(swap.base)
         if n_entries > SPARK_MANIFEST_THRESHOLD:
             # distributed planning: the FFD loop runs per-partition on
             # executors; the driver gets one row per GROUP, not per file.
-            # Predicate scoping filters the manifest RELATION — surviving
-            # paths never land on the driver.
-            man_df = table.manifest_df(spark, swap.base)
-            if prune_preds:
-                man_df = man_df.filter(
-                    manifest_prune_cond(set(man_df.columns), prune_preds, statable)
-                )
-            plan: CompactionPlan = plan_compaction_spark(
-                _sliced(table, spark, man_df),
-                target_file_size_bytes,
-                min_input_files=min_input_files,
-                order_col=order_col,
-            )
+            # Predicate scoping prunes the manifest RELATION per batch —
+            # surviving paths never land on the driver.
+            man_scope = table.manifest_df(spark, swap.base)
+            prune, planner = prune_manifest_spark, plan_compaction_spark
         else:
             man_scope = swap.man
-            if prune_preds:
-                man_scope = prune_manifest(man_scope, prune_preds, statable)
-            plan = plan_compaction(
-                _sliced(table, spark, man_scope),
-                target_file_size_bytes,
-                min_input_files=min_input_files,
-                order_col=order_col,
-            )
+            prune, planner = prune_manifest, plan_compaction
+        if prune_preds:
+            man_scope = prune(man_scope, prune_preds, statable)
+        plan: CompactionPlan = planner(
+            _sliced(table, spark, man_scope),
+            target_file_size_bytes,
+            min_input_files=min_input_files,
+            order_col=order_col,
+        )
     if not plan.groups:
         return None
 

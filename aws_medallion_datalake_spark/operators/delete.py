@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_frame
-from ..sources import transforms
 from ..sources.tableformat import (
     DEFAULTS_PROP,
     FileSwap,
@@ -56,10 +55,12 @@ from ..sources.tableformat import (
     _pred_to_column,
     prefix_files,
     prune_manifest,
+    prune_predicates,
     records,
     rel_path_expr,
     resolve_write_mode,
     statable_cols,
+    typed_predicates,
     write_position_deletes,
     written_entries,
 )
@@ -129,7 +130,7 @@ def row_level_write(
         with pt.phase("plan"):
             cand = prune_manifest(
                 swap.man,
-                transforms.extend_predicates(meta.partition_cols, preds),
+                prune_predicates(meta, preds),
                 statable_cols(meta),
             )
         if not len(cand) and insert is None:
@@ -158,7 +159,9 @@ def row_level_write(
 
             with pt.phase("plan"):
                 dfl = set(json.loads(str(meta.properties.get(DEFAULTS_PROP, "{}"))))
-                full = _fully_covered_mask(cand, preds, unsound_cols=dfl)
+                full = _fully_covered_mask(
+                    cand, typed_predicates(meta, preds), unsound_cols=dfl
+                )
             swap.drop(cand.loc[full])
             summ["files_dropped_wholesale"] = int(full.sum())
             boundary = cand.loc[~full]

@@ -108,6 +108,7 @@ from ..sources.tableformat import (
     _pred_to_column,
     _strip_scheme,
     prune_manifest,
+    prune_predicates,
     records,
     resolve_write_mode,
     statable_cols,
@@ -320,7 +321,7 @@ def merge_into(
                     preds = [(key, "between", (src_lo, src_hi))]
                     cand = prune_manifest(
                         man,
-                        transforms.extend_predicates(meta.partition_cols, preds),
+                        prune_predicates(meta, preds),
                         statable,
                     )
             # the matched rows the matched action applies to (None: all of them)

@@ -37,13 +37,14 @@ from typing import Optional, Sequence, Tuple
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..sources import transforms
 from ..sources.tableformat import (
     DEFAULTS_PROP,
     Table,
     _pred_to_column,
     prune_manifest,
+    prune_predicates,
     statable_cols,
+    typed_predicates,
 )
 
 __all__ = ["fast_count", "fast_min_max"]
@@ -57,41 +58,45 @@ def _fully_covered_mask(man: pd.DataFrame, preds, unsound_cols=()) -> pd.Series:
     """True for manifest rows whose EVERY data row satisfies every
     predicate — provable from (min, max, nulls, record_count) alone.
     ``unsound_cols`` (default-valued columns): their physical stats no
-    longer describe what a scan observes, so nothing is provable."""
+    longer describe what a scan observes, so nothing is provable; nor is
+    it on a predicate whose literal the stats cannot be compared with."""
     mask = pd.Series(True, index=man.index)
     false = pd.Series(False, index=man.index)
-    for col, op, value in preds:
-        mn_c, mx_c, nu_c = f"min_{col}", f"max_{col}", f"nulls_{col}"
-        if col in unsound_cols or mn_c not in man.columns:
-            return false  # no (trustworthy) stats: nothing is provable
-        mn, mx = man[mn_c], man[mx_c]
-        nu = man[nu_c] if nu_c in man.columns else None
-        known = mn.notna() & mx.notna()
-        no_nulls = (
-            nu.notna() & (nu == 0) if nu is not None else false
-        )
-        if op == ">=":
-            c = known & no_nulls & (mn >= value)
-        elif op == "<=":
-            c = known & no_nulls & (mx <= value)
-        elif op == "=":
-            c = known & no_nulls & (mn == value) & (mx == value)
-        elif op == "between":
-            lo, hi = value
-            c = known & no_nulls & (mn >= lo) & (mx <= hi)
-        elif op == "in":
-            c = known & no_nulls & (mn == mx) & mn.isin(list(value))
-        elif op == "isnull":
-            c = (
-                nu.notna() & (nu == man["record_count"])
-                if nu is not None
-                else false
+    try:
+        for col, op, value in preds:
+            mn_c, mx_c, nu_c = f"min_{col}", f"max_{col}", f"nulls_{col}"
+            if col in unsound_cols or mn_c not in man.columns:
+                return false  # no (trustworthy) stats: nothing is provable
+            mn, mx = man[mn_c], man[mx_c]
+            nu = man[nu_c] if nu_c in man.columns else None
+            known = mn.notna() & mx.notna()
+            no_nulls = (
+                nu.notna() & (nu == 0) if nu is not None else false
             )
-        elif op == "notnull":
-            c = no_nulls
-        else:
-            return false
-        mask &= c
+            if op == ">=":
+                c = known & no_nulls & (mn >= value)
+            elif op == "<=":
+                c = known & no_nulls & (mx <= value)
+            elif op == "=":
+                c = known & no_nulls & (mn == value) & (mx == value)
+            elif op == "between":
+                lo, hi = value
+                c = known & no_nulls & (mn >= lo) & (mx <= hi)
+            elif op == "in":
+                c = known & no_nulls & (mn == mx) & mn.isin(list(value))
+            elif op == "isnull":
+                c = (
+                    nu.notna() & (nu == man["record_count"])
+                    if nu is not None
+                    else false
+                )
+            elif op == "notnull":
+                c = no_nulls
+            else:
+                return false
+            mask &= c
+    except (TypeError, ValueError):
+        return false  # an incomparable literal proves nothing
     return mask
 
 
@@ -126,15 +131,15 @@ def fast_count(
         return int(man["record_count"].sum())
 
     statable = statable_cols(meta)
-    cand = prune_manifest(
-        man, transforms.extend_predicates(meta.partition_cols, preds), statable
-    )
+    cand = prune_manifest(man, prune_predicates(meta, preds), statable)
     if not len(cand):
         return 0
     dfl = set(
         json.loads(str(meta.properties.get(DEFAULTS_PROP, "{}")))
     )
-    full = _fully_covered_mask(cand, preds, unsound_cols=dfl)
+    full = _fully_covered_mask(
+        cand, typed_predicates(meta, preds), unsound_cols=dfl
+    )
     n = int(cand.loc[full, "record_count"].sum())
     partial = cand.loc[~full]
     if len(partial):

@@ -10,25 +10,23 @@ delete sets — planner-sized inputs, never data files) and emits an
 ordered stage plan with reasons, the contract Databricks auto-optimize
 / Iceberg's maintenance recommendations implement.
 
-Scale split, same rule as the scan planner: below
-``SPARK_MANIFEST_THRESHOLD`` manifest rows the health metrics are pandas
-on the driver; above it they run as one Spark aggregation over the
-manifest parquet. The exact pairwise-overlap clustering metric
-(``clustering_quality``) is O(files²) per partition, so the big-manifest
-path substitutes the O(files) normalized-range-width proxy — average
-fraction of the partition's key range one file spans; 1/n_files when
-ranges are disjoint, →1 when every file spans everything — and the
-health dict says which metric it reports.
+Scale split, same rule as the scan planner: the health metrics are one
+per-partition function over the manifest, run on the driver below
+``SPARK_MANIFEST_THRESHOLD`` manifest rows and per partition group on
+executors (``tableformat.map_groups``) above it. The clustering metric
+is ``clustering_quality``'s exact overlap count (``cluster.overlap_pairs``,
+O(n log n) per partition), the same number at every manifest size.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from ..sources.tableformat import SPARK_MANIFEST_THRESHOLD, Table
+from ..sources.tableformat import SPARK_MANIFEST_THRESHOLD, Table, map_groups
+from .cluster import overlap_pairs
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
 
@@ -51,8 +49,7 @@ def table_health(
         "avg_file_bytes": 0,
         "small_file_count": 0,
         "small_file_ratio": 0.0,
-        "cluster_metric": None,  # overlap (exact) or range_width (proxy)
-        "cluster_metric_kind": "none",
+        "cluster_metric": None,  # clustering_quality on cluster_col
         "cluster_col": order.cols[0] if order else None,
         "pending_pos_delete_files": 0,
         "pending_eq_delete_files": 0,
@@ -83,49 +80,31 @@ def table_health(
     if n_entries == 0:
         return out
     small = target_file_size_bytes // 2
-    cluster_col = out["cluster_col"]
-    has_stats = f"min_{cluster_col}" if cluster_col else None
+    col = out["cluster_col"]
     if n_entries > SPARK_MANIFEST_THRESHOLD and spark is not None:
         man = table.manifest_df(spark)
-        aggs = [
-            F.sum("file_size_bytes").alias("bytes"),
-            F.sum((F.col("file_size_bytes") < small).cast("long")).alias("n_small"),
-        ]
-        width = None
-        if has_stats in man.columns:
-            # O(files) proxy: per-partition normalized range width
-            # double arithmetic: a key spanning the full int64 range (the
-            # 64-bit phash does) overflows long subtraction under ANSI
-            lo_d = F.col(f"min_{cluster_col}").cast("double")
-            hi_d = F.col(f"max_{cluster_col}").cast("double")
-            w = man.groupBy("partition_json").agg(
-                F.min(lo_d).alias("lo"),
-                F.max(hi_d).alias("hi"),
-                F.avg(hi_d - lo_d).alias("avg_span"),
-            )
-            width = w.agg(
-                F.avg(
-                    F.when(
-                        F.col("hi") > F.col("lo"),
-                        F.col("avg_span") / (F.col("hi") - F.col("lo")),
-                    )
-                ).alias("w")
-            ).first()["w"]
-        r = man.agg(*aggs).first()
-        out["total_bytes"] = int(r["bytes"] or 0)
-        out["small_file_count"] = int(r["n_small"] or 0)
-        if width is not None:
-            out["cluster_metric"] = float(width)
-            out["cluster_metric_kind"] = "range_width"
     else:
-        from .cluster import clustering_quality
-
         man = table.manifest_pdf()
-        out["total_bytes"] = int(man["file_size_bytes"].sum())
-        out["small_file_count"] = int((man["file_size_bytes"] < small).sum())
-        if has_stats in man.columns:
-            out["cluster_metric"] = float(clustering_quality(table, cluster_col))
-            out["cluster_metric_kind"] = "overlap"
+    ranged = col is not None and f"min_{col}" in man.columns
+
+    def partition_health(part):
+        sizes = part["file_size_bytes"]
+        overlaps, pairs = overlap_pairs(part, col) if ranged else (0, 0)
+        row = [int(sizes.sum()), int((sizes < small).sum()), overlaps, pairs]
+        return pd.DataFrame([row], columns=["bytes", "n_small", "overlaps", "pairs"])
+
+    h = map_groups(
+        man,
+        partition_health,
+        "bytes bigint, n_small bigint, overlaps bigint, pairs bigint",
+        "partition_json",
+        ["file_size_bytes"] + ([f"min_{col}", f"max_{col}"] if ranged else []),
+    ).sum()
+    out["total_bytes"] = int(h["bytes"])
+    out["small_file_count"] = int(h["n_small"])
+    if ranged:
+        pairs = int(h["pairs"])
+        out["cluster_metric"] = int(h["overlaps"]) / pairs if pairs else 0.0
     out["avg_file_bytes"] = out["total_bytes"] // max(1, out["n_files"])
     out["small_file_ratio"] = out["small_file_count"] / out["n_files"]
     return out
@@ -181,7 +160,7 @@ def plan_maintenance(
     ):
         plan.append((
             "cluster",
-            f"{h['cluster_metric_kind']} {h['cluster_metric']:.2f} on "
+            f"overlap {h['cluster_metric']:.2f} on "
             f"{h['cluster_col']} > {cluster_metric_threshold}",
         ))
     if h["n_manifests"] > manifest_count_threshold:

@@ -18,11 +18,14 @@ Scale notes (the same discipline as the native paths):
   filters (``pushFilters``) — a pruned file is never listed, opened, or
   shipped to an executor. Rows cross into Spark as Arrow record batches
   (``read`` yields ``pyarrow.RecordBatch``), never per-row Python objects.
-- The streaming reader is the snapshot-diff consumer (``Table.changes``
-  semantics) as a REAL Structured Streaming source: offsets are snapshot
-  ids, each micro-batch reads exactly the files logically added in
-  ``(start, end]``, planned from manifest diffs on the driver — O(delta),
-  no directory listing. Watermarks/windowed aggs compose downstream.
+- The streaming reader is the snapshot-diff consumer as a REAL
+  Structured Streaming source: offsets are snapshot ids, each
+  micro-batch reads exactly the files logically added in ``(start,
+  end]``, ``Table.added_paths`` — the ancestry walk and per-link
+  manifest diff ``Table.changes`` reads through, run on the driver (no
+  session here) — O(delta), no directory listing. Offset 0 is
+  ``startingOffsets=earliest``. Watermarks/windowed aggs compose
+  downstream.
 - Writers are the inverse: each task streams Arrow batches into its own
   parquet file under an isolated prefix inside the table's data dir
   (uncommitted files are invisible; aborts sweep them), the driver folds
@@ -93,8 +96,8 @@ from .tableformat import (
     FileSwap,
     Table,
     TxnAlreadyCommittedError,
-    logical_adds,
     prune_manifest,
+    prune_predicates,
     statable_cols,
 )
 from . import transforms
@@ -341,53 +344,6 @@ def _filters_to_preds(filters: Sequence[Filter]) -> list:
     return preds
 
 
-def _added_rel_paths(table: Table, from_sid: int, to_sid: int) -> list:
-    """Relative data-file paths LOGICALLY ADDED in ``(from_sid, to_sid]`` —
-    the pandas planner of ``Table.changes`` (the same ``logical_adds``
-    rule per snapshot), usable with no SparkSession. ``from_sid == 0``
-    means "before the first snapshot": the walk starts at the oldest live
-    ancestor with an empty previous file set (streaming
-    ``startingOffsets=earliest``)."""
-    meta = table.metadata()
-    by_id = {s.snapshot_id: s for s in meta.snapshots}
-    chain: list = []
-    sid = to_sid
-    while sid != from_sid:
-        s = by_id.get(sid)
-        if s is None:
-            if from_sid == 0:
-                # earliest-mode on a table whose history was expired:
-                # the previously-appended snapshot is the chain root —
-                # expire_snapshots prunes meta.snapshots but leaves the
-                # oldest survivor's parent id dangling
-                break
-            raise KeyError(
-                f"snapshot {sid} expired — streaming consumers must keep up "
-                f"with the expiry retention window"
-            )
-        chain.append(s)
-        if s.parent_snapshot_id is None or (
-            from_sid == 0 and by_id.get(s.parent_snapshot_id) is None
-        ):
-            if from_sid != 0 and s.parent_snapshot_id is None:
-                raise KeyError(
-                    f"snapshot {from_sid} is not a live ancestor of {to_sid}"
-                )
-            break
-        sid = s.parent_snapshot_id
-    chain.reverse()
-    prev = (
-        set() if from_sid == 0 else set(table.manifest_pdf(from_sid)["path"])
-    )
-    out: list = []
-    for s in chain:
-        cur = set(table.manifest_pdf(s.snapshot_id)["path"])
-        # a delete emits nothing: Iceberg's streaming-skip-delete-snapshots
-        out += logical_adds(s, cur - prev)
-        prev = cur
-    return out
-
-
 # ---------------------------------------------------------------- readers
 
 
@@ -417,7 +373,7 @@ class MedallionBatchReader(DataSourceReader):
             return []
         _refuse_mor(table, sid, "the medallion batch reader")
         man = table.manifest_pdf(sid)
-        preds = transforms.extend_predicates(meta.partition_cols, self.preds)
+        preds = prune_predicates(meta, self.preds)
         rel = list(prune_manifest(man, preds, statable_cols(meta))["path"])
         return _slices(table, rel, meta, preds=self.preds)
 
@@ -460,7 +416,8 @@ class MedallionStreamReader(DataSourceStreamReader):
         if to_sid <= from_sid:
             return []
         table = Table.load(self.root)
-        rel = _added_rel_paths(table, from_sid, to_sid)
+        # offset 0 is earliest: the oldest live snapshot onward
+        rel = table.added_paths(from_sid or None, to_sid)
         return _slices(table, rel, table.metadata())
 
     def read(self, partition: _FileSlice) -> Iterator[pa.RecordBatch]:

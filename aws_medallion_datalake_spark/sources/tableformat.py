@@ -40,10 +40,11 @@ corrupt a committed snapshot (their orphan directories are swept by expiry
 GC).
 
 Scale note (10^12 rows ≈ 10^8 files): the manifest is itself columnar
-Parquet, so planning reads it as a (pandas or Spark) DataFrame; below
-``SPARK_MANIFEST_THRESHOLD`` entries we plan driver-side in pandas (fast,
-no job overhead), above it the same pruning predicate runs as a Spark job
-over the manifest — both paths share one predicate builder.
+Parquet. Each planning question has ONE pandas implementation
+(``prune_manifest``, ``Table.snapshot_diffs``, the clustering metric);
+``SPARK_MANIFEST_THRESHOLD`` decides only where it runs: on the driver
+below it, per Arrow batch (``filter_batches``) or per group
+(``map_groups``) of the manifest relation on executors above it.
 """
 
 from __future__ import annotations
@@ -56,6 +57,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import lru_cache
 from typing import Iterable, Optional, Sequence
 
 import pandas as pd
@@ -1855,13 +1857,13 @@ class Table:
         # transform-space predicates derived from source-column predicates
         # (sound by construction); ROW-level filtering below re-applies
         # only the originals
-        prune_preds = transforms.extend_predicates(meta.partition_cols, preds)
+        prune_preds = prune_predicates(meta, preds)
         statable = statable_cols(meta)
-        # planner path picked by manifest size WITHOUT materializing it: the
-        # parquet footer gives the row count. Below the threshold pandas
-        # plans driver-side (no job overhead); above it the same pruning
-        # predicate runs as a Spark job over the manifest parquet and
-        # only surviving paths come back to the driver.
+        # where prune_manifest runs is picked by manifest size WITHOUT
+        # materializing it: the parquet footer gives the row count. Below
+        # the threshold it runs driver-side (no job overhead); above it
+        # per batch of the manifest relation, and only surviving paths
+        # come back to the driver.
         s = self.snapshot(snapshot_id)
 
         def _empty():
@@ -1872,9 +1874,9 @@ class Table:
         if n_entries == 0:
             return _empty()
         if n_entries > SPARK_MANIFEST_THRESHOLD:
-            rel_paths = prune_manifest_spark(
-                self.manifest_df(spark, s.snapshot_id), prune_preds, statable
-            )
+            man = self.manifest_df(spark, s.snapshot_id)
+            kept = prune_manifest_spark(man, prune_preds, statable).select("path")
+            rel_paths = [r[0] for r in kept.collect()]
         else:
             man = self.manifest_pdf(snapshot_id)
             rel_paths = list(prune_manifest(man, prune_preds, statable)["path"])
@@ -2034,59 +2036,114 @@ class Table:
         reads ``changes(last, current)`` sees every appended/upserted row
         exactly once.
         """
-        chain = self._ancestry_chain(from_snapshot_id, to_snapshot_id)
-        meta = self.metadata()
-        # planner path, like scan(): driver-side python sets are O(manifest)
-        # memory per snapshot; above the threshold the added-file diff runs
-        # as a Spark anti-join per chain link and only the ADDED paths (the
-        # actual incremental payload, retention-bounded) reach the driver
-        use_spark = self.manifest_rows(from_snapshot_id) > SPARK_MANIFEST_THRESHOLD
-        new_paths: list = []
-        if use_spark:
-            prev_man = self.manifest_df(spark, from_snapshot_id).select("path")
-            for s in chain:
-                cur_man = self.manifest_df(spark, s.snapshot_id).select("path")
-                if s.operation in _ADDING_OPS:
-                    added_df = cur_man.join(prev_man, "path", "left_anti")
-                    new_paths += logical_adds(
-                        s, [r["path"] for r in added_df.collect()]
-                    )
-                prev_man = cur_man
+        paths = [
+            os.path.join(self.root, p)
+            for p in self.added_paths(from_snapshot_id, to_snapshot_id, spark)
+        ]
+        if paths:
+            df = self.read_data(spark, paths)
         else:
-            prev_paths = set(self.manifest_pdf(from_snapshot_id)["path"])
-            for s in chain:
-                cur_paths = set(self.manifest_pdf(s.snapshot_id)["path"])
-                new_paths += logical_adds(s, cur_paths - prev_paths)
-                prev_paths = cur_paths
-        if not new_paths:
-            e = self.empty_relation(spark, meta.schema_ddl)
-            return e.select(*columns) if columns else e
-        df = self.read_data(
-            spark, [os.path.join(self.root, p) for p in new_paths]
-        )
-        if columns:
-            df = df.select(*columns)
-        return df
+            df = self.empty_relation(spark, self.metadata().schema_ddl)
+        return df.select(*columns) if columns else df
 
-    def _ancestry_chain(self, from_snapshot_id: int, to_snapshot_id: Optional[int]):
+    def added_paths(
+        self,
+        from_snapshot_id: Optional[int],
+        to_snapshot_id: Optional[int] = None,
+        spark: Optional[SparkSession] = None,
+    ) -> list:
+        """The files holding the rows LOGICALLY ADDED in ``(from, to]``
+        (``logical_adds`` per link of :meth:`snapshot_diffs`): what
+        ``changes`` reads and the ``medallion`` stream plans."""
+        return [
+            p
+            for s, added, _ in self.snapshot_diffs(
+                from_snapshot_id, to_snapshot_id, spark, _ADDING_OPS
+            )
+            for p in logical_adds(s, added)
+        ]
+
+    def snapshot_diffs(
+        self,
+        from_snapshot_id: Optional[int],
+        to_snapshot_id: Optional[int],
+        spark: Optional[SparkSession],
+        ops: Sequence[str],
+    ) -> list:
+        """``[(snapshot, added, removed)]`` per published snapshot in
+        ``(from, to]``, oldest first: the sorted paths new to its manifest
+        and gone from it, against its parent's. Links whose operation is
+        not in ``ops`` get empty lists. ``from_snapshot_id`` None starts
+        from an empty table before the oldest live ancestor (a stream's
+        ``startingOffsets=earliest``). Each diff is ``_one_sided`` on the
+        driver, or with ``spark`` above ``SPARK_MANIFEST_THRESHOLD`` per
+        path-hash group on executors: only touched paths reach the driver."""
+        chain = self._ancestry_chain(from_snapshot_id, to_snapshot_id)
+        big = (
+            bool(chain)
+            and spark is not None
+            and self.manifest_rows(chain[-1].snapshot_id) > SPARK_MANIFEST_THRESHOLD
+        )
+        # a link's child manifest is the next link's parent: read it once
+        pdf_paths = lru_cache(maxsize=2)(
+            lambda sid: list(self.manifest_pdf(sid)["path"])
+        )
+
+        def side(sid, k: int):  # a manifest's paths as side k, hash-grouped
+            if not big:
+                rel = pdf_paths(sid) if sid is not None else []
+                return pd.DataFrame({"path": rel, "side": k, "__g": 0})
+            df = (
+                self.manifest_df(spark, sid).select("path")
+                if sid is not None
+                else spark.createDataFrame([], "path string")
+            )
+            n = spark.conf.get("spark.sql.shuffle.partitions")
+            group = f"pmod(xxhash64(path), {n}) AS __g"
+            return df.selectExpr("path", f"{k}L AS side", group)
+
+        out = []
+        prev = from_snapshot_id
+        for s in chain:
+            added = removed = []
+            if s.operation in ops:
+                a, b = side(prev, 0), side(s.snapshot_id, 1)
+                both = a.unionByName(b) if big else pd.concat([a, b], ignore_index=True)
+                ddl = "path string, side bigint"
+                diff = map_groups(both, _one_sided, ddl, "__g", ["path", "side"])
+                added = sorted(diff.loc[diff["side"] == 1, "path"])
+                removed = sorted(diff.loc[diff["side"] == 0, "path"])
+            out.append((s, added, removed))
+            prev = s.snapshot_id
+        return out
+
+    def _ancestry_chain(
+        self, from_snapshot_id: Optional[int], to_snapshot_id: Optional[int]
+    ):
         """Published-snapshot chain (exclusive of ``from``, inclusive of
         ``to``), oldest first. Ancestry walk (parent pointers), not an
         id-range scan: staged WAP snapshots and rollback branches put
         off-chain ids inside [from, to] — those carry no published rows
         and must be skipped, while a genuinely pruned ancestor must
-        still fail loudly."""
+        still fail loudly. ``from_snapshot_id`` None walks back to the
+        oldest live ancestor (expiry leaves its parent id dangling)."""
         meta = self.metadata()
         to_sid = (
             to_snapshot_id if to_snapshot_id is not None else meta.current_snapshot_id
         )
-        if to_sid is None or to_sid < from_snapshot_id:
+        earliest = from_snapshot_id is None
+        if to_sid is None or (not earliest and to_sid < from_snapshot_id):
+            if earliest:
+                return []
             raise ValueError(f"bad snapshot range [{from_snapshot_id}, {to_sid}]")
         by_id = {s.snapshot_id: s for s in meta.snapshots}
         chain: list = []
         sid = to_sid
         while sid != from_snapshot_id:
             s = by_id.get(sid)
-            if s is None or s.parent_snapshot_id is None:
+            if s is None and earliest:
+                break
+            if s is None or (s.parent_snapshot_id is None and not earliest):
                 raise KeyError(
                     f"snapshot {from_snapshot_id} is not a live ancestor of "
                     f"{to_sid}: an intermediate snapshot expired (incremental "
@@ -2096,6 +2153,8 @@ class Table:
             chain.append(s)
             sid = s.parent_snapshot_id
         chain.reverse()
+        if earliest:
+            return chain
         try:
             self.snapshot(from_snapshot_id)
         except KeyError as e:
@@ -2154,7 +2213,6 @@ class Table:
         which is what makes the removed side readable — the same
         retention window ``changes()`` already requires of consumers.
         """
-        chain = self._ancestry_chain(from_snapshot_id, to_snapshot_id)
         schema = self._schema(spark)
         cols = [f.name for f in schema.fields]
 
@@ -2211,47 +2269,16 @@ class Table:
                 _tag(dels.join(ik, kc, "left_semi"), "update_preimage", s),
             ]
 
+        # physical-only links (replace/expire) skip the file diff entirely
+        diffs = self.snapshot_diffs(
+            from_snapshot_id,
+            to_snapshot_id,
+            spark,
+            ("append", "merge", "delete", "update", "overwrite"),
+        )
         parts = []
         prev = self.snapshot(from_snapshot_id)
-        # planner path, like scan()/changes(): below the manifest threshold
-        # the per-link file diff is a driver-side set difference; above it
-        # the diff runs as Spark anti-joins and only the TOUCHED paths (the
-        # commit's actual footprint, never the table) reach the driver.
-        # Physical-only links (replace/expire) skip the diff entirely.
-        use_spark = self.manifest_rows(from_snapshot_id) > SPARK_MANIFEST_THRESHOLD
-        prev_paths = (
-            None if use_spark else set(self.manifest_pdf(from_snapshot_id)["path"])
-        )
-        prev_man = (
-            self.manifest_df(spark, from_snapshot_id).select("path")
-            if use_spark
-            else None
-        )
-        for s in chain:
-            logical = s.operation in (
-                "append", "merge", "delete", "update", "overwrite"
-            )
-            if use_spark:
-                cur_man = self.manifest_df(spark, s.snapshot_id).select("path")
-                added = removed = []
-                if logical:
-                    added = sorted(
-                        r["path"]
-                        for r in cur_man.join(prev_man, "path", "left_anti").collect()
-                    )
-                    if s.operation != "append":
-                        removed = sorted(
-                            r["path"]
-                            for r in prev_man.join(
-                                cur_man, "path", "left_anti"
-                            ).collect()
-                        )
-                prev_man = cur_man
-            else:
-                cur_paths = set(self.manifest_pdf(s.snapshot_id)["path"])
-                added = sorted(cur_paths - prev_paths) if logical else []
-                removed = sorted(prev_paths - cur_paths) if logical else []
-                prev_paths = cur_paths
+        for s, added, removed in diffs:
             ins_side = None
             dels_side = None
             if s.operation == "append":
@@ -2313,7 +2340,7 @@ class Table:
             return _tag(
                 self.empty_relation(spark, schema),
                 "insert",
-                chain[-1] if chain else self.snapshot(from_snapshot_id),
+                diffs[-1][0] if diffs else self.snapshot(from_snapshot_id),
             ).limit(0)
         out = parts[0]
         for p in parts[1:]:
@@ -2671,6 +2698,21 @@ def _tuple_json(fields: list, values: list) -> str:
     return "{" + ", ".join(json.dumps(f) + ": " + json.dumps(v) for f, v in pairs) + "}"
 
 
+def pure_tuples(files: pd.DataFrame, fields: list) -> pd.Series:
+    """Each manifest row's partition tuple in ``tuple_census``'s ``tuple``
+    form, or None for a file that mixes tuples (a ``__mixed__`` field, or
+    a field missing: written under another spec)."""
+
+    def pure_key(pj: str) -> Optional[str]:
+        d = json.loads(pj)
+        if any(d.get(f, "__mixed__") == "__mixed__" for f in fields):
+            return None
+        return TUPLE_SEP.join(TUPLE_NULL if d[f] is None else str(d[f]) for f in fields)
+
+    pjs = files["partition_json"]
+    return pjs.map({pj: pure_key(pj) for pj in pjs.unique()})
+
+
 def tuple_census(
     table: "Table", spark: SparkSession, files: pd.DataFrame
 ) -> pd.DataFrame:
@@ -2698,15 +2740,7 @@ def tuple_census(
     cols = ["path", "partition_json", "record_count", "file_size_bytes"]
     spec = table.metadata().partition_cols
     fields = transforms.field_names(spec)
-
-    def pure_key(pj: str) -> Optional[str]:
-        d = json.loads(pj)
-        if any(d.get(f, "__mixed__") == "__mixed__" for f in fields):
-            return None
-        return TUPLE_SEP.join(TUPLE_NULL if d[f] is None else str(d[f]) for f in fields)
-
-    pjs = files["partition_json"]
-    keys = pjs.map({pj: pure_key(pj) for pj in pjs.unique()})
+    keys = pure_tuples(files, fields)
     pure = files.loc[keys.notna(), cols].assign(tuple=keys[keys.notna()], slice=None)
     mixed = files.loc[keys.isna(), cols]
     if not len(mixed):
@@ -2890,6 +2924,13 @@ class FileSwap:
 _ADDING_OPS = ("append", "overwrite", "merge", "update")
 
 
+def _one_sided(paths: pd.DataFrame) -> pd.DataFrame:
+    """The rows of ``paths`` (``path``; ``side`` 0 for a parent manifest,
+    1 for its child) whose path is on one side only: added (1) or
+    removed (0) files. A manifest lists a path once."""
+    return paths.loc[~paths["path"].duplicated(keep=False), ["path", "side"]]
+
+
 def logical_adds(s: Snapshot, added) -> list:
     """The files among ``added`` (paths new to snapshot ``s``'s manifest)
     that hold logically new rows, sorted: the one incremental-read rule
@@ -3058,74 +3099,37 @@ def statable_cols(meta) -> list:
     return [c for c in cols if c not in dfl]
 
 
-def prune_manifest_spark(man_df: DataFrame, preds, stats_cols) -> list:
-    """File-level min/max pruning as a Spark job over the manifest
-    parquet (the ≥ SPARK_MANIFEST_THRESHOLD planner path — at 10^8 files
-    the manifest itself is big data). Same soundness rules as
-    :func:`prune_manifest`; returns the surviving relative paths."""
-    cond = manifest_prune_cond(set(man_df.columns), preds, stats_cols)
-    return [r[0] for r in man_df.filter(cond).select("path").collect()]
+def typed_predicates(meta, preds) -> list:
+    """``preds`` with each literal in the type of its column's stats: an
+    ISO date string on a date column becomes a date
+    (``transforms.coerce_literals``). Row filters keep the originals."""
+    types = _ddl_arrow_types(meta.schema_ddl)
+    dates = {c for c, t in types.items() if pa.types.is_date(t)}
+    return transforms.coerce_literals(dates, preds)
 
 
-def manifest_prune_cond(cols: set, preds, stats_cols):
-    """The file-survival predicate over manifest stats columns as one
-    Catalyst Column — shared by the Spark pruning planner and the
-    predicate-scoped maintenance operators (``compact(predicates=…)``),
-    which filter the manifest RELATION with it instead of collecting
-    surviving paths to the driver."""
-    cond = F.lit(True)
-    cols = set(cols)
-    for col, op, value in preds:
-        if op in ("isnull", "notnull"):
-            # null-count stats: IS NULL keeps files with >= 1 null,
-            # IS NOT NULL keeps files with >= 1 non-null row
-            if col not in stats_cols or f"nulls_{col}" not in cols:
-                continue
-            nulls = F.col(f"nulls_{col}")
-            c = (
-                nulls > 0
-                if op == "isnull"
-                else nulls < F.col("record_count")
-            )
-            cond = cond & F.when(nulls.isNotNull(), c).otherwise(F.lit(True))
-            continue
-        if col not in stats_cols or f"min_{col}" not in cols:
-            continue
-        mn, mx = F.col(f"min_{col}"), F.col(f"max_{col}")
-        has = mn.isNotNull() & mx.isNotNull()
-        if op == ">=":
-            c = mx >= value
-        elif op == "<=":
-            c = mn <= value
-        elif op == "=":
-            c = (mn <= value) & (mx >= value)
-        elif op == "between":
-            lo, hi = value
-            c = (mx >= lo) & (mn <= hi)
-        elif op == "in":
-            # file survives iff ANY value falls inside its [min,max];
-            # equivalent to between(min(values), max(values)) only for
-            # contiguous sets, so test each value (bounded: an IN list is
-            # plan-sized, not data-sized)
-            vs = list(value)
-            c = F.lit(False)
-            for v in vs:
-                c = c | ((mn <= v) & (mx >= v))
-        else:
-            raise ValueError(f"unsupported predicate op {op!r}")
-        cond = cond & F.when(has, c).otherwise(F.lit(True))
-    return cond
+def prune_predicates(meta, preds) -> list:
+    """What file pruning plans from: ``preds`` typed, plus every sound
+    transform-space derivation (``transforms.extend_predicates``)."""
+    return transforms.extend_predicates(
+        meta.partition_cols, typed_predicates(meta, preds)
+    )
 
 
 def prune_manifest(man: pd.DataFrame, preds, stats_cols) -> pd.DataFrame:
-    """File-level min/max pruning of a manifest (pandas planner path).
+    """File-level min/max pruning of a manifest: the one set of survival
+    rules, run on the driver, or per Arrow batch of the manifest relation
+    by :func:`prune_manifest_spark`.
 
     A file survives only if every predicate's range intersects the file's
     [min,max] for that column. Null-only files (min/max NaN) are kept —
-    pruning must never be unsound.
+    pruning must never be unsound — and a predicate whose literal the
+    stats cannot be compared with prunes nothing.
     """
     mask = pd.Series(True, index=man.index)
     for col, op, value in preds:
+        if op not in (">=", "<=", "=", "between", "in", "isnull", "notnull"):
+            raise ValueError(f"unsupported predicate op {op!r}")
         if col not in stats_cols:
             continue  # no stats → cannot prune on this column
         if op in ("isnull", "notnull"):
@@ -3150,24 +3154,81 @@ def prune_manifest(man: pd.DataFrame, preds, stats_cols) -> pd.DataFrame:
         # raise on NaN comparisons, and stat-less rows must be kept anyway
         cond = pd.Series(True, index=man.index)
         m, x = mn[has], mx[has]
-        if op == ">=":
-            cond.loc[has] = x >= value
-        elif op == "<=":
-            cond.loc[has] = m <= value
-        elif op == "=":
-            cond.loc[has] = (m <= value) & (x >= value)
-        elif op == "between":
-            lo, hi = value
-            cond.loc[has] = (x >= lo) & (m <= hi)
-        elif op == "in":
-            acc = pd.Series(False, index=m.index)
-            for v in value:
-                acc |= (m <= v) & (x >= v)
-            cond.loc[has] = acc
-        else:
-            raise ValueError(f"unsupported predicate op {op!r}")
+        try:
+            if op == ">=":
+                cond.loc[has] = x >= value
+            elif op == "<=":
+                cond.loc[has] = m <= value
+            elif op == "=":
+                cond.loc[has] = (m <= value) & (x >= value)
+            elif op == "between":
+                lo, hi = value
+                cond.loc[has] = (x >= lo) & (m <= hi)
+            else:  # in
+                acc = pd.Series(False, index=m.index)
+                for v in value:
+                    acc |= (m <= v) & (x >= v)
+                cond.loc[has] = acc
+        except (TypeError, ValueError):
+            continue  # an incomparable literal proves nothing
         mask &= cond
     return man[mask]
+
+
+def prune_manifest_spark(man_df: DataFrame, preds, stats_cols) -> DataFrame:
+    """The rows of ``man_df``, the manifest relation, that survive
+    :func:`prune_manifest`, run per Arrow batch: the ≥
+    SPARK_MANIFEST_THRESHOLD path, where the manifest is big data."""
+    stats = {f"{k}_{c}" for c, _, _ in preds for k in ("min", "max", "nulls")}
+    cols = [c for c in man_df.columns if c in stats or c == "record_count"]
+    return filter_batches(
+        man_df, lambda man: prune_manifest(man, preds, stats_cols), cols
+    )
+
+
+def filter_batches(df: DataFrame, select, cols: list) -> DataFrame:
+    """The rows of ``df`` that ``select`` (a pandas frame of the ``cols``
+    it reads → the sub-frame to keep) keeps, per Arrow batch on
+    executors. Batches are gathered to at least 2^16 rows, and convert
+    through ``_arrow_pandas``: ``mapInPandas`` would make a nullable
+    BIGINT float64 and round phash stats past 2^53."""
+
+    def keep(chunk: list):
+        tbl = pa.Table.from_batches(chunk)
+        pdf = _arrow_pandas(tbl.select(cols))
+        return tbl.filter(pa.array(pdf.index.isin(select(pdf).index))).to_batches()
+
+    def run(batches):
+        chunk, rows = [], 0
+        for b in batches:
+            chunk.append(b)
+            rows += b.num_rows
+            if rows >= 1 << 16:
+                yield from keep(chunk)
+                chunk, rows = [], 0
+        if chunk:
+            yield from keep(chunk)
+
+    return df.mapInArrow(run, df.schema)
+
+
+def map_groups(man, fn, ddl: str, by: str, cols: list) -> pd.DataFrame:
+    """``fn`` (a pandas frame of the ``cols`` it reads → a frame of the
+    ``ddl`` columns) over each ``by`` group of ``man``, concatenated: on
+    the driver when ``man`` is pandas, else per group on executors
+    (``applyInArrow``, converted as in :func:`filter_batches`)."""
+    if isinstance(man, pd.DataFrame):
+        man = man[[by, *cols]]
+        parts = [fn(g) for _, g in man.groupby(by, sort=False)] or [fn(man)]
+        return pd.concat(parts, ignore_index=True)
+    schema = pa.schema(list(_ddl_arrow_types(ddl).items()))
+
+    def run(atbl: pa.Table) -> pa.Table:
+        out = fn(_arrow_pandas(atbl))
+        return pa.Table.from_pandas(out, schema=schema, preserve_index=False)
+
+    grouped = man.select(by, *cols).groupBy(by)
+    return _arrow_pandas(grouped.applyInArrow(run, ddl).toArrow())
 
 
 # Iceberg v2 write-mode properties (write.delete.mode / write.update.mode /

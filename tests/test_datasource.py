@@ -13,7 +13,6 @@ from aws_medallion_datalake_spark.sources.datasource import (
     MedallionBatchReader,
     MedallionStreamReader,
     MedallionStreamWriter,
-    _added_rel_paths,
     _arrow_schema_from_ddl,
     _filters_to_preds,
     _task_write,
@@ -198,7 +197,7 @@ def test_added_rel_paths_semantics(tmp_path, spark):
     s0 = t.snapshot().snapshot_id
     t.append(generate_images(spark, 10, n_files=1, start=3000))
     s1 = t.snapshot().snapshot_id
-    added = _added_rel_paths(t, s0, s1)
+    added = t.added_paths(s0, s1)
     assert len(added) >= 1
     got = _ids(t.read_data(spark, [os.path.join(t.root, p) for p in added]))
     ref = _ids(t.changes(spark, s0, s1))
@@ -206,13 +205,13 @@ def test_added_rel_paths_semantics(tmp_path, spark):
     # a pure compaction emits nothing
     compact(t, spark, target_file_size_bytes=1 << 30)
     s2 = t.snapshot().snapshot_id
-    assert s2 > s1 and _added_rel_paths(t, s1, s2) == []
+    assert s2 > s1 and t.added_paths(s1, s2) == []
     # earliest (sid 0) covers the full history exactly once
-    assert len(_added_rel_paths(t, 0, s2)) > 0
+    assert len(t.added_paths(None, s2)) > 0
     assert _ids(
         t.read_data(
             spark,
-            [os.path.join(t.root, p) for p in _added_rel_paths(t, 0, s2)],
+            [os.path.join(t.root, p) for p in t.added_paths(None, s2)],
         )
     ) == _ids(t.scan(spark))
 
@@ -234,7 +233,7 @@ def test_earliest_stream_after_expiry(tmp_path, spark):
     oldest = min(s.snapshot_id for s in meta.snapshots)
     assert t.snapshot(oldest).parent_snapshot_id is not None  # dangling
     cur = t.snapshot().snapshot_id
-    paths = _added_rel_paths(t, 0, cur)
+    paths = t.added_paths(None, cur)
     got = _ids(t.read_data(spark, [os.path.join(t.root, p) for p in paths]))
     assert got == _ids(t.scan(spark))
 

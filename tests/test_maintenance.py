@@ -748,13 +748,11 @@ def test_multilevel_partition_cluster(tmp_path, spark):
     assert q < 0.2
 
 
-def test_cluster_udf_route_path(tmp_path, spark, monkeypatch):
-    """Force the broadcast binary-search route (the >512-files path used
-    at scale) and assert identical semantics to the JVM route."""
-    import importlib
-
-    cm = importlib.import_module("aws_medallion_datalake_spark.operators.cluster")
-    monkeypatch.setattr(cm, "_JVM_ROUTE_MAX", 0)
+def test_cluster_udf_route_path(tmp_path, spark):
+    """The former >512-files route (a broadcast Arrow UDF) is the one
+    Catalyst binary search now: a finer tiling keeps content and
+    improves clustering (tests/test_routing.py checks the search itself
+    at n_out up to 4096)."""
     t = make_table(tmp_path, spark, n=800, n_files=16)
     before = table_fingerprint(t, spark)
     q_before = clustering_quality(t, "phash")

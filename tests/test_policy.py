@@ -1,11 +1,12 @@
 """Metadata-driven maintenance policy (operators/policy.py): health
 metrics from the manifest only, plan ordering invariants, auto mode in
-run_maintenance, and the big-manifest Spark aggregation path."""
+run_maintenance, and the same metrics run per partition group on
+executors above the manifest threshold."""
 
 import pytest
 
 from aws_medallion_datalake_spark.operators import policy
-from aws_medallion_datalake_spark.operators.cluster import cluster
+from aws_medallion_datalake_spark.operators.cluster import cluster, clustering_quality
 from aws_medallion_datalake_spark.operators.compact import compact
 from aws_medallion_datalake_spark.operators.delete import delete_where
 from aws_medallion_datalake_spark.operators.run import run_maintenance
@@ -23,7 +24,7 @@ def test_health_counts_fragmentation(spark, fragmented):
     h = policy.table_health(fragmented, target_file_size_bytes=TARGET)
     assert h["n_files"] == 16
     assert h["small_file_ratio"] > 0.5  # most files below 512 KiB
-    assert h["cluster_metric_kind"] == "overlap"
+    assert h["cluster_metric"] == clustering_quality(fragmented, h["cluster_col"])
     assert h["total_bytes"] > 0
 
 
@@ -82,9 +83,11 @@ def test_health_spark_path_matches_pandas(spark, fragmented, monkeypatch):
     h_pd = policy.table_health(fragmented, target_file_size_bytes=TARGET)
     monkeypatch.setattr(policy, "SPARK_MANIFEST_THRESHOLD", 0)
     h_sp = policy.table_health(fragmented, spark, target_file_size_bytes=TARGET)
-    for k in ("n_files", "total_bytes", "small_file_count", "small_file_ratio"):
+    for k in (
+        "n_files", "total_bytes", "small_file_count", "small_file_ratio",
+        "cluster_metric",
+    ):
         assert h_sp[k] == h_pd[k], k
-    assert h_sp["cluster_metric_kind"] == "range_width"
     assert 0.0 <= h_sp["cluster_metric"] <= 1.0
 
 

@@ -83,37 +83,40 @@ def test_driver_murmur3_matches_spark_hash(spark):
 
 
 def test_route_jvm_matches_searchsorted(spark):
-    """The Catalyst aggregate-rank router must agree with the Arrow
-    UDF's np.searchsorted(side='left') on every edge: below the first
-    bound, exactly on a bound, duplicated bounds, above the last."""
+    """The one route expression (a Catalyst binary search) agrees with
+    np.searchsorted(side='left') on every edge: below the first bound,
+    exactly on a bound, duplicated bounds, between and above the last,
+    at every n_out a tile can plan (max_files_per_job is 4096)."""
     import numpy as np
 
-    from aws_medallion_datalake_spark.operators.cluster import _route_jvm
+    from aws_medallion_datalake_spark.operators.cluster import _route_expr
 
-    bounds = np.sort(np.array([10, 20, 20, 57, 99], dtype=np.int64))
-    salts = exact_route_salts(len(bounds) + 1)
-    keys = [-5, 10, 15, 20, 21, 57, 98, 99, 1000]
-    df = spark.createDataFrame(pd.DataFrame({"ck": keys}))
-    out = (
-        df.withColumn("r", _route_jvm(F.col("ck").cast("long"), bounds, salts))
-        .toPandas()
-        .sort_values("ck")
-    )
-    exp = [
-        int(salts[i])
-        for i in np.searchsorted(bounds, np.array(sorted(keys)), side="left")
-    ]
-    assert list(out["r"]) == exp
+    for n_out in (2, 64, 512, 513, 4096):
+        rng = np.random.default_rng(n_out)
+        bounds = np.sort(rng.integers(-(1 << 62), 1 << 62, n_out - 1))
+        if n_out > 2:
+            bounds[1] = bounds[0]  # a duplicated bound
+        salts = exact_route_salts(n_out)
+        keys = np.concatenate(
+            [bounds, bounds - 1, bounds + 1, [bounds[0] - 5, bounds[-1] + 5]]
+        )
+        keys = np.concatenate([keys, rng.integers(-(1 << 63), (1 << 63) - 1, 2000)])
+        df = spark.createDataFrame(pd.DataFrame({"ck": keys.astype(np.int64)}))
+        out = df.withColumn("r", _route_expr("ck", bounds, salts)).toPandas()
+        exp = salts[np.searchsorted(bounds, out["ck"].to_numpy(), side="left")]
+        assert (out["r"].to_numpy() == exp).all(), n_out
 
 
 def test_route_literal_arrays_keep_their_types(spark):
     """The router's literal arrays come from one SQL parse: bounds stay
     BIGINT and salts INT, down to each type's extremes."""
-    from aws_medallion_datalake_spark.operators.cluster import _int_array
+    from aws_medallion_datalake_spark.operators.cluster import _array_sql
 
     bounds = [-(1 << 63), -5, 0, (1 << 63) - 1]
     salts = [-(1 << 31), -1, 7, (1 << 31) - 1]
-    df = spark.range(1).select(_int_array(bounds, "L").alias("b"), _int_array(salts).alias("s"))
+    df = spark.range(1).select(
+        F.expr(_array_sql(bounds, "L")).alias("b"), F.expr(_array_sql(salts)).alias("s")
+    )
     assert df.schema.simpleString() == "struct<b:array<bigint>,s:array<int>>"
     (row,) = df.collect()
     assert (row["b"], row["s"]) == (bounds, salts)
