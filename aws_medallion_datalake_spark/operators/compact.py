@@ -52,7 +52,6 @@ from ..sources.tableformat import (
     Snapshot,
     Table,
     check_rows_kept,
-    filter_batches,
     join_pieces,
     prune_manifest,
     prune_manifest_spark,
@@ -125,9 +124,10 @@ def _sliced(table: Table, spark: SparkSession, man):
     carrying the file's other columns and the tuple as ``slice``.
 
     ``man`` is pandas, or above ``SPARK_MANIFEST_THRESHOLD`` the manifest
-    relation: then ``pure_tuples`` picks the mixed files per Arrow batch,
-    only their rows reach the driver, and their census rows are joined
-    back in."""
+    relation: then ``pure_tuples`` runs on the driver over its distinct
+    ``partition_json`` values (one per tuple, plus one per mixed shape),
+    only the mixed files' rows reach the driver, and their census rows
+    are joined back in."""
     from pyspark.sql import functions as F
 
     base = ["partition_json", "record_count", "file_size_bytes"]
@@ -135,10 +135,14 @@ def _sliced(table: Table, spark: SparkSession, man):
         census = tuple_census(table, spark, man).drop(columns="tuple")
         return man.drop(columns=base).merge(census, on="path")
     fields = transforms.field_names(table.metadata().partition_cols)
-    mixed = filter_batches(
-        man, lambda m: m[pure_tuples(m, fields).isna()], ["partition_json"]
+    pjs = man.select("partition_json").distinct().toPandas()
+    mixed_pjs = list(pjs["partition_json"][pure_tuples(pjs, fields).isna()])
+    mixed = local_frame(spark, {"partition_json": mixed_pjs}, "partition_json string")
+    rows = (
+        man.join(F.broadcast(mixed), "partition_json", "left_semi")
+        .select("path", *base)
+        .toPandas()
     )
-    rows = mixed.select("path", *base).toPandas()
     census = tuple_census(table, spark, rows)
     sl = local_frame(
         spark,
@@ -238,15 +242,20 @@ def compact(
         if n_entries > SPARK_MANIFEST_THRESHOLD:
             # distributed planning: the FFD loop runs per-partition on
             # executors; the driver gets one row per GROUP, not per file.
-            # Predicate scoping prunes the manifest RELATION per batch —
-            # surviving paths never land on the driver.
+            # Predicate scoping prunes the manifest per row group on
+            # executors — surviving paths never land on the driver — and
+            # once: the planner reads the scoped relation more than once.
             man_scope = table.manifest_df(spark, swap.base)
-            prune, planner = prune_manifest_spark, plan_compaction_spark
+            planner = plan_compaction_spark
+            if prune_preds:
+                kept = prune_manifest_spark(
+                    spark, table.manifest_abs_paths(swap.base), prune_preds, statable
+                )
+                man_scope = man_scope.join(kept, "path", "left_semi").localCheckpoint()
         else:
-            man_scope = swap.man
-            prune, planner = prune_manifest, plan_compaction
-        if prune_preds:
-            man_scope = prune(man_scope, prune_preds, statable)
+            man_scope, planner = swap.man, plan_compaction
+            if prune_preds:
+                man_scope = prune_manifest(man_scope, prune_preds, statable)
         plan: CompactionPlan = planner(
             _sliced(table, spark, man_scope),
             target_file_size_bytes,

@@ -43,8 +43,9 @@ Scale note (10^12 rows ≈ 10^8 files): the manifest is itself columnar
 Parquet. Each planning question has ONE pandas implementation
 (``prune_manifest``, ``Table.snapshot_diffs``, the clustering metric);
 ``SPARK_MANIFEST_THRESHOLD`` decides only where it runs: on the driver
-below it, per Arrow batch (``filter_batches``) or per group
-(``map_groups``) of the manifest relation on executors above it.
+below it, on executors above it, per manifest row group
+(``prune_manifest_spark``) or per group of the manifest relation
+(``map_groups``).
 """
 
 from __future__ import annotations
@@ -57,7 +58,6 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import lru_cache
 from typing import Iterable, Optional, Sequence
 
 import pandas as pd
@@ -1874,8 +1874,8 @@ class Table:
         if n_entries == 0:
             return _empty()
         if n_entries > SPARK_MANIFEST_THRESHOLD:
-            man = self.manifest_df(spark, s.snapshot_id)
-            kept = prune_manifest_spark(man, prune_preds, statable).select("path")
+            manifests = self.manifest_abs_paths(s.snapshot_id)
+            kept = prune_manifest_spark(spark, manifests, prune_preds, statable)
             rel_paths = [r[0] for r in kept.collect()]
         else:
             man = self.manifest_pdf(snapshot_id)
@@ -2075,46 +2075,52 @@ class Table:
         and gone from it, against its parent's. Links whose operation is
         not in ``ops`` get empty lists. ``from_snapshot_id`` None starts
         from an empty table before the oldest live ancestor (a stream's
-        ``startingOffsets=earliest``). Each diff is ``_one_sided`` on the
-        driver, or with ``spark`` above ``SPARK_MANIFEST_THRESHOLD`` per
-        path-hash group on executors: only touched paths reach the driver."""
-        chain = self._ancestry_chain(from_snapshot_id, to_snapshot_id)
-        big = (
-            bool(chain)
-            and spark is not None
-            and self.manifest_rows(chain[-1].snapshot_id) > SPARK_MANIFEST_THRESHOLD
-        )
-        # a link's child manifest is the next link's parent: read it once
-        pdf_paths = lru_cache(maxsize=2)(
-            lambda sid: list(self.manifest_pdf(sid)["path"])
-        )
+        ``startingOffsets=earliest``).
 
-        def side(sid, k: int):  # a manifest's paths as side k, hash-grouped
+        A manifest file both sides list cancels out (a snapshot lists a
+        path once), so a link reads only the manifest files one side
+        lacks: an append's diff reads its new manifest, not the table.
+        Each diff is ``_one_sided`` over those files' paths, on the
+        driver, or with ``spark`` above ``SPARK_MANIFEST_THRESHOLD`` of
+        them per path-hash group on executors: only touched paths reach
+        the driver."""
+        chain = self._ancestry_chain(from_snapshot_id, to_snapshot_id)
+
+        def side(files: set, k: int, big: bool):  # paths as side k, hash-grouped
+            paths = [os.path.join(self.root, p) for p in sorted(files)]
             if not big:
-                rel = pdf_paths(sid) if sid is not None else []
+                cols = [pq.read_table(p, columns=["path"])["path"] for p in paths]
+                rel = [r for c in cols for r in c.to_pylist()]
                 return pd.DataFrame({"path": rel, "side": k, "__g": 0})
-            df = (
-                self.manifest_df(spark, sid).select("path")
-                if sid is not None
-                else spark.createDataFrame([], "path string")
-            )
+            if not paths:
+                return spark.createDataFrame([], "path string, side bigint, __g bigint")
             n = spark.conf.get("spark.sql.shuffle.partitions")
             group = f"pmod(xxhash64(path), {n}) AS __g"
-            return df.selectExpr("path", f"{k}L AS side", group)
+            return spark.read.parquet(*paths).selectExpr("path", f"{k}L AS side", group)
 
         out = []
-        prev = from_snapshot_id
+        prev = (
+            set(self.snapshot(from_snapshot_id).manifest_paths)
+            if from_snapshot_id is not None
+            else set()
+        )
         for s in chain:
+            cur = set(s.manifest_paths)
             added = removed = []
             if s.operation in ops:
-                a, b = side(prev, 0), side(s.snapshot_id, 1)
+                rows = sum(
+                    pq.ParquetFile(os.path.join(self.root, p)).metadata.num_rows
+                    for p in prev ^ cur
+                )
+                big = spark is not None and rows > SPARK_MANIFEST_THRESHOLD
+                a, b = side(prev - cur, 0, big), side(cur - prev, 1, big)
                 both = a.unionByName(b) if big else pd.concat([a, b], ignore_index=True)
                 ddl = "path string, side bigint"
                 diff = map_groups(both, _one_sided, ddl, "__g", ["path", "side"])
                 added = sorted(diff.loc[diff["side"] == 1, "path"])
                 removed = sorted(diff.loc[diff["side"] == 0, "path"])
             out.append((s, added, removed))
-            prev = s.snapshot_id
+            prev = cur
         return out
 
     def _ancestry_chain(
@@ -2925,9 +2931,9 @@ _ADDING_OPS = ("append", "overwrite", "merge", "update")
 
 
 def _one_sided(paths: pd.DataFrame) -> pd.DataFrame:
-    """The rows of ``paths`` (``path``; ``side`` 0 for a parent manifest,
-    1 for its child) whose path is on one side only: added (1) or
-    removed (0) files. A manifest lists a path once."""
+    """The rows of ``paths`` (``path``; ``side`` 0 for a parent's
+    manifest files, 1 for its child's) whose path is on one side only:
+    added (1) or removed (0) files. A snapshot lists a path once."""
     return paths.loc[~paths["path"].duplicated(keep=False), ["path", "side"]]
 
 
@@ -3101,11 +3107,26 @@ def statable_cols(meta) -> list:
 
 def typed_predicates(meta, preds) -> list:
     """``preds`` with each literal in the type of its column's stats: an
-    ISO date string on a date column becomes a date
-    (``transforms.coerce_literals``). Row filters keep the originals."""
+    ISO date string on a date column reads as a date; any other string
+    stays as it is, and pruning proves nothing on it. Row filters keep
+    the originals."""
     types = _ddl_arrow_types(meta.schema_ddl)
     dates = {c for c, t in types.items() if pa.types.is_date(t)}
-    return transforms.coerce_literals(dates, preds)
+
+    def typed(v):
+        try:
+            return transforms._to_date(v) if isinstance(v, str) else v
+        except ValueError:
+            return v
+
+    def literal(col, op, value):
+        if col not in dates or op in ("isnull", "notnull"):
+            return value
+        if op in ("between", "in"):
+            return type(value)(map(typed, value))
+        return typed(value)
+
+    return [(col, op, literal(col, op, value)) for col, op, value in preds]
 
 
 def prune_predicates(meta, preds) -> list:
@@ -3175,48 +3196,49 @@ def prune_manifest(man: pd.DataFrame, preds, stats_cols) -> pd.DataFrame:
     return man[mask]
 
 
-def prune_manifest_spark(man_df: DataFrame, preds, stats_cols) -> DataFrame:
-    """The rows of ``man_df``, the manifest relation, that survive
-    :func:`prune_manifest`, run per Arrow batch: the ≥
-    SPARK_MANIFEST_THRESHOLD path, where the manifest is big data."""
+def prune_manifest_spark(
+    spark: SparkSession, manifests: list, preds, stats_cols
+) -> DataFrame:
+    """The paths (one ``path`` column) of the entries of the manifest
+    files ``manifests`` (absolute paths) that survive
+    :func:`prune_manifest`, run on executors: the >
+    SPARK_MANIFEST_THRESHOLD path, where the manifest is big data.
+
+    One unit per manifest row group: a task reads only ``path`` and the
+    columns the rules read with pyarrow, as the driver does, so no
+    manifest row crosses the JVM (moving a row to a Python worker costs
+    more than pruning it). A file that lacks a stats column (written
+    before the column had stats) prunes nothing on it."""
     stats = {f"{k}_{c}" for c, _, _ in preds for k in ("min", "max", "nulls")}
-    cols = [c for c in man_df.columns if c in stats or c == "record_count"]
-    return filter_batches(
-        man_df, lambda man: prune_manifest(man, preds, stats_cols), cols
-    )
-
-
-def filter_batches(df: DataFrame, select, cols: list) -> DataFrame:
-    """The rows of ``df`` that ``select`` (a pandas frame of the ``cols``
-    it reads → the sub-frame to keep) keeps, per Arrow batch on
-    executors. Batches are gathered to at least 2^16 rows, and convert
-    through ``_arrow_pandas``: ``mapInPandas`` would make a nullable
-    BIGINT float64 and round phash stats past 2^53."""
-
-    def keep(chunk: list):
-        tbl = pa.Table.from_batches(chunk)
-        pdf = _arrow_pandas(tbl.select(cols))
-        return tbl.filter(pa.array(pdf.index.isin(select(pdf).index))).to_batches()
+    units = [
+        (m, g) for m in manifests for g in range(pq.ParquetFile(m).num_row_groups)
+    ]
 
     def run(batches):
-        chunk, rows = [], 0
         for b in batches:
-            chunk.append(b)
-            rows += b.num_rows
-            if rows >= 1 << 16:
-                yield from keep(chunk)
-                chunk, rows = [], 0
-        if chunk:
-            yield from keep(chunk)
+            for m, g in zip(b["manifest"].to_pylist(), b["row_group"].to_pylist()):
+                f = pq.ParquetFile(m)
+                names = f.schema_arrow.names
+                cols = [c for c in names if c in stats or c == "record_count"]
+                tbl = f.read_row_group(g, columns=["path", *cols])
+                man = _arrow_pandas(tbl.select(cols))
+                kept = man.index.isin(prune_manifest(man, preds, stats_cols).index)
+                yield from tbl.select(["path"]).filter(pa.array(kept)).to_batches()
 
-    return df.mapInArrow(run, df.schema)
+    return local_frame(
+        spark,
+        {"manifest": [m for m, _ in units], "row_group": [g for _, g in units]},
+        "manifest string, row_group int",
+    ).mapInArrow(run, "path string")
 
 
 def map_groups(man, fn, ddl: str, by: str, cols: list) -> pd.DataFrame:
     """``fn`` (a pandas frame of the ``cols`` it reads → a frame of the
     ``ddl`` columns) over each ``by`` group of ``man``, concatenated: on
     the driver when ``man`` is pandas, else per group on executors
-    (``applyInArrow``, converted as in :func:`filter_batches`)."""
+    (``applyInArrow``). Arrow converts through ``_arrow_pandas``:
+    ``applyInPandas`` would make a nullable BIGINT float64 and round
+    phash stats past 2^53."""
     if isinstance(man, pd.DataFrame):
         man = man[[by, *cols]]
         parts = [fn(g) for _, g in man.groupby(by, sort=False)] or [fn(man)]

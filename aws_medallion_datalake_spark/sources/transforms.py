@@ -218,27 +218,6 @@ def extend_predicates(entries: Iterable[str], preds: Iterable[tuple]) -> list:
     return out
 
 
-def coerce_literals(date_cols, preds: Iterable[tuple]) -> list:
-    """``preds`` with every ISO date string on a column of ``date_cols``
-    read as a date (``_to_date``), the type of that column's stats; any
-    other string stays as it is, and pruning proves nothing on it."""
-
-    def typed(v):
-        try:
-            return _to_date(v) if isinstance(v, str) else v
-        except ValueError:
-            return v
-
-    def literal(col, op, value):
-        if col not in date_cols or op in ("isnull", "notnull"):
-            return value
-        if op in ("between", "in"):
-            return type(value)(map(typed, value))
-        return typed(value)
-
-    return [(col, op, literal(col, op, value)) for col, op, value in preds]
-
-
 # ------------------------------------------------------------ write order
 
 ORDER_PROP = "sort.order"

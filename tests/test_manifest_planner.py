@@ -18,6 +18,7 @@ from aws_medallion_datalake_spark.operators.cluster import (
     clustering_quality,
     overlap_pairs,
 )
+from aws_medallion_datalake_spark.operators.compact import compact
 from aws_medallion_datalake_spark.operators.delete import delete_where
 from aws_medallion_datalake_spark.operators.merge import merge_into
 from aws_medallion_datalake_spark.operators.metascan import (
@@ -81,6 +82,53 @@ def test_incomparable_literal_proves_nothing(tmp_path, spark):
         assert not _fully_covered_mask(man, [("d", ">=", value)]).any()
     with pytest.raises(ValueError, match="unsupported predicate op"):
         prune_manifest(man, [("d", "~", 1)], ["d"])
+
+
+@pytest.mark.parametrize("spark_side", [False, True])
+def test_scoped_compaction_across_threshold(tmp_path, spark, monkeypatch, spark_side):
+    """``compact(predicates=…)`` rewrites the files in scope, a file that
+    mixes two dates among them, into one file per date, and leaves the
+    files out of scope as they are, on either planner side."""
+    if spark_side:
+        _spark_side(monkeypatch)
+    t = _dated(tmp_path, spark, "t")
+    mixed = spark.range(40, 50).selectExpr(
+        "id", "date_add(date'2024-01-02', cast(id % 2 AS int)) AS d", "concat('v', id) AS v"
+    )
+    t.commit("append", t.write_files(mixed.coalesce(1)))
+    man = t.manifest_pdf()
+    assert man["partition_json"].str.contains("__mixed__").sum() == 1
+    out_of_scope = set(man.loc[man["min_d"].astype(str).isin(["2024-01-01", "2024-01-04"]), "path"])
+    assert len(out_of_scope) == 2
+    compact(t, spark, predicates=[("d", "between", ("2024-01-02", "2024-01-03"))])
+    man = t.manifest_pdf()
+    assert out_of_scope <= set(man["path"])
+    assert sorted(zip(man["partition_json"], man["record_count"])) == [
+        ('{"d": "2024-01-01"}', 10),
+        ('{"d": "2024-01-02"}', 15),
+        ('{"d": "2024-01-03"}', 15),
+        ('{"d": "2024-01-04"}', 10),
+    ]
+    assert t.scan(spark).count() == 50
+
+
+def test_append_diff_reads_only_its_manifest(tmp_path, spark, monkeypatch):
+    """An append shares its parent's manifest files, which cancel out of
+    the diff: only the manifest it adds is read."""
+    t = _dated(tmp_path, spark, "t")
+    s = t.snapshot()
+    new = set(s.manifest_paths) - set(t.snapshot(s.parent_snapshot_id).manifest_paths)
+    assert len(new) == 1 and len(s.manifest_paths) == 4
+    read = []
+    read_table = tf.pq.read_table
+    monkeypatch.setattr(
+        tf.pq, "read_table", lambda p, **k: read.append(p) or read_table(p, **k)
+    )
+    [(_, added, removed)] = t.snapshot_diffs(
+        s.parent_snapshot_id, s.snapshot_id, None, ("append",)
+    )
+    assert read == [f"{t.root}/{p}" for p in new]
+    assert len(added) == 1 and removed == []
 
 
 def _pairs_oracle(lo, hi):

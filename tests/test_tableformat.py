@@ -123,9 +123,9 @@ def test_null_predicates_prune_and_filter(tmp_path, spark):
         prune_manifest_spark,
     )
 
-    man_df = t.manifest_df(spark)
+    manifests = t.manifest_abs_paths()
     for pred, kept in (("isnull", kept_null), ("notnull", kept_notnull)):
-        got = prune_manifest_spark(man_df, [("v", pred, None)], ["v"])
+        got = prune_manifest_spark(spark, manifests, [("v", pred, None)], ["v"])
         assert {r.path for r in got.collect()} == set(kept["path"])
 
 
