@@ -4,10 +4,13 @@ The scale path the reference lacks: its writers ``coalesce(1)`` every run
 (/root/reference/scripts/silver_digit_clean.py:127 — SURVEY.md §4
 "small-file management"), accumulating one small file per partition per day
 forever. A planner packs manifest entries into ≈target-size rewrite groups
-(plans/binpack.py); groups are then rewritten in BATCHES: one Spark job
-routes up to ``DEFAULT_GROUPS_PER_JOB`` groups' rows (broadcast
-path→salt join + one exact shuffle, plan size O(1) in the batch width)
-into one output file per group — a 10^6-small-file backlog costs
+(plans/binpack.py) on the driver, from the swap's base manifest, at every
+manifest size: the batches and the commit read that manifest anyway, and
+planning costs a sort and an array pass per partition. Groups are then
+rewritten in BATCHES: one Spark job routes up to
+``DEFAULT_GROUPS_PER_JOB`` groups' rows (broadcast path→salt join + one
+exact shuffle, plan size O(1) in the batch width) into one output file
+per group — a 10^6-small-file backlog costs
 hundreds of jobs, not a job per file pack.
 
 Mixed files are packed per tuple: the planner's input replaces every
@@ -39,12 +42,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import SparkSession
 
-from ..plans.binpack import (
-    CompactionGroup,
-    CompactionPlan,
-    plan_compaction,
-    plan_compaction_spark,
-)
+from ..plans.binpack import CompactionGroup, CompactionPlan, plan_compaction
 from ..session import local_frame
 from ..sources import transforms
 from ..sources.tableformat import (
@@ -54,9 +52,7 @@ from ..sources.tableformat import (
     check_rows_kept,
     join_pieces,
     prune_manifest,
-    prune_manifest_spark,
     prune_predicates,
-    pure_tuples,
     rewrite_units,
     statable_cols,
     tuple_census,
@@ -118,48 +114,15 @@ def _route_frame(spark: SparkSession, groups: list):
     )
 
 
-def _sliced(table: Table, spark: SparkSession, man):
+def _sliced(table: Table, spark: SparkSession, man: pd.DataFrame) -> pd.DataFrame:
     """The manifest rows ``man`` with every file that mixes partition
     tuples replaced by one row per (file, tuple) of ``tuple_census``,
-    carrying the file's other columns and the tuple as ``slice``.
-
-    ``man`` is pandas, or above ``SPARK_MANIFEST_THRESHOLD`` the manifest
-    relation: then ``pure_tuples`` runs on the driver over its distinct
-    ``partition_json`` values (one per tuple, plus one per mixed shape),
-    only the mixed files' rows reach the driver, and their census rows
-    are joined back in."""
-    from pyspark.sql import functions as F
-
-    base = ["partition_json", "record_count", "file_size_bytes"]
-    if isinstance(man, pd.DataFrame):
-        census = tuple_census(table, spark, man).drop(columns="tuple")
-        return man.drop(columns=base).merge(census, on="path")
-    fields = transforms.field_names(table.metadata().partition_cols)
-    pjs = man.select("partition_json").distinct().toPandas()
-    mixed_pjs = list(pjs["partition_json"][pure_tuples(pjs, fields).isna()])
-    mixed = local_frame(spark, {"partition_json": mixed_pjs}, "partition_json string")
-    rows = (
-        man.join(F.broadcast(mixed), "partition_json", "left_semi")
-        .select("path", *base)
-        .toPandas()
-    )
-    census = tuple_census(table, spark, rows)
-    sl = local_frame(
-        spark,
-        {
-            "path": list(census["path"]),
-            "slice": list(census["slice"]),
-            **{f"__c_{c}": list(census[c]) for c in base},
-        },
-        "path string, slice string, __c_partition_json string, "
-        "__c_record_count long, __c_file_size_bytes long",
-    )
-    return man.join(F.broadcast(sl), "path", "left").select(
-        *[
-            F.coalesce(F.col(f"__c_{c}"), F.col(c)).alias(c) if c in base else F.col(c)
-            for c in man.columns
-        ],
-        "slice",
+    carrying the file's other columns and the tuple as ``slice``. Pure
+    files keep their one row (``slice`` None); only the mixed files are
+    read, by the census's one column-pruned count."""
+    census = tuple_census(table, spark, man).drop(columns="tuple")
+    return man.drop(columns=["partition_json", "record_count", "file_size_bytes"]).merge(
+        census, on="path"
     )
 
 
@@ -231,36 +194,18 @@ def compact(
     pt = PhaseTimer()
     swap = FileSwap(table, spark, pt)
     with pt.phase("plan"):
-        from ..sources.tableformat import SPARK_MANIFEST_THRESHOLD
-
+        # one planner at every manifest size: the swap's base manifest is
+        # on the driver anyway (the batches' rows and the commit read it)
         meta = table.metadata()
         order = table.write_order()
-        order_col = order.cols[0] if order else None
+        man = swap.man
         prune_preds = prune_predicates(meta, list(predicates or []))
-        statable = statable_cols(meta)
-        n_entries = table.manifest_rows(swap.base)
-        if n_entries > SPARK_MANIFEST_THRESHOLD:
-            # distributed planning: the FFD loop runs per-partition on
-            # executors; the driver gets one row per GROUP, not per file.
-            # Predicate scoping prunes the manifest per row group on
-            # executors — surviving paths never land on the driver — and
-            # once: the planner reads the scoped relation more than once.
-            man_scope = table.manifest_df(spark, swap.base)
-            planner = plan_compaction_spark
-            if prune_preds:
-                kept = prune_manifest_spark(
-                    spark, table.manifest_abs_paths(swap.base), prune_preds, statable
-                )
-                man_scope = man_scope.join(kept, "path", "left_semi").localCheckpoint()
-        else:
-            man_scope, planner = swap.man, plan_compaction
-            if prune_preds:
-                man_scope = prune_manifest(man_scope, prune_preds, statable)
-        plan: CompactionPlan = planner(
-            _sliced(table, spark, man_scope),
+        scope = prune_manifest(man, prune_preds, statable_cols(meta)) if prune_preds else man
+        plan: CompactionPlan = plan_compaction(
+            _sliced(table, spark, scope),
             target_file_size_bytes,
             min_input_files=min_input_files,
-            order_col=order_col,
+            order_col=order.cols[0] if order else None,
         )
     if not plan.groups:
         return None
@@ -278,10 +223,8 @@ def compact(
 
     part_cols = transforms.exprs(meta.partition_cols)
     keys = order.exprs() if order else []
-    # the batches' manifest rows: pandas on either planner path (the
-    # swap's base manifest, read once); a file sliced across batches is
-    # read by each
-    man = swap.man
+    # the batches' manifest rows; a file sliced across batches is read
+    # by each
     by_path = man.set_index("path", drop=False)
     # Concurrent batch jobs keep many executors busy on a real cluster
     # (Iceberg's RewriteDataFiles ships 5 by default); more driver threads

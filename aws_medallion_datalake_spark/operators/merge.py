@@ -274,7 +274,8 @@ def merge_into(
         nmbs=when_not_matched_by_source,
         nmbs_condition=not_matched_by_source_condition,
     )
-    cols = [f.name for f in table._schema(spark).fields]
+    declared = {f.name: f.dataType for f in table._schema(spark).fields}
+    cols = list(declared)
     cl.validate(source.columns, cols)
     meta = table.metadata()
     mode = resolve_write_mode(meta, "merge", mode)
@@ -286,7 +287,15 @@ def merge_into(
         table.refuse_pending_deletes("MERGE")
     t0 = time.time()
     pt = PhaseTimer()
-    src = source
+    # the table's columns in their declared types, matched by name (the
+    # rule of SQL INSERT and ``Table.append``), before anything is
+    # planned or written; other columns stay for ``src_`` references
+    src = source.select(
+        *[
+            F.col(c).cast(declared[c]).alias(c) if c in declared else F.col(c)
+            for c in source.columns
+        ]
+    )
     with pt.phase("source_check"):
         held, src_key_counts, n_src_keys, src_lo, src_hi = _source_keys(src, key)
 

@@ -9,14 +9,12 @@ file. Oversized files get their own split groups. Files that mix
 partition tuples arrive as one row per (file, tuple) *slice*
 (``tableformat.tuple_census``), so they are packed per tuple too.
 
-Planning is O(files log files) pure pandas on the manifest — no data read.
-At 10^8-file scale the same FFD runs per-partition inside a Spark
-``applyInPandas`` over the manifest DataFrame (``plan_compaction_spark``;
-partition count is the parallelism) — ``compact()`` picks the path by
-manifest row count, like ``Table.scan``'s planner split. The planner is
-deliberately a pure function of manifest rows so both paths share it; the
-driver receives only the resulting GROUPS (bounded by the rewrite batch,
-and their path lists are needed driver-side anyway to submit the read).
+Planning is pure pandas/numpy on the driver's manifest, at every manifest
+size (as ``cluster`` plans, and as Iceberg plans ``rewrite_data_files``
+from the file list its scan planned): no data is read, and every step is
+a sort, an array pass or an index slice. Next-fit is one pass over the
+size array; first-fit finds each file's bin with a max-tree over bin
+room, so it is O(files log files), not files x bins.
 """
 
 from __future__ import annotations
@@ -24,6 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 
 
@@ -64,22 +63,67 @@ class CompactionPlan:
         }
 
 
-def _is_range_structured(rows: list, order_col: Optional[str]) -> bool:
-    """True when the files' key spans are near-disjoint (sum of per-file
-    spans ≲ the group's total span) — i.e., a previously clustered
-    layout whose order the rewrite should preserve with a re-sort."""
-    lo_c, hi_c = f"min_{order_col}", f"max_{order_col}"
-    if order_col is None or not rows or lo_c not in rows[0].index:
+def _next_fit(sizes: list, target: int) -> list:
+    """Each size's bin, packing in order: the last bin while it has room,
+    else a new one."""
+    out, b, room = [], -1, -1
+    for sz in sizes:
+        if room >= sz:
+            room -= sz
+        else:
+            b, room = b + 1, target - sz
+        out.append(b)
+    return out
+
+
+def _first_fit(sizes: list, target: int) -> list:
+    """Each size's bin under first-fit: the leftmost bin with room for it,
+    else a new one. A max-tree over bin room (leaves in bin order,
+    unopened bins at -1) finds that bin in O(log bins)."""
+    width = 1
+    while width < len(sizes):
+        width *= 2
+    room = [-1] * (2 * width)
+    out, n_bins = [], 0
+    for sz in sizes:
+        if room[1] >= sz:
+            i = 1
+            while i < width:
+                i = 2 * i if room[2 * i] >= sz else 2 * i + 1
+        else:
+            i, n_bins = width + n_bins, n_bins + 1
+            room[i] = target
+        out.append(i - width)
+        room[i] -= sz
+        while i > 1:
+            i //= 2
+            up = max(room[2 * i], room[2 * i + 1])
+            if room[i] == up:
+                break
+            room[i] = up
+    return out
+
+
+def _range_structured(lo: np.ndarray, hi: np.ndarray) -> bool:
+    """True when the files' key spans ``[lo, hi]`` are near-disjoint (their
+    sum is at most twice the group's total span): a previously clustered
+    layout whose order the rewrite should preserve with a re-sort. Not
+    with a missing bound, or a zero total span. The spans are summed in
+    file order, one float at a time."""
+    if np.isnan(lo).any() or np.isnan(hi).any():
         return False
-    los = [r[lo_c] for r in rows]
-    his = [r[hi_c] for r in rows]
-    if any(pd.isna(v) for v in los + his):
-        return False
-    total_span = float(max(his)) - float(min(los))
-    if total_span <= 0:
-        return False
-    sum_spans = sum(float(h) - float(lo) for lo, h in zip(los, his))
-    return sum_spans <= 2.0 * total_span
+    total = hi.max() - lo.min()
+    return bool(total > 0 and sum((hi - lo).tolist()) <= 2.0 * total)
+
+
+def _bounds(cand: pd.DataFrame, order_col: Optional[str]):
+    """The numeric ``min_/max_<order_col>`` stats of ``cand`` as float
+    arrays (NaN where missing), or None without them: a span needs a
+    number line, so string, date and time keys give None."""
+    cols = [cand.get(f"{k}_{order_col}") for k in ("min", "max")]
+    if any(c is None or not pd.api.types.is_numeric_dtype(c) for c in cols):
+        return None
+    return [c.to_numpy("float64", na_value=np.nan) for c in cols]
 
 
 def plan_compaction(
@@ -113,158 +157,95 @@ def plan_compaction(
       stays clustered through compaction (path is the tiebreaker:
       cluster-written files sort by bucket within their commit prefix).
       Without stats, first-fit-decreasing by size maximizes bin fill.
+    - ``ordered``: the group's key spans are near-disjoint
+      (``_range_structured``, on numeric ``min_/max_<order_col>`` stats).
     """
-    small = int(target_file_size_bytes * small_file_ratio)
-    big = int(target_file_size_bytes * max_file_ratio)
+    target = target_file_size_bytes
+    small = int(target * small_file_ratio)
+    big = int(target * max_file_ratio)
     key_stats = f"min_{order_col}" if order_col else None
     key_stats = key_stats if key_stats in manifest.columns else None
-    groups: list = []
-    gid = 0
     if "slice" not in manifest.columns:
         manifest = manifest.assign(slice=None)
+    groups: list = []
     for pjson, part in manifest.groupby("partition_json", sort=True):
+        pjson = str(pjson)
         sliced = part["slice"].notna()
         size = part["file_size_bytes"]
         cand = part[(size < small) | (sliced & (size <= big))]
-        bins: list = []  # (remaining_bytes, [rows])
         if sliced.any():
             cand = cand.sort_values([key_stats or "path", "path"])
-            sizes = cand["file_size_bytes"].astype("int64")
+            sizes = cand["file_size_bytes"].to_numpy("int64")
             total = int(sizes.sum())
-            n = max(1, round(total / target_file_size_bytes))
+            n = max(1, round(total / target))
             # each row's bin: where its middle byte falls among n equal cuts
-            which = (sizes.cumsum() - sizes // 2) * n // max(total, 1)
-            for _, rows in cand.groupby(which.clip(upper=n - 1).to_numpy(), sort=True):
-                bins.append([0, [r for _, r in rows.iterrows()]])
-        elif key_stats is not None:
+            bins = np.minimum((sizes.cumsum() - sizes // 2) * n // max(total, 1), n - 1)
+        elif key_stats is not None:  # next-fit: keep key adjacency
             cand = cand.sort_values([key_stats, "path"])
-            for _, row in cand.iterrows():  # next-fit: keep key adjacency
-                sz = int(row["file_size_bytes"])
-                if bins and bins[-1][0] >= sz:
-                    bins[-1][0] -= sz
-                    bins[-1][1].append(row)
-                else:
-                    bins.append([target_file_size_bytes - sz, [row]])
+            bins = _next_fit(cand["file_size_bytes"].tolist(), target)
         else:
             cand = cand.sort_values("file_size_bytes", ascending=False)
-            for _, row in cand.iterrows():  # first-fit-decreasing
-                sz = int(row["file_size_bytes"])
-                for b in bins:
-                    if b[0] >= sz:
-                        b[0] -= sz
-                        b[1].append(row)
-                        break
-                else:
-                    bins.append([target_file_size_bytes - sz, [row]])
-        for b in bins:
-            rows = b[1]
-            slices = [r["slice"] if pd.notna(r["slice"]) else None for r in rows]
-            # a slice's tuple key may be '' (an empty string value), so
-            # test for a slice, not for a truthy one
-            if len(rows) < min_input_files and all(s is None for s in slices):
-                continue
-            groups.append(
-                CompactionGroup(
-                    group_id=gid,
-                    partition_json=str(pjson),
-                    kind="pack",
-                    paths=[r["path"] for r in rows],
-                    input_bytes=int(sum(r["file_size_bytes"] for r in rows)),
-                    input_records=int(sum(r["record_count"] for r in rows)),
-                    n_output_files=1,
-                    ordered=_is_range_structured(rows, order_col),
-                    slices=slices,
-                )
+            bins = _first_fit(cand["file_size_bytes"].tolist(), target)
+        if len(cand):
+            groups += _pack_groups(
+                cand, np.asarray(bins), pjson, len(groups), min_input_files, order_col
             )
-            gid += 1
-        for _, row in part[part["file_size_bytes"] > big].iterrows():
-            n_out = max(2, round(int(row["file_size_bytes"]) / target_file_size_bytes))
+        for path, sz, recs, slc in part.loc[
+            size > big, ["path", "file_size_bytes", "record_count", "slice"]
+        ].itertuples(index=False):
             groups.append(
                 CompactionGroup(
-                    group_id=gid,
-                    partition_json=str(pjson),
+                    group_id=len(groups),
+                    partition_json=pjson,
                     kind="split",
-                    paths=[row["path"]],
-                    input_bytes=int(row["file_size_bytes"]),
-                    input_records=int(row["record_count"]),
-                    n_output_files=int(n_out),
-                    slices=[row["slice"] if pd.notna(row["slice"]) else None],
+                    paths=[path],
+                    input_bytes=int(sz),
+                    input_records=int(recs),
+                    n_output_files=max(2, round(int(sz) / target)),
+                    slices=[slc if pd.notna(slc) else None],
                 )
             )
-            gid += 1
     return CompactionPlan(groups=groups)
 
 
-_GROUP_ROW_DDL = (
-    "partition_json string, kind string, paths array<string>, "
-    "input_bytes long, input_records long, n_output_files int, ordered boolean, "
-    "slices array<string>"
-)
-
-
-def plan_compaction_spark(
-    manifest_df,
-    target_file_size_bytes: int,
-    *,
-    min_input_files: int = 2,
-    small_file_ratio: float = 0.75,
-    max_file_ratio: float = 1.8,
-    order_col: Optional[str] = None,
-) -> CompactionPlan:
-    """The ≥``SPARK_MANIFEST_THRESHOLD`` planner: run ``plan_compaction``
-    per partition inside ``applyInPandas`` over the manifest DataFrame.
-    The quadratic-ish FFD/next-fit loop executes on executors (one task
-    per partition); the driver collects one row per GROUP, not per file."""
-
-    def _plan_slice(pdf: pd.DataFrame) -> pd.DataFrame:
-        plan = plan_compaction(
-            pdf,
-            target_file_size_bytes,
-            min_input_files=min_input_files,
-            small_file_ratio=small_file_ratio,
-            max_file_ratio=max_file_ratio,
-            order_col=order_col,
+def _pack_groups(
+    cand: pd.DataFrame,
+    bins: np.ndarray,
+    pjson: str,
+    first_id: int,
+    min_input_files: int,
+    order_col: Optional[str],
+) -> list:
+    """The pack groups of ``cand`` (one partition's candidates in packing
+    order, ``bins`` each row's bin): one per bin, in bin order, each
+    row in packing order, numbered from ``first_id``. A bin with fewer
+    than ``min_input_files`` rows and no slice is dropped."""
+    order = np.argsort(bins, kind="stable")
+    cand, bins = cand.iloc[order], bins[order]
+    starts = np.flatnonzero(np.r_[True, bins[1:] != bins[:-1]])
+    ends = np.r_[starts[1:], len(bins)]
+    slices = cand["slice"].to_numpy(object).copy()
+    has_slice = pd.notna(slices)
+    slices[~has_slice] = None
+    keep = (ends - starts >= min_input_files) | np.logical_or.reduceat(has_slice, starts)
+    nbytes = np.add.reduceat(cand["file_size_bytes"].to_numpy("int64"), starts)
+    nrecs = np.add.reduceat(cand["record_count"].to_numpy("int64"), starts)
+    lo, hi = _bounds(cand, order_col) or (None, None)
+    paths, slices = cand["path"].tolist(), slices.tolist()
+    out = []
+    for k in np.flatnonzero(keep):
+        s, e = starts[k], ends[k]
+        out.append(
+            CompactionGroup(
+                group_id=first_id + len(out),
+                partition_json=pjson,
+                kind="pack",
+                paths=paths[s:e],
+                input_bytes=int(nbytes[k]),
+                input_records=int(nrecs[k]),
+                n_output_files=1,
+                ordered=lo is not None and _range_structured(lo[s:e], hi[s:e]),
+                slices=slices[s:e],
+            )
         )
-        return pd.DataFrame(
-            [
-                {
-                    "partition_json": g.partition_json,
-                    "kind": g.kind,
-                    "paths": list(g.paths),
-                    "input_bytes": g.input_bytes,
-                    "input_records": g.input_records,
-                    "n_output_files": g.n_output_files,
-                    "ordered": bool(g.ordered),
-                    "slices": list(g.slices),
-                }
-                for g in plan.groups
-            ],
-            columns=[
-                "partition_json", "kind", "paths", "input_bytes",
-                "input_records", "n_output_files", "ordered", "slices",
-            ],
-        )
-
-    rows = (
-        manifest_df.groupBy("partition_json")
-        .applyInPandas(_plan_slice, _GROUP_ROW_DDL)
-        .toPandas()
-    )
-    # deterministic group ids across runs: order by partition, kind, lead path
-    rows["_lead"] = rows["paths"].map(lambda ps: ps[0] if len(ps) else "")
-    rows = rows.sort_values(["partition_json", "kind", "_lead"]).reset_index(drop=True)
-    groups = [
-        CompactionGroup(
-            group_id=i,
-            partition_json=str(r["partition_json"]),
-            kind=str(r["kind"]),
-            paths=list(r["paths"]),
-            input_bytes=int(r["input_bytes"]),
-            input_records=int(r["input_records"]),
-            n_output_files=int(r["n_output_files"]),
-            ordered=bool(r["ordered"]),
-            slices=list(r["slices"]),
-        )
-        for i, r in rows.iterrows()
-    ]
-    return CompactionPlan(groups=groups)
+    return out

@@ -66,6 +66,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Iterator, List, Optional, Sequence
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -189,48 +190,28 @@ class _FileSlice(InputPartition):
     preds_json: str = "[]"
 
 
-def _rg_keep(md, rg_idx: int, preds) -> bool:
-    """Row-group-level twin of the manifest pruner: False only when the
-    row group's footer stats PROVABLY exclude every matching row for some
-    predicate (missing/untyped stats ⇒ keep — prune less, never wrong)."""
-    rg = md.row_group(rg_idx)
-    stats = {}
-    for ci in range(rg.num_columns):
-        col = rg.column(ci)
-        s = col.statistics
-        if s is not None:
-            stats[col.path_in_schema] = s
-    for col, op, value in preds:
-        s = stats.get(col)
-        if s is None:
-            continue
-        nulls = s.null_count if s.has_null_count else None
-        n = rg.num_rows
-        if op == "isnull":
-            if nulls == 0:
-                return False
-            continue
-        if op == "notnull":
-            if nulls is not None and nulls == n:
-                return False
-            continue
-        if not s.has_min_max:
-            continue
-        lo, hi = s.min, s.max
-        try:
-            if op == "=" and (value < lo or value > hi):
-                return False
-            if op == ">=" and hi < value:
-                return False
-            if op == "<=" and lo > value:
-                return False
-            if op == "in" and all(v < lo or v > hi for v in value):
-                return False
-            if op == "between" and (hi < value[0] or lo > value[1]):
-                return False
-        except TypeError:
-            continue  # incomparable literal/stat types: keep, stay sound
-    return True
+def _rg_stats(md, cols: set) -> pd.DataFrame:
+    """One row per row group of the Parquet footer ``md``, in the
+    manifest's layout, so row groups are pruned by the manifest pruner's
+    rules (``prune_manifest``): ``record_count`` and the footer's
+    ``min_/max_/nulls_<c>`` stats of the columns ``cols``, NaN where it
+    has none. Values stay Python objects, compared as the footer gives
+    them."""
+    rows = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        row = {"record_count": rg.num_rows}
+        for j in range(rg.num_columns):
+            col = rg.column(j)
+            c, st = col.path_in_schema, col.statistics
+            if c not in cols or st is None:
+                continue
+            if st.has_min_max:
+                row[f"min_{c}"], row[f"max_{c}"] = st.min, st.max
+            if st.has_null_count:
+                row[f"nulls_{c}"] = st.null_count
+        rows.append(row)
+    return pd.DataFrame(rows, dtype=object)
 
 
 def _slices(table: Table, rel_paths, meta, preds=()) -> List[_FileSlice]:
@@ -271,9 +252,10 @@ def _read_slice(part: _FileSlice) -> Iterator[pa.RecordBatch]:
     # row-group skipping from footer stats (the layer below manifest
     # pruning — a clustered table's non-matching row groups never decode)
     md = pf.metadata
-    groups = [
-        i for i in range(md.num_row_groups) if not preds or _rg_keep(md, i, preds)
-    ]
+    groups = list(range(md.num_row_groups))
+    if preds:
+        cols = {c for c, _, _ in preds}
+        groups = list(prune_manifest(_rg_stats(md, cols), preds, cols).index)
     if not groups:
         return
     for batch in pf.iter_batches(

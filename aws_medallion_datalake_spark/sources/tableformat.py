@@ -42,10 +42,12 @@ GC).
 Scale note (10^12 rows ≈ 10^8 files): the manifest is itself columnar
 Parquet. Each planning question has ONE pandas implementation
 (``prune_manifest``, ``Table.snapshot_diffs``, the clustering metric);
-``SPARK_MANIFEST_THRESHOLD`` decides only where it runs: on the driver
-below it, on executors above it, per manifest row group
-(``prune_manifest_spark``) or per group of the manifest relation
-(``map_groups``).
+``SPARK_MANIFEST_THRESHOLD`` decides only where a read-only question
+runs: on the driver below it, on executors above it, per manifest row
+group (``prune_manifest_spark``) or per group of the manifest relation
+(``map_groups``). A data-file rewrite (compaction, ``cluster``, the
+row-level writes) plans on the driver at every size: it commits through
+``FileSwap``, whose base manifest is on the driver anyway.
 """
 
 from __future__ import annotations
@@ -1058,7 +1060,7 @@ class Table:
         and the pending delete sets carry over unchanged.
         No-op (returns None) when the list is already small.
 
-        Same planner split as scan/compact/expire: below
+        Same planner split as scan and expire: below
         ``SPARK_MANIFEST_THRESHOLD`` entries the rewrite is a driver-side
         pandas concat; above it (``spark`` given) the manifest is
         re-sharded BY SPARK into ``MANIFEST_PART_ROWS``-row parquet parts

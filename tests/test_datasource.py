@@ -436,6 +436,55 @@ def test_row_group_skipping(tmp_path):
     assert rows([["s", "=", "v050"]]) == 10     # string stats prune too
 
 
+def test_row_groups_decoded_per_predicate(tmp_path, monkeypatch):
+    """On a file clustered by ``k`` whose ``v`` is NULL in its first row
+    groups, each pushed predicate decodes exactly the row groups its
+    footer stats cannot exclude, and reads their rows."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    from aws_medallion_datalake_spark.sources.datasource import (
+        _FileSlice,
+        _read_slice,
+    )
+
+    path = str(tmp_path / "f.parquet")
+    tbl = pa.table({
+        "k": pa.array(range(120), pa.int64()),
+        "v": pa.array([None if i < 35 else f"v{i:03d}" for i in range(120)]),
+    })
+    pq.write_table(tbl, path, row_group_size=10)  # 12 row groups
+    decoded = []
+    iter_batches = pq.ParquetFile.iter_batches
+
+    def spy(self, *a, **k):
+        decoded.append(list(k["row_groups"]))
+        return iter_batches(self, *a, **k)
+
+    monkeypatch.setattr(pq.ParquetFile, "iter_batches", spy)
+
+    def read(preds):
+        decoded.clear()
+        sl = _FileSlice(path, "k bigint, v string", "{}", "{}", json.dumps(preds))
+        got = pa.Table.from_batches(list(_read_slice(sl)), schema=tbl.schema)
+        groups = decoded[0] if decoded else []
+        want = pa.concat_tables([tbl.slice(10 * g, 10) for g in groups]) if groups else tbl.slice(0, 0)
+        assert got.equals(want), preds
+        return groups
+
+    assert read([["k", "=", 55]]) == [5]
+    assert read([["k", "between", [25, 64]]]) == [2, 3, 4, 5, 6]
+    assert read([["k", "in", [3, 97, 500]]]) == [0, 9]
+    assert read([["k", "in", [500]]]) == []
+    assert read([["v", "isnull", None]]) == [0, 1, 2, 3]
+    assert read([["v", "notnull", None]]) == list(range(3, 12))
+    assert read([["k", ">=", 20], ["v", "isnull", None]]) == [2, 3]
+    # all-NULL row groups have no min/max, so they are kept
+    assert read([["v", "=", "v050"]]) == [0, 1, 2, 5]
+    assert read([["k", "=", "a string"]]) == list(range(12))  # incomparable: keep
+
+
 def test_task_write_rolls_files(tmp_path, monkeypatch):
     """A wide task rolls to a new parquet file at the size target instead
     of producing one unbounded file."""

@@ -81,38 +81,6 @@ def test_binpack_plan_properties():
     assert "f5" not in plan.rewritten_paths
 
 
-def test_binpack_spark_planner_parity(tmp_path, spark):
-    """plan_compaction_spark (applyInPandas per partition) must produce
-    the same groups as the driver-side planner."""
-    from aws_medallion_datalake_spark.plans.binpack import plan_compaction_spark
-
-    t = make_table(tmp_path, spark)
-
-    def key(plan):
-        return sorted(
-            (g.partition_json, g.kind, tuple(sorted(g.paths)),
-             g.n_output_files, g.ordered, g.input_bytes, g.input_records)
-            for g in plan.groups
-        )
-
-    driver = plan_compaction(t.manifest_pdf(), TARGET, min_input_files=2)
-    dist = plan_compaction_spark(t.manifest_df(spark), TARGET, min_input_files=2)
-    assert driver.groups and key(driver) == key(dist)
-
-
-def test_compact_spark_planner_end_to_end(tmp_path, spark, monkeypatch):
-    import aws_medallion_datalake_spark.operators.compact as compact_mod
-    import aws_medallion_datalake_spark.sources.tableformat as tf
-
-    t = make_table(tmp_path, spark)
-    before = table_fingerprint(t, spark)
-    files_before = len(t.manifest_pdf())
-    monkeypatch.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
-    snap = compact(t, spark, target_file_size_bytes=TARGET, parallelism=4)
-    assert snap is not None and len(t.manifest_pdf()) < files_before
-    assert table_fingerprint(t, spark) == before
-
-
 # ---------------- compaction ----------------
 
 

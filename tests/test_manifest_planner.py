@@ -88,7 +88,8 @@ def test_incomparable_literal_proves_nothing(tmp_path, spark):
 def test_scoped_compaction_across_threshold(tmp_path, spark, monkeypatch, spark_side):
     """``compact(predicates=…)`` rewrites the files in scope, a file that
     mixes two dates among them, into one file per date, and leaves the
-    files out of scope as they are, on either planner side."""
+    files out of scope as they are, on either side of the threshold
+    (compaction plans on the driver at every manifest size)."""
     if spark_side:
         _spark_side(monkeypatch)
     t = _dated(tmp_path, spark, "t")

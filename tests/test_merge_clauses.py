@@ -374,3 +374,26 @@ def test_merge_fully_disjoint_source_is_pure_insert(tmp_path, spark):
     assert int(snap.summary["rows_inserted"]) == 10
     assert int(snap.summary["rows_updated"]) == 0
     assert t.scan(spark).count() == 70
+
+
+@pytest.mark.parametrize("kind", ["computed", "file"])
+def test_merge_casts_the_source_to_declared_types(tmp_path, spark, kind):
+    """A source column of another type than the table declares is cast
+    to the declared type, by name, before MERGE plans: ``id * 0.5`` is
+    ``decimal(22,1)``, and the table's ``x`` is a double. Before, the
+    commit's manifest write raised ``ArrowInvalid`` on the decimal
+    stats, after the rewrite had run."""
+    import pyarrow.parquet as pq
+
+    t = Table.create(str(tmp_path / "t"), "id bigint, x double", stats_cols=["id", "x"])
+    t.append(spark.range(10).selectExpr("id", "CAST(id AS double) AS x").coalesce(1))
+    src = spark.range(5, 15).select("id", F.expr("id * 0.5").alias("x"))
+    assert dict(src.dtypes)["x"].startswith("decimal")
+    snap = merge_into(t, spark, as_source(kind, spark, tmp_path, src), key="id")
+    assert (snap.summary["rows_updated"], snap.summary["rows_inserted"]) == (5, 5)
+    got = sorted(tuple(r) for r in t.scan(spark).collect())
+    assert got == [(i, float(i)) for i in range(5)] + [(i, i * 0.5) for i in range(5, 15)]
+    assert dict(t.scan(spark).dtypes)["x"] == "double"
+    for p in t.manifest_pdf()["path"]:
+        schema = pq.read_schema(f"{t.root}/{p}")
+        assert str(schema.field("x").type) == "double", p

@@ -234,13 +234,9 @@ def _small_table(tmp_path, spark, name, ddl, files) -> Table:
     return t
 
 
-@pytest.mark.parametrize("planner", ["pandas", "spark"])
-def test_compaction_keeps_the_empty_string_tuple(tmp_path, spark, monkeypatch, planner):
+def test_compaction_keeps_the_empty_string_tuple(tmp_path, spark):
     """The '' value of a string partition column is a tuple like any
-    other: a mixed file that alone holds it keeps those rows, on either
-    planner path."""
-    if planner == "spark":
-        monkeypatch.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
+    other: a mixed file that alone holds it keeps those rows."""
     ddl = "id int, p string"
     t = _small_table(tmp_path, spark, "empty", ddl, [
         [(i, "" if i < 5 else "b") for i in range(10)],
@@ -252,10 +248,8 @@ def test_compaction_keeps_the_empty_string_tuple(tmp_path, spark, monkeypatch, p
     assert got == [("", 5), ("b", 10)]
 
 
-@pytest.mark.parametrize("op", ["compact", "compact_spark_planner", "cluster"])
-def test_boolean_tuple_of_pure_and_mixed_files_writes_one_file(
-    tmp_path, spark, monkeypatch, op
-):
+@pytest.mark.parametrize("op", ["compact", "cluster"])
+def test_boolean_tuple_of_pure_and_mixed_files_writes_one_file(tmp_path, spark, op):
     """A pure and a mixed file of one boolean tuple meet in one output:
     the census formats the mixed file's values as the manifest does
     (``True``), not as Spark's string cast (``true``)."""
@@ -264,9 +258,7 @@ def test_boolean_tuple_of_pure_and_mixed_files_writes_one_file(
         [(i, str(i), True, i, 1, 1) for i in range(5)],
         [(i, str(i), i % 2 == 0, i, 1, 1) for i in range(5, 15)],
     ])
-    if op == "compact_spark_planner":
-        monkeypatch.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
-    if op.startswith("compact"):
+    if op == "compact":
         compact(t, spark, target_file_size_bytes=TARGET)
     else:
         cluster(t, spark, curve="morton", target_file_size_bytes=TARGET)
@@ -327,13 +319,10 @@ def test_an_all_null_partition_file_is_pure(tmp_path, spark, monkeypatch):
     ]
 
 
-@pytest.mark.parametrize("planner", ["pandas", "spark"])
-def test_a_value_beside_nulls_is_mixed(tmp_path, spark, monkeypatch, planner):
+def test_a_value_beside_nulls_is_mixed(tmp_path, spark):
     """A file holding ``p='a'`` and ``p=NULL`` rows holds two tuples
     (min == max ignores NULLs): it is tagged mixed, the census counts
     both, and compaction writes them to separate files."""
-    if planner == "spark":
-        monkeypatch.setattr(tf, "SPARK_MANIFEST_THRESHOLD", 0)
     ddl = "id int, p string"
     t = _small_table(tmp_path, spark, "mixed_null", ddl, [
         [(i, "a" if i < 6 else None) for i in range(10)],
